@@ -2179,7 +2179,7 @@ def dd_simhash(spark, sf_dir):
     (_simhash_map); simhash is per-doc, so the r5 plan's (doc_id, term)
     distinct exchange + repartition("doc_id") moved data for nothing.
     Measured 1.2 s -> 0.06 s at sf0.1 with byte-identical output (this
-    round's A/B; earlier A/Bs at tools/simhash_ab.py rejected the
+    round's A/B; earlier same-session A/Bs at sf0.1 rejected the
     32-conditional-sum codegen aggregate, the 32x explode+sum form, and a
     groupBy(doc).collect_set form)."""
     return (

@@ -3,16 +3,21 @@
 Query lifecycle (Spark-first redesign of the reference's
 /root/reference/internal/doclib/search_pdfs.go:114-277 path, SURVEY.md §3.2):
 
-  query string -> analyze() (same chain as indexing)
-    -> read postings with (case_id, term_bucket, term) filters
+  query string -> analyze() (same chain as indexing) -> score.QueryPlan
+    -> Searcher._execute, the one executor for every mode:
+       read postings with (case_id, term_bucket, term) filters
        [parquet partition pruning on term_bucket + row-group pruning on term]
+    -> under the volume gates: one driver-local fetch, scored in-process
+       by the same kernel; else
     -> optional lossless segment-level block-max pruning (WAND-style):
        phase 1 scores the highest-upper-bound segments to establish the
        running kth score θ; phase 2 scores only segments whose summed
        per-term upper bound exceeds θ
-    -> groupBy(segment).applyInPandas: decode blocks, BM25, local top-k
-       (all postings of a doc live in one segment, so local sums are final)
-    -> global orderBy(score desc, doc_id asc).limit(k)
+    -> groupBy(segment).applyInPandas: score.score_segment_blocks decodes
+       blocks, applies each plan's match step, BM25, local top-k (all
+       postings of a doc live in one segment, so local sums are final)
+    -> global orderBy(score desc, doc_id asc).limit(k) (per-query window
+       for a batch)
     -> back-join docs (broadcast the tiny hit set) -> phrase-span alignment
        + Best filter + line numbers.
 
@@ -123,6 +128,63 @@ MAX_PENDING_TOMBSTONES = 10_000_000  # pending (uncompacted) deletes a
 # tombstones grow"; this cap ENFORCES it with a clear error instead of a
 # silent driver/executor OOM at 10^8 pending deletes.
 
+
+_HITS_SCHEMA = "qid string, doc_id long, score double"
+
+
+def _empty_hits() -> pd.DataFrame:
+    return pd.DataFrame({"qid": pd.Series([], dtype="object"),
+                         "doc_id": pd.Series([], dtype="int64"),
+                         "score": pd.Series([], dtype="float64")})
+
+
+def _sort_hits(pdf: pd.DataFrame) -> pd.DataFrame:
+    """(qid asc, score desc, doc_id asc) — the executor's result order."""
+    return (pdf.sort_values(["qid", "score", "doc_id"],
+                            ascending=[True, False, True], kind="stable")
+            .reset_index(drop=True))
+
+
+def _merge_topk(per_q: Dict[str, tuple], k: int) -> pd.DataFrame:
+    """Each qid's global top-k of its segment top-ks (``per_q``: qid ->
+    (ids arrays, score arrays)), in _sort_hits order."""
+    frames = []
+    for qid in sorted(per_q):
+        ids = np.concatenate(per_q[qid][0])
+        scores = np.concatenate(per_q[qid][1])
+        o = np.lexsort((ids, -scores))[:k]
+        frames.append(pd.DataFrame({"qid": qid, "doc_id": ids[o],
+                                    "score": scores[o]}))
+    if not frames:
+        return _empty_hits()
+    return pd.concat(frames, ignore_index=True)
+
+
+def _verify_blocks(pdf: pd.DataFrame, positions: bool) -> None:
+    """Verify-before-decode for fetched posting blocks (reference parity:
+    per-blob CRC32 verification at doc_positions.go:222-226): every
+    block's 3-buffer xor CRC, and its positions CRC when positions are
+    read."""
+    import zlib
+
+    for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
+                               pdf["dls_bin"], pdf["crc32"]):
+        got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
+        if got != crc:
+            raise IOError(f"posting block CRC mismatch: {got} != {crc}")
+    if positions:
+        for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
+            if zlib.crc32(pb) != pcrc:
+                raise IOError("position payload CRC mismatch")
+
+
+def _block_rows(pdf: pd.DataFrame, positions: bool) -> List[tuple]:
+    """Kernel input rows (term, n, doc_ids_bin, tfs_bin, dls_bin[,
+    pos_bin]) from a fetched block frame."""
+    cols = ["term", "n", "doc_ids_bin", "tfs_bin", "dls_bin"]
+    if positions:
+        cols.append("pos_bin")
+    return list(zip(*(pdf[c] for c in cols)))
 
 _BOOST_RE = re.compile(r"^(.+)\^(\d+(?:\.\d+)?)$")
 
@@ -243,15 +305,10 @@ def parse_fuzzy(query: str, default_distance: int = 0):
 
 
 class Searcher:
-    def __init__(self, spark, index_dir: str, cache_postings: bool = False,
-                 on_stale: str = "refresh", at_version: int | None = None,
+    def __init__(self, spark, index_dir: str, on_stale: str = "refresh",
+                 at_version: int | None = None,
                  max_pending_tombstones: int | None = None):
-        """``cache_postings=True`` persists the postings table in executor
-        memory for repeated-query workloads (right on a warm serving
-        cluster; leave off for one-shot jobs or indexes larger than cluster
-        memory — partition pruning into parquet is lost under a cache).
-
-        ``on_stale`` controls what a search does when the index changed
+        """``on_stale`` controls what a search does when the index changed
         underneath this Searcher (another writer appended, compacted, or
         deleted — detected by a cheap manifest-stat check per search):
         ``"refresh"`` (default) reloads the cached corpus/term stats and
@@ -276,7 +333,6 @@ class Searcher:
         driver/executor memory cost."""
         self.spark = spark
         self.layout = IndexLayout(index_dir, at_version=at_version)
-        self.cache_postings = cache_postings
         if on_stale not in ("refresh", "raise", "ignore"):
             raise ValueError(
                 f"on_stale must be refresh|raise|ignore, got {on_stale!r}"
@@ -313,7 +369,6 @@ class Searcher:
         path = {name: self.layout.table_path(name, gens.get(name, 0))
                 for name in ("docs", "postings", "term_stats",
                              "corpus_stats", "tombstones")}
-        cache_postings = self.cache_postings
         self.n_buckets = int(m["n_buckets"])
         self.segment_size = int(m.get("segment_size", 4096))
         self.positions_stored = bool(m.get("positions", False))
@@ -367,8 +422,6 @@ class Searcher:
             self.layout.read_commits(spark, path["postings"],
                                      schema=POSTING_BLOCKS)
         )
-        if cache_postings:
-            self.postings = self.postings.persist()
         self.docs = _norm(
             self.layout.read_commits(spark, path["docs"], schema=DOCS)
         )
@@ -439,11 +492,6 @@ class Searcher:
     def refresh(self) -> None:
         """Reload corpus/term stats and table frames from the current index
         state (after an external append/compaction/delete)."""
-        if self.cache_postings:
-            try:
-                self.postings.unpersist()
-            except Exception:
-                pass
         self._load()
 
     def _check_fresh(self) -> None:
@@ -529,8 +577,18 @@ class Searcher:
 
         if isinstance(filter_docs, DataFrame):
             return filter_docs, None
-        ids = np.unique(np.asarray(list(filter_docs), dtype=np.int64))
-        return None, ids
+        return None, np.unique(np.asarray(filter_docs, dtype=np.int64))
+
+    def _filter_context(self, case_id: str, filter: Optional[str],
+                        filter_docs):
+        """Resolve ``filter``/``filter_docs`` -> (allowed DataFrame or
+        None, driver-side sorted id array or None).  A predicate plus a
+        driver-side set intersect distributed (rare combination;
+        correctness over the local shortcut)."""
+        filter_docs, ids = self._split_filter_docs(filter_docs)
+        if ids is not None and filter is not None:
+            filter_docs, ids = self._ids_df(ids), None
+        return self._allowed_df(case_id, filter, filter_docs), ids
 
     def _ids_df(self, ids: np.ndarray):
         """Driver-side id array -> single-column DataFrame (the
@@ -552,7 +610,8 @@ class Searcher:
                                schema=out_schema)
             )
 
-        np_types = {"long": "int64", "double": "float64"}
+        np_types = {"long": "int64", "double": "float64",
+                    "string": "object"}
         empty = pd.DataFrame({
             name: pd.Series([], dtype=np_types[typ])
             for name, typ in (c.strip().rsplit(" ", 1)
@@ -572,23 +631,60 @@ class Searcher:
         )
 
     # ------------------------------------------------------------------
-    # driver-local scoring fast path (small candidate volumes).
+    # query plans and the one executor.
     #
-    # A distributed scoring job pays fixed latency — scan task scheduling,
-    # a segment_id exchange, pandas-worker round trips, result fetch — that
-    # dwarfs the arithmetic when the query's candidate postings are a few
-    # MB packed.  Below the LOCAL_MAX_POSTINGS gate the blocks are fetched
-    # with ONE scan-only job (partition/row-group pruning still applies;
-    # no exchange, no Python workers) and scored in-process with the SAME
-    # per-segment kernels, so results are bit-identical by construction
-    # (pinned by test).  Driver work/memory is bounded by the gate —
-    # O(candidate volume), the same class as a broadcast join's build side.
-    # Filtered queries (distributed allowed set) and pruned queries always
-    # take the distributed path.
+    # Every query mode builds score.QueryPlan(s) and runs them through
+    # _execute, which feeds ONE per-segment kernel
+    # (score.score_segment_blocks) from one of two fetchers:
+    # - driver-local (_collect_blocks): below the local gates the packed
+    #   blocks are fetched with one driver-direct arrow read (or a Spark
+    #   scan-only job: no exchange, no Python workers) and scored
+    #   in-process — a distributed scoring job's fixed latency (scan task
+    #   scheduling, a segment_id exchange, pandas-worker round trips,
+    #   result fetch) dwarfs the arithmetic when the candidate postings are
+    #   a few MB packed.  Driver work/memory is bounded by the gate —
+    #   O(candidate volume), the same class as a broadcast join's build
+    #   side.  Distributed filter contexts and pruned queries never take it.
+    # - distributed (_score_blocks): groupBy(segment) or a cogroup with the
+    #   filter context, after the lossless block-max prune.
+    # Same decode, same kernel, same (score desc, doc_id asc) merge, so
+    # both fetchers are bit-identical by construction (pinned by test).
 
     _LOCAL_COLS = ("segment_id", "term", "n", "doc_ids_bin", "tfs_bin",
                    "dls_bin", "crc32")
     _LOCAL_COLS_POS = _LOCAL_COLS + ("pos_bin", "pos_crc32")
+
+    def _check_mode(self, mode: str, window: Optional[int], modes,
+                    note: str = "") -> None:
+        if mode not in modes:
+            raise ValueError(
+                f"mode must be {'|'.join(modes)}, got {mode!r}{note}")
+        if mode in ("phrase", "near") and not self.positions_stored:
+            raise ValueError(
+                f"mode={mode!r} needs an index built with "
+                "store_positions=True")
+        if mode == "near" and (window is None or window < 0):
+            raise ValueError("mode='near' needs window >= 0")
+
+    def _plan(self, mode: str, terms: List[str], dfs: Dict[str, int],
+              n_docs: int, window: Optional[int] = None,
+              raw_boosts: Optional[Dict[str, float]] = None,
+              boosts: Optional[Dict[str, float]] = None
+              ) -> Optional[sc.QueryPlan]:
+        """QueryPlan for the analyzed ``terms`` under mode
+        any|all|phrase|near against ``dfs`` (the live terms' dfs), or None
+        when nothing can match: no live term, or — under all/phrase/near —
+        any term absent from ``dfs``."""
+        live = sorted(t for t in set(terms) if t in dfs)
+        if not live or (mode != "any" and len(live) < len(set(terms))):
+            return None
+        weights = self._apply_boosts(
+            {t: sc.idf(n_docs, dfs[t]) for t in live}, raw_boosts, boosts)
+        return sc.QueryPlan(
+            weights=weights, qtf=dict(Counter(terms)),
+            terms=tuple(terms) if mode in ("phrase", "near") else (),
+            require=len(live) if mode == "all" else 0,
+            window=window if mode == "near" else None)
 
     def _use_local(self, vol: int, prune: bool = False,
                    allowed_df=None) -> bool:
@@ -623,6 +719,103 @@ class Searcher:
         return (max(vols) <= self.local_max_postings
                 and sum(vols) <= factor * self.local_max_postings)
 
+    def _search_one(self, case_id: str, plan: sc.QueryPlan,
+                    dfs: Dict[str, int], avgdl: float, k: int,
+                    offset: int = 0, prune: bool = False,
+                    filter: Optional[str] = None,
+                    filter_docs=None) -> pd.DataFrame:
+        """One plan through the single-query gates and the executor ->
+        (doc_id, score) ranks [offset, offset + k).  Only any/all plans
+        prune: phrase/near and must/must_not candidates are already the
+        (small) conjunctive intersection, and a lossless θ under
+        not-term gating would need not-aware block metadata.  Pruning
+        pays for itself only when there is real volume to skip, so it is
+        gated on total candidate postings (df is already known)."""
+        allowed, allow = self._filter_context(case_id, filter, filter_docs)
+        vol = sum(dfs[t] for t in plan.scan_terms)
+        prune = prune and plan.plain
+        local = self._use_local(vol, prune=prune, allowed_df=allowed)
+        hits = self._execute(
+            case_id, {"q": plan}, avgdl, k + offset, local,
+            prune=prune and not local and vol > self.prune_min_postings,
+            allowed=allowed, allow=allow)
+        return (hits.drop(columns="qid").iloc[offset:offset + k]
+                .reset_index(drop=True))
+
+    def _search_many(self, case_id: str, plans: Dict[str, sc.QueryPlan],
+                     dfs: Dict[str, int], avgdl: float, k: int,
+                     prune: bool) -> pd.DataFrame:
+        """A query log's plans through the batched local gate
+        (_use_local_batch) and the executor -> (qid, doc_id, score); the
+        engine of ``search_ids_many`` and the NRT hybrid's index side
+        (streaming.search_with_arrivals, which injects union-corpus
+        weights/avgdl).  ``prune``: the caller's volume-gated decision."""
+        vols = [sum(dfs[t] for t in p.scan_terms) for p in plans.values()]
+        return self._execute(
+            case_id, plans, avgdl, k,
+            local=not prune and self._use_local_batch(vols), prune=prune)
+
+    def _execute(self, case_id: str, plans: Dict[str, sc.QueryPlan],
+                 avgdl: float, k: Optional[int], local: bool,
+                 prune: bool = False, allowed=None,
+                 allow: Optional[np.ndarray] = None):
+        """Run a batch of plans over the case's candidate blocks -> pandas
+        (qid, doc_id, score), each plan's top-k in (qid asc, score desc,
+        doc_id asc) order; ``k=None`` returns the total-hits count (int)
+        of the one plan instead.
+
+        The scan reads the union of the plans' terms (partition pruning on
+        their term buckets, row-group pruning on term).  ``local`` picks
+        the driver-local fetcher; otherwise the distributed one runs,
+        after the lossless block-max prune when ``prune`` — _prune_blocks
+        for one plan, _prune_many_blocks for a batch.  ``allowed``: a
+        (segment_id, doc_id) filter DataFrame (_allowed_df); ``allow``: a
+        driver-resident filter set (sorted unique ids) — passed whole to
+        every segment's kernel locally (segment_id is a pure function of
+        doc_id, so out-of-segment ids can never match), shipped as the
+        cogroup's allowed side when the query is too big for the local
+        path."""
+        from pyspark.sql import functions as F
+
+        scan = sorted({t for p in plans.values() for t in p.scan_terms})
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in scan})
+        blocks = self.postings.filter(
+            (F.col("case_id") == case_id)
+            & F.col("term_bucket").isin(self._bucket_lit(buckets))
+            & F.col("term").isin(scan)
+        )
+        excl = self._tombstones.get(case_id)
+        if local:
+            positions = any(p.terms for p in plans.values())
+            pdf = self._collect_blocks(case_id, scan, blocks, positions)
+            per_q: Dict[str, tuple] = {}
+            for _seg, g in pdf.groupby("segment_id", sort=False):
+                for qid, ids, scores in zip(*sc.score_segment_blocks(
+                        _block_rows(g, positions), plans, avgdl, k,
+                        exclude=excl, allow=allow)):
+                    got = per_q.setdefault(qid, ([], []))
+                    got[0].append(ids)
+                    got[1].append(scores)
+            if k is None:
+                return sum(len(i) for ids, _s in per_q.values() for i in ids)
+            return _merge_topk(per_q, k)
+        if allow is not None:
+            allowed = self._allowed_df(case_id, None, self._ids_df(allow))
+        p1 = None
+        if prune and len(plans) == 1:
+            blocks, p1, allowed = self._prune_blocks(
+                blocks, plans, avgdl, k, exclude=excl, allowed_df=allowed)
+        elif prune:
+            blocks, p1 = self._prune_many_blocks(blocks, plans, avgdl, k,
+                                                 exclude=excl)
+        hits = self._score_blocks(blocks, plans, avgdl, k, exclude=excl,
+                                  allowed_df=allowed)
+        if p1 is None:
+            return hits
+        return (_sort_hits(pd.concat([p1, hits], ignore_index=True))
+                .groupby("qid", group_keys=False, sort=False).head(k)
+                .reset_index(drop=True))
+
     def _read_blocks_arrow(self, case_id: str, terms, cols):
         """Driver-direct parquet read of the candidate blocks: same commit
         dirs, partition pruning (term_bucket hive dirs), filters, and
@@ -651,139 +844,22 @@ class Searcher:
         return (frames[0] if len(frames) == 1
                 else pd.concat(frames, ignore_index=True))
 
-    def _collect_blocks(self, blocks_df, positions: bool = False,
-                        spec=None):
-        """One scan-only fetch of the candidate blocks' packed payloads to
-        the driver (bounded by the local_max_postings gate), CRC-verified
-        exactly like the distributed scorers.  ``spec=(case_id, terms)``
-        routes the fetch through the driver-direct arrow read — no Spark
-        job at all; without a spec (or with a persisted postings cache,
-        which lives in executor memory) the Spark scan-only job runs."""
-        import zlib
-
+    def _collect_blocks(self, case_id: str, terms, blocks_df,
+                        positions: bool) -> pd.DataFrame:
+        """The driver-local fetcher: one fetch of the candidate blocks'
+        packed payloads to the driver (bounded by the local gates),
+        CRC-verified like every other fetch.  The driver-direct arrow read
+        needs no Spark job at all; PYSEARCH_LOCAL_ARROW=0 falls back to
+        the Spark scan-only job over ``blocks_df``."""
         cols = self._LOCAL_COLS_POS if positions else self._LOCAL_COLS
-        if (spec is not None and not self.cache_postings
-                and os.environ.get("PYSEARCH_LOCAL_ARROW", "1") != "0"):
-            pdf = self._read_blocks_arrow(spec[0], spec[1], cols)
+        if os.environ.get("PYSEARCH_LOCAL_ARROW", "1") != "0":
+            pdf = self._read_blocks_arrow(case_id, terms, cols)
         else:
             pdf = blocks_df.select(*cols).toPandas()
-        for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                   pdf["dls_bin"], pdf["crc32"]):
-            got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-            if got != crc:
-                raise IOError(
-                    f"posting block CRC mismatch: {got} != {crc}")
-        if positions:
-            for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
-                if zlib.crc32(pb) != pcrc:
-                    raise IOError("position payload CRC mismatch")
+        _verify_blocks(pdf, positions)
         return pdf
 
-    @staticmethod
-    def _merge_local_topk(ids_all, scores_all, k: int) -> pd.DataFrame:
-        if not ids_all:
-            # typed like the distributed path's toPandas of an empty frame
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        ids = np.concatenate(ids_all)
-        scores = np.concatenate(scores_all)
-        o = np.lexsort((ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": ids[o], "score": scores[o]})
-
-    def _score_blocks_local(self, blocks_df, idfs, qtf, avgdl, k,
-                            require: int = 0,
-                            exclude: Optional[np.ndarray] = None,
-                            qterms: Optional[List[str]] = None,
-                            window: Optional[int] = None,
-                            must_terms=None, not_terms=None,
-                            spec=None,
-                            allow: Optional[np.ndarray] = None
-                            ) -> pd.DataFrame:
-        """Driver-local counterpart of _score_blocks /
-        _score_blocks_phrase / _score_blocks_boolean: same per-segment
-        kernels, same (score desc, doc_id asc) merge.  ``allow`` is a
-        driver-resident filter context (sorted unique doc_ids) — passed
-        whole to every segment's kernel, where membership testing gives
-        exactly the per-segment slice the distributed cogroup hands over
-        (segment_id is a pure function of doc_id, so out-of-segment ids
-        in the array can never match that segment's postings)."""
-        phrase = qterms is not None
-        pdf = self._collect_blocks(blocks_df, positions=phrase, spec=spec)
-        ids_all: List[np.ndarray] = []
-        scores_all: List[np.ndarray] = []
-        for _seg, g in pdf.groupby("segment_id", sort=False):
-            if phrase:
-                rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                g["tfs_bin"], g["dls_bin"], g["pos_bin"]))
-                ids, scores = sc.score_segment_blocks_phrase(
-                    rows, idfs, qterms, qtf, avgdl, k, exclude=exclude,
-                    window=window, allow=allow)
-            else:
-                rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                g["tfs_bin"], g["dls_bin"]))
-                if must_terms is not None or not_terms is not None:
-                    ids, scores = sc.score_segment_blocks_boolean(
-                        rows, idfs, qtf, avgdl, k,
-                        must_terms=must_terms or (),
-                        not_terms=not_terms or (), exclude=exclude,
-                        allow=allow)
-                else:
-                    ids, scores = sc.score_segment_blocks(
-                        rows, idfs, qtf, avgdl, k, require_terms=require,
-                        exclude=exclude, allow=allow)
-            if ids.size:
-                ids_all.append(ids)
-                scores_all.append(scores)
-        return self._merge_local_topk(ids_all, scores_all, k)
-
-    def _many_pass_local(self, blocks_df, plans: Dict[str, tuple],
-                         avgdl: float, k: int, mode: str,
-                         excl: Optional[np.ndarray],
-                         spec=None) -> pd.DataFrame:
-        """Driver-local counterpart of _many_pass: shared decode per
-        segment via the multi-plan kernels, per-query merge in the same
-        (qid asc, score desc, doc_id asc) order."""
-        phrase = mode in ("phrase", "near")
-        pdf = self._collect_blocks(blocks_df, positions=phrase, spec=spec)
-        per_ids: Dict[str, List[np.ndarray]] = {}
-        per_scores: Dict[str, List[np.ndarray]] = {}
-        for _seg, g in pdf.groupby("segment_id", sort=False):
-            if phrase:
-                rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                g["tfs_bin"], g["dls_bin"], g["pos_bin"]))
-                qids, ids_l, scores_l = sc.score_segment_blocks_multi_phrase(
-                    rows, plans, avgdl, k, exclude=excl)
-            else:
-                rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                g["tfs_bin"], g["dls_bin"]))
-                if mode == "boolean":
-                    qids, ids_l, scores_l = (
-                        sc.score_segment_blocks_multi_boolean(
-                            rows, plans, avgdl, k, exclude=excl))
-                else:
-                    qids, ids_l, scores_l = sc.score_segment_blocks_multi(
-                        rows, plans, avgdl, k, exclude=excl)
-            for qid, i, s in zip(qids, ids_l, scores_l):
-                per_ids.setdefault(qid, []).append(i)
-                per_scores.setdefault(qid, []).append(s)
-        frames = []
-        for qid in sorted(per_ids):
-            ids = np.concatenate(per_ids[qid])
-            scores = np.concatenate(per_scores[qid])
-            o = np.lexsort((ids, -scores))[:k]
-            frames.append(pd.DataFrame({
-                "qid": qid, "doc_id": ids[o], "score": scores[o]}))
-        if not frames:
-            return pd.DataFrame({"qid": pd.Series([], dtype="object"),
-                                 "doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        return pd.concat(frames, ignore_index=True)
-
     # ------------------------------------------------------------------
-    def _analyze_query(self, query: str):
-        terms = self._analyze(query)
-        return terms, Counter(terms)
-
     def _local_vocab(self, case_id: str) -> Optional[dict]:
         """The case's whole {term: df} map when the vocabulary fits the
         LOCAL_MAX_VOCAB gate, else None (decided once per load from a
@@ -966,8 +1042,6 @@ class Searcher:
         searchAfter shape): ranks [offset, offset+k) are returned, at
         O(offset+k) cost per page — the funnel fetches the top
         offset+k and slices, the standard deep-pagination tradeoff."""
-        from pyspark.sql import functions as F
-
         self._check_fresh()
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
@@ -983,93 +1057,24 @@ class Searcher:
                 query, k=k, case_id=case_id, prune=prune,
                 distance=distance, boosts=boosts, filter=filter,
                 filter_docs=filter_docs, offset=offset)
-        if mode not in ("any", "all", "phrase", "near"):
-            raise ValueError(
-                "mode must be any|all|phrase|near|boolean|fuzzy, "
-                f"got {mode!r}")
-        if mode in ("phrase", "near") and not self.positions_stored:
-            raise ValueError(
-                f"mode={mode!r} needs an index built with "
-                "store_positions=True"
-            )
-        if mode == "near" and (window is None or window < 0):
-            raise ValueError("mode='near' needs window >= 0")
+        # (boolean and fuzzy returned above)
+        self._check_mode(mode, window, ("any", "all", "phrase", "near",
+                                        "boolean", "fuzzy"))
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
-        k_fetch = k + offset
         query, raw_boosts = parse_boosts(query)
-        terms, qtf = self._analyze_query(query)
+        terms = self._analyze(query)
         if case_id not in self._corpus:
             return pd.DataFrame(columns=["doc_id", "score"])
         n_docs, avgdl, _sum_dl = self._corpus[case_id]
         dfs = self._term_dfs(case_id, terms)
-        live = [t for t in set(terms) if t in dfs]
-        if not live or (mode in ("all", "phrase", "near")
-                        and len(live) < len(set(terms))):
+        plan = self._plan(mode, terms, dfs, n_docs, window=window,
+                          raw_boosts=raw_boosts, boosts=boosts)
+        if plan is None:
             return pd.DataFrame(columns=["doc_id", "score"])
-        idfs = self._apply_boosts(
-            {t: sc.idf(n_docs, dfs[t]) for t in live}, raw_boosts, boosts)
-        require = len(live) if mode == "all" else 0
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in live})
-
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(live)
-        )
-
-        excl = self._tombstones.get(case_id)
-        filter_docs, filter_ids = self._split_filter_docs(filter_docs)
-        if filter_ids is not None and filter is not None:
-            # predicate + driver-side set: intersect distributed (rare
-            # combination; correctness over the local shortcut)
-            filter_docs, filter_ids = self._ids_df(filter_ids), None
-        allowed = self._allowed_df(case_id, filter, filter_docs)
-        vol = sum(dfs[t] for t in live)
-        if mode in ("phrase", "near"):
-            if self._use_local(vol, allowed_df=allowed):
-                pdf = self._score_blocks_local(
-                    blocks, idfs, qtf, avgdl, k_fetch, exclude=excl,
-                    qterms=terms,
-                    window=window if mode == "near" else None,
-                    spec=(case_id, live), allow=filter_ids)
-            else:
-                if filter_ids is not None:
-                    allowed = self._allowed_df(
-                        case_id, None, self._ids_df(filter_ids))
-                pdf = self._score_blocks_phrase(
-                    blocks, idfs, terms, qtf, avgdl, k_fetch, exclude=excl,
-                    window=window if mode == "near" else None,
-                    allowed_df=allowed)
-            return pdf.iloc[offset:offset + k].reset_index(drop=True)
-
-        if self._use_local(vol, prune=prune, allowed_df=allowed):
-            pdf = self._score_blocks_local(blocks, idfs, qtf, avgdl,
-                                           k_fetch, require, exclude=excl,
-                                           spec=(case_id, live),
-                                           allow=filter_ids)
-            return pdf.iloc[offset:offset + k].reset_index(drop=True)
-        if filter_ids is not None:
-            # too big for the local path: the driver-side set joins the
-            # distributed cogroup exactly like a DataFrame filter_docs
-            allowed = self._allowed_df(case_id, None, self._ids_df(filter_ids))
-
-        # pruning pays for itself only when there is real volume to skip;
-        # df is already known, so gate on total candidate postings
-        p1_pdf = None
-        if prune and vol > self.prune_min_postings:
-            blocks, p1_pdf, allowed = self._prune_blocks(
-                blocks, idfs, qtf, avgdl, k_fetch, require, exclude=excl,
-                allowed_df=allowed)
-
-        pdf = self._score_blocks(blocks, idfs, qtf, avgdl, k_fetch, require,
-                                 exclude=excl, allowed_df=allowed)
-        if p1_pdf is not None:
-            pdf = pd.concat([p1_pdf, pdf], ignore_index=True)
-        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="stable"
-                              ).iloc[offset:offset + k].reset_index(drop=True)
-        return pdf
+        return self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
+                                prune=prune, filter=filter,
+                                filter_docs=filter_docs)
 
     def count(self, query: str, case_id: str = "0", mode: str = "any",
               window: Optional[int] = None,
@@ -1085,18 +1090,8 @@ class Searcher:
         terms' blocks counts matches per segment (doc-range partitioning
         makes per-segment counts disjoint, so the driver sums
         O(segments) longs — no doc ids ever leave the executors)."""
-        from pyspark.sql import functions as F
-
         self._check_fresh()
-        if mode not in ("any", "all", "phrase", "near"):
-            raise ValueError(
-                f"count() supports mode any|all|phrase|near, got {mode!r}")
-        if mode in ("phrase", "near") and not self.positions_stored:
-            raise ValueError(
-                f"mode={mode!r} needs an index built with "
-                "store_positions=True")
-        if mode == "near" and (window is None or window < 0):
-            raise ValueError("mode='near' needs window >= 0")
+        self._check_mode(mode, window, ("any", "all", "phrase", "near"))
         # boosts weight scores and counting has no scores, but the ^w
         # syntax must still PARSE so 'relam^2 fast' counts the same match
         # set search_ids ranks (an unstripped boost would tokenize into a
@@ -1105,88 +1100,21 @@ class Searcher:
         terms = self._analyze(query)
         if not terms or case_id not in self._corpus:
             return 0
+        n_docs, avgdl, _sum_dl = self._corpus[case_id]
         dfs = self._term_dfs(case_id, terms)
-        live = sorted(t for t in set(terms) if t in dfs)
-        if not live or (mode != "any" and len(live) < len(set(terms))):
+        plan = self._plan(mode, terms, dfs, n_docs, window=window)
+        if plan is None:
             return 0
         excl = self._tombstones.get(case_id)
-        filter_docs, filter_ids = self._split_filter_docs(filter_docs)
-        if filter_ids is not None and filter is not None:
-            filter_docs, filter_ids = self._ids_df(filter_ids), None
-        allowed = self._allowed_df(case_id, filter, filter_docs)
-        if (len(live) == 1 and mode in ("any", "all") and excl is None
-                and allowed is None and filter_ids is None):
-            return int(dfs[live[0]])  # metadata-only: count == df
-
-        require = len(live) if mode == "all" else 0
-        qterms = terms if mode in ("phrase", "near") else None
-        win = window if mode == "near" else None
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in live})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(live)
-        )
-        if self._use_local(sum(dfs[t] for t in live), allowed_df=allowed):
-            # same one-scan fetch + per-segment count kernel, in-process
-            pdf = self._collect_blocks(blocks, positions=qterms is not None,
-                                       spec=(case_id, live))
-            total = 0
-            for _seg, g in pdf.groupby("segment_id", sort=False):
-                if qterms is not None:
-                    rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                    g["tfs_bin"], g["dls_bin"],
-                                    g["pos_bin"]))
-                else:
-                    rows = list(zip(g["term"], g["n"], g["doc_ids_bin"],
-                                    g["tfs_bin"], g["dls_bin"]))
-                total += sc.count_segment_docs(rows, live, require=require,
-                                               exclude=excl,
-                                               allow=filter_ids,
-                                               qterms=qterms, window=win)
-            return total
-        if filter_ids is not None:
-            allowed = self._allowed_df(case_id, None, self._ids_df(filter_ids))
-
-        cols = ["segment_id", "term", "n", "doc_ids_bin", "tfs_bin",
-                "dls_bin", "crc32"]
-        if qterms is not None:
-            cols += ["pos_bin", "pos_crc32"]
-
-        def count_one(key, pdf: pd.DataFrame,
-                      allow: Optional[np.ndarray]) -> pd.DataFrame:
-            import zlib
-
-            for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                       pdf["dls_bin"], pdf["crc32"]):
-                got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                if got != crc:
-                    raise IOError(
-                        f"posting block CRC mismatch in segment {key[0]}: "
-                        f"{got} != {crc}"
-                    )
-            if qterms is not None:
-                # the positions payload gets the same verify-before-decode
-                # treatment as every scoring path
-                for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
-                    if zlib.crc32(pb) != pcrc:
-                        raise IOError(
-                            f"positions CRC mismatch in segment {key[0]}")
-                rows = list(zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"],
-                                pdf["tfs_bin"], pdf["dls_bin"],
-                                pdf["pos_bin"]))
-            else:
-                rows = list(zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"],
-                                pdf["tfs_bin"], pdf["dls_bin"]))
-            n = sc.count_segment_docs(rows, live, require=require,
-                                      exclude=excl, allow=allow,
-                                      qterms=qterms, window=win)
-            return pd.DataFrame({"n": np.asarray([n], dtype=np.int64)})
-
-        sdf = self._cogroup_score(blocks.select(*cols), allowed, count_one,
-                                  "n long")
-        row = sdf.agg(F.sum("n").alias("total")).collect()[0]
-        return int(row["total"] or 0)
+        allowed, allow = self._filter_context(case_id, filter, filter_docs)
+        if (len(plan.weights) == 1 and plan.plain and excl is None
+                and allowed is None and allow is None):
+            (term,) = plan.weights
+            return int(dfs[term])  # metadata-only: count == df
+        vol = sum(dfs[t] for t in plan.scan_terms)
+        return self._execute(case_id, {"q": plan}, avgdl, None,
+                             local=self._use_local(vol, allowed_df=allowed),
+                             allowed=allowed, allow=allow)
 
     def search_ids_boolean(self, must: str = "", should: str = "",
                            must_not: str = "",
@@ -1224,68 +1152,57 @@ class Searcher:
         lossless under not-term gating needs not-aware block metadata —
         decode volume is the scan of must ∪ should ∪ must_not postings,
         same order as mode="all" plus the prohibited terms' lists."""
-        from pyspark.sql import functions as F
-
         self._check_fresh()
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
-        must_q, must_boosts = parse_boosts(must)
-        should_q, should_boosts = parse_boosts(should)
         if any(_BOOST_RE.match(t) for t in must_not.split()):
             raise ValueError(
                 "boost on a MUST_NOT clause is meaningless "
                 "(prohibited terms gate, they never score)")
-        must_terms = self._analyze(must_q)
-        should_terms = self._analyze(should_q)
-        not_terms = sorted(set(self._analyze(must_not)))
-        raw_boosts = dict(must_boosts)
-        for t, b in should_boosts.items():
-            raw_boosts[t] = raw_boosts.get(t, 1.0) * b
-        pos_terms = must_terms + should_terms
-        qtf = Counter(pos_terms)
+        must_terms, should_terms, not_terms, raw_boosts = \
+            self._boolean_clauses(must, should, must_not)
         empty = pd.DataFrame(columns=["doc_id", "score"])
-        if case_id not in self._corpus or not pos_terms:
+        if case_id not in self._corpus or not (must_terms or should_terms):
             return empty
         n_docs, avgdl, _sum_dl = self._corpus[case_id]
-        dfs = self._term_dfs(case_id, pos_terms + not_terms)
-        must_live = sorted({t for t in must_terms if t in dfs})
-        if len(must_live) < len(set(must_terms)):
-            return empty  # a required term is corpus-absent
-        live = sorted({t for t in pos_terms if t in dfs})
-        if not live:
+        dfs = self._term_dfs(case_id, must_terms + should_terms + not_terms)
+        plan = self._boolean_plan(must_terms, should_terms, not_terms,
+                                  raw_boosts, dfs, n_docs, boosts)
+        if plan is None:
             return empty
-        not_live = [t for t in not_terms if t in dfs]
-        idfs = self._apply_boosts(
+        return self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
+                                filter=filter, filter_docs=filter_docs)
+
+    def _boolean_clauses(self, must: str, should: str, must_not: str):
+        """Analyze boolean clause strings -> (must_terms, should_terms,
+        sorted distinct not_terms, raw_boosts); must/should ``^`` boosts
+        compose multiplicatively."""
+        must_q, raw_boosts = parse_boosts(must)
+        should_q, should_boosts = parse_boosts(should)
+        for t, b in should_boosts.items():
+            raw_boosts[t] = raw_boosts.get(t, 1.0) * b
+        return (self._analyze(must_q), self._analyze(should_q),
+                sorted(set(self._analyze(must_not))), raw_boosts)
+
+    def _boolean_plan(self, must_terms, should_terms, not_terms, raw_boosts,
+                      dfs: Dict[str, int], n_docs: int,
+                      boosts: Optional[Dict[str, float]] = None
+                      ) -> Optional[sc.QueryPlan]:
+        """Boolean QueryPlan, or None when nothing can match: a must term
+        absent from the corpus, or no live positive (must/should) clause.
+        Absent should terms drop; absent must_not terms are no-ops."""
+        pos = must_terms + should_terms
+        must_live = sorted({t for t in must_terms if t in dfs})
+        live = sorted({t for t in pos if t in dfs})
+        if not live or len(must_live) < len(set(must_terms)):
+            return None
+        weights = self._apply_boosts(
             {t: sc.idf(n_docs, dfs[t]) for t in live}, raw_boosts, boosts)
-        scan_terms = sorted(set(live) | set(not_live))
-        buckets = sorted({term_bucket(t, self.n_buckets)
-                          for t in scan_terms})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(scan_terms)
-        )
-        excl = self._tombstones.get(case_id)
-        filter_docs, filter_ids = self._split_filter_docs(filter_docs)
-        if filter_ids is not None and filter is not None:
-            filter_docs, filter_ids = self._ids_df(filter_ids), None
-        allowed = self._allowed_df(case_id, filter, filter_docs)
-        if self._use_local(sum(dfs[t] for t in scan_terms),
-                           allowed_df=allowed):
-            pdf = self._score_blocks_local(
-                blocks, idfs, qtf, avgdl, k + offset, exclude=excl,
-                must_terms=must_live, not_terms=not_live,
-                spec=(case_id, scan_terms), allow=filter_ids)
-        else:
-            if filter_ids is not None:
-                allowed = self._allowed_df(
-                    case_id, None, self._ids_df(filter_ids))
-            pdf = self._score_blocks_boolean(
-                blocks, idfs, qtf, avgdl, k + offset, must_terms=must_live,
-                not_terms=not_live, exclude=excl, allowed_df=allowed)
-        return pdf.iloc[offset:offset + k].reset_index(drop=True)
+        return sc.QueryPlan(weights=weights, qtf=dict(Counter(pos)),
+                            must=tuple(must_live),
+                            must_not=tuple(t for t in not_terms if t in dfs))
 
     def expand_fuzzy(self, case_id: str,
                      fuzzy: "Dict[str, Tuple[int, float]]",
@@ -1482,8 +1399,6 @@ class Searcher:
         ``search_ids(query, mode="fuzzy", distance=d)``.  The reference
         sketched fuzzy search but never shipped it (commented out,
         search_pdfs.go:176-186)."""
-        from pyspark.sql import functions as F
-
         self._check_fresh()
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
@@ -1535,42 +1450,11 @@ class Searcher:
         if not expanded:
             return (empty, {}) if return_expansion else empty
         idfs = {e: sc.idf(n_docs, df) * w for e, (w, df) in expanded.items()}
-        qtf = {e: 1 for e in expanded}
+        plan = sc.QueryPlan(weights=idfs, qtf={e: 1 for e in expanded})
         dfs = {e: df for e, (_w, df) in expanded.items()}
-        buckets = sorted({term_bucket(e, self.n_buckets) for e in expanded})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(list(expanded))
-        )
-        excl = self._tombstones.get(case_id)
-        filter_docs, filter_ids = self._split_filter_docs(filter_docs)
-        if filter_ids is not None and filter is not None:
-            filter_docs, filter_ids = self._ids_df(filter_ids), None
-        allowed = self._allowed_df(case_id, filter, filter_docs)
-        k_fetch = k + offset
-        if self._use_local(sum(dfs.values()), prune=prune,
-                           allowed_df=allowed):
-            pdf = self._score_blocks_local(blocks, idfs, qtf, avgdl,
-                                           k_fetch, 0, exclude=excl,
-                                           spec=(case_id, list(expanded)),
-                                           allow=filter_ids)
-            pdf = pdf.iloc[offset:offset + k].reset_index(drop=True)
-            return (pdf, expanded) if return_expansion else pdf
-        if filter_ids is not None:
-            allowed = self._allowed_df(case_id, None, self._ids_df(filter_ids))
-        p1_pdf = None
-        if prune and sum(dfs.values()) > self.prune_min_postings:
-            blocks, p1_pdf, allowed = self._prune_blocks(
-                blocks, idfs, qtf, avgdl, k_fetch, 0, exclude=excl,
-                allowed_df=allowed)
-        pdf = self._score_blocks(blocks, idfs, qtf, avgdl, k_fetch, 0,
-                                 exclude=excl, allowed_df=allowed)
-        if p1_pdf is not None:
-            pdf = pd.concat([p1_pdf, pdf], ignore_index=True)
-        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="stable"
-                              ).iloc[offset:offset + k].reset_index(drop=True)
+        pdf = self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
+                               prune=prune, filter=filter,
+                               filter_docs=filter_docs)
         return (pdf, expanded) if return_expansion else pdf
 
     def suggest(self, terms, case_id: str = "0", max_edits: int = 2,
@@ -1680,8 +1564,6 @@ class Searcher:
         distinct terms; scoring is the regular pruned block funnel.
         (Lucene's minTermFreq/minDocFreq pre-filters default to neutral
         here — the top-N cut is the selection.)"""
-        import pandas as pd
-
         self._check_fresh()
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
@@ -1691,9 +1573,10 @@ class Searcher:
         empty = pd.DataFrame(columns=["doc_id", "score"])
         if case_id not in self._corpus:
             return (empty, []) if return_terms else empty
-        terms, counts = self._analyze_query(text)
+        terms = self._analyze(text)
         if not terms:
             return (empty, []) if return_terms else empty
+        counts = Counter(terms)
         n_docs, avgdl, _sum_dl = self._corpus[case_id]
         dfs_all = self._term_dfs(case_id, terms)
         ranked = sorted(
@@ -1706,32 +1589,10 @@ class Searcher:
         # they are ALREADY analyzed (re-running the analyzer on a stem is
         # not guaranteed to be a no-op), qtf=1 per term (Lucene MLT's
         # BooleanQuery of plain TermQuerys)
-        from pyspark.sql import functions as F
-
-        idfs = {t: sc.idf(n_docs, dfs_all[t]) for t in sel}
-        qtf = {t: 1 for t in sel}
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in sel})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(sel)
-        )
-        excl = self._tombstones.get(case_id)
-        if self._use_local(sum(dfs_all[t] for t in sel), prune=prune):
-            pdf = self._score_blocks_local(blocks, idfs, qtf, avgdl, k, 0,
-                                           exclude=excl,
-                                           spec=(case_id, sel))
-            return (pdf, sel) if return_terms else pdf
-        p1_pdf = None
-        if prune and sum(dfs_all[t] for t in sel) > self.prune_min_postings:
-            blocks, p1_pdf, _ = self._prune_blocks(blocks, idfs, qtf, avgdl,
-                                                   k, 0, exclude=excl)
-        pdf = self._score_blocks(blocks, idfs, qtf, avgdl, k, 0,
-                                 exclude=excl)
-        if p1_pdf is not None:
-            pdf = pd.concat([p1_pdf, pdf], ignore_index=True)
-        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="stable").head(k).reset_index(drop=True)
+        plan = sc.QueryPlan(weights={t: sc.idf(n_docs, dfs_all[t])
+                                     for t in sel},
+                            qtf={t: 1 for t in sel})
+        pdf = self._search_one(case_id, plan, dfs_all, avgdl, k, prune=prune)
         return (pdf, sel) if return_terms else pdf
 
     def search_ids_many(self, queries: Dict[str, str],
@@ -1773,22 +1634,12 @@ class Searcher:
         never prunes (same reason as the single-query path — the must
         intersection already bounds candidates and θ bounds are not
         not-term-aware)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
         self._check_fresh()
-        if mode not in ("any", "all", "phrase", "near", "boolean"):
-            raise ValueError(
-                f"mode must be any|all|phrase|near|boolean, got {mode!r} "
-                "(fuzzy is a single-query mode — its expansion job "
-                "dominates; loop over search_ids for fuzzy logs)")
-        if mode in ("phrase", "near") and not self.positions_stored:
-            raise ValueError(
-                f"mode={mode!r} needs an index built with "
-                "store_positions=True"
-            )
-        if mode == "near" and (window is None or window < 0):
-            raise ValueError("mode='near' needs window >= 0")
+        self._check_mode(mode, window,
+                         ("any", "all", "phrase", "near", "boolean"),
+                         note=" (fuzzy is a single-query mode — its "
+                              "expansion job dominates; loop over "
+                              "search_ids for fuzzy logs)")
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
         empty = pd.DataFrame(columns=["qid", "doc_id", "score"])
@@ -1797,379 +1648,125 @@ class Searcher:
         n_docs, avgdl, _sum_dl = self._corpus[case_id]
 
         if mode == "boolean":
-            plans, vols = self._boolean_plans(queries, case_id, n_docs)
-            if not plans:
-                return empty
-            return self._score_many_blocks(
-                plans, avgdl, case_id, k, mode, prune=False,
-                local=self._use_local_batch(vols))
-
-        parsed = {qid: parse_boosts(q) for qid, q in queries.items()}
-        analyzed = {qid: self._analyze_query(q)
-                    for qid, (q, _rb) in parsed.items()}
-        union_terms = sorted({t for terms, _ in analyzed.values() for t in terms})
-        dfs = self._term_dfs(case_id, union_terms)  # one batched stats probe
-
-        plans: Dict[str, tuple] = {}
-        for qid, (terms, qtf) in analyzed.items():
-            live = [t for t in set(terms) if t in dfs]
-            if not live or (mode in ("all", "phrase", "near")
-                            and len(live) < len(set(terms))):
-                continue
-            idfs = self._apply_boosts(
-                {t: sc.idf(n_docs, dfs[t]) for t in live},
-                parsed[qid][1], None)
-            if mode == "phrase":
-                plans[qid] = (idfs, list(terms), dict(qtf))
-            elif mode == "near":
-                plans[qid] = (idfs, list(terms), dict(qtf), int(window))
-            else:
-                plans[qid] = (idfs, dict(qtf),
-                              len(live) if mode == "all" else 0)
+            plans, dfs = self._boolean_plans(queries, case_id, n_docs)
+            do_prune = False
+        else:
+            analyzed = {}
+            for qid, q in queries.items():
+                q, raw_boosts = parse_boosts(q)
+                analyzed[qid] = (self._analyze(q), raw_boosts)
+            union_terms = sorted({t for terms, _rb in analyzed.values()
+                                  for t in terms})
+            dfs = self._term_dfs(case_id, union_terms)  # one stats probe
+            plans = {}
+            for qid, (terms, raw_boosts) in analyzed.items():
+                plan = self._plan(mode, terms, dfs, n_docs, window=window,
+                                  raw_boosts=raw_boosts)
+                if plan is not None:
+                    plans[qid] = plan
+            # volume is summed over the SURVIVING plans' terms — a dropped
+            # query's terms are never scanned, so they must not tip the gate
+            vol = sum(dfs[t] for t in {t for p in plans.values()
+                                       for t in p.weights})
+            do_prune = (prune and mode in ("any", "all")
+                        and vol > self.prune_min_postings * len(plans))
         if not plans:
             return empty
-        # volume is summed over the SURVIVING plans' terms — a dropped
-        # query's terms are never scanned, so they must not tip the gates
-        plan_terms = {t for p in plans.values() for t in p[0]}
-        vol = sum(dfs[t] for t in plan_terms)
-        do_prune = (prune and mode in ("any", "all")
-                    and vol > self.prune_min_postings * len(plans))
-        # the driver-local batch gate (see _use_local_batch): every plan
-        # must clear the single-query gate on its own volume AND the
-        # summed per-plan volume must stay under the measured crossover —
-        # a large query log stays on the distributed shared-decode scan
-        vols = [sum(dfs[t] for t in p[0]) for p in plans.values()]
-        return self._score_many_blocks(
-            plans, avgdl, case_id, k, mode, prune=do_prune,
-            local=(not do_prune) and self._use_local_batch(vols))
+        return self._search_many(case_id, plans, dfs, avgdl, k, do_prune)
 
     def _boolean_plans(self, queries: Dict[str, str], case_id: str,
-                       n_docs: int) -> Dict[str, tuple]:
-        """Build batched boolean plans (qid -> (idfs, qtf, must_live,
-        not_live)) from Lucene ``+must -must_not should`` query strings —
-        ONE batched df probe over the union of every clause's terms.
-        Clause semantics are search_ids_boolean's: a query with a
-        corpus-absent MUST term or no live positive clause drops (it
-        yields no rows); absent should terms drop; absent must_not terms
-        are no-ops.  Returns (plans, per_plan_volumes) — each surviving
-        plan's own scanned-postings volume feeds the driver-local batch
-        gate (_use_local_batch)."""
-        parts: Dict[str, tuple] = {}
-        union: set = set()
+                       n_docs: int):
+        """Batched boolean plans from Lucene ``+must -must_not should``
+        query strings — ONE batched df probe over the union of every
+        clause's terms; clause semantics are search_ids_boolean's (a query
+        whose plan is None yields no rows).  Returns (plans, dfs)."""
+        clauses = {}
         for qid, q in queries.items():
             # (parse_boolean already rejected any '-term^boost' token)
             must_raw, should_raw, not_raw = parse_boolean(q)
-            must_q, mb = parse_boosts(" ".join(must_raw))
-            should_q, sb = parse_boosts(" ".join(should_raw))
-            must_terms = self._analyze(must_q)
-            should_terms = self._analyze(should_q)
-            not_terms = sorted(set(self._analyze(" ".join(not_raw))))
-            rb = dict(mb)
-            for t, b in sb.items():
-                rb[t] = rb.get(t, 1.0) * b
-            parts[qid] = (must_terms, should_terms, not_terms, rb)
-            union |= set(must_terms) | set(should_terms) | set(not_terms)
+            clauses[qid] = self._boolean_clauses(
+                " ".join(must_raw), " ".join(should_raw), " ".join(not_raw))
+        union = {t for must_t, should_t, not_t, _rb in clauses.values()
+                 for t in must_t + should_t + not_t}
         dfs = self._term_dfs(case_id, sorted(union))
-        plans: Dict[str, tuple] = {}
-        for qid, (must_terms, should_terms, not_terms, rb) in parts.items():
-            pos = must_terms + should_terms
-            must_live = sorted({t for t in must_terms if t in dfs})
-            if not pos or len(must_live) < len(set(must_terms)):
-                continue
-            live = sorted({t for t in pos if t in dfs})
-            if not live:
-                continue
-            idfs = self._apply_boosts(
-                {t: sc.idf(n_docs, dfs[t]) for t in live}, rb, None)
-            plans[qid] = (idfs, dict(Counter(pos)), tuple(must_live),
-                          tuple(t for t in not_terms if t in dfs))
-        vols = [sum(dfs[t] for t in set(p[0]) | set(p[3]))
-                for p in plans.values()]
-        return plans, vols
+        plans = {}
+        for qid, (must_t, should_t, not_t, rb) in clauses.items():
+            plan = self._boolean_plan(must_t, should_t, not_t, rb, dfs,
+                                      n_docs)
+            if plan is not None:
+                plans[qid] = plan
+        return plans, dfs
 
-    def _score_many_blocks(self, plans: Dict[str, tuple], avgdl: float,
-                           case_id: str, k: int, mode: str,
-                           prune: bool = False,
-                           local: bool = False) -> pd.DataFrame:
-        """ONE partition-pruned postings scan scoring every prebuilt plan;
-        the shared engine of ``search_ids_many`` and the NRT hybrid's
-        batched index side (streaming.search_with_arrivals, which injects
-        union-corpus idfs/avgdl).  ``plans``: qid -> (idfs, qtf, require),
-        or (idfs, terms, qtf) under mode="phrase".  Returns pandas
-        (qid, doc_id, score), each query's top-k.  ``prune=True`` (callers
-        gate it on candidate volume; never under mode="phrase") runs the
-        batched lossless block-max prune first — see
-        ``_prune_many_blocks``."""
-        from pyspark.sql import functions as F
+    def _score_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
+                      avgdl: float, k: Optional[int],
+                      exclude: Optional[np.ndarray] = None,
+                      allowed_df=None):
+        """The distributed fetcher: every segment's blocks (plus its slice
+        of ``allowed_df``) meet in one pandas call that verifies, decodes
+        and scores them with the per-segment kernel; the union of segment
+        top-ks then reduces to the global answer — orderBy.limit(k) for a
+        batch of one, a per-qid window for a larger batch, so only
+        O(|plans| * k) rows reach the driver.  Returns pandas (qid, doc_id,
+        score) sorted like _execute; ``k=None`` sums per-segment match
+        counts (doc-range partitioning makes them disjoint) into an int.
 
-        term_set = {t for p in plans.values() for t in p[0]}
-        if mode == "boolean":  # prohibited terms decode too (gate-only)
-            term_set |= {t for p in plans.values() for t in p[3]}
-        all_terms = sorted(term_set)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(all_terms)
-        )
-
-        excl = self._tombstones.get(case_id)
-        if local and not prune:
-            return self._many_pass_local(blocks, plans, avgdl, k, mode,
-                                         excl, spec=(case_id, all_terms))
-        p1_pdf = None
-        if prune and mode in ("any", "all"):
-            blocks, p1_pdf = self._prune_many_blocks(blocks, plans, avgdl,
-                                                     k, mode, exclude=excl)
-        pdf = self._many_pass(blocks, plans, avgdl, k, mode, excl)
-        if p1_pdf is not None:
-            pdf = pd.concat([p1_pdf, pdf], ignore_index=True)
-            pdf = (
-                pdf.sort_values(["qid", "score", "doc_id"],
-                                ascending=[True, False, True], kind="stable")
-                .groupby("qid", group_keys=False, sort=False).head(k)
-                .reset_index(drop=True)
-            )
-        return pdf
-
-    def _many_pass(self, blocks, plans: Dict[str, tuple], avgdl: float,
-                   k: int, mode: str,
-                   excl: Optional[np.ndarray]) -> pd.DataFrame:
-        """One applyInPandas scoring pass of every plan over ``blocks``:
-        per-segment shared decode, per-query local top-k, then a window
-        reduces to each query's global top-k before O(|queries| * k) rows
-        reach the driver.  Returns pandas (qid, doc_id, score) sorted by
-        (qid, score desc, doc_id)."""
+        One-term any/all plans with no filter take a shuffle-free path
+        (_score_blocks_single_term)."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        out_schema = "qid string, doc_id long, score double"
-        phrase = mode in ("phrase", "near")
+        if k is not None and allowed_df is None and len(plans) == 1:
+            (qid, plan), = plans.items()
+            if plan.plain and len(plan.weights) == 1:
+                return self._score_blocks_single_term(blocks_df, qid, plan,
+                                                      avgdl, k, exclude)
+        positions = any(p.terms for p in plans.values())
 
-        def score_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            import zlib
-
-            for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                       pdf["dls_bin"], pdf["crc32"]):
-                got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                if got != crc:
-                    raise IOError(
-                        f"posting block CRC mismatch in segment {key[0]}"
-                    )
-            if phrase:
-                for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
-                    if zlib.crc32(pb) != pcrc:
-                        raise IOError(
-                            f"position payload CRC mismatch in segment "
-                            f"{key[0]}"
-                        )
-                rows = list(
-                    zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"],
-                        pdf["tfs_bin"], pdf["dls_bin"], pdf["pos_bin"])
-                )
-                qids, ids_l, scores_l = sc.score_segment_blocks_multi_phrase(
-                    rows, plans, avgdl, k, exclude=excl
-                )
-            else:
-                rows = list(
-                    zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"],
-                        pdf["tfs_bin"], pdf["dls_bin"])
-                )
-                if mode == "boolean":
-                    qids, ids_l, scores_l = (
-                        sc.score_segment_blocks_multi_boolean(
-                            rows, plans, avgdl, k, exclude=excl))
-                else:
-                    qids, ids_l, scores_l = sc.score_segment_blocks_multi(
-                        rows, plans, avgdl, k, exclude=excl
-                    )
+        def score_one(key, pdf: pd.DataFrame,
+                      allow: Optional[np.ndarray]) -> pd.DataFrame:
+            _verify_blocks(pdf, positions)
+            qids, ids_l, scores_l = sc.score_segment_blocks(
+                _block_rows(pdf, positions), plans, avgdl, k,
+                exclude=exclude, allow=allow)
+            if k is None:
+                return pd.DataFrame({"n": np.asarray(
+                    [sum(len(i) for i in ids_l)], dtype=np.int64)})
             if not qids:
-                return pd.DataFrame(columns=["qid", "doc_id", "score"])
+                return _empty_hits()
             return pd.DataFrame({
                 "qid": np.repeat(qids, [len(a) for a in ids_l]),
                 "doc_id": np.concatenate(ids_l),
                 "score": np.concatenate(scores_l),
             })
 
-        cols = ["segment_id", "term", "n", "doc_ids_bin", "tfs_bin",
-                "dls_bin", "crc32"]
-        if phrase:
-            cols += ["pos_bin", "pos_crc32"]
-        sdf = (
-            blocks.select(*cols)
-            .groupBy("segment_id")
-            .applyInPandas(score_one, schema=out_schema)
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        pdf = (
-            sdf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-            .toPandas()
-        )
-        return (
-            pdf.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True], kind="stable")
-            .reset_index(drop=True)
-        )
+        cols = self._LOCAL_COLS_POS if positions else self._LOCAL_COLS
+        sdf = self._cogroup_score(blocks_df.select(*cols), allowed_df,
+                                  score_one,
+                                  "n long" if k is None else _HITS_SCHEMA)
+        if k is None:
+            row = sdf.agg(F.sum("n").alias("total")).collect()[0]
+            return int(row["total"] or 0)
+        if len(plans) == 1:
+            sdf = sdf.orderBy(F.col("score").desc(),
+                              F.col("doc_id").asc()).limit(k)
+        else:
+            w = Window.partitionBy("qid").orderBy(
+                F.col("score").desc(), F.col("doc_id").asc())
+            sdf = (sdf.withColumn("_rn", F.row_number().over(w))
+                   .filter(F.col("_rn") <= k).drop("_rn"))
+        return _sort_hits(sdf.toPandas())
 
-    def _score_blocks(self, blocks_df, idfs, qtf, avgdl, k,
-                      require: int = 0,
-                      exclude: Optional[np.ndarray] = None,
-                      allowed_df=None) -> pd.DataFrame:
-        """Distributed segment-local scoring -> union of local top-ks.
-
-        Single-term queries take a shuffle-free fast path: with no cross-term
-        sum, every posting's score is block-local, so blocks are scored in
-        place with mapInPandas and only per-batch top-ks leave the scan.
-        (A filter context needs the per-segment allowed slice, so it always
-        takes the grouped cogroup path.)
-
-        Block payloads are CRC-checked before decode (reference parity:
-        per-blob CRC32 verification at doc_positions.go:222-226)."""
-        out_schema = "doc_id long, score double"
-
-        if len(idfs) == 1 and allowed_df is None:
-            return self._score_blocks_single_term(blocks_df, idfs, qtf,
-                                                  avgdl, k, exclude=exclude)
-
-        def score_one(key, pdf: pd.DataFrame,
-                      allow: Optional[np.ndarray]) -> pd.DataFrame:
-            import zlib
-
-            for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                       pdf["dls_bin"], pdf["crc32"]):
-                got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                if got != crc:
-                    raise IOError(
-                        f"posting block CRC mismatch in segment {key[0]}: "
-                        f"{got} != {crc}"
-                    )
-            rows = list(
-                zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"], pdf["tfs_bin"],
-                    pdf["dls_bin"])
-            )
-            ids, scores = sc.score_segment_blocks(rows, idfs, qtf, avgdl, k,
-                                                  require_terms=require,
-                                                  exclude=exclude,
-                                                  allow=allow)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        sdf = self._cogroup_score(
-            blocks_df.select("segment_id", "term", "n", "doc_ids_bin",
-                             "tfs_bin", "dls_bin", "crc32"),
-            allowed_df, score_one, out_schema)
-        from pyspark.sql import functions as F
-
-        return (
-            sdf.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .toPandas()
-        )
-
-    def _score_blocks_boolean(self, blocks_df, idfs, qtf, avgdl, k,
-                              must_terms, not_terms,
-                              exclude: Optional[np.ndarray] = None,
-                              allowed_df=None) -> pd.DataFrame:
-        """Distributed boolean scoring (score.score_segment_blocks_boolean):
-        per segment, must-intersection + not-union gates around the shared
-        top-k funnel, then the usual union-of-local-top-ks.  Payloads are
-        CRC-checked exactly like _score_blocks."""
-        from pyspark.sql import functions as F
-
-        out_schema = "doc_id long, score double"
-
-        def score_one(key, pdf: pd.DataFrame,
-                      allow: Optional[np.ndarray]) -> pd.DataFrame:
-            import zlib
-
-            for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                       pdf["dls_bin"], pdf["crc32"]):
-                got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                if got != crc:
-                    raise IOError(
-                        f"posting block CRC mismatch in segment {key[0]}: "
-                        f"{got} != {crc}"
-                    )
-            rows = list(
-                zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"], pdf["tfs_bin"],
-                    pdf["dls_bin"])
-            )
-            ids, scores = sc.score_segment_blocks_boolean(
-                rows, idfs, qtf, avgdl, k,
-                must_terms=must_terms, not_terms=not_terms, exclude=exclude,
-                allow=allow)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        sdf = self._cogroup_score(
-            blocks_df.select("segment_id", "term", "n", "doc_ids_bin",
-                             "tfs_bin", "dls_bin", "crc32"),
-            allowed_df, score_one, out_schema)
-        return (
-            sdf.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .toPandas()
-        )
-
-    def _score_blocks_phrase(self, blocks_df, idfs, qterms, qtf, avgdl,
-                             k,
-                             exclude: Optional[np.ndarray] = None,
-                             window: Optional[int] = None,
-                             allowed_df=None) -> pd.DataFrame:
-        """Distributed exact-phrase scoring: per segment, posting-list
-        intersection + position adjacency (score.score_segment_blocks_phrase)
-        then the usual union-of-local-top-ks.  Payloads are CRC-checked
-        (3-buffer xor AND the separate positions CRC).  ``window`` switches
-        the position test to unordered proximity (mode="near")."""
-        from pyspark.sql import functions as F
-
-        out_schema = "doc_id long, score double"
-
-        def score_one(key, pdf: pd.DataFrame,
-                      allow: Optional[np.ndarray]) -> pd.DataFrame:
-            import zlib
-
-            for ib, tb, db, crc, pb, pcrc in zip(
-                pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["dls_bin"],
-                pdf["crc32"], pdf["pos_bin"], pdf["pos_crc32"]
-            ):
-                got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                if got != crc or zlib.crc32(pb) != pcrc:
-                    raise IOError(
-                        f"posting block CRC mismatch in segment {key[0]}"
-                    )
-            rows = list(
-                zip(pdf["term"], pdf["n"], pdf["doc_ids_bin"], pdf["tfs_bin"],
-                    pdf["dls_bin"], pdf["pos_bin"])
-            )
-            ids, scores = sc.score_segment_blocks_phrase(
-                rows, idfs, qterms, qtf, avgdl, k, exclude=exclude,
-                window=window, allow=allow
-            )
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        sdf = self._cogroup_score(
-            blocks_df.select("segment_id", "term", "n", "doc_ids_bin",
-                             "tfs_bin", "dls_bin", "pos_bin", "pos_crc32",
-                             "crc32"),
-            allowed_df, score_one, out_schema)
-        return (
-            sdf.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .toPandas()
-        )
-
-    def _score_blocks_single_term(self, blocks_df, idfs, qtf, avgdl, k,
+    def _score_blocks_single_term(self, blocks_df, qid: str,
+                                  plan: sc.QueryPlan, avgdl: float, k: int,
                                   exclude: Optional[np.ndarray] = None
                                   ) -> pd.DataFrame:
+        """Shuffle-free one-term scoring: with no cross-term sum, every
+        posting's score is block-local, so blocks are scored in place with
+        mapInPandas and only per-batch top-ks leave the scan."""
         from pyspark.sql import functions as F
 
-        import zlib
-
-        (term, idf_val), = idfs.items()
-        w = qtf.get(term, 1)
+        (term, idf_val), = plan.weights.items()
+        w = plan.qtf.get(term, 1)
 
         def score_batches(batches):
             from pysearch import codec
@@ -2178,11 +1775,7 @@ class Searcher:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                           pdf["dls_bin"], pdf["crc32"]):
-                    got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                    if got != crc:
-                        raise IOError("posting block CRC mismatch")
+                _verify_blocks(pdf, False)
                 # one vectorized decode for the whole Arrow batch of blocks
                 ids, tfs, dls = codec.unpack_blocks_batch(
                     pdf["n"].to_numpy(), list(pdf["doc_ids_bin"]),
@@ -2197,14 +1790,16 @@ class Searcher:
                 o = np.lexsort((ids, -scores))[:k]
                 yield pd.DataFrame({"doc_id": ids[o], "score": scores[o]})
 
-        sdf = blocks_df.select(
-            "n", "doc_ids_bin", "tfs_bin", "dls_bin", "crc32"
-        ).mapInPandas(score_batches, schema="doc_id long, score double")
-        return (
-            sdf.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        pdf = (
+            blocks_df.select("n", "doc_ids_bin", "tfs_bin", "dls_bin",
+                             "crc32")
+            .mapInPandas(score_batches, schema="doc_id long, score double")
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
             .toPandas()
         )
+        pdf.insert(0, "qid", qid)
+        return pdf
 
     def _ub_expr(self, idfs, qtf, avgdl, tf_col="max_tf", dl_col="min_dl"):
         """BM25 upper-bound Column for a (max_tf, min_dl) metadata pair:
@@ -2239,10 +1834,12 @@ class Searcher:
             self._ub_expr(idfs, qtf, avgdl).alias("ub"),
         )
 
-    def _prune_blocks(self, blocks_df, idfs, qtf, avgdl, k, require: int = 0,
+    def _prune_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
+                      avgdl: float, k: int,
                       exclude: Optional[np.ndarray] = None,
                       allowed_df=None):
-        """Lossless WAND-style pruning, fully distributed, two granularities.
+        """Lossless WAND-style pruning of ONE any/all plan (``plans`` is a
+        batch of one), fully distributed, two granularities.
 
         Phase 1 exactly scores the PRUNE_FIRST_SEGMENTS segments with the
         highest upper bounds to establish θ = running kth score; phase 2
@@ -2274,6 +1871,8 @@ class Searcher:
         skewed term, out of the decode entirely)."""
         from pyspark.sql import functions as F
 
+        (plan,) = plans.values()
+        idfs, qtf, require = plan.weights, plan.qtf, plan.require
         ptu = self._per_term_ub(blocks_df, idfs, qtf, avgdl)
         seg_ub = ptu.groupBy("segment_id").agg(
             F.sum("ub").alias("seg_ub"),
@@ -2307,8 +1906,8 @@ class Searcher:
         allowed_p1 = (None if allowed_df is None else
                       allowed_df.filter(F.col("segment_id").isin(phase1)))
         p1 = self._score_blocks(
-            blocks_df.filter(F.col("segment_id").isin(phase1)), idfs, qtf,
-            avgdl, k, require, exclude=exclude, allowed_df=allowed_p1
+            blocks_df.filter(F.col("segment_id").isin(phase1)), plans,
+            avgdl, k, exclude=exclude, allowed_df=allowed_p1
         )
         if len(p1) < k:
             # too few hits to establish θ; score all (full filter set)
@@ -2352,8 +1951,8 @@ class Searcher:
             "left_semi"))
         return phase2, p1, allowed2
 
-    def _prune_many_blocks(self, blocks_df, plans: Dict[str, tuple],
-                           avgdl: float, k: int, mode: str,
+    def _prune_many_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
+                           avgdl: float, k: int,
                            exclude: Optional[np.ndarray] = None):
         """Per-QUERY lossless block-max pruning for the batched scan —
         ``_prune_blocks`` generalized to a whole query log while keeping
@@ -2410,9 +2009,10 @@ class Searcher:
 
         spark = self.spark
         qt_rows = []
-        for qid, (idfs, qtf, _require) in plans.items():
-            for t, v in idfs.items():
-                qt_rows.append((qid, t, float(v) * float(qtf.get(t, 1))))
+        for qid, plan in plans.items():
+            for t, v in plan.weights.items():
+                qt_rows.append(
+                    (qid, t, float(v) * float(plan.qtf.get(t, 1))))
         qterm = spark.createDataFrame(qt_rows,
                                       "qid string, term string, w double")
 
@@ -2430,9 +2030,9 @@ class Searcher:
             F.sum("ub").alias("seg_ub"),
             F.count("*").alias("n_terms"),  # distinct terms by construction
         )
-        if mode == "all":
+        if any(p.require for p in plans.values()):  # mode="all"
             req = spark.createDataFrame(
-                [(q, int(p[2])) for q, p in plans.items()],
+                [(q, int(p.require)) for q, p in plans.items()],
                 "qid string, require int")
             seg = (seg.join(F.broadcast(req), "qid")
                    .filter(F.col("n_terms") >= F.col("require"))
@@ -2468,9 +2068,9 @@ class Searcher:
         n_segs = seg.select("segment_id").distinct().count()
         if 2 * len(phase1) > n_segs:
             return blocks_df, None
-        p1 = self._many_pass(
+        p1 = self._score_blocks(
             blocks_df.filter(F.col("segment_id").isin(list(phase1))),
-            plans, avgdl, k, mode, excl=exclude)
+            plans, avgdl, k, exclude=exclude)
 
         by_q = p1.groupby("qid", sort=False) if len(p1) else None
         theta_rows = []
@@ -2543,15 +2143,12 @@ class Searcher:
         hit_set = set(int(i) for i in hit_ids)
 
         def extract(batches):
-            import zlib
-
             from pysearch import codec
 
             for pdf in batches:
+                _verify_blocks(pdf, True)
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    if zlib.crc32(r.pos_bin) != r.pos_crc32:
-                        raise IOError("position payload CRC mismatch")
                     ids, tfs, _dls = codec.unpack_block(
                         r.n, r.doc_ids_bin, r.tfs_bin, r.dls_bin
                     )
@@ -2569,7 +2166,7 @@ class Searcher:
 
         out: Dict[int, Dict[str, list]] = {}
         for r in blocks.select(
-            "term", "n", "doc_ids_bin", "tfs_bin", "dls_bin",
+            "term", "n", "doc_ids_bin", "tfs_bin", "dls_bin", "crc32",
             "pos_bin", "pos_crc32"
         ).mapInPandas(
             extract, schema="term string, doc_id long, positions array<long>"

@@ -15,7 +15,9 @@ Determinism (rank identity across parallelism/pruning/resume):
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+import functools
+from dataclasses import dataclass
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -42,81 +44,161 @@ def bm25(tf, dl, idf_val: float, avgdl: float):
 
 
 # (per-block BM25 upper bounds are computed as a Catalyst expression in
-# query.Searcher._segment_upper_bounds: tf-normalization is increasing in tf
-# and decreasing in dl, so (max_tf, min_dl) bounds every posting)
+# query.Searcher._ub_expr: tf-normalization is increasing in tf and
+# decreasing in dl, so (max_tf, min_dl) bounds every posting)
+
+
+@dataclass(frozen=True)
+class QueryPlan:
+    """One query's scoring plan; every match mode is a setting of it.
+
+    ``weights``: idf x boost per SCORING term (the terms whose BM25 sums).
+    ``qtf``: query-term frequency per term.
+    ``terms``: the analyzed terms IN ORDER (duplicates kept) for a
+    positional plan — exact phrase, or unordered proximity within
+    ``window`` positions (mode="near") when ``window`` is set.
+    ``require`` > 0: conjunctive (mode="all") — a doc must hold exactly
+    that many distinct scoring terms: the vectorized form of a sorted
+    posting-list intersection (each term contributes a doc at most once
+    per segment, so the per-doc appearance count IS the distinct-term
+    count).
+    ``must`` / ``must_not``: boolean gates — every ``must`` term present,
+    no ``must_not`` term present (``must_not`` terms are decoded but never
+    scored)."""
+
+    weights: Dict[str, float]
+    qtf: Dict[str, int]
+    terms: Tuple[str, ...] = ()
+    require: int = 0
+    must: Tuple[str, ...] = ()
+    must_not: Tuple[str, ...] = ()
+    window: Optional[int] = None
+
+    @property
+    def scan_terms(self) -> set:
+        """Every term whose postings the plan reads."""
+        return set(self.weights) | set(self.must_not)
+
+    @property
+    def plain(self) -> bool:
+        """True for any/all plans: no match step beyond the term-count
+        requirement, so block-max bounds and per-block scoring apply."""
+        return not (self.terms or self.must or self.must_not)
 
 
 def score_segment_blocks(
     block_rows: Sequence[tuple],
-    idfs: Dict[str, float],
-    qtf: Dict[str, int],
+    plans: Dict[str, QueryPlan],
     avgdl: float,
-    k: int,
-    require_terms: int = 0,
+    k: Optional[int],
     exclude: np.ndarray | None = None,
     allow: np.ndarray | None = None,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Score one segment's posting blocks; return its local top-k.
+) -> Tuple[List[str], List[np.ndarray], List[np.ndarray]]:
+    """Score a batch of plans over one segment's posting blocks; return
+    (qids, ids_arrays, score_arrays), each plan's local top-k, for the
+    plans with hits.  A single query is a batch of one.
 
-    ``block_rows``: (term, n, doc_ids_bin, tfs_bin, dls_bin) tuples, any
-    order.  All postings of a doc live in exactly one segment (doc-range
+    ``block_rows``: (term, n, doc_ids_bin, tfs_bin, dls_bin[, pos_bin])
+    tuples, any order — pos_bin is required when some plan is positional.
+    All postings of a doc live in exactly one segment (doc-range
     partitioning), so the local sum is the doc's complete score and the
-    global answer is the top-k of the union of segment top-ks.
+    global answer is the top-k of the union of segment top-ks.  Every term
+    is decoded once and shared by all plans; positions are decoded only
+    when some plan is phrase or near.  Each plan's match step
+    (``_match``) then feeds the shared ``_topk_from_decoded`` funnel, so
+    every mode, single or batched, scores bit-identically by construction.
 
-    ``require_terms`` > 0 switches to conjunctive (AND) semantics: only
-    docs whose postings appear under exactly that many distinct query terms
-    survive — the vectorized form of a sorted posting-list intersection
-    (each term contributes a doc at most once per segment, so the
-    per-doc appearance count IS the distinct-term count).
-
+    ``k=None`` skips the top-k cut: each plan's arrays hold EVERY matching
+    doc (unordered) — the total-hits count is their length.
     ``exclude``: sorted doc_id array (tombstones) to drop before scoring.
     ``allow``: sorted unique doc_id array (filter context) — when given,
     ONLY these docs can match; applied before scoring so conjunctive
     counts and top-k cutoffs see the filtered corpus (Lucene filter
-    semantics: idf/avgdl stay corpus-wide, the filter gates candidates).
-    """
+    semantics: idf/avgdl stay corpus-wide, the filter gates candidates)."""
     per_term: dict = {}
-    for term, n, ib, tb, db in block_rows:
-        per_term.setdefault(term, []).append((n, ib, tb, db))
-
+    for row in block_rows:
+        per_term.setdefault(row[0], []).append(row[1:])
+    # a plan missing one of its phrase/near or must terms in this segment
+    # cannot match here: drop it, and decode only what the rest read
+    plans = {qid: p for qid, p in plans.items()
+             if all(t in per_term for t in p.terms + p.must)}
+    positional = any(p.terms for p in plans.values())
     decoded: Dict[str, tuple] = {}
-    for term, rows_t in per_term.items():
-        decoded[term] = codec.unpack_blocks_batch(
-            [r[0] for r in rows_t], [r[1] for r in rows_t],
-            [r[2] for r in rows_t], [r[3] for r in rows_t],
-        )
-    # local top-k by (score desc, doc_id asc); a full lexsort is cheap at
-    # segment granularity (uniq.size <= segment_size) and keeps tie-breaks
-    # exact even when many docs share the kth score
-    return _topk_from_decoded(decoded, idfs, qtf, avgdl, k,
-                              require=require_terms, exclude=exclude,
-                              allow=allow)
+    for term in {t for p in plans.values() for t in p.scan_terms}:
+        if term not in per_term:
+            continue
+        cols = list(zip(*per_term[term]))
+        ids, tfs, dls = codec.unpack_blocks_batch(*cols[:4])
+        pos = (codec.unpack_positions_batch(tfs, cols[4]) if positional
+               else None)
+        decoded[term] = (ids, tfs, dls, pos)
+
+    out_q: List[str] = []
+    out_ids: List[np.ndarray] = []
+    out_scores: List[np.ndarray] = []
+    for qid, plan in plans.items():
+        restrict, excl = _match(plan, decoded, exclude)
+        if restrict is not None and restrict.size == 0:
+            continue
+        ids, sums = _topk_from_decoded(decoded, plan, avgdl, k,
+                                       restrict=restrict, exclude=excl,
+                                       allow=allow)
+        if ids.size == 0:
+            continue
+        out_q.append(qid)
+        out_ids.append(ids)
+        out_scores.append(sums)
+    return out_q, out_ids, out_scores
+
+
+def _match(plan: QueryPlan, decoded: Dict[str, tuple],
+           exclude: np.ndarray | None):
+    """A plan's match step over the decoded segment -> (restrict, exclude).
+
+    ``restrict``: the docs the plan's gate admits (None = no gate; empty =
+    nothing in this segment matches) — phrase/near position matches, or
+    the posting-list intersection of the ``must`` terms.  ``exclude``: the
+    tombstones, widened by the union of the ``must_not`` terms' postings
+    (all of a doc's postings live in its segment, so both gates are
+    segment-local)."""
+    restrict = None
+    if plan.terms:
+        qterms = list(plan.terms)
+        restrict = (_phrase_matched_docs(decoded, qterms)
+                    if plan.window is None
+                    else _near_matched_docs(decoded, qterms, plan.window))
+    elif plan.must:
+        restrict = functools.reduce(
+            lambda a, b: np.intersect1d(a, b, assume_unique=True),
+            [decoded[t][0] for t in plan.must])
+    neg = [decoded[t][0] for t in plan.must_not if t in decoded]
+    if neg:
+        neg_all = functools.reduce(np.union1d, neg)
+        exclude = (neg_all if exclude is None or not exclude.size
+                   else np.union1d(exclude, neg_all))
+    return restrict, exclude
 
 
 def _topk_from_decoded(
     decoded: Dict[str, tuple],
-    idfs: Dict[str, float],
-    qtf: Dict[str, int],
+    plan: QueryPlan,
     avgdl: float,
-    k: int,
+    k: Optional[int],
     restrict: np.ndarray | None = None,
-    require: int = 0,
     exclude: np.ndarray | None = None,
     allow: np.ndarray | None = None,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Shared top-k arithmetic over already-decoded posting arrays: per-term
     BM25, ascending-term concatenation, per-doc reduceat sum, optional
-    conjunctive ``require`` filter, optional ``restrict`` doc set (phrase
-    hits), optional ``allow`` doc set (filter context — possibly EMPTY,
-    which admits nothing; None means unfiltered), optional ``exclude`` doc
-    set (tombstoned deletes, dropped from
-    every term before scoring so conjunctive counts stay exact), (score
-    desc, doc_id asc) lexsort.  Every entry point (single, batched, phrase,
-    batched-phrase) funnels through this function, so their scores are
-    bit-identical by construction."""
+    conjunctive ``plan.require`` filter, optional ``restrict`` doc set
+    (the plan's match gate), optional ``allow`` doc set (filter context —
+    possibly EMPTY, which admits nothing; None means unfiltered), optional
+    ``exclude`` doc set (tombstoned deletes and prohibited terms, dropped
+    from every term before scoring so conjunctive counts stay exact),
+    (score desc, doc_id asc) lexsort — skipped when ``k`` is None."""
     ids_all: List[np.ndarray] = []
     scores_all: List[np.ndarray] = []
-    for term in sorted(idfs):  # deterministic sum order
+    for term in sorted(plan.weights):  # deterministic sum order
         if term not in decoded:
             continue
         ids, tfs, dls = decoded[term][:3]
@@ -132,7 +214,8 @@ def _topk_from_decoded(
             keep = np.isin(ids, exclude, assume_unique=True, invert=True)
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         ids_all.append(ids)
-        scores_all.append(bm25(tfs, dls, idfs[term], avgdl) * qtf.get(term, 1))
+        scores_all.append(bm25(tfs, dls, plan.weights[term], avgdl)
+                          * plan.qtf.get(term, 1))
     if not ids_all:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     ids = np.concatenate(ids_all)
@@ -143,106 +226,17 @@ def _topk_from_decoded(
     ids, scores = ids[order], scores[order]
     uniq, start = np.unique(ids, return_index=True)
     sums = np.add.reduceat(scores, start)
-    if require > 0:
+    if plan.require > 0:
         counts = np.diff(np.append(start, ids.size))
-        keep = counts == require
+        keep = counts == plan.require
         uniq, sums = uniq[keep], sums[keep]
+    if k is None:
+        return uniq, sums
+    # local top-k by (score desc, doc_id asc); a full lexsort is cheap at
+    # segment granularity (uniq.size <= segment_size) and keeps tie-breaks
+    # exact even when many docs share the kth score
     o = np.lexsort((uniq, -sums))[:k]
     return uniq[o], sums[o]
-
-
-def count_segment_docs(
-    block_rows: Sequence[tuple],
-    terms: Sequence[str],
-    require: int = 0,
-    exclude: np.ndarray | None = None,
-    allow: np.ndarray | None = None,
-    qterms: Sequence[str] | None = None,
-    window: int | None = None,
-) -> int:
-    """Total-hits count for one segment (Lucene IndexSearcher.count
-    analog): the number of docs matching the query under the same match
-    semantics as scoring — mode="any" when ``require`` is 0, mode="all"
-    when ``require`` == len(distinct terms), phrase/near when ``qterms``
-    is given (then ``block_rows`` carry pos_bin as their 6th field).
-    Doc-range partitioning puts all of a doc's postings in one segment,
-    so the global count is the plain sum of segment counts."""
-    if qterms is not None:
-        per_term: dict = {}
-        for term, n, ib, tb, db, pb in block_rows:
-            per_term.setdefault(term, []).append((n, ib, tb, db, pb))
-        if any(t not in per_term for t in set(qterms)):
-            return 0
-        decoded: Dict[str, tuple] = {}
-        for term in set(qterms):
-            rows_t = per_term[term]
-            ids, tfs, dls = codec.unpack_blocks_batch(
-                [r[0] for r in rows_t], [r[1] for r in rows_t],
-                [r[2] for r in rows_t], [r[3] for r in rows_t],
-            )
-            pos = codec.unpack_positions_batch(tfs, [r[4] for r in rows_t])
-            decoded[term] = (ids, tfs, dls, pos)
-        uniq = (_phrase_matched_docs(decoded, list(qterms)) if window is None
-                else _near_matched_docs(decoded, list(qterms), window))
-    else:
-        per_term = {}
-        for term, n, ib, tb, db in block_rows:
-            per_term.setdefault(term, []).append((n, ib, tb, db))
-        ids_all = []
-        for term in sorted(set(terms) & set(per_term)):
-            rows_t = per_term[term]
-            ids, _tfs, _dls = codec.unpack_blocks_batch(
-                [r[0] for r in rows_t], [r[1] for r in rows_t],
-                [r[2] for r in rows_t], [r[3] for r in rows_t],
-            )
-            ids_all.append(ids)
-        if not ids_all:
-            return 0
-        uniq, counts = np.unique(np.concatenate(ids_all), return_counts=True)
-        if require > 0:
-            uniq = uniq[counts == require]
-    if uniq.size and allow is not None:
-        uniq = uniq[np.isin(uniq, allow, assume_unique=True)]
-    if uniq.size and exclude is not None and exclude.size:
-        uniq = uniq[np.isin(uniq, exclude, assume_unique=True, invert=True)]
-    return int(uniq.size)
-
-
-def score_segment_blocks_boolean(
-    block_rows: Sequence[tuple],
-    idfs: Dict[str, float],
-    qtf: Dict[str, int],
-    avgdl: float,
-    k: int,
-    must_terms: Sequence[str],
-    not_terms: Sequence[str],
-    exclude: np.ndarray | None = None,
-    allow: np.ndarray | None = None,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Lucene-BooleanQuery-style segment scoring: a doc survives iff it
-    contains EVERY term in ``must_terms`` and NO term in ``not_terms``;
-    its score is the BM25 sum over the scoring terms (``idfs`` = must +
-    should) it contains.  Both gates are segment-local because all of a
-    doc's postings live in exactly one segment: the must gate is the
-    posting-list intersection of the must terms, the not gate is the
-    union of the not terms' postings merged into the tombstone excludes —
-    then the shared ``_topk_from_decoded`` funnel applies them through its
-    existing restrict/exclude hooks, so boolean scores are bit-identical
-    to the equivalent any/all queries by construction.
-
-    ``not_terms`` must be decoded (present in ``block_rows``' scan) but
-    NOT in ``idfs``, so they gate without contributing score.  One-plan
-    form of ``score_segment_blocks_multi_boolean`` (the batched engine),
-    so single and batched boolean scores are bit-identical by
-    construction."""
-    qids, ids_l, scores_l = score_segment_blocks_multi_boolean(
-        block_rows,
-        {"q": (idfs, qtf, tuple(must_terms), tuple(not_terms))},
-        avgdl, k, exclude=exclude, allow=allow,
-    )
-    if not qids:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    return ids_l[0], scores_l[0]
 
 
 def _phrase_matched_docs(
@@ -359,215 +353,6 @@ def _near_matched_docs(
         if _min_span(seqs) <= window:
             matched.append(d)
     return np.asarray(matched, dtype=np.int64)
-
-
-def score_segment_blocks_multi(
-    block_rows: Sequence[tuple],
-    plans: Dict[str, tuple],
-    avgdl: float,
-    k: int,
-    exclude: np.ndarray | None = None,
-) -> Tuple[List[str], List[np.ndarray], List[np.ndarray]]:
-    """Score MANY queries over one segment's blocks in a single pass.
-
-    ``plans``: qid -> (idfs, qtf, require_terms) — each query's live terms
-    with idf weights and conjunctive requirement (0 = disjunctive).  Every
-    term present in any plan is decoded exactly once; per-query scoring
-    reuses the decoded arrays.  Returns (qids, ids_arrays, score_arrays)
-    with each query's local top-k, tie-broken like the single-query path
-    (bit-identical results by construction: same decode, same idf weights,
-    same ascending-term sum order, same lexsort)."""
-    per_term: dict = {}
-    for term, n, ib, tb, db in block_rows:
-        per_term.setdefault(term, []).append((n, ib, tb, db))
-
-    decoded: Dict[str, tuple] = {}
-    for term, rows_t in per_term.items():
-        ids, tfs, dls = codec.unpack_blocks_batch(
-            [r[0] for r in rows_t], [r[1] for r in rows_t],
-            [r[2] for r in rows_t], [r[3] for r in rows_t],
-        )
-        decoded[term] = (ids, tfs, dls)
-
-    out_q: List[str] = []
-    out_ids: List[np.ndarray] = []
-    out_scores: List[np.ndarray] = []
-    for qid, (idfs, qtf, require) in plans.items():
-        ids, sums = _topk_from_decoded(decoded, idfs, qtf, avgdl, k,
-                                       require=require, exclude=exclude)
-        if ids.size == 0:
-            continue
-        out_q.append(qid)
-        out_ids.append(ids)
-        out_scores.append(sums)
-    return out_q, out_ids, out_scores
-
-
-def score_segment_blocks_multi_boolean(
-    block_rows: Sequence[tuple],
-    plans: Dict[str, tuple],
-    avgdl: float,
-    k: int,
-    exclude: np.ndarray | None = None,
-    allow: np.ndarray | None = None,
-) -> Tuple[List[str], List[np.ndarray], List[np.ndarray]]:
-    """Score MANY boolean queries over one segment's blocks in a single
-    pass: decode every term present in any plan (scoring AND prohibited)
-    exactly once, then apply each query's must-intersection / not-union
-    gates around the shared ``_topk_from_decoded`` funnel — bit-identical
-    to per-query ``score_segment_blocks_boolean`` by construction.
-
-    ``plans``: qid -> (idfs, qtf, must_terms, not_terms); ``idfs`` holds
-    the scoring (must + should) terms only, so prohibited terms gate
-    without contributing score."""
-    import functools
-
-    per_term: dict = {}
-    for term, n, ib, tb, db in block_rows:
-        per_term.setdefault(term, []).append((n, ib, tb, db))
-
-    decoded: Dict[str, tuple] = {}
-    for term, rows_t in per_term.items():
-        decoded[term] = codec.unpack_blocks_batch(
-            [r[0] for r in rows_t], [r[1] for r in rows_t],
-            [r[2] for r in rows_t], [r[3] for r in rows_t],
-        )
-
-    out_q: List[str] = []
-    out_ids: List[np.ndarray] = []
-    out_scores: List[np.ndarray] = []
-    for qid, (idfs, qtf, must_terms, not_terms) in plans.items():
-        restrict = None
-        if must_terms:
-            if any(t not in decoded for t in must_terms):
-                continue  # a required term missing from this segment
-            restrict = decoded[must_terms[0]][0]
-            for t in must_terms[1:]:
-                restrict = np.intersect1d(restrict, decoded[t][0],
-                                          assume_unique=True)
-            if restrict.size == 0:
-                continue
-        neg = [decoded[t][0] for t in not_terms if t in decoded]
-        excl = exclude
-        if neg:
-            neg_all = functools.reduce(np.union1d, neg)
-            excl = (neg_all if excl is None or not excl.size
-                    else np.union1d(excl, neg_all))
-        ids, sums = _topk_from_decoded(decoded, idfs, qtf, avgdl, k,
-                                       restrict=restrict, exclude=excl,
-                                       allow=allow)
-        if ids.size == 0:
-            continue
-        out_q.append(qid)
-        out_ids.append(ids)
-        out_scores.append(sums)
-    return out_q, out_ids, out_scores
-
-
-def score_segment_blocks_multi_phrase(
-    block_rows: Sequence[tuple],
-    plans: Dict[str, tuple],
-    avgdl: float,
-    k: int,
-    exclude: np.ndarray | None = None,
-) -> Tuple[List[str], List[np.ndarray], List[np.ndarray]]:
-    """Batched EXACT-PHRASE scoring over one segment: decode every term
-    (postings + positions) exactly once, then run each query's posting-list
-    intersection + position adjacency + scoring over the shared arrays.
-
-    ``block_rows``: (term, n, doc_ids_bin, tfs_bin, dls_bin, pos_bin).
-    ``plans``: qid -> (idfs, qterms, qtf) with ``qterms`` the analyzed terms
-    IN ORDER (duplicates kept), or (idfs, qterms, qtf, window) for
-    unordered-PROXIMITY queries (mode="near").  Bit-identical to per-query
-    ``score_segment_blocks_phrase`` by construction: same decode, same
-    ``_phrase_matched_docs``/``_near_matched_docs`` match, same
-    ``_topk_from_decoded`` arithmetic (pinned by test)."""
-    per_term: dict = {}
-    for term, n, ib, tb, db, pb in block_rows:
-        per_term.setdefault(term, []).append((n, ib, tb, db, pb))
-
-    decoded: Dict[str, tuple] = {}
-    for term, rows_t in per_term.items():
-        ids, tfs, dls = codec.unpack_blocks_batch(
-            [r[0] for r in rows_t], [r[1] for r in rows_t],
-            [r[2] for r in rows_t], [r[3] for r in rows_t],
-        )
-        pos = codec.unpack_positions_batch(tfs, [r[4] for r in rows_t])
-        decoded[term] = (ids, tfs, dls, pos)
-
-    out_q: List[str] = []
-    out_ids: List[np.ndarray] = []
-    out_scores: List[np.ndarray] = []
-    for qid, plan in plans.items():
-        idfs, qterms, qtf = plan[0], plan[1], plan[2]
-        mset = (_phrase_matched_docs(decoded, qterms) if len(plan) < 4
-                else _near_matched_docs(decoded, qterms, plan[3]))
-        if mset.size == 0:
-            continue
-        ids, sums = _topk_from_decoded(decoded, idfs, qtf, avgdl, k,
-                                       restrict=mset, exclude=exclude)
-        if ids.size == 0:
-            continue
-        out_q.append(qid)
-        out_ids.append(ids)
-        out_scores.append(sums)
-    return out_q, out_ids, out_scores
-
-
-def score_segment_blocks_phrase(
-    block_rows: Sequence[tuple],
-    idfs: Dict[str, float],
-    qterms: List[str],
-    qtf: Dict[str, int],
-    avgdl: float,
-    k: int,
-    exclude: np.ndarray | None = None,
-    window: int | None = None,
-    allow: np.ndarray | None = None,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Exact-PHRASE top-k over one segment: posting-list intersection plus
-    position-adjacency from the index's term positions (pos_bin) — the
-    match-phrase capability bleve's term vectors enable in the reference's
-    engine, here as a first-class query mode.
-
-    ``block_rows``: (term, n, doc_ids_bin, tfs_bin, dls_bin, pos_bin).
-    ``qterms``: the analyzed query terms IN ORDER (duplicates kept — the
-    phrase must match them at consecutive positions).  A doc matches iff
-    some position p has qterms[i] at p+i for every i.  Matching docs are
-    scored with the SAME arithmetic as conjunctive BM25 (ascending-term
-    concatenation + reduceat), so a phrase hit's score is bit-identical to
-    its mode="all" score (pinned by test).
-
-    ``window`` switches to unordered PROXIMITY matching (mode="near"): a
-    doc matches iff its distinct query terms co-occur within ``window``
-    token positions (_near_matched_docs); scoring is unchanged."""
-    per_term: dict = {}
-    for term, n, ib, tb, db, pb in block_rows:
-        per_term.setdefault(term, []).append((n, ib, tb, db, pb))
-
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    distinct_terms = sorted(idfs)
-    if any(t not in per_term for t in distinct_terms):
-        return empty  # a term absent from this segment -> no phrase hit
-
-    decoded: Dict[str, tuple] = {}
-    for term in distinct_terms:
-        rows_t = per_term[term]
-        ids, tfs, dls = codec.unpack_blocks_batch(
-            [r[0] for r in rows_t], [r[1] for r in rows_t],
-            [r[2] for r in rows_t], [r[3] for r in rows_t],
-        )
-        pos = codec.unpack_positions_batch(tfs, [r[4] for r in rows_t])
-        decoded[term] = (ids, tfs, dls, pos)
-
-    mset = (_phrase_matched_docs(decoded, qterms) if window is None
-            else _near_matched_docs(decoded, qterms, window))
-    if mset.size == 0:
-        return empty
-    # scoring restricted to phrase/near hits, same arithmetic as
-    # conjunctive — a hit's score is bit-identical to its mode="all" score
-    return _topk_from_decoded(decoded, idfs, qtf, avgdl, k, restrict=mset,
-                              exclude=exclude, allow=allow)
 
 
 def align_phrase_positions(

@@ -540,8 +540,6 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     one tokenize pass + two tiny aggregates over the batch either way."""
     from pyspark.sql import functions as F
 
-    from pysearch import score as sc
-
     if mode not in ("any", "all", "phrase"):
         raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
     if mode == "phrase" and not searcher.positions_stored:
@@ -636,24 +634,20 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     # BOTH routes score the whole query log's index side in ONE postings
     # scan via the batched engine (the search_ids_many amortization —
     # shared decode, O(k·|queries|) rows to the driver).  prune=True
-    # additionally runs the batched lossless per-query block-max prune
-    # (Searcher._prune_many_blocks) when candidate volume clears the gate;
+    # additionally runs the lossless block-max prune (Searcher._prune_blocks
+    # or _prune_many_blocks) when candidate volume clears the gate;
     # prune=False keeps the exhaustive one-pass scan.  Either way results
     # are identical to per-query scoring (pruning is lossless; pinned by
     # the NRT bit-identity tests).  θ_q comes from index-side candidates
     # only — a lower bound of the index-side kth score, so pruning the
     # index list stays lossless regardless of the mem-side merge.
+    idx_dfs = {t: dfs[t] for t in union_terms if dfs_idx.get(t, 0) > 0}
     idx_plans: dict = {}
-    for qid, (live, idfs, qtf, require, _marker) in plans.items():
-        live_idx = [t for t in live if dfs_idx.get(t, 0) > 0]
-        if not live_idx or (mode in ("all", "phrase")
-                            and len(live_idx) < len(live)):
-            continue  # no index doc can contain a term the index lacks
-        idfs_idx = {t: idfs[t] for t in live_idx}
-        if mode == "phrase":
-            idx_plans[qid] = (idfs_idx, list(analyzed[qid]), dict(qtf))
-        else:
-            idx_plans[qid] = (idfs_idx, dict(qtf), require)
+    for qid in plans:
+        # no index doc can contain a term the index lacks
+        plan = searcher._plan(mode, analyzed[qid], idx_dfs, n_docs)
+        if plan is not None:
+            idx_plans[qid] = plan
     idx_hits: dict = {}
     if idx_plans:
         vol_idx = sum(dfs_idx.get(t, 0) for t in union_terms)
@@ -661,11 +655,8 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
             prune and mode in ("any", "all")
             and vol_idx > searcher.prune_min_postings * len(idx_plans)
         )
-        vols = [sum(dfs_idx.get(t, 0) for t in p[0])
-                for p in idx_plans.values()]
-        many = searcher._score_many_blocks(
-            idx_plans, avgdl, case_id, k, mode, prune=do_prune,
-            local=(not do_prune) and searcher._use_local_batch(vols))
+        many = searcher._search_many(case_id, idx_plans, dfs_idx, avgdl, k,
+                                     do_prune)
         for r in many.itertuples(index=False):
             idx_hits.setdefault(r.qid, []).append(
                 (int(r.doc_id), float(r.score)))

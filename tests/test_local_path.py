@@ -141,6 +141,7 @@ def test_driver_side_filter_matches_dataframe_filter(two_paths):
     DataFrame, on both the local path and the forced-distributed path,
     across modes, boolean, fuzzy, count, and offset."""
     import numpy as np
+    import pandas as pd
 
     s_local, s_dist = two_paths
     ids = np.arange(1, 1200, 2, dtype=np.int64)  # odd doc_ids
@@ -167,6 +168,8 @@ def test_driver_side_filter_matches_dataframe_filter(two_paths):
                            mode="fuzzy", filter_docs=list(ids)),
         s_dist.search_ids("cornucopi~1 softw*", k=10, case_id="7",
                           mode="fuzzy", filter_docs=fd))
+    _eq(s_local.search_ids(q, k=10, case_id="7", filter_docs=pd.Series(ids)),
+        s_dist.search_ids(q, k=10, case_id="7", filter_docs=fd))
     _eq(s_local.search_ids(q, k=10, case_id="7", offset=5,
                            filter_docs=ids),
         s_dist.search_ids(q, k=10, case_id="7", offset=5, filter_docs=fd))

@@ -1,0 +1,97 @@
+"""Query-time verify-before-decode: a posting block whose stored CRC no
+longer matches its payload must fail the query, never score silently —
+for every query entry point, on the driver-local fetch and on the
+distributed one.  Tampering reuses the steps of
+test_engine.test_verify_index_flags_tampering: flip a stored CRC in a
+postings part file and drop the stale Hadoop checksum sidecar."""
+
+import glob
+import os
+import shutil
+
+import pytest
+
+from pysearch.query import Searcher
+
+PHRASE = "a cornucopia of"  # the corpus case's seeded phrase
+TERM = "cornucopia"  # the analyzed term whose blocks get tampered
+QUERY = f"{TERM} software"  # two terms: no single-term shortcut
+
+
+@pytest.fixture(scope="module")
+def clean_index(spark, tmp_path_factory):
+    from pysearch import corpus
+    from pysearch.build import build_index
+
+    d = str(tmp_path_factory.mktemp("crc_ix") / "ix")
+    df = corpus.webtext_df(spark, cases=[(7, PHRASE, 300, 200)])
+    build_index(spark, df, d, segment_size=64, store_positions=True)
+    return d
+
+
+def _tampered_copy(src: str, dst: str, column: str) -> str:
+    """Copy ``src`` to ``dst`` and flip ``column`` (crc32 or pos_crc32)
+    on every block of TERM in the postings part files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src, dst)
+    flipped = 0
+    for part in sorted(glob.glob(f"{dst}/postings/commit-*/**/*.parquet",
+                                 recursive=True)):
+        t = pq.read_table(part)
+        pdf = t.to_pandas()
+        rows = pdf["term"] == TERM
+        if not rows.any():
+            continue
+        pdf.loc[rows, column] = pdf.loc[rows, column].astype("int64") ^ 1
+        pq.write_table(pa.Table.from_pandas(pdf, schema=t.schema), part)
+        # drop the stale Hadoop checksum sidecar so the tampered file is read
+        side = os.path.join(os.path.dirname(part),
+                            f".{os.path.basename(part)}.crc")
+        if os.path.exists(side):
+            os.remove(side)
+        flipped += int(rows.sum())
+    assert flipped, f"no {TERM} blocks found to tamper"
+    return dst
+
+
+def _calls(positional: bool):
+    """Calls that must read TERM's blocks.  A positions CRC is checked
+    only by the calls that decode positions."""
+    two = {"a": QUERY, "b": PHRASE}
+    phrase = [
+        lambda s: s.search_ids(PHRASE, case_id="7", mode="phrase"),
+        lambda s: s.count(PHRASE, case_id="7", mode="phrase"),
+        lambda s: s.search_ids_many(two, case_id="7", mode="phrase"),
+    ]
+    if positional:
+        return phrase
+    return phrase + [
+        lambda s: s.search_ids(QUERY, case_id="7"),
+        lambda s: s.search_ids(TERM, case_id="7"),  # one-term path
+        lambda s: s.search_ids(f"+{TERM} -software of", case_id="7",
+                               mode="boolean"),
+        lambda s: s.count(QUERY, case_id="7"),
+        lambda s: s.search_ids_many(two, case_id="7"),
+    ]
+
+
+@pytest.mark.parametrize("column", ["crc32", "pos_crc32"])
+@pytest.mark.parametrize("path", ["local", "distributed"])
+def test_query_refuses_tampered_blocks(spark, clean_index, tmp_path, column,
+                                       path):
+    """The driver-local fetch raises IOError itself; the distributed one
+    raises it in the executor, where Spark surfaces it wrapped in its
+    PythonException — so both are checked by the error message."""
+    clean = Searcher(spark, clean_index)
+    s = Searcher(spark, _tampered_copy(clean_index, str(tmp_path / "ix"),
+                                       column))
+    raises = IOError
+    if path == "distributed":
+        clean.local_max_postings = s.local_max_postings = 0
+        raises = Exception
+    for call in _calls(positional=column == "pos_crc32"):
+        call(clean)  # the untampered index answers
+        with pytest.raises(raises, match="CRC mismatch"):
+            call(s)
