@@ -42,7 +42,7 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 
-from pysearch import codec
+from pysearch import codec, gate
 from pysearch.lineage import IndexLayout
 from pysearch.version import INDEX_FORMAT_VERSION
 
@@ -325,9 +325,20 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         f_stat = _ex.submit(
             lambda: key_counts.agg(F.sum("count").alias("n_input"),
                                    F.max("count").alias("mx")).collect()[0])
-        id_map, pinned, counts = _assign_doc_ids(spark, winners,
-                                                 n_partitions, base=base)
-        stat = f_stat.result()
+        try:
+            id_map, pinned, counts = _assign_doc_ids(spark, winners,
+                                                     n_partitions, base=base)
+            stat = f_stat.result()
+        except BaseException as err:
+            # wait for the dup check, keep its error on the raised one,
+            # and release the frames this stage cached
+            dup_err = f_stat.exception()
+            if dup_err is not None and dup_err is not err:
+                err.add_note(f"concurrent duplicate-key check also failed: "
+                             f"{dup_err!r}")
+            winners.unpersist()
+            proj.unpersist()
+            raise
     _dbg("docs: ids assigned (offsets collected)", t0)
     n_input = int(stat["n_input"] or 0)
     if int(stat["mx"] or 0) > 1:
@@ -544,28 +555,18 @@ def _make_block_builder(n_buckets: int, analyzer: str = "en",
     return build_blocks
 
 
-# commit batches at or under this many block rows get their per-segment
-# lineage metrics aggregated driver-side from a pyarrow read of the four
-# narrow metadata columns (row count comes from the parquet footers — no
-# job); bigger batches keep the distributed aggregate.  ~40 bytes/row in
-# flight, so the default bounds the driver read to ~200 MB.
-_METRICS_LOCAL_MAX_BLOCKS = 5_000_000
-
-
 def _segment_metrics_local(commit_dir: str):
     """Per-(case, segment) block metrics from a driver-side pyarrow read
-    of the commit's metadata columns, or None above the row gate /
-    with PYSEARCH_LOCAL_ARROW=0.  Same sums as the distributed
+    of the commit's metadata columns, or None above the
+    METRICS_LOCAL_MAX_BLOCKS row gate.  Same sums as the distributed
     groupBy (integer arithmetic)."""
     from collections import namedtuple
 
-    if os.environ.get("PYSEARCH_LOCAL_ARROW", "1") == "0":
-        return None
     import pyarrow.dataset as ds
 
     dataset = ds.dataset(commit_dir, format="parquet",
                          partitioning="hive")
-    if dataset.count_rows() > _METRICS_LOCAL_MAX_BLOCKS:
+    if dataset.count_rows() > gate.METRICS_LOCAL_MAX_BLOCKS:
         return None
     pdf = dataset.to_table(
         columns=["case_id", "segment_id", "n", "n_bytes"]).to_pandas()
@@ -684,11 +685,10 @@ def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
         if _has_parquet(commit_dir):
             # n_bytes is precomputed at pack time, so this verification
             # scan is metadata-only — payload columns are never re-read.
-            # Under _METRICS_LOCAL_MAX_BLOCKS rows (known from the parquet
+            # Under METRICS_LOCAL_MAX_BLOCKS rows (known from the parquet
             # footers, no job) the four narrow columns are read driver-side
             # with pyarrow and aggregated in pandas — identical sums, no
-            # Spark job; above the gate (or with PYSEARCH_LOCAL_ARROW=0)
-            # the distributed aggregate runs as before.
+            # Spark job; above the gate the distributed aggregate runs.
             seg_metrics = _segment_metrics_local(commit_dir)
             if seg_metrics is None:
                 written = spark.read.parquet(commit_dir)

@@ -14,8 +14,12 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
+import re
 import shutil
 import uuid
+
+
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
 def _utcnow():
@@ -55,7 +59,17 @@ class IndexLayout:
         stays readable as long as the generations/commits it references
         exist on disk (appends are additive and compaction retains the
         superseded generation, so recent snapshots survive; see
-        ``compact.expire_generations``)."""
+        ``compact.expire_generations``).
+
+        ``root`` must be a local filesystem path: commits, manifests and
+        the driver-local reads use os-level renames and listings, so a
+        URI root (``s3a://``, ``hdfs://``, ``file://``) is refused rather
+        than silently split between a local directory and the scheme."""
+        if _URI_SCHEME.match(str(root)):
+            raise ValueError(
+                f"index root {root!r} is a URI; pysearch indexes live on "
+                "a local (or locally mounted) filesystem path — pass a "
+                "plain path, e.g. a mount point of the store")
         self.root = root
         self.manifest_path = os.path.join(root, "manifest.json")
         self._manifest_stat = None

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from typing import Callable, Dict, Optional, Tuple
 
+from pysearch import gate
+
 OPS: Dict[str, Tuple[Callable, Optional[str]]] = {}
 
 
@@ -237,54 +239,6 @@ def _get_searcher(spark, index_dir: str, at_version=None):
     return s
 
 
-# id(Searcher) + its load signature -> (engine doc_id, source doc_id)
-# pandas map; see _engine_catalog_local
-_CATALOG_CACHE: dict = {}
-
-# engine catalogs at or under this many docs may be driver-cached as an
-# (engine doc_id <-> source doc_id) map — index METADATA in the same class
-# as the Searcher's term-df cache (~16 bytes/row packed; 1M rows ≈ tens of
-# MB with urls during the one collect).  Above the gate every engine-backed
-# op keeps its r5 distributed joins; PYSEARCH_LOCAL_MAX_CATALOG overrides,
-# 0 disables.
-LOCAL_MAX_CATALOG = 1_000_000
-
-
-def _catalog_gate() -> int:
-    import os
-
-    return int(os.environ.get("PYSEARCH_LOCAL_MAX_CATALOG",
-                              LOCAL_MAX_CATALOG))
-
-
-def _engine_catalog_local(s):
-    """Driver-cached (doc_id, src_id) map of an engine index catalog, or
-    None above the LOCAL_MAX_CATALOG gate.  The gate is decided from the
-    Searcher's already-loaded corpus stats (no job); the one bounded
-    collect is cached per (Searcher, load signature), so an index refresh
-    (append/compaction/delete) re-reads it.  src_id is parsed from the
-    ``doc://docs/%09d`` url the ops build their engine corpora with."""
-    import numpy as np
-
-    gate = _catalog_gate()
-    if gate <= 0:
-        return None
-    n_docs = sum(n for n, _a, _d in s._corpus.values())
-    if n_docs > gate:
-        return None
-    key = (id(s), s._manifest_sig)
-    cat = _CATALOG_CACHE.get(key)
-    if cat is None:
-        pdf = s.docs.select("doc_id", "url").toPandas()
-        cat = {
-            "doc_id": pdf["doc_id"].to_numpy(np.int64),
-            "src_id": pdf["url"].str.slice(len("doc://docs/")).astype(
-                np.int64).to_numpy(),
-        }
-        _CATALOG_CACHE[key] = cat
-    return cat
-
-
 def _source_fingerprint(docs) -> str:
     """Content fingerprint of the engine source table: count + an
     order-insensitive row hash.  One full scan — callers cache the result
@@ -384,17 +338,24 @@ def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
 
     ``filter_source_ids`` / ``exclude_source_ids`` are the driver-RESIDENT
     filter forms (numpy arrays of SOURCE ids to admit / to drop): under
-    the LOCAL_MAX_CATALOG gate they map to engine ids through the cached
-    catalog and feed the engine's driver-side filter path (no distributed
-    job for the whole filtered query); above the gate they convert to the
-    same distributed semi-join as ``filter_source``.  Both id<->url
-    mapping directions use the cached catalog when available, replacing a
-    broadcast-join job per op invocation with an O(hits) array lookup."""
+    the LOCAL_MAX_CATALOG gate they map to engine ids through the
+    Searcher's cached catalog and feed the engine's driver-side filter
+    path (no distributed job for the whole filtered query); above the gate
+    they convert to the same distributed semi-join as ``filter_source``.
+    Both id<->url mapping directions use the cached catalog when
+    available, replacing a broadcast-join job per op invocation with an
+    O(hits) array lookup."""
     import numpy as np
+    import pandas as pd
     from pyspark.sql import functions as F
 
     s = _get_searcher(spark, index_dir, at_version=at_version)
-    cat = _engine_catalog_local(s)
+    s._check_fresh()  # the catalog below must match the searched load
+    cat = s._catalog("0")
+    if cat is not None and "src_id" not in cat:
+        # the ops build their engine corpora with doc://docs/%09d urls
+        cat["src_id"] = pd.Series(cat["url"]).str.slice(
+            len("doc://docs/")).astype(np.int64).to_numpy()
     fd = None
     if exclude_source_ids is not None:
         # allowed = every indexed doc NOT in the (bounded) drop set —
@@ -403,8 +364,6 @@ def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
             fd = cat["doc_id"][~np.isin(cat["src_id"],
                                         np.unique(exclude_source_ids))]
         else:
-            import pandas as pd
-
             drop = spark.createDataFrame(
                 pd.DataFrame({"doc_id": np.unique(exclude_source_ids)}),
                 schema="doc_id long")
@@ -416,8 +375,6 @@ def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
             fd = cat["doc_id"][np.isin(cat["src_id"],
                                        np.unique(filter_source_ids))]
         else:
-            import pandas as pd
-
             filter_source = spark.createDataFrame(
                 pd.DataFrame({"doc_id": np.unique(filter_source_ids)}),
                 schema="doc_id long")
@@ -697,13 +654,15 @@ def t1_engine_facet_lang(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     lang_pdf = docs.filter(F.col("doc_id").isin(
         [int(x) for x in hits_pdf["doc_id"]])).toPandas()
+    # NULL lang is a group of its own, as in Spark and SQL GROUP BY
     agg = (
         hits_pdf.merge(lang_pdf, on="doc_id")
-        .groupby("lang")
+        .groupby("lang", dropna=False)
         .agg(n_hits=("doc_id", "size"), top_score_r=("score_r", "max"))
         .reset_index()
         .sort_values("lang", kind="stable")
     )
+    agg["lang"] = agg["lang"].astype(object).where(agg["lang"].notna(), None)
     return spark.createDataFrame(
         agg, schema="lang string, n_hits long, top_score_r double")
 
@@ -793,7 +752,7 @@ def t1_engine_filter_lang_top10(spark, sf_dir):
     # the engine's driver-side filter path; above the gate the r5
     # distributed semi-join + cogroup runs unchanged
     n_src = int(fp.split(":", 1)[0])
-    if 0 < n_src <= _catalog_gate():
+    if 0 < n_src <= gate.LOCAL_MAX_CATALOG:
         ids = en.toPandas()["doc_id"].to_numpy(np.int64)
         return _search_to_source_ids(spark, index_dir, mode="any",
                                      filter_source_ids=ids)
@@ -1624,16 +1583,8 @@ def dd_minhash_pairs(spark, sf_dir):
     )
 
 
-DUP_CLUSTERS_LOCAL_MAX_EDGES = 1_000_000  # below this, the edge list is a
-# few MB: collect it once and run union-find on the driver (2 jobs total)
-# instead of O(log n) pointer-jumping rounds of 2 jobs each — the same
-# size-gated strategy choice as a broadcast join, with identical output
-# (min-doc_id component labels; pinned by test).  Above the gate the
-# distributed pointer-jumping path runs unchanged.
-
-
 def dup_clusters(edges, max_iters: int = 32,
-                 local_max_edges: int = DUP_CLUSTERS_LOCAL_MAX_EDGES):
+                 local_max_edges: int = gate.DUP_CLUSTERS_LOCAL_MAX_EDGES):
     """Connected components over an undirected near-dup PAIR list — the
     step a dedup pipeline needs after pair generation (minhash/simhash
     band pairs give edges; keep-one-per-cluster needs components).

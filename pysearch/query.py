@@ -38,60 +38,13 @@ import pandas as pd
 
 from pysearch import score as sc
 from pysearch.build import term_bucket
+from pysearch.gate import (LOCAL_BATCH_FACTOR, LOCAL_MAX_CATALOG,
+                           LOCAL_MAX_VOCAB, PRUNE_MIN_POSTINGS,
+                           local_max_postings)
 from pysearch.lineage import IndexLayout
 
 DEFAULT_MAX_RESULTS = 10  # reference: index_search.go:55-56
 PRUNE_FIRST_SEGMENTS = 8  # segments scored in phase 1 to establish θ
-PRUNE_MIN_POSTINGS = 1_000_000  # below this, one-pass scoring beats the
-# extra bound/θ jobs on a warm local cluster; real serving deployments with
-# cold storage set this lower
-LOCAL_MAX_POSTINGS = 500_000  # below this candidate volume, the packed
-# blocks are collected (one scan-only Spark job, no exchange, no Python
-# worker round trip) and scored on the driver with the SAME per-segment
-# kernels — a distributed scoring job's fixed latency (shuffle + pandas
-# worker spin-up + result fetch) dominates when the candidate payload is a
-# few MB.  500k postings is ~3 MB packed (and bounds driver work at O(query
-# candidate volume), the same class as the hit set itself); queries above
-# the gate — and every filtered query, whose allowed set is distributed —
-# take the distributed path unchanged.  Results are bit-identical by
-# construction (same decode, same kernels, same merge order; pinned by
-# test).  PYSEARCH_LOCAL_MAX_POSTINGS overrides (0 disables — the right
-# setting when driver<->storage bandwidth is poor, e.g. remote object
-# store).
-LOCAL_MAX_VOCAB = 200_000  # term_stats rows under which the per-case
-# vocabulary (term -> df) is fetched ONCE per Searcher load (a bounded
-# metadata collect, ~tens of MB at the gate) and the MultiTermQuery
-# expansions (fuzzy/prefix), spell suggestions, and term-df lookups run
-# driver-side — each previously paid a full Spark job (scan + window +
-# collect) per query over a table that is vocabulary-sized METADATA, the
-# textbook case for a broadcast-style strategy switch.  Values are
-# identical by construction: the local Levenshtein is the classic DP
-# (matching F.levenshtein / DuckDB levenshtein exactly), weights use the
-# same float64 arithmetic, ranking the same (w desc, df desc, term asc)
-# order (pinned by test).  Regexp clauses are evaluated against the same
-# cached vocabulary by the SAME JVM java.util.regex engine rlike runs (one
-# py4j stream-filter call — never Python re, whose dialect differs on
-# corners like \\w, and no Spark job).  PYSEARCH_LOCAL_MAX_VOCAB overrides
-# (0 disables).  Staleness: the cache lives on the Searcher and every
-# refresh/_load drops it.
-
-LOCAL_BATCH_FACTOR = 4  # the batched paths (search_ids_many, boolean
-# batch, the NRT hybrid's index side) may score a whole query log
-# driver-side when every plan's own candidate volume clears the
-# single-query gate AND the summed volume stays under
-# LOCAL_BATCH_FACTOR * LOCAL_MAX_POSTINGS — the measured crossover where
-# single-threaded driver scoring overtakes the distributed batch scan's
-# fixed cost (see Searcher._use_local_batch).
-# PYSEARCH_LOCAL_BATCH_FACTOR overrides (0 disables the batched local
-# path outright; single queries keep their own gate).
-
-LOCAL_MAX_CATALOG = 1_000_000  # catalog rows (per case) under which the
-# case's (url, content_hash) key columns may be fetched ONCE per Searcher
-# load — index METADATA in the same class as the term-df cache — so the
-# NRT hybrid's already-indexed anti-joins build their broadcast sides
-# from cached in-memory relations (two docs-scan build jobs per hybrid
-# query removed).  Above the gate the distributed anti-joins run
-# unchanged.  PYSEARCH_LOCAL_MAX_CATALOG overrides (0 disables).
 
 
 def _lev_batch(q: str, cands) -> "np.ndarray":
@@ -381,19 +334,13 @@ class Searcher:
         # it); dropped on every (re)load so a refreshed Searcher re-reads
         self._vocab_cache: Dict[str, Optional[dict]] = {}
         self._term_stats_rows: Optional[int] = None
-        # per-case (urls, content_hashes) under the LOCAL_MAX_CATALOG gate
-        # (None above it); dropped on every (re)load like the vocab cache
-        self._catalog_keys_cache: Dict[str, Optional[tuple]] = {}
+        # per-case catalog columns under the LOCAL_MAX_CATALOG gate (None
+        # above it); dropped on every (re)load like the vocab cache
+        self._catalog_cache: Dict[str, Optional[dict]] = {}
         if not hasattr(self, "prune_min_postings"):
             self.prune_min_postings = PRUNE_MIN_POSTINGS  # tests: 0 forces
-            self.local_max_postings = int(os.environ.get(
-                "PYSEARCH_LOCAL_MAX_POSTINGS", LOCAL_MAX_POSTINGS))
-            self.local_max_vocab = int(os.environ.get(
-                "PYSEARCH_LOCAL_MAX_VOCAB", LOCAL_MAX_VOCAB))
-            self.local_max_catalog = int(os.environ.get(
-                "PYSEARCH_LOCAL_MAX_CATALOG", LOCAL_MAX_CATALOG))
-            self.local_batch_factor = int(os.environ.get(
-                "PYSEARCH_LOCAL_BATCH_FACTOR", LOCAL_BATCH_FACTOR))
+            # 0 turns every driver-local path off (see pysearch.gate)
+            self.local_max_postings = local_max_postings()
             # diagnostics: when True, _prune_blocks records candidate-vs-
             # scored block counts (extra metadata jobs; test-only)
             self.count_scored_blocks = False
@@ -637,14 +584,14 @@ class Searcher:
     # _execute, which feeds ONE per-segment kernel
     # (score.score_segment_blocks) from one of two fetchers:
     # - driver-local (_collect_blocks): below the local gates the packed
-    #   blocks are fetched with one driver-direct arrow read (or a Spark
-    #   scan-only job: no exchange, no Python workers) and scored
-    #   in-process — a distributed scoring job's fixed latency (scan task
-    #   scheduling, a segment_id exchange, pandas-worker round trips,
-    #   result fetch) dwarfs the arithmetic when the candidate postings are
-    #   a few MB packed.  Driver work/memory is bounded by the gate —
-    #   O(candidate volume), the same class as a broadcast join's build
-    #   side.  Distributed filter contexts and pruned queries never take it.
+    #   blocks are fetched with one driver-direct arrow read (no Spark
+    #   job) and scored in-process — a distributed scoring job's fixed
+    #   latency (scan task scheduling, a segment_id exchange,
+    #   pandas-worker round trips, result fetch) dwarfs the arithmetic
+    #   when the candidate postings are a few MB packed.  Driver
+    #   work/memory is bounded by the gate — O(candidate volume), the same
+    #   class as a broadcast join's build side.  Distributed filter
+    #   contexts and pruned queries never take it.
     # - distributed (_score_blocks): groupBy(segment) or a cogroup with the
     #   filter context, after the lossless block-max prune.
     # Same decode, same kernel, same (score desc, doc_id asc) merge, so
@@ -715,9 +662,8 @@ class Searcher:
         shared-decode scan runs — the scale shape for big logs."""
         if not vols or self.local_max_postings <= 0:
             return False
-        factor = getattr(self, "local_batch_factor", LOCAL_BATCH_FACTOR)
         return (max(vols) <= self.local_max_postings
-                and sum(vols) <= factor * self.local_max_postings)
+                and sum(vols) <= LOCAL_BATCH_FACTOR * self.local_max_postings)
 
     def _search_one(self, case_id: str, plan: sc.QueryPlan,
                     dfs: Dict[str, int], avgdl: float, k: int,
@@ -778,16 +724,10 @@ class Searcher:
         from pyspark.sql import functions as F
 
         scan = sorted({t for p in plans.values() for t in p.scan_terms})
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in scan})
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(scan)
-        )
         excl = self._tombstones.get(case_id)
         if local:
             positions = any(p.terms for p in plans.values())
-            pdf = self._collect_blocks(case_id, scan, blocks, positions)
+            pdf = self._collect_blocks(case_id, scan, positions)
             per_q: Dict[str, tuple] = {}
             for _seg, g in pdf.groupby("segment_id", sort=False):
                 for qid, ids, scores in zip(*sc.score_segment_blocks(
@@ -799,6 +739,12 @@ class Searcher:
             if k is None:
                 return sum(len(i) for ids, _s in per_q.values() for i in ids)
             return _merge_topk(per_q, k)
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in scan})
+        blocks = self.postings.filter(
+            (F.col("case_id") == case_id)
+            & F.col("term_bucket").isin(self._bucket_lit(buckets))
+            & F.col("term").isin(scan)
+        )
         if allow is not None:
             allowed = self._allowed_df(case_id, None, self._ids_df(allow))
         p1 = None
@@ -844,18 +790,16 @@ class Searcher:
         return (frames[0] if len(frames) == 1
                 else pd.concat(frames, ignore_index=True))
 
-    def _collect_blocks(self, case_id: str, terms, blocks_df,
+    def _collect_blocks(self, case_id: str, terms,
                         positions: bool) -> pd.DataFrame:
-        """The driver-local fetcher: one fetch of the candidate blocks'
-        packed payloads to the driver (bounded by the local gates),
-        CRC-verified like every other fetch.  The driver-direct arrow read
-        needs no Spark job at all; PYSEARCH_LOCAL_ARROW=0 falls back to
-        the Spark scan-only job over ``blocks_df``."""
-        cols = self._LOCAL_COLS_POS if positions else self._LOCAL_COLS
-        if os.environ.get("PYSEARCH_LOCAL_ARROW", "1") != "0":
-            pdf = self._read_blocks_arrow(case_id, terms, cols)
-        else:
-            pdf = blocks_df.select(*cols).toPandas()
+        """The driver-local fetcher: one driver-direct arrow read of the
+        candidate blocks' packed payloads (bounded by the local gates, no
+        Spark job), CRC-verified like every other fetch.  The index root
+        is a local path (IndexLayout rejects URI schemes), so the driver
+        can always read what the executors read."""
+        pdf = self._read_blocks_arrow(
+            case_id, terms, self._LOCAL_COLS_POS if positions
+            else self._LOCAL_COLS)
         _verify_blocks(pdf, positions)
         return pdf
 
@@ -868,10 +812,10 @@ class Searcher:
         if case_id in self._vocab_cache:
             return self._vocab_cache[case_id]
         out = None
-        if self.local_max_vocab > 0:
+        if self.local_max_postings > 0:
             if self._term_stats_rows is None:
                 self._term_stats_rows = self._term_stats.count()
-            if self._term_stats_rows <= self.local_max_vocab:
+            if self._term_stats_rows <= LOCAL_MAX_VOCAB:
                 from pyspark.sql import functions as F
 
                 rows = (
@@ -884,36 +828,29 @@ class Searcher:
         self._vocab_cache[case_id] = out
         return out
 
-    def _catalog_keys(self, case_id: str) -> Optional[tuple]:
-        """The case's catalog key columns as two LOCAL-relation DataFrames
-        ``(url_df, content_hash_df)`` when the catalog fits the
-        LOCAL_MAX_CATALOG gate, else None.  Gate decided from the
-        already-loaded corpus stats (no job); one bounded two-column
-        collect per load, cached per case — index metadata exactly like
-        the term-df cache.  Lets the NRT hybrid's already-indexed
-        anti-joins build their broadcast side from an in-memory relation
-        instead of re-scanning the docs table per hybrid query.  (Local
-        relations, not ``isin`` literal lists: Column.isin pays a py4j
-        round trip per element, which is seconds at catalog sizes.)"""
-        if case_id in self._catalog_keys_cache:
-            return self._catalog_keys_cache[case_id]
-        out = None
-        n_docs = self._corpus.get(case_id, (0,))[0]
-        if 0 < self.local_max_catalog and n_docs <= self.local_max_catalog:
-            from pyspark.sql import functions as F
+    def _catalog(self, case_id: str) -> Optional[dict]:
+        """The case's catalog as driver arrays ``{"doc_id", "url",
+        "content_hash"}`` when it fits the LOCAL_MAX_CATALOG gate, else
+        None.  Gate decided from the already-loaded corpus stats (no job);
+        one bounded three-column collect per load, cached per case — index
+        metadata exactly like the term-df cache.  Consumers memoize what
+        they derive from it in the same entry, so it dies with the load:
+        the NRT hybrid's anti-join relations, the ops' source-id map."""
+        if case_id not in self._catalog_cache:
+            out = None
+            n_docs = self._corpus.get(case_id, (0,))[0]
+            if 0 < self.local_max_postings and n_docs <= LOCAL_MAX_CATALOG:
+                from pyspark.sql import functions as F
 
-            pdf = (
-                self.docs.filter(F.col("case_id") == case_id)
-                .select("url", "content_hash").toPandas()
-            )
-            out = (
-                self.spark.createDataFrame(pdf[["url"]],
-                                           schema="url string"),
-                self.spark.createDataFrame(pdf[["content_hash"]],
-                                           schema="content_hash string"),
-            )
-        self._catalog_keys_cache[case_id] = out
-        return out
+                pdf = (
+                    self.docs.filter(F.col("case_id") == case_id)
+                    .select("doc_id", "url", "content_hash").toPandas()
+                )
+                out = {"doc_id": pdf["doc_id"].to_numpy(np.int64),
+                       "url": pdf["url"].to_numpy(),
+                       "content_hash": pdf["content_hash"].to_numpy()}
+            self._catalog_cache[case_id] = out
+        return self._catalog_cache[case_id]
 
     def _term_dfs(self, case_id: str, terms: List[str]) -> Dict[str, int]:
         from pyspark.sql import functions as F

@@ -20,6 +20,8 @@ from typing import List
 
 import pandas as pd
 
+from pysearch import gate
+
 
 def _analyze_udf():
     from pyspark.sql import functions as F
@@ -340,21 +342,6 @@ def _score_mem_topk(toks, plans, avgdl, k, materialize: bool = True):
     return out.localCheckpoint() if materialize else out
 
 
-def _mem_local_gate() -> int:
-    """Row gate for the driver-local mem-side scorer — the same knob and
-    default as the engine's local scoring path (query.LOCAL_MAX_POSTINGS;
-    env PYSEARCH_LOCAL_MAX_POSTINGS, 0 disables).  The mem side's
-    candidate volume — one (url, dl, term, tf) row per (doc, query-term
-    or phrase-marker) hit — is known EXACTLY from the stats aggregate's
-    per_term counts before any scoring job runs."""
-    import os
-
-    from pysearch.query import LOCAL_MAX_POSTINGS
-
-    return int(os.environ.get("PYSEARCH_LOCAL_MAX_POSTINGS",
-                              LOCAL_MAX_POSTINGS))
-
-
 def _score_mem_topk_local(tok_rows, plans, avgdl, k):
     """Driver-local counterpart of _score_mem_topk: same per-url term
     maps, same np.float64 op order and np.add.reduceat reduction, same
@@ -483,9 +470,8 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
         # candidate volume == the stats aggregate's per-term row counts;
         # under the gate, score driver-side from one bounded collect of
         # the persisted rows (no exchange, no python workers, no window)
-        local_max = _mem_local_gate()
         vol_mem = sum(n for n, _s in per_term.values())
-        if 0 < vol_mem <= local_max:
+        if 0 < vol_mem <= gate.local_max_postings():
             rows = _score_mem_topk_local(
                 toks.filter(F.col("term").isNotNull()).collect(),
                 plans, avgdl, k)
@@ -565,13 +551,20 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
         # cannot affect it (they would append elsewhere)
         src = src.filter(F.col("case_id").cast("string") == case_id)
     df = _shape_batch_text(src)
-    keys = searcher._catalog_keys(case_id)
-    if keys is not None:
+    cat = searcher._catalog(case_id)
+    if cat is not None:
         # catalog under the LOCAL_MAX_CATALOG gate: the "already indexed"
         # anti-joins keep their shape but build their broadcast side from
-        # the cached in-memory key relations — no docs-table scan job per
-        # hybrid query; same surviving rows
-        url_df, hash_df = keys
+        # in-memory key relations made once per load — no docs-table scan
+        # job per hybrid query; same surviving rows.  (Local relations,
+        # not ``isin`` literal lists: Column.isin pays a py4j round trip
+        # per element, which is seconds at catalog sizes.)
+        if "relations" not in cat:
+            cat["relations"] = tuple(
+                searcher.spark.createDataFrame(
+                    pd.DataFrame({c: cat[c]}), schema=f"{c} string")
+                for c in ("url", "content_hash"))
+        url_df, hash_df = cat["relations"]
         df = df.join(F.broadcast(url_df), "url", "left_anti")
         df = df.join(F.broadcast(hash_df), "content_hash", "left_anti")
     else:
@@ -616,7 +609,7 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
         mem_hits: dict = {}
         if n_mem:
             vol_mem = sum(n for n, _s in per_term.values())
-            if 0 < vol_mem <= _mem_local_gate():
+            if 0 < vol_mem <= gate.local_max_postings():
                 recs = _score_mem_topk_local(
                     toks.filter(F.col("term").isNotNull()).collect(),
                     plans, avgdl, k)

@@ -1,8 +1,8 @@
 """Pins for the driver-direct arrow block fetch (query._read_blocks_arrow):
 the fetched frame must be byte-identical to the Spark scan-only fetch over
 the same commit dirs/filters, and every local-path mode must return the
-same results with the arrow fetch on (default) and off
-(PYSEARCH_LOCAL_ARROW=0)."""
+same results through the arrow fetch as a forced-distributed Searcher
+(local_max_postings=0)."""
 
 import os
 import sys
@@ -25,6 +25,15 @@ def searcher(spark, tmp_path_factory):
                                          if c[0] == 7])
     build_index(spark, df, d, segment_size=64, store_positions=True)
     return Searcher(spark, d)
+
+
+@pytest.fixture(scope="module")
+def dist_searcher(spark, searcher):
+    from pysearch.query import Searcher
+
+    s = Searcher(spark, searcher.layout.root)
+    s.local_max_postings = 0  # every driver-local path off
+    return s
 
 
 def test_arrow_fetch_bytes_match_spark(spark, searcher):
@@ -65,38 +74,29 @@ def test_arrow_fetch_bytes_match_spark(spark, searcher):
     ('"a cornucopia" ~3', None),  # parsed near via search_ids default
 ])
 def test_local_results_identical_with_arrow_on_off(
-        searcher, monkeypatch, query, mode):
-    s = searcher
+        searcher, dist_searcher, query, mode):
     kw = {"k": 10, "case_id": "7"}
     if mode is not None:
         kw["mode"] = mode
-    monkeypatch.delenv("PYSEARCH_LOCAL_ARROW", raising=False)
-    on = s.search_ids(query, **kw)
-    monkeypatch.setenv("PYSEARCH_LOCAL_ARROW", "0")
-    off = s.search_ids(query, **kw)
+    on = searcher.search_ids(query, **kw)
+    off = dist_searcher.search_ids(query, **kw)
     assert on.equals(off)
     assert len(on) > 0
 
 
-def test_count_and_batch_identical_with_arrow_on_off(searcher, monkeypatch):
-    s = searcher
-    monkeypatch.delenv("PYSEARCH_LOCAL_ARROW", raising=False)
-    c_on = s.count("a cornucopia of", case_id="7")
-    m_on = s.search_ids_many({"a": "cornucopia", "b": "a cornucopia of"},
-                             k=5, case_id="7")
-    monkeypatch.setenv("PYSEARCH_LOCAL_ARROW", "0")
-    c_off = s.count("a cornucopia of", case_id="7")
-    m_off = s.search_ids_many({"a": "cornucopia", "b": "a cornucopia of"},
-                              k=5, case_id="7")
+def test_count_and_batch_identical_with_arrow_on_off(searcher, dist_searcher):
+    qs = {"a": "cornucopia", "b": "a cornucopia of"}
+    c_on = searcher.count("a cornucopia of", case_id="7")
+    m_on = searcher.search_ids_many(qs, k=5, case_id="7")
+    c_off = dist_searcher.count("a cornucopia of", case_id="7")
+    m_off = dist_searcher.search_ids_many(qs, k=5, case_id="7")
     assert c_on == c_off > 0
     assert m_on.equals(m_off)
 
 
-def test_segment_metrics_local_matches_spark(spark, searcher):
+def test_segment_metrics_local_matches_spark(spark, searcher, monkeypatch):
     """The driver-side pyarrow lineage-metrics aggregate must produce the
     same per-(case, segment) sums as the distributed groupBy it replaces."""
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from pysearch.build import _segment_metrics_local
@@ -116,9 +116,6 @@ def test_segment_metrics_local_matches_spark(spark, searcher):
     b = sorted((str(r.case_id), int(r.segment_id), int(r.n_blocks),
                 int(r.n_postings), int(r.bytes)) for r in spark_rows)
     assert a == b
-    # env kill-switch falls back to the distributed path
-    _os.environ["PYSEARCH_LOCAL_ARROW"] = "0"
-    try:
-        assert _segment_metrics_local(commit_dir) is None
-    finally:
-        del _os.environ["PYSEARCH_LOCAL_ARROW"]
+    # a zero row gate falls back to the distributed path
+    monkeypatch.setattr("pysearch.gate.METRICS_LOCAL_MAX_BLOCKS", 0)
+    assert _segment_metrics_local(commit_dir) is None

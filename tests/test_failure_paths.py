@@ -1,0 +1,60 @@
+"""Odd inputs and failures get the right answer or a clean error: the lang
+facet keeps a NULL-lang group like its DuckDB oracle, and a docs stage
+whose id assignment fails re-raises that error with no frame left
+persisted."""
+
+import os
+import sys
+
+import duckdb
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+SF_DIR = os.environ.get("PYSEARCH_TEST_SF", "/root/testdata/sf0.001")
+
+
+def test_facet_lang_keeps_null_group(spark, tmp_path):
+    """Over a copy of the tables with every even doc's lang NULL, the op
+    and the frozen oracle SQL agree, NULL group included."""
+    import __spark_entry__ as entrymod
+    from pysearch.ops import OPS
+
+    sf = tmp_path / "sf_null_lang"
+    sf.mkdir()
+    src = f"{SF_DIR}/documents.parquet"
+    duckdb.sql(
+        f"COPY (SELECT * REPLACE (CASE WHEN doc_id % 2 = 0 THEN NULL "
+        f"ELSE lang END AS lang) FROM '{src}') "
+        f"TO '{sf}/documents.parquet' (FORMAT PARQUET)")
+    got = sorted(
+        (r["lang"] or "", r["n_hits"], r["top_score_r"])
+        for r in OPS["t1_engine_facet_lang"][0](spark, str(sf)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{sf}/documents.parquet'")
+    want = sorted(
+        (lang or "", n, round(float(top), 4)) for lang, n, top in
+        con.sql(entrymod.oracle_sql()["t1_engine_facet_lang"]).fetchall())
+    assert got == want
+    assert any(lang == "" for lang, _n, _t in got), "no NULL-lang hit"
+
+
+def test_docs_stage_failure_unpersists_and_reraises(spark, tmp_path,
+                                                    monkeypatch):
+    from pysearch import build, corpus
+
+    class Boom(RuntimeError):
+        pass
+
+    def fail(*_a, **_kw):
+        raise Boom("id assignment failed")
+
+    df = corpus.webtext_df(spark, cases=[c for c in corpus.CASES
+                                         if c[0] == 7])
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(build, "_assign_doc_ids", fail)
+    with pytest.raises(Boom, match="id assignment failed"):
+        build.build_index(spark, df, str(tmp_path / "ix"))
+    assert jsc.getPersistentRDDs().size() == before

@@ -1,0 +1,174 @@
+"""The driver-local vs distributed size policy lives in pysearch/gate.py
+alone: no other module reads a PYSEARCH_LOCAL_* variable or assigns a gate
+constant, and PYSEARCH_LOCAL_MAX_POSTINGS=0 turns every driver-local path
+of a Searcher off.  Also pins the one catalog cache (Searcher._catalog)
+that the NRT anti-joins and the engine-backed ops share, on both sides of
+its gate and across an index refresh."""
+
+import ast
+import os
+import re
+import sys
+
+import numpy as np
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "pysearch")
+SF_DIR = os.environ.get("PYSEARCH_TEST_SF", "/root/testdata/sf0.001")
+
+
+def _modules():
+    for name in sorted(os.listdir(PKG)):
+        if name.endswith(".py") and name != "gate.py":
+            with open(os.path.join(PKG, name)) as f:
+                yield name, ast.parse(f.read())
+
+
+def test_only_gate_module_reads_local_env_knobs():
+    env_name = re.compile(r"^PYSEARCH_LOCAL_\w+$")
+    readers = sorted(
+        name for name, tree in _modules() for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and env_name.match(node.value))
+    assert readers == []
+
+
+def test_no_module_assigns_a_gate_constant():
+    from pysearch import gate
+
+    consts = {n for n in vars(gate) if n.isupper()}
+    assert {"LOCAL_MAX_POSTINGS", "LOCAL_MAX_CATALOG",
+            "PRUNE_MIN_POSTINGS"} <= consts
+    assigned = sorted(
+        (name, t.id) for name, tree in _modules() for node in ast.walk(tree)
+        if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign))
+        for t in (node.targets if isinstance(node, ast.Assign)
+                  else [node.target])
+        if isinstance(t, ast.Name) and t.id in consts)
+    assert assigned == []
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_path_factory):
+    from pysearch import corpus
+    from pysearch.build import build_index
+
+    d = str(tmp_path_factory.mktemp("gate_ix") / "ix")
+    df = corpus.webtext_df(spark, cases=[c for c in corpus.CASES
+                                         if c[0] == 7])
+    build_index(spark, df, d, segment_size=64)
+    return d
+
+
+def test_zero_knob_turns_every_local_path_off(spark, small_index,
+                                              monkeypatch):
+    from pysearch.query import Searcher
+
+    monkeypatch.setenv("PYSEARCH_LOCAL_MAX_POSTINGS", "0")
+    s = Searcher(spark, small_index)
+    assert s.local_max_postings == 0
+    assert s._local_vocab("7") is None
+    assert s._catalog("7") is None
+    assert s._use_local(1) is False
+    assert s._use_local_batch([1, 1]) is False
+    monkeypatch.delenv("PYSEARCH_LOCAL_MAX_POSTINGS")
+    on = Searcher(spark, small_index)
+    assert on._local_vocab("7") is not None
+    assert on._catalog("7") is not None
+    assert on._use_local(1) and on._use_local_batch([1, 1])
+
+
+@pytest.mark.parametrize("root", ["s3a://bucket/ix", "hdfs://nn:8020/ix",
+                                  "file:///tmp/ix"])
+def test_uri_index_roots_are_rejected(spark, tmp_path, monkeypatch, root):
+    """build_index and Searcher refuse a URI root instead of writing a
+    local directory named after the scheme."""
+    from pysearch import corpus
+    from pysearch.build import build_index
+    from pysearch.query import Searcher
+
+    monkeypatch.chdir(tmp_path)
+    df = corpus.webtext_df(spark, cases=[c for c in corpus.CASES
+                                         if c[0] == 7])
+    with pytest.raises(ValueError, match="local"):
+        build_index(spark, df, root)
+    with pytest.raises(ValueError, match="local"):
+        Searcher(spark, root)
+    assert os.listdir(tmp_path) == []
+
+
+def _source_index(spark, path):
+    from pyspark.sql import functions as F
+
+    from pysearch.build import build_index
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    build_index(spark, docs.select(
+        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
+        "text"), path, segment_size=128, analyzer="simple")
+    return docs.count()
+
+
+def _append(spark, path, ids):
+    """New source docs that rank high for the ops' BM25 query, so the
+    refreshed catalog must map them."""
+    import pandas as pd
+
+    from pysearch.build import build_index
+    from pysearch.ops import _BM25_TERMS
+
+    pdf = pd.DataFrame({
+        "url": [f"doc://docs/{i:09d}" for i in ids],
+        "text": [" ".join(_BM25_TERMS * 3) + f" extra{i}" for i in ids]})
+    build_index(spark, spark.createDataFrame(pdf), path, append=True)
+
+
+def _rows(df):
+    return sorted((r["doc_id"], r["score_r"]) for r in df.collect())
+
+
+def test_search_to_source_ids_catalog_both_sides_and_refresh(spark,
+                                                             tmp_path):
+    from pysearch import gate
+    from pysearch.ops import _get_searcher, _search_to_source_ids
+
+    ix = str(tmp_path / "ops_ix")
+    n_src = _source_index(spark, ix)
+    new_ids = 1_000_000 + 2 * np.arange(6)
+    keep = np.concatenate([np.arange(0, n_src, 2), new_ids])
+    drop = np.arange(0, n_src, 3)
+    s = _get_searcher(spark, ix)
+
+    def run():
+        return (_rows(_search_to_source_ids(spark, ix, "any",
+                                            filter_source_ids=keep)),
+                _rows(_search_to_source_ids(spark, ix, "any",
+                                            exclude_source_ids=drop)))
+
+    local1 = run()
+    cat1 = s._catalog("0")
+    assert cat1 is not None and len(cat1["doc_id"]) > 0
+    s.local_max_postings = 0  # the distributed semi-/anti-joins
+    s.refresh()
+    dist1 = run()
+    assert s._catalog("0") is None
+    assert local1 == dist1
+    assert all(len(r) == 10 for r in local1)
+    assert {i for i, _ in local1[0]} <= set(keep.tolist())
+    assert not {i for i, _ in local1[1]} & set(drop.tolist())
+
+    _append(spark, ix, new_ids)  # the Searcher goes stale
+    s.local_max_postings = gate.local_max_postings()
+    local2 = run()
+    cat2 = s._catalog("0")
+    assert cat2 is not cat1
+    assert len(cat2["doc_id"]) == len(cat1["doc_id"]) + len(new_ids)
+    s.local_max_postings = 0
+    s.refresh()
+    dist2 = run()
+    assert local2 == dist2
+    assert set(new_ids.tolist()) & {i for i, _ in local2[0]}
+    assert local2 != local1

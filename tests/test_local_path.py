@@ -105,7 +105,6 @@ def test_vocab_local_expansion_matches_spark(two_paths):
     must produce exactly the Spark job's expansions/weights/suggestions."""
     s_local, s_dist = two_paths
     assert s_local._local_vocab("7") is not None
-    s_dist.local_max_vocab = 0  # force the Spark expansion job
     assert s_dist._local_vocab("7") is None
     for fuzzy, prefixes in [
         ({"cornucopi": (1, 1.0)}, None),
@@ -195,7 +194,7 @@ def test_batched_local_gate_both_sides(spark, pos_index):
 
     s_on = Searcher(spark, pos_index)
     s_off = Searcher(spark, pos_index)
-    s_off.local_batch_factor = 0  # batches always distributed
+    s_off.local_max_postings = 0  # batches always distributed
     qs = {f"q{i}": q for i, q in enumerate(QUERIES)}
     for mode, kw in [("any", {}), ("all", {}), ("phrase", {}),
                      ("near", {"window": 3})]:

@@ -101,12 +101,12 @@ def test_nrt_catalog_keys_filter_matches_anti_join(spark, tmp_path):
     queries = {"q0": "in the realm of", "q1": "realm"}
 
     s_on = Searcher(spark, ix)
-    assert s_on._catalog_keys("6") is not None
+    assert s_on._catalog("6") is not None
     res_on = search_with_arrivals(s_on, arrivals, queries, k=10,
                                   case_id="6")
     s_off = Searcher(spark, ix)
-    s_off.local_max_catalog = 0  # force the distributed anti-joins
-    assert s_off._catalog_keys("6") is None
+    s_off.local_max_postings = 0  # force the distributed anti-joins
+    assert s_off._catalog("6") is None
     res_off = search_with_arrivals(s_off, arrivals, queries, k=10,
                                    case_id="6")
     assert res_on.reset_index(drop=True).equals(
