@@ -63,8 +63,12 @@ METRICS_LOCAL_MAX_BLOCKS = 5_000_000  # commit batches at or under this
 # many block rows get their per-segment lineage metrics aggregated
 # driver-side from a pyarrow read of the four narrow metadata columns
 # (row count comes from the parquet footers — no job); bigger batches
-# keep the distributed aggregate.  ~40 bytes/row in flight, so the bound
-# keeps the driver read to ~200 MB.
+# keep the distributed aggregate.  The same bound gates the pruner's bound
+# table (Searcher._bound_table): at or under this many ESTIMATED block rows
+# (candidate postings / BLOCK_SIZE + segments x terms) the scan terms'
+# (segment_id, term, max_tf, min_dl) come from one driver arrow read,
+# above it from one Spark aggregate collect.  ~40 bytes/row in flight, so
+# the bound keeps either driver read to ~200 MB.
 
 DUP_CLUSTERS_LOCAL_MAX_EDGES = 1_000_000  # below this, the edge list is a
 # few MB: collect it once and run union-find on the driver (2 jobs total)
@@ -72,10 +76,11 @@ DUP_CLUSTERS_LOCAL_MAX_EDGES = 1_000_000  # below this, the edge list is a
 # size-gated strategy choice as a broadcast join, with identical output
 # (min-doc_id component labels; pinned by test).
 
-PRUNE_MIN_POSTINGS = 1_000_000  # below this, one-pass scoring beats the
-# extra bound/θ jobs of block-max pruning on a warm local cluster; real
-# serving deployments with cold storage set Searcher.prune_min_postings
-# lower.
+PRUNE_MIN_POSTINGS = 1_000_000  # below this, one-pass scoring beats
+# block-max pruning's extra phase-1 scoring pass (the bounds and θ are
+# computed on the driver; pruning adds one scoring pass to the one it
+# shrinks) on a warm local cluster; real serving deployments with cold
+# storage set Searcher.prune_min_postings lower.
 
 
 def local_max_postings() -> int:

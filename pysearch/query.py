@@ -9,10 +9,10 @@ Query lifecycle (Spark-first redesign of the reference's
        [parquet partition pruning on term_bucket + row-group pruning on term]
     -> under the volume gates: one driver-local fetch, scored in-process
        by the same kernel; else
-    -> optional lossless segment-level block-max pruning (WAND-style):
-       phase 1 scores the highest-upper-bound segments to establish the
-       running kth score θ; phase 2 scores only segments whose summed
-       per-term upper bound exceeds θ
+    -> optional lossless block-max pruning (WAND-style), bounds computed
+       on the driver from block metadata: phase 1 scores the
+       highest-upper-bound segments to establish the running kth score θ;
+       phase 2 scores only the blocks whose upper bound can still reach θ
     -> groupBy(segment).applyInPandas: score.score_segment_blocks decodes
        blocks, applies each plan's match step, BM25, local top-k (all
        postings of a doc live in one segment, so local sums are final)
@@ -36,6 +36,7 @@ from typing import Dict, List, Optional, Tuple
 import numpy as np
 import pandas as pd
 
+from pysearch import gate
 from pysearch import score as sc
 from pysearch.build import term_bucket
 from pysearch.gate import (LOCAL_BATCH_FACTOR, LOCAL_MAX_CATALOG,
@@ -713,8 +714,8 @@ class Searcher:
         The scan reads the union of the plans' terms (partition pruning on
         their term buckets, row-group pruning on term).  ``local`` picks
         the driver-local fetcher; otherwise the distributed one runs,
-        after the lossless block-max prune when ``prune`` — _prune_blocks
-        for one plan, _prune_many_blocks for a batch.  ``allowed``: a
+        after the lossless block-max prune (_prune_blocks) when ``prune``.
+        ``k=0`` returns no rows and runs nothing.  ``allowed``: a
         (segment_id, doc_id) filter DataFrame (_allowed_df); ``allow``: a
         driver-resident filter set (sorted unique ids) — passed whole to
         every segment's kernel locally (segment_id is a pure function of
@@ -723,6 +724,8 @@ class Searcher:
         path."""
         from pyspark.sql import functions as F
 
+        if k == 0:
+            return _empty_hits()
         scan = sorted({t for p in plans.values() for t in p.scan_terms})
         excl = self._tombstones.get(case_id)
         if local:
@@ -748,12 +751,12 @@ class Searcher:
         if allow is not None:
             allowed = self._allowed_df(case_id, None, self._ids_df(allow))
         p1 = None
-        if prune and len(plans) == 1:
+        if prune:
             blocks, p1, allowed = self._prune_blocks(
-                blocks, plans, avgdl, k, exclude=excl, allowed_df=allowed)
-        elif prune:
-            blocks, p1 = self._prune_many_blocks(blocks, plans, avgdl, k,
-                                                 exclude=excl)
+                case_id, blocks, plans, avgdl, k, exclude=excl,
+                allowed_df=allowed)
+        if blocks is None:  # every plan answered in phase 1
+            return p1
         hits = self._score_blocks(blocks, plans, avgdl, k, exclude=excl,
                                   allowed_df=allowed)
         if p1 is None:
@@ -1556,7 +1559,7 @@ class Searcher:
         offline query-log pattern: per-query Spark-job overhead is paid
         once for the batch instead of per query.  ``prune=True`` (default;
         gated on candidate volume like ``search_ids``) additionally runs
-        the batched lossless block-max prune (``_prune_many_blocks``):
+        the batched lossless block-max prune (``_prune_blocks``):
         per-query θs are established from one shared phase-1 pass and a
         block is decoded only when at least one query's top-k can still
         need it — the query-log replay stops decoding every block of the
@@ -1738,345 +1741,182 @@ class Searcher:
         pdf.insert(0, "qid", qid)
         return pdf
 
-    def _ub_expr(self, idfs, qtf, avgdl, tf_col="max_tf", dl_col="min_dl"):
-        """BM25 upper-bound Column for a (max_tf, min_dl) metadata pair:
-        tf-normalization is increasing in tf and decreasing in dl, so
-        (max_tf, min_dl) bounds every posting the metadata covers."""
+    def _bound_table(self, case_id: str, blocks_df, terms: List[str]
+                     ) -> pd.DataFrame:
+        """The pruner's block metadata: (segment_id, term, max_tf, min_dl)
+        per (segment, term) of ``terms`` — max of the blocks' max_tf, min of
+        their min_dl.  Under gate.METRICS_LOCAL_MAX_BLOCKS estimated block
+        rows it is one driver-direct arrow read of the four narrow columns
+        (same commit dirs and term_bucket pruning as the block fetch, no
+        Spark job), aggregated here; above it, or with the driver-local
+        paths off, one Spark aggregate collect over ``blocks_df``."""
         from pyspark.sql import functions as F
 
-        from pysearch import B, K1
+        from pysearch import codec
 
-        widf = F.create_map(
-            *[x for t, v in idfs.items()
-              for x in (F.lit(t), F.lit(v * qtf.get(t, 1)))]
-        )
-        return (
-            widf[F.col("term")]
-            * (F.col(tf_col) * (K1 + 1.0))
-            / (F.col(tf_col) + K1 * (1.0 - B + B * F.col(dl_col) / avgdl))
-        )
+        n_segs = -(-self._corpus[case_id][0] // self.segment_size)
+        est = (sum(self._term_dfs(case_id, terms).values())
+               // codec.BLOCK_SIZE + n_segs * len(terms))
+        if (0 < self.local_max_postings
+                and est <= gate.METRICS_LOCAL_MAX_BLOCKS):
+            pdf = self._read_blocks_arrow(
+                case_id, terms, ("segment_id", "term", "max_tf", "min_dl"))
+            return (pdf.groupby(["segment_id", "term"], as_index=False)
+                    .agg(max_tf=("max_tf", "max"), min_dl=("min_dl", "min")))
+        return (blocks_df.groupBy("segment_id", "term")
+                .agg(F.max("max_tf").alias("max_tf"),
+                     F.min("min_dl").alias("min_dl"))
+                .toPandas())
 
-    def _per_term_ub(self, blocks_df, idfs, qtf, avgdl):
-        """(segment_id, term, ub) — each query term's max BM25 upper bound
-        within each segment, computed in Spark from block *metadata* only
-        (the packed binary columns are never read — column pruning keeps
-        this a metadata scan)."""
-        from pyspark.sql import functions as F
-
-        per_term = blocks_df.groupBy("segment_id", "term").agg(
-            F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl")
-        )
-        return per_term.select(
-            "segment_id", "term",
-            self._ub_expr(idfs, qtf, avgdl).alias("ub"),
-        )
-
-    def _prune_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
-                      avgdl: float, k: int,
+    def _prune_blocks(self, case_id: str, blocks_df,
+                      plans: Dict[str, sc.QueryPlan], avgdl: float, k: int,
                       exclude: Optional[np.ndarray] = None,
                       allowed_df=None):
-        """Lossless WAND-style pruning of ONE any/all plan (``plans`` is a
-        batch of one), fully distributed, two granularities.
+        """Lossless block-max WAND pruning of any/all plans, one plan or a
+        query log, with the bounds computed on the driver: only the two
+        scoring passes run Spark jobs.
 
-        Phase 1 exactly scores the PRUNE_FIRST_SEGMENTS segments with the
-        highest upper bounds to establish θ = running kth score; phase 2
-        keeps only segments whose summed per-term upper bound reaches θ
-        (their true scores cannot otherwise reach the top-k), then — the
-        block-max refinement — drops individual BLOCKS inside surviving
-        segments that cannot matter: block b of term t is kept only when
+        The BM25 upper bound of a (max_tf, min_dl) metadata pair factors as
+        w_q(t) * bub, where bub is the UNWEIGHTED tf-normalization bound
+        (increasing in tf, decreasing in dl, so it bounds every posting the
+        metadata covers) and w_q(t) = idf × boost × qtf.  From the bound
+        table (_bound_table) each plan q gets its per-segment bound
+        seg_ub_q(s) = Σ_t w_q(t) * bub(s, t), summed in sorted term order;
+        mode="all" drops segments missing any of q's terms (all of a doc's
+        postings live in one segment).
 
-            ub(b) + Σ_{t' ≠ t} seg_max_ub(t')  >=  θ
-
-        Lossless: every doc in b scores at most ub(b) from t and at most
-        seg_max_ub(t') from each other term (all of a doc's postings live in
-        one segment), so when the sum is < θ every doc in b has true score
-        < θ.  Dropping b only SUBTRACTS contributions, so an affected doc's
-        computed score is ≤ its true score < θ = the running kth score — it
-        can neither enter the final top-k nor tie the kth score, and every
-        unaffected doc keeps its exact score.  The same argument covers
-        mode="all": losing an appearance can only drop sub-θ docs from the
-        intersection, never add one.  >= not >, as with segments: a bound
-        EQUAL to θ could produce a doc that ties the kth score and wins the
-        doc_id-ascending tie-break.
-
-        Only O(PRUNE_FIRST_SEGMENTS + k) rows ever reach the driver; the
-        bound aggregates are metadata-only scans and the surviving
-        (segment, term) bound table is broadcast, so pruned blocks' packed
-        payloads are dropped at the scan — they neither shuffle to the
-        scorer nor decode (the remaining 100×-scale lever on the query
-        path: hot segments keep cold blocks, e.g. long-tail docs of a
-        skewed term, out of the decode entirely)."""
-        from pyspark.sql import functions as F
-
-        (plan,) = plans.values()
-        idfs, qtf, require = plan.weights, plan.qtf, plan.require
-        ptu = self._per_term_ub(blocks_df, idfs, qtf, avgdl)
-        seg_ub = ptu.groupBy("segment_id").agg(
-            F.sum("ub").alias("seg_ub"),
-            F.count("*").alias("n_terms"),  # distinct by construction
-        )
-        if require > 0:
-            # conjunctive: a segment missing any query term cannot hold a
-            # hit (all of a doc's postings live in its segment) — drop it
-            # before bound ordering AND from phase 2 (lossless)
-            seg_ub = seg_ub.filter(F.col("n_terms") >= require)
-        # one job: top (P+1) upper-bound segments; if <= P exist, pruning
-        # cannot help — score everything in a single pass
-        top = (
-            seg_ub.orderBy(F.col("seg_ub").desc(), F.col("segment_id"))
-            .limit(PRUNE_FIRST_SEGMENTS + 1)
-            .collect()
-        )
-        if len(top) <= PRUNE_FIRST_SEGMENTS:
-            return blocks_df, None, allowed_df
-        phase1 = [r["segment_id"] for r in top[:PRUNE_FIRST_SEGMENTS]]
-        # `require` propagates so θ is established from CONJUNCTIVE scores
-        # when mode="all"; seg_ub (the disjunctive bound) still dominates
-        # every conjunctive score, so pruning on it stays lossless
-        # a filter context (allowed_df) propagates into phase 1 so θ is the
-        # kth FILTERED score — an unfiltered θ could overshoot and prune
-        # blocks the filtered query needs; block/segment upper bounds stay
-        # valid a fortiori (filtering only removes candidate docs).  The
-        # allowed set is narrowed to the phase-1 segments BEFORE the
-        # cogroup exchange: at corpus-fraction filter sizes, shuffling the
-        # whole set into an 8-segment job would dominate the phase.
-        allowed_p1 = (None if allowed_df is None else
-                      allowed_df.filter(F.col("segment_id").isin(phase1)))
-        p1 = self._score_blocks(
-            blocks_df.filter(F.col("segment_id").isin(phase1)), plans,
-            avgdl, k, exclude=exclude, allowed_df=allowed_p1
-        )
-        if len(p1) < k:
-            # too few hits to establish θ; score all (full filter set)
-            return blocks_df, None, allowed_df
-        theta = float(p1["score"].iloc[k - 1])
-        # surviving segments' per-term bounds + each segment's summed bound;
-        # phase-1 segments are excluded (their scores are already in p1)
-        surv = (
-            seg_ub.filter(
-                (F.col("seg_ub") >= theta)
-                & ~F.col("segment_id").isin(phase1)
-            ).select("segment_id", "seg_ub")
-        )
-        meta = ptu.join(surv, "segment_id")
-        # block-max filter: ub(block) + (seg_ub - own term's seg max) >= θ.
-        # the (segment, term) join also subsumes the old segment semi-join.
-        phase2 = (
-            blocks_df.join(F.broadcast(meta), ["segment_id", "term"])
-            .filter(
-                self._ub_expr(idfs, qtf, avgdl)
-                + F.col("seg_ub") - F.col("ub") >= theta
-            )
-            .drop("ub", "seg_ub")
-        )
-        if self.count_scored_blocks:
-            # test/diagnostic hook: how many blocks survive to decode vs
-            # the unpruned candidate set (two extra metadata-only jobs)
-            self.last_block_counts = {
-                "candidate": blocks_df.count(),
-                "scored": phase2.count()
-                + blocks_df.filter(
-                    F.col("segment_id").isin(phase1)).count(),
-            }
-        # narrow the filter set to the SURVIVING segments before phase 2's
-        # cogroup exchange — pruned segments' allowed slices would only
-        # shuffle into empty-left groups (at corpus-fraction filter sizes
-        # that dead shuffle dominates); surv is O(segments) metadata and
-        # broadcast, mirroring the meta join above
-        allowed2 = (None if allowed_df is None else allowed_df.join(
-            F.broadcast(surv.select("segment_id")), "segment_id",
-            "left_semi"))
-        return phase2, p1, allowed2
-
-    def _prune_many_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
-                           avgdl: float, k: int,
-                           exclude: Optional[np.ndarray] = None):
-        """Per-QUERY lossless block-max pruning for the batched scan —
-        ``_prune_blocks`` generalized to a whole query log while keeping
-        the one-shared-decode property.
-
-        The per-query BM25 upper bound of a (max_tf, min_dl) metadata pair
-        factors as w_q(t) * bub, where bub is the UNWEIGHTED
-        tf-normalization bound (shared by every query) and
-        w_q(t) = idf_q(t) * qtf_q(t) is a per-(query, term) scalar.  So:
-
-        1. One metadata-only aggregate builds bub per (segment, term) for
-           the union terms; joining the tiny (qid, term, w) table and
-           summing gives each query's per-segment bound seg_ub_q, with a
-           per-query count of present terms (mode="all" drops segments
-           missing any of q's terms — lossless, all of a doc's postings
-           live in one segment).
-        2. Phase 1 scores ONE shared pass over the union of each query's
-           top-``PRUNE_FIRST_SEGMENTS`` bound segments; a query q gets
-           θ_q = its running kth score (−inf when phase 1 found fewer than
-           k hits — q then prunes nothing).  Queries whose segments ALL
-           sit in phase 1 are final there and drop out of phase 2.
-           Sharing the pass can only include EXTRA exact scores for a
-           query, so θ_q stays a valid lower bound of q's true kth score.
-        3. Block b of term t in segment s is needed by q iff
+        1. Phase 1 exactly scores, in one shared pass, the union of each
+           plan's PRUNE_FIRST_SEGMENTS highest-bound segments; θ_q is q's
+           kth score there (−inf with fewer than k hits — q then prunes
+           nothing).  A plan whose segments all sit in phase 1 is final
+           there.  Sharing the pass only adds exact scores, so θ_q stays a
+           lower bound of q's true kth score.
+        2. Block b of term t in segment s outside phase 1 is needed by q iff
 
                w_q(t) * bub(b) + (seg_ub_q(s) − w_q(t) * bub(s, t)) ≥ θ_q
                ⇔  bub(b) ≥ bub(s, t) + (θ_q − seg_ub_q(s)) / w_q(t)
 
-           so each q contributes one CUT scalar per (segment, term), and
-           b must be decoded iff bub(b) ≥ min over queries of their cuts.
-           The min-cut table is (segment, term)-sized metadata (Catalyst
-           picks the join strategy — at corpus scale it stays a fraction
-           of the block payload scan it prunes); per-query rows whose cut
-           exceeds bub(s, t) — the segment's best block can't serve q —
-           drop before the min, which only removes never-admitting
-           constraints.
+           so each q gives one cut per (segment, term) of a segment with
+           seg_ub_q(s) ≥ θ_q, and b is scored iff bub(b) ≥ the min cut.
+           Phase 2 runs as a literal predicate: ``segment_id isin`` the
+           surviving segments and bub(b) ≥ the (segment, term) cut.
 
-        Losslessness per query is ``_prune_blocks``'s argument verbatim
-        (dropping b only subtracts from docs already bounded < θ_q; ≥
-        keeps kth-ties exact; conjunctive scores stay dominated by the
-        disjunctive bound).  A block kept for q1 but not needed by q2 just
-        gives q2 exact extra contributions — exact scores can never
-        wrongly displace a true top-k doc.  Returns (phase2_blocks,
-        p1_pandas); (blocks_df, None) when no query has enough segments
-        for pruning to help, or when the phase-1 union would already
-        cover more than half the candidate segments (coverage bail-out —
-        the caller's one-pass scan is then the better plan)."""
-        from collections import defaultdict
+        Lossless: every doc in a dropped b has true score < θ_q, and
+        dropping b only subtracts from it, so it can neither enter q's
+        top-k nor tie its kth score; every doc scoring ≥ θ_q keeps all its
+        blocks and its exact score (≥, not >, keeps kth-score ties).  A
+        block kept for another query only adds exact contributions.  θ_q is
+        lowered by a relative 1e-9 before the cuts and the segment test, so
+        a driver sum that rounds differently from the scorer's can only
+        keep MORE blocks, never fewer.
 
+        A filter context (``allowed_df``) reaches phase 1, so θ is the kth
+        FILTERED score, and is narrowed to the phase-1 and then the
+        surviving segments with literal ``isin`` before each cogroup.  A
+        batch of more than one plan scores everything in one pass when the
+        phase-1 union already covers more than half of the candidate
+        segments (coverage bail-out).  Returns (phase-2 blocks or None when
+        nothing is left to score, phase-1 hits, phase-2 filter context);
+        (blocks_df, None, allowed_df) when no plan spans more than
+        PRUNE_FIRST_SEGMENTS segments."""
         from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
 
         from pysearch import B, K1
 
-        spark = self.spark
-        qt_rows = []
+        terms = sorted({t for p in plans.values() for t in p.weights})
+        bt = self._bound_table(case_id, blocks_df, terms)
+        segs, row = np.unique(bt["segment_id"].to_numpy(np.int64),
+                              return_inverse=True)
+        col = {t: j for j, t in enumerate(terms)}
+        tf = bt["max_tf"].to_numpy(np.float64)
+        dl = bt["min_dl"].to_numpy(np.float64)
+        bub = np.full((len(segs), len(terms)), np.nan)  # nan: term absent
+        bub[row, bt["term"].map(col).to_numpy(np.int64)] = (
+            (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl)))
+
+        bounds, phase1, open_q = {}, set(), []
         for qid, plan in plans.items():
-            for t, v in plan.weights.items():
-                qt_rows.append(
-                    (qid, t, float(v) * float(plan.qtf.get(t, 1))))
-        qterm = spark.createDataFrame(qt_rows,
-                                      "qid string, term string, w double")
+            js = [col[t] for t in sorted(plan.weights)]
+            w = np.array([plan.weights[t] * plan.qtf.get(t, 1)
+                          for t in sorted(plan.weights)])
+            here = ~np.isnan(bub[:, js])
+            seg_ub = np.zeros(len(segs))
+            for c, j in enumerate(js):  # sorted term order
+                seg_ub += np.where(here[:, c], w[c] * bub[:, j], 0.0)
+            alive = np.flatnonzero(here.sum(1) >= max(plan.require, 1))
+            ranked = alive[np.lexsort((segs[alive], -seg_ub[alive]))]
+            phase1.update(ranked[:PRUNE_FIRST_SEGMENTS].tolist())
+            if len(ranked) > PRUNE_FIRST_SEGMENTS:
+                open_q.append(qid)
+            bounds[qid] = (js, w, here, seg_ub, alive)
+        n_alive = len(set().union(*(b[4].tolist() for b in bounds.values())))
+        if not open_q or (len(plans) > 1 and 2 * len(phase1) > n_alive):
+            return blocks_df, None, allowed_df
 
-        bub = (F.col("max_tf") * (K1 + 1.0)) / (
-            F.col("max_tf") + K1 * (1.0 - B + B * F.col("min_dl") / avgdl))
-        base = (
-            blocks_df.groupBy("segment_id", "term")
-            .agg(F.max("max_tf").alias("max_tf"),
-                 F.min("min_dl").alias("min_dl"))
-            .select("segment_id", "term", bub.alias("bub"))
-        )
-        contrib = base.join(F.broadcast(qterm), "term").select(
-            "qid", "segment_id", (F.col("w") * F.col("bub")).alias("ub"))
-        seg = contrib.groupBy("qid", "segment_id").agg(
-            F.sum("ub").alias("seg_ub"),
-            F.count("*").alias("n_terms"),  # distinct terms by construction
-        )
-        if any(p.require for p in plans.values()):  # mode="all"
-            req = spark.createDataFrame(
-                [(q, int(p.require)) for q, p in plans.items()],
-                "qid string, require int")
-            seg = (seg.join(F.broadcast(req), "qid")
-                   .filter(F.col("n_terms") >= F.col("require"))
-                   .drop("require"))
-        w_rank = Window.partitionBy("qid").orderBy(
-            F.col("seg_ub").desc(), F.col("segment_id"))
-        top = (
-            seg.withColumn("_rn", F.row_number().over(w_rank))
-            .filter(F.col("_rn") <= PRUNE_FIRST_SEGMENTS + 1)
-            .select("qid", "segment_id", "_rn")
-            .collect()
-        )
-        per_q: dict = defaultdict(list)
-        for r in top:
-            per_q[r["qid"]].append((int(r["_rn"]), r["segment_id"]))
-        if not any(len(v) > PRUNE_FIRST_SEGMENTS for v in per_q.values()):
-            return blocks_df, None  # no query spans enough segments
-        phase1, final_in_p1 = set(), set()
-        for qid, v in per_q.items():
-            if len(v) <= PRUNE_FIRST_SEGMENTS:
-                # ALL of q's (require-surviving) segments are in phase 1 —
-                # q's phase-1 results are its final results
-                phase1.update(s for _rn, s in v)
-                final_in_p1.add(qid)
-            else:
-                v.sort()
-                phase1.update(s for _rn, s in v[:PRUNE_FIRST_SEGMENTS])
-        # coverage bail-out: when the per-query top-P unions already span
-        # most candidate segments (common on small/local indexes, or query
-        # logs whose hot segments are disjoint), phase 2 can only prune the
-        # remainder — not enough decode to pay for a second pass + the
-        # bound jobs.  One metadata-only count decides.
-        n_segs = seg.select("segment_id").distinct().count()
-        if 2 * len(phase1) > n_segs:
-            return blocks_df, None
+        phase1 = sorted(phase1)
+        in_p1 = F.col("segment_id").isin([int(s) for s in segs[phase1]])
         p1 = self._score_blocks(
-            blocks_df.filter(F.col("segment_id").isin(list(phase1))),
-            plans, avgdl, k, exclude=exclude)
+            blocks_df.filter(in_p1), plans, avgdl, k, exclude=exclude,
+            allowed_df=(None if allowed_df is None
+                        else allowed_df.filter(in_p1)))
 
-        by_q = p1.groupby("qid", sort=False) if len(p1) else None
-        theta_rows = []
-        for qid in plans:
-            if qid in final_in_p1 or qid not in per_q:
-                continue  # answered in phase 1 / no surviving segment
-            g = (by_q.get_group(qid) if by_q is not None
-                 and qid in by_q.groups else None)
-            th = (float(g["score"].iloc[k - 1])
-                  if g is not None and len(g) >= k else float("-inf"))
-            theta_rows.append((qid, th))
-        empty_blocks = blocks_df.filter(F.lit(False))
-        if not theta_rows:
-            return empty_blocks, p1  # whole log answered in phase 1
-        theta = spark.createDataFrame(theta_rows, "qid string, theta double")
-
-        segq = (
-            seg.join(F.broadcast(theta), "qid")
-            .filter(~F.col("segment_id").isin(list(phase1)))
-            .filter(F.col("seg_ub") >= F.col("theta"))
-        )
-        cut = (
-            segq.join(F.broadcast(qterm), "qid")
-            .join(base, ["segment_id", "term"])
-            .select(
-                "segment_id", "term", "bub",
-                (F.col("bub")
-                 + (F.col("theta") - F.col("seg_ub")) / F.col("w")
-                 ).alias("cut"),
-            )
-            .filter(F.col("cut") <= F.col("bub"))  # unreachable rows drop
-            .groupBy("segment_id", "term").agg(F.min("cut").alias("cut"))
-        )
-        phase2 = (
-            blocks_df.join(cut, ["segment_id", "term"])
-            .filter(bub >= F.col("cut"))
-            .drop("cut")
-        )
+        cut = np.full(bub.shape, np.inf)
+        rest = np.ones(len(segs), dtype=bool)
+        rest[phase1] = False
+        for qid in open_q:
+            js, w, here, seg_ub, alive = bounds[qid]
+            got = p1["score"][p1["qid"] == qid]
+            theta = float(got.iloc[k - 1]) if len(got) >= k else -np.inf
+            lo = theta - 1e-9 * (abs(theta) + seg_ub)
+            ok = np.zeros(len(segs), dtype=bool)
+            ok[alive] = True
+            ok &= rest & (seg_ub >= lo)
+            for c, j in enumerate(js):
+                m = ok & here[:, c]
+                cut[m, j] = np.minimum(
+                    cut[m, j], bub[m, j] + (lo[m] - seg_ub[m]) / w[c])
+        keep = np.flatnonzero((cut < np.inf).any(1))
+        phase2 = allowed2 = None
+        if len(keep):
+            cuts = F.create_map(*[
+                x for i in keep for x in (
+                    F.lit(int(segs[i])).cast("long"),
+                    F.create_map(*[
+                        y for j in np.flatnonzero(cut[i] < np.inf)
+                        for y in (F.lit(terms[j]), F.lit(float(cut[i, j])))
+                    ]))
+            ])
+            bub_col = (F.col("max_tf") * (K1 + 1.0)) / (
+                F.col("max_tf")
+                + K1 * (1.0 - B + B * F.col("min_dl") / avgdl))
+            in_p2 = F.col("segment_id").isin([int(s) for s in segs[keep]])
+            phase2 = blocks_df.filter(
+                in_p2 & (bub_col >= cuts[F.col("segment_id")][F.col("term")]))
+            if allowed_df is not None:
+                allowed2 = allowed_df.filter(in_p2)
         if self.count_scored_blocks:
+            # test/diagnostic hook: blocks scored vs the unpruned candidate
+            # set (extra metadata-only jobs)
             self.last_block_counts = {
                 "candidate": blocks_df.count(),
-                "scored": phase2.count()
-                + blocks_df.filter(
-                    F.col("segment_id").isin(list(phase1))).count(),
+                "scored": blocks_df.filter(in_p1).count()
+                + (0 if phase2 is None else phase2.count()),
             }
-        return phase2, p1
+        return phase2, p1, allowed2
 
     # ------------------------------------------------------------------
     def _hit_positions(self, case_id: str, terms: List[str],
                        hit_ids: List[int]) -> Dict[int, Dict[str, list]]:
         """Per-hit-doc term positions read from the INDEX (pos_bin), not by
-        re-analyzing text: one partition+segment-pruned metadata-sized scan
-        over the hit docs' segments.  Returns doc_id -> term -> [positions].
-        """
-        from pyspark.sql import functions as F
-
+        re-analyzing text: the terms' blocks in the hit docs' segments and
+        doc range.  Under the local gate (the terms' candidate volume) one
+        driver-direct arrow read, filtered here; above it one
+        partition+segment-pruned Spark scan.  Both verify the block and
+        positions CRCs.  Returns doc_id -> term -> [positions]."""
         if not hit_ids:
             return {}
         segs = sorted({(int(i) - 1) // self.segment_size for i in hit_ids})
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         lo, hi = min(hit_ids), max(hit_ids)
-        blocks = self.postings.filter(
-            (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
-            & F.col("term").isin(list(terms))
-            & F.col("segment_id").isin(segs)
-            & (F.col("min_doc_id") <= hi) & (F.col("max_doc_id") >= lo)
-            & F.col("pos_bin").isNotNull()
-        )
         hit_set = set(int(i) for i in hit_ids)
 
         def extract(batches):
@@ -2101,16 +1941,36 @@ class Searcher:
                     rows, columns=["term", "doc_id", "positions"]
                 )
 
+        cols = ["term", "n", "doc_ids_bin", "tfs_bin", "dls_bin", "crc32",
+                "pos_bin", "pos_crc32"]
+        if self._use_local(sum(self._term_dfs(case_id, terms).values())):
+            pdf = self._read_blocks_arrow(
+                case_id, terms, cols + ["segment_id", "min_doc_id",
+                                        "max_doc_id"])
+            pdf = pdf[pdf["segment_id"].isin(segs)
+                      & (pdf["min_doc_id"] <= hi) & (pdf["max_doc_id"] >= lo)
+                      & pdf["pos_bin"].notna()]
+            found = [r for f in extract([pdf[cols]])
+                     for r in f.itertuples(index=False)]
+        else:
+            from pyspark.sql import functions as F
+
+            buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+            found = self.postings.filter(
+                (F.col("case_id") == case_id)
+                & F.col("term_bucket").isin(self._bucket_lit(buckets))
+                & F.col("term").isin(list(terms))
+                & F.col("segment_id").isin(segs)
+                & (F.col("min_doc_id") <= hi) & (F.col("max_doc_id") >= lo)
+                & F.col("pos_bin").isNotNull()
+            ).select(*cols).mapInPandas(
+                extract,
+                schema="term string, doc_id long, positions array<long>"
+            ).collect()
         out: Dict[int, Dict[str, list]] = {}
-        for r in blocks.select(
-            "term", "n", "doc_ids_bin", "tfs_bin", "dls_bin", "crc32",
-            "pos_bin", "pos_crc32"
-        ).mapInPandas(
-            extract, schema="term string, doc_id long, positions array<long>"
-        ).collect():
-            out.setdefault(int(r["doc_id"]), {}).setdefault(
-                r["term"], []
-            ).extend(int(p) for p in r["positions"])
+        for term, doc_id, positions in found:
+            out.setdefault(int(doc_id), {}).setdefault(term, []).extend(
+                int(p) for p in positions)
         return out
 
     def search(self, query: str, k: int = DEFAULT_MAX_RESULTS,

@@ -43,9 +43,9 @@ def bm25(tf, dl, idf_val: float, avgdl: float):
     return idf_val * (tf * (K1 + 1.0)) / denom
 
 
-# (per-block BM25 upper bounds are computed as a Catalyst expression in
-# query.Searcher._ub_expr: tf-normalization is increasing in tf and
-# decreasing in dl, so (max_tf, min_dl) bounds every posting)
+# (per-block BM25 upper bounds are computed in query.Searcher._prune_blocks:
+# tf-normalization is increasing in tf and decreasing in dl, so (max_tf,
+# min_dl) bounds every posting)
 
 
 @dataclass(frozen=True)

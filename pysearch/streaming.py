@@ -627,8 +627,8 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     # BOTH routes score the whole query log's index side in ONE postings
     # scan via the batched engine (the search_ids_many amortization —
     # shared decode, O(k·|queries|) rows to the driver).  prune=True
-    # additionally runs the lossless block-max prune (Searcher._prune_blocks
-    # or _prune_many_blocks) when candidate volume clears the gate;
+    # additionally runs the lossless block-max prune (Searcher._prune_blocks)
+    # when candidate volume clears the gate;
     # prune=False keeps the exhaustive one-pass scan.  Either way results
     # are identical to per-query scoring (pruning is lossless; pinned by
     # the NRT bit-identity tests).  θ_q comes from index-side candidates

@@ -2,7 +2,7 @@
 the fetched frame must be byte-identical to the Spark scan-only fetch over
 the same commit dirs/filters, and every local-path mode must return the
 same results through the arrow fetch as a forced-distributed Searcher
-(local_max_postings=0)."""
+(local_max_postings=0) — search()'s span positions included."""
 
 import os
 import sys
@@ -92,6 +92,34 @@ def test_count_and_batch_identical_with_arrow_on_off(searcher, dist_searcher):
     m_off = dist_searcher.search_ids_many(qs, k=5, case_id="7")
     assert c_on == c_off > 0
     assert m_on.equals(m_off)
+
+
+@pytest.mark.parametrize("query,mode", [
+    ("a cornucopia of", "any"),
+    ("a cornucopia of", "phrase"),
+])
+def test_span_positions_identical_with_arrow_on_off(
+        spark, searcher, dist_searcher, query, mode):
+    """search()'s index positions come from a driver arrow read under the
+    local gate (no Spark job) and from a Spark scan with the driver-local
+    paths off; spans and matches are identical."""
+    hits = searcher.search_ids(query, k=10, case_id="7", mode=mode)
+    ids = [int(i) for i in hits["doc_id"]]
+    terms = sorted(set(searcher._analyze(query)))
+    sc = spark.sparkContext
+    sc.setJobGroup("hit-positions", "hit-positions")
+    try:
+        on = searcher._hit_positions("7", terms, ids)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("hit-positions") == []
+    assert on == dist_searcher._hit_positions("7", terms, ids)
+    assert set(on) == set(ids)
+    m_on = searcher.search(query, k=10, case_id="7", mode=mode).collect()
+    m_off = dist_searcher.search(query, k=10, case_id="7", mode=mode).collect()
+    assert [r.asDict(recursive=True) for r in m_on] == \
+        [r.asDict(recursive=True) for r in m_off]
+    assert m_on and all(r["spans"] for r in m_on)
 
 
 def test_segment_metrics_local_matches_spark(spark, searcher, monkeypatch):

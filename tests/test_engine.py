@@ -973,15 +973,11 @@ def test_exact_duplicate_docs_deduped(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_block_max_pruning_skips_cold_blocks(spark, tmp_path):
-    """Block-max WAND: inside segments that survive θ, blocks whose BM25
-    upper bound cannot reach θ are dropped BEFORE decode — and the results
-    stay bit-identical to the unpruned path.
-
-    Skewed corpus: 16 segments x 4 posting blocks of the query term; only
+@pytest.fixture(scope="module")
+def skew_ix(spark, tmp_path_factory):
+    """Skewed corpus: 16 segments x 4 posting blocks of 'hotword'; only
     the 2 lowest-doc-id docs per segment carry tf=20 (they land in block 0,
-    postings being doc-sorted), the rest tf=1.  Phase 2 must keep block 0
-    of each surviving segment and prune the three tf=1 blocks."""
+    postings being doc-sorted), the rest tf=1."""
     import pandas as pd
 
     n, seg = 8192, 512
@@ -995,10 +991,19 @@ def test_block_max_pruning_skips_cold_blocks(spark, tmp_path):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["url", "text"])
     )
-    ix = str(tmp_path / "skew_ix")
+    ix = str(tmp_path_factory.mktemp("skew") / "skew_ix")
     build_index(spark, df, ix, segment_size=seg, analyzer="simple")
+    return ix
 
-    s = Searcher(spark, ix)
+
+def test_block_max_pruning_skips_cold_blocks(spark, skew_ix):
+    """Block-max WAND: inside segments that survive θ, blocks whose BM25
+    upper bound cannot reach θ are dropped BEFORE decode — and the results
+    stay bit-identical to the unpruned path.
+
+    On the skewed corpus (skew_ix), phase 2 must keep block 0 of each
+    surviving segment and prune the three tf=1 blocks."""
+    s = Searcher(spark, skew_ix)
     s.prune_min_postings = 0
     s.count_scored_blocks = True
     pruned = s.search_ids("hotword", k=10, case_id="0")
@@ -1015,11 +1020,128 @@ def test_block_max_pruning_skips_cold_blocks(spark, tmp_path):
     assert counts["scored"] < counts["candidate"]
 
 
+def _jobs(spark, fn, group):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pruned_query_runs_four_jobs(spark, skew_ix):
+    """The bounds, θ and block cuts are computed on the driver from one
+    arrow read of the block metadata, so a pruned multi-term query runs
+    only its two scoring passes: phase 1 and phase 2, two jobs each (the
+    segment exchange and the top-k).  Unpruned it runs one pass."""
+    s = Searcher(spark, skew_ix)
+    s.prune_min_postings = 0
+    s.local_max_postings = 1  # unpruned: distributed too
+    q = "hotword pad"
+    s.search_ids(q, k=10, case_id="0")  # warm: the term-df lookup
+    pruned, n_on = _jobs(spark, lambda: s.search_ids(q, k=10, case_id="0"),
+                         "prune-on")
+    unpruned, n_off = _jobs(
+        spark, lambda: s.search_ids(q, k=10, case_id="0", prune=False),
+        "prune-off")
+    assert pruned.equals(unpruned)
+    assert (n_on, n_off) == (4, 2)
+
+
+def test_prune_bound_read_gate_both_sides(spark, skew_ix, monkeypatch):
+    """The bound table comes from a driver arrow read under
+    gate.METRICS_LOCAL_MAX_BLOCKS and from one Spark aggregate above it or
+    with the driver-local paths off; the pruning after it is the same
+    code, so results and scored-block counts are identical."""
+    import pandas as pd
+
+    def run(**attrs):
+        s = Searcher(spark, skew_ix)
+        s.prune_min_postings = 0
+        s.count_scored_blocks = True
+        for a, v in attrs.items():
+            setattr(s, a, v)
+        out = [s.search_ids(q, k=10, case_id="0")
+               for q in ("hotword", "hotword pad")]
+        counts = [s.last_block_counts]
+        for mode in ("any", "all"):
+            out.append(s.search_ids_many(
+                {"a": "hotword", "b": "hotword pad", "c": "pad"}, k=10,
+                case_id="0", mode=mode))
+            counts.append(s.last_block_counts)
+        return out, counts
+
+    local, local_counts = run()
+    dist, dist_counts = run(local_max_postings=0)
+    monkeypatch.setattr("pysearch.gate.METRICS_LOCAL_MAX_BLOCKS", 0)
+    spark_read, spark_counts = run()
+    assert all(c is not None for c in local_counts), local_counts
+    assert local_counts == dist_counts == spark_counts
+    for a, b, c in zip(local, dist, spark_read):
+        pd.testing.assert_frame_equal(a, b)
+        pd.testing.assert_frame_equal(a, c)
+
+
+def test_pruning_keeps_tie_at_theta_outside_phase1(spark, tmp_path):
+    """A segment whose bound EQUALS θ must reach phase 2: its docs tie the
+    kth score and win the doc_id tie-break.  Segments 8-15 hold a doc
+    with tf=3 and a long dl beside short tf=1 docs, so their (max_tf,
+    min_dl) bound is loose and high — phase 1 takes them and finds θ =
+    the short docs' score.  Segment 0 holds only short docs: its bound is
+    exactly θ, its doc_ids are the lowest, so the top-k comes from it.
+    The driver's bound sums round differently from the scorer's, so this
+    pins that the pruner's comparison errs towards keeping blocks."""
+    import pandas as pd
+
+    seg, rows = 16, []
+    for i in range(16 * seg):
+        s_id, local = divmod(i, seg)
+        if s_id == 0 or (s_id >= 8 and local > 0):
+            body = "w v " + "pad " * 7
+        elif s_id >= 8:
+            body = "w w w v " + "pad " * 59
+        else:
+            body = "pad " * 9
+        rows.append((f"doc{i:04d}", f"u{i:04d} {body}"))
+    ix = str(tmp_path / "tie_ix")
+    build_index(spark, spark.createDataFrame(
+        pd.DataFrame(rows, columns=["url", "text"])), ix, segment_size=seg,
+        analyzer="simple")
+    s = Searcher(spark, ix)
+    s.prune_min_postings = 0
+    s.count_scored_blocks = True
+    for q in ("w", "w v"):
+        s.last_block_counts = None
+        pruned = s.search_ids(q, k=3, case_id="0")
+        assert s.last_block_counts is not None, q  # phase 2 ran
+        unpruned = s.search_ids(q, k=3, case_id="0", prune=False)
+        assert pruned.equals(unpruned), q
+        assert list(pruned["doc_id"]) == [1, 2, 3], q
+
+
+def test_k0_returns_no_rows(spark, skew_ix):
+    """k=0 answers an empty frame on both sides of the prune gate, and
+    from the batch."""
+    s = Searcher(spark, skew_ix)
+    for gate in (0, s.prune_min_postings):
+        s.prune_min_postings = gate
+        for q in ("hotword", "hotword pad"):
+            out = s.search_ids(q, k=0, case_id="0")
+            assert len(out) == 0 and list(out.columns) == ["doc_id",
+                                                           "score"]
+        many = s.search_ids_many({"a": "hotword", "b": "hotword pad"}, k=0,
+                                 case_id="0")
+        assert len(many) == 0 and list(many.columns) == ["qid", "doc_id",
+                                                         "score"]
+
+
 def test_batched_block_pruning_matches_per_query(spark, tmp_path):
     """Per-query block-max pruning in the BATCHED query-log scan
-    (_prune_many_blocks): results stay bit-identical to both the unpruned
-    batched pass and per-query search_ids, across match modes, while the
-    decode volume drops below the candidate block count.
+    (_prune_blocks over a batch): results stay bit-identical to both the
+    unpruned batched pass and per-query search_ids, across match modes,
+    while the decode volume drops below the candidate block count.
 
     Skewed corpus, 16 segments x 512 docs: 'alpha' is hot (tf=20) only in
     the 2 lowest-local docs per segment, 'beta' hot in two other slots,

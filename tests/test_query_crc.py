@@ -25,7 +25,9 @@ def clean_index(spark, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("crc_ix") / "ix")
     df = corpus.webtext_df(spark, cases=[(7, PHRASE, 300, 200)])
-    build_index(spark, df, d, segment_size=64, store_positions=True)
+    # 10 segments: more than the pruner's phase 1 takes, so a forced-pruned
+    # query reaches phase 2
+    build_index(spark, df, d, segment_size=32, store_positions=True)
     return d
 
 
@@ -56,14 +58,25 @@ def _tampered_copy(src: str, dst: str, column: str) -> str:
     return dst
 
 
-def _calls(positional: bool):
+def _pruned(s):
+    """search_ids(QUERY) forced through the block-max pruned path."""
+    old, s.prune_min_postings = s.prune_min_postings, 0
+    try:
+        return s.search_ids(QUERY, case_id="7")
+    finally:
+        s.prune_min_postings = old
+
+
+def _calls(positional: bool, distributed: bool):
     """Calls that must read TERM's blocks.  A positions CRC is checked
-    only by the calls that decode positions."""
+    only by the calls that decode positions: the positional modes and
+    search()'s spans."""
     two = {"a": QUERY, "b": PHRASE}
     phrase = [
         lambda s: s.search_ids(PHRASE, case_id="7", mode="phrase"),
         lambda s: s.count(PHRASE, case_id="7", mode="phrase"),
         lambda s: s.search_ids_many(two, case_id="7", mode="phrase"),
+        lambda s: s.search(QUERY, case_id="7").collect(),
     ]
     if positional:
         return phrase
@@ -74,7 +87,7 @@ def _calls(positional: bool):
                                mode="boolean"),
         lambda s: s.count(QUERY, case_id="7"),
         lambda s: s.search_ids_many(two, case_id="7"),
-    ]
+    ] + ([_pruned] if distributed else [])
 
 
 @pytest.mark.parametrize("column", ["crc32", "pos_crc32"])
@@ -91,7 +104,8 @@ def test_query_refuses_tampered_blocks(spark, clean_index, tmp_path, column,
     if path == "distributed":
         clean.local_max_postings = s.local_max_postings = 0
         raises = Exception
-    for call in _calls(positional=column == "pos_crc32"):
+    for call in _calls(positional=column == "pos_crc32",
+                       distributed=path == "distributed"):
         call(clean)  # the untampered index answers
         with pytest.raises(raises, match="CRC mismatch"):
             call(s)
