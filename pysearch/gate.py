@@ -25,7 +25,9 @@ LOCAL_MAX_POSTINGS = 500_000  # below this candidate volume, the packed
 # postings is ~3 MB packed (and bounds driver work at O(query candidate
 # volume), the same class as the hit set itself); queries above the gate
 # — and every filtered query whose allowed set is distributed — take the
-# distributed path.  Also the row gate of the NRT/arrival mem-side scorer.
+# distributed path.  Also the candidate-row gate of the arrival scorer:
+# score_arriving_batch reads this knob, the NRT mem side follows its
+# Searcher's local_max_postings like every other Searcher path.
 
 LOCAL_BATCH_FACTOR = 4  # the batched paths (search_ids_many, boolean
 # batch, the NRT hybrid's index side) may score a whole query log

@@ -619,20 +619,9 @@ class Searcher:
               raw_boosts: Optional[Dict[str, float]] = None,
               boosts: Optional[Dict[str, float]] = None
               ) -> Optional[sc.QueryPlan]:
-        """QueryPlan for the analyzed ``terms`` under mode
-        any|all|phrase|near against ``dfs`` (the live terms' dfs), or None
-        when nothing can match: no live term, or — under all/phrase/near —
-        any term absent from ``dfs``."""
-        live = sorted(t for t in set(terms) if t in dfs)
-        if not live or (mode != "any" and len(live) < len(set(terms))):
-            return None
-        weights = self._apply_boosts(
-            {t: sc.idf(n_docs, dfs[t]) for t in live}, raw_boosts, boosts)
-        return sc.QueryPlan(
-            weights=weights, qtf=dict(Counter(terms)),
-            terms=tuple(terms) if mode in ("phrase", "near") else (),
-            require=len(live) if mode == "all" else 0,
-            window=window if mode == "near" else None)
+        """``score.build_plan`` with this Searcher's resolved boosts."""
+        return sc.build_plan(mode, terms, dfs, n_docs, window,
+                             self._boost_mult(raw_boosts, boosts))
 
     def _use_local(self, vol: int, prune: bool = False,
                    allowed_df=None) -> bool:
@@ -892,17 +881,15 @@ class Searcher:
             if self._df_cache[(case_id, t)] > 0
         }
 
-    def _apply_boosts(self, idfs: Dict[str, float],
-                      raw_boosts: Optional[Dict[str, float]],
-                      boosts: Optional[Dict[str, float]]) -> Dict[str, float]:
-        """Multiply per-term boosts into the idf weights — ONE consistent
-        per-term weight feeds scoring, the WAND/block-max bounds, and the
-        batched plans, so boosted queries stay lossless under pruning.
-        ``raw_boosts`` keys are pre-analysis tokens (the ``^`` syntax) and
-        run through the same analyzer chain as the query; ``boosts`` keys
-        are already-analyzed terms.  Both compose multiplicatively."""
-        if not raw_boosts and not boosts:
-            return idfs
+    def _boost_mult(self, raw_boosts: Optional[Dict[str, float]],
+                    boosts: Optional[Dict[str, float]]) -> Dict[str, float]:
+        """Per-term weight multipliers, multiplied into the idf weights —
+        ONE consistent per-term weight feeds scoring, the WAND/block-max
+        bounds, and the batched plans, so boosted queries stay lossless
+        under pruning.  ``raw_boosts`` keys are pre-analysis tokens (the
+        ``^`` syntax) and run through the same analyzer chain as the
+        query; ``boosts`` keys are already-analyzed terms.  Both compose
+        multiplicatively."""
         mult: Dict[str, float] = {}
         for raw, b in (raw_boosts or {}).items():
             for t in set(self._analyze(raw)):
@@ -911,7 +898,7 @@ class Searcher:
             if b <= 0:
                 raise ValueError(f"term boost must be > 0, got {t!r}: {b}")
             mult[t] = mult.get(t, 1.0) * b
-        return {t: w * mult.get(t, 1.0) for t, w in idfs.items()}
+        return mult
 
     # ------------------------------------------------------------------
     def search_ids(self, query: str, k: int = DEFAULT_MAX_RESULTS,
@@ -1138,8 +1125,8 @@ class Searcher:
         live = sorted({t for t in pos if t in dfs})
         if not live or len(must_live) < len(set(must_terms)):
             return None
-        weights = self._apply_boosts(
-            {t: sc.idf(n_docs, dfs[t]) for t in live}, raw_boosts, boosts)
+        mult = self._boost_mult(raw_boosts, boosts)
+        weights = {t: sc.idf(n_docs, dfs[t]) * mult.get(t, 1.0) for t in live}
         return sc.QueryPlan(weights=weights, qtf=dict(Counter(pos)),
                             must=tuple(must_live),
                             must_not=tuple(t for t in not_terms if t in dfs))

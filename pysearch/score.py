@@ -16,6 +16,7 @@ Determinism (rank identity across parallelism/pruning/resume):
 from __future__ import annotations
 
 import functools
+from collections import Counter
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -84,6 +85,28 @@ class QueryPlan:
         """True for any/all plans: no match step beyond the term-count
         requirement, so block-max bounds and per-block scoring apply."""
         return not (self.terms or self.must or self.must_not)
+
+
+def build_plan(mode: str, terms: List[str], dfs: Dict[str, int],
+               n_docs: int, window: Optional[int] = None,
+               boosts: Optional[Dict[str, float]] = None
+               ) -> Optional[QueryPlan]:
+    """QueryPlan for the analyzed ``terms`` under mode any|all|phrase|near
+    against ``dfs`` (the live terms' dfs) over ``n_docs`` docs, or None
+    when nothing can match: no live term, or — under all/phrase/near — any
+    term absent from ``dfs``.  ``boosts``: resolved per-term weight
+    multipliers.  The one builder for the index engine and the arrival
+    scorer, so both weigh a query the same way."""
+    live = sorted(t for t in set(terms) if t in dfs)
+    if not live or (mode != "any" and len(live) < len(set(terms))):
+        return None
+    boosts = boosts or {}
+    return QueryPlan(
+        weights={t: idf(n_docs, dfs[t]) * boosts.get(t, 1.0) for t in live},
+        qtf=dict(Counter(terms)),
+        terms=tuple(terms) if mode in ("phrase", "near") else (),
+        require=len(live) if mode == "all" else 0,
+        window=window if mode == "near" else None)
 
 
 def score_segment_blocks(

@@ -16,8 +16,10 @@ persistDir == "" at index_pdfs.go:50-55).  Spark-first redesign:
 
 from __future__ import annotations
 
+import itertools
 from typing import List
 
+import numpy as np
 import pandas as pd
 
 from pysearch import gate
@@ -212,8 +214,8 @@ def _tok_query_tfs(an, qset, phrase_seqs):
     (url, dl, term, tf) row per query term the doc contains.  Phrase
     containment markers ride the same rows as real terms under a reserved
     "\\x00p:" prefix ("\\x00" can never appear in an analyzed term), so
-    presence lands in the same per-url map the scorer already builds — no
-    extra column, job, or join."""
+    presence becomes one more per-term doc array in the arrival scorer —
+    no extra column, job, or join."""
 
     def tok(batches):
         for pdf in batches:
@@ -247,202 +249,94 @@ def _tok_query_tfs(an, qset, phrase_seqs):
     return tok
 
 
-def _build_plans(analyzed, dfs, n_docs, mode):
-    """Per-query scoring plan against corpus stats (n_docs, per-term dfs):
-    (live terms sorted ascending, idfs, query-term tfs, conjunctive
-    requirement, phrase marker).  Queries with no live terms — or, under
-    all/phrase, any corpus-absent term — get no plan."""
+_HITS_SCHEMA = "qid string, url string, score double"
+
+
+def _topk_arrivals(cand: pd.DataFrame, plans: dict, avgdl: float,
+                   k: int) -> pd.DataFrame:
+    """The arrival scorer: candidate rows (url, term, tf, dl) -> each
+    plan's top-k as (qid, url, score) through the engine's own funnel
+    (``score._topk_from_decoded``), so arrivals score bit-identically to
+    the index by construction.  Docs are numbered by sorted url rank, so
+    the funnel's (score desc, doc_id asc) order is (score desc, url asc);
+    a phrase plan's match gate is its containment-marker rows.  (Grouping
+    is by np.unique, not pandas: pandas hashes strings only up to their
+    first NUL, which would merge every "\\x00p:" marker into one group.)"""
     from pysearch import score as sc
 
-    plans = {}
-    for qid, terms in analyzed.items():
-        live = sorted({t for t in terms if dfs.get(t, 0) > 0})
-        if not live or (mode in ("all", "phrase")
-                        and len(live) < len(set(terms))):
-            continue
-        qtf = {}
-        for t in terms:
-            qtf[t] = qtf.get(t, 0) + 1
-        idfs = {t: sc.idf(n_docs, dfs[t]) for t in live}
-        plans[qid] = (live, idfs, qtf,
-                      len(live) if mode in ("all", "phrase") else 0,
-                      ("\x00p:" + qid) if mode == "phrase" else None)
-    return plans
-
-
-def _score_mem_topk(toks, plans, avgdl, k, materialize: bool = True):
-    """Score the tokenized (url, dl, term, tf) rows against every plan and
-    return the per-query top-k as a DataFrame (qid, url, score), ties by
-    url ascending.  ``materialize=True`` (default) localCheckpoints the
-    result so it survives the caller's ``toks.unpersist()``; callers that
-    collect() while ``toks`` is still persisted pass False and save that
-    extra action."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from pysearch import B, K1
-
-    def score_parts(batches):
-        # partition-wise scoring: repartition("url") co-locates each
-        # doc's term rows; accumulate per-url term maps across arrow
-        # batches, then score every doc in ONE Python call per
-        # partition (a per-group applyInPandas paid ~2ms of call
-        # overhead per DOCUMENT — measured 12s for 5k docs at sf0.1)
-        acc: dict = {}
-        for pdf in batches:
-            for url, term, tf, dl in zip(pdf["url"], pdf["term"],
-                                         pdf["tf"], pdf["dl"]):
-                acc.setdefault(url, {})[term] = (tf, dl)
-        out_q, out_u, out_s = [], [], []
-        for url, have in acc.items():
-            for qid, (live, idfs, qtf, require, marker) in plans.items():
-                if marker is not None and marker not in have:
-                    continue
-                present = [t for t in live if t in have]
-                if not present or (require and len(present) < require):
-                    continue
-                terms_s = []
-                for t in present:  # live sorted -> ascending term order
-                    tf, dl = have[t]
-                    tf = np.float64(tf)
-                    denom = tf + K1 * (1.0 - B + B * np.float64(dl) / avgdl)
-                    terms_s.append(
-                        float(idfs[t] * (tf * (K1 + 1.0)) / denom * qtf[t])
-                    )
-                # sum with the ENGINE's reduction (np.add.reduceat in
-                # _topk_from_decoded), not a scalar loop: numpy's
-                # reduce is pairwise, so for >=3 terms a left-to-right
-                # += differs by 1 ULP from the engine — found by the
-                # multi-term parity test; same slice length + element
-                # order == same reduction tree == bit-equal scores
-                s = float(np.add.reduceat(
-                    np.asarray(terms_s, dtype=np.float64), [0])[0])
-                out_q.append(qid)
-                out_u.append(url)
-                out_s.append(s)
-        yield pd.DataFrame({"qid": out_q, "url": out_u, "score": out_s})
-
-    scored = (
-        toks.filter(F.col("term").isNotNull())
-        .repartition("url")
-        .mapInPandas(score_parts,
-                     schema="qid string, url string, score double")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("url").asc()
-    )
-    out = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("qid", F.col("score").desc(), "url")
-    )
-    # materialize before the caller's unpersist (see docstring)
-    return out.localCheckpoint() if materialize else out
-
-
-def _score_mem_topk_local(tok_rows, plans, avgdl, k):
-    """Driver-local counterpart of _score_mem_topk: same per-url term
-    maps, same np.float64 op order and np.add.reduceat reduction, same
-    (qid asc, score desc, url asc) per-query top-k — bit-identical by
-    construction (pinned by test).  Replaces the second distributed job
-    (repartition(url) exchange + python workers + rank window) with one
-    bounded collect of the persisted candidate rows."""
-    import numpy as np
-
-    from pysearch import B, K1
-
-    acc: dict = {}
-    for r in tok_rows:
-        acc.setdefault(r["url"], {})[r["term"]] = (r["tf"], r["dl"])
+    urls, doc = np.unique(cand["url"].to_numpy(object), return_inverse=True)
+    terms, tix = np.unique(cand["term"].to_numpy(object),
+                           return_inverse=True)
+    order = np.lexsort((doc, tix))  # by term, then doc id
+    cuts = np.searchsorted(tix[order], np.arange(1, terms.size))
+    cols = [np.split(a[order], cuts) for a in (
+        doc, cand["tf"].to_numpy(np.int64), cand["dl"].to_numpy(np.int64))]
+    decoded = {t: (d, tf, dl, None) for t, d, tf, dl in zip(terms, *cols)}
+    none = (np.empty(0, dtype=np.int64),)
     out = []
-    for url, have in acc.items():
-        for qid, (live, idfs, qtf, require, marker) in plans.items():
-            if marker is not None and marker not in have:
-                continue
-            present = [t for t in live if t in have]
-            if not present or (require and len(present) < require):
-                continue
-            terms_s = []
-            for t in present:  # live sorted -> ascending term order
-                tf, dl = have[t]
-                tf = np.float64(tf)
-                denom = tf + K1 * (1.0 - B + B * np.float64(dl) / avgdl)
-                terms_s.append(
-                    float(idfs[t] * (tf * (K1 + 1.0)) / denom * qtf[t])
-                )
-            s = float(np.add.reduceat(
-                np.asarray(terms_s, dtype=np.float64), [0])[0])
-            out.append((qid, url, s))
-    # (qid asc, score desc, url asc) == the distributed path's window
-    # rank + final orderBy; scores are > 0 so -s is a total order key
-    out.sort(key=lambda r: (r[0], -r[2], r[1]))
-    res, taken = [], {}
-    for qid, url, s in out:
-        c = taken.get(qid, 0)
-        if c < k:
-            res.append((qid, url, s))
-            taken[qid] = c + 1
-    return res
+    for qid, plan in plans.items():
+        restrict = (decoded.get("\x00p:" + qid, none)[0] if plan.terms
+                    else None)
+        hit, sums = sc._topk_from_decoded(decoded, plan, avgdl, k,
+                                          restrict=restrict)
+        out.append(pd.DataFrame({"qid": qid, "url": urls[hit],
+                                 "score": sums}))
+    return pd.concat(out, ignore_index=True)
 
 
-def score_arriving_batch(batch_df, queries: dict, k: int = 10,
-                         analyzer: str = "en", mode: str = "any"):
-    """Scored in-memory arrival index — reference use case 2
-    (/root/reference/GOPHERCON.md:56: "Check for terms in a PDF as it
-    arrives. (Short-lived in-memory index.)", served there by the in-memory
-    bleve index, bleve_glue.go:35-38): run a full BM25 ranked search over
-    JUST the arriving micro-batch, no persistent index.
-
-    ``queries``: qid -> query string.  Returns a DataFrame
-    (qid, url, score) with each query's top-k over the batch, RANK-IDENTICAL
-    to building a real index over the same batch and searching it (same
-    analyzer, same P1/P3/P4 dedupe rules, same idf/BM25 arithmetic summed in
-    ascending term order, ties by url ascending == the engine's doc_id
-    ascending since doc_ids are url ranks) — pinned by test.
-
-    The batch is treated as ONE corpus (batch-local N/avgdl/df, the
-    reference's short-lived-index semantics).  Scale shape: one tokenize
-    pass emitting only query-term tfs plus one stats row per doc, two tiny
-    aggregates, then a groupBy(url) scoring pass — nothing corpus-sized
-    ever reaches the driver.
-
-    ``mode="all"`` requires every analyzed query term to occur in the doc
-    (conjunctive), matching ``Searcher.search_ids(mode="all")``.
-
-    ``mode="phrase"`` additionally requires the analyzed query terms at
-    CONSECUTIVE positions, matching ``Searcher.search_ids(mode="phrase")``:
-    positions are ungapped indices into the analyzed token stream
-    (analyze.py), so adjacency == contiguous-sublist containment of the
-    analyzed query in the analyzed doc — checked inside the same tokenize
-    pass that counts tfs (the token stream is already in hand; no extra
-    scan, no positions shuffle).  Phrase hits score bit-identically to
-    their mode="all" scores, as in the engine."""
+def _arrival_hits(toks, plans: dict, avgdl: float, k: int,
+                  local: bool) -> list:
+    """Run the arrival scorer over the persisted tokenize rows from one of
+    two fetchers and merge the top-ks into (qid, url, score) rows ordered
+    (qid asc, score desc, url asc), at most k per query: ``local`` scores
+    one ``toPandas()`` of the candidate rows on the driver; otherwise
+    ``repartition("url")`` co-locates each doc's rows and every partition
+    returns its own top-k (the union of per-partition top-ks holds the
+    global top-k)."""
     from pyspark.sql import functions as F
 
-    from pysearch.analyze import get_analyzer
+    cand = toks.filter(F.col("term").isNotNull()).select(
+        "url", "term", "tf", "dl")
+    if local:
+        hits = _topk_arrivals(cand.toPandas(), plans, avgdl, k)
+    else:
+        def score_part(batches):
+            pdfs = list(batches)
+            if pdfs:
+                yield _topk_arrivals(pd.concat(pdfs, ignore_index=True),
+                                     plans, avgdl, k)
 
-    if mode not in ("any", "all", "phrase"):
-        raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
-    an, _, _ = get_analyzer(analyzer)
-    analyzed = {qid: an(q) for qid, q in queries.items()}
+        hits = (cand.repartition("url")
+                .mapInPandas(score_part, schema=_HITS_SCHEMA).toPandas())
+    rows = sorted(hits.itertuples(index=False, name=None),
+                  key=lambda r: (r[0], -r[2], r[1]))
+    return [r for _qid, grp in itertools.groupby(rows, key=lambda r: r[0])
+            for r in itertools.islice(grp, k)]
+
+
+def _score_arrivals(df, an, analyzed: dict, mode: str, k: int,
+                    max_local: int, base=(0, 0, {})):
+    """The arrival side of both entry points: one tokenize pass over the
+    shaped, deduped batch ``df``, one stats aggregate, the engine's plans
+    over the combined stats, then the arrival scorer — driver-local when
+    the candidate rows number at most ``max_local``.
+
+    ``base``: the index side's (n_docs, sum_dl, term dfs), added to the
+    batch's own stats (zeros for a batch-local search); avgdl is one
+    float64 division of exact longs, as in the finalize arithmetic.
+    Returns (plans, n_docs, avgdl, dfs over every query term, hits as
+    ``_arrival_hits`` returns them)."""
+    from pyspark.sql import functions as F
+
+    from pysearch import score as sc
+
     union_terms = sorted({t for ts in analyzed.values() for t in ts})
     # phrase containment markers ride the same (url, dl, term, tf) rows as
-    # real terms under a reserved "\x00p:" prefix ("\x00" can never appear
-    # in an analyzed term), so presence lands in the same per-url map the
-    # scorer already builds — no extra column, job, or join
+    # real terms (see _tok_query_tfs)
     phrase_seqs = (
         {qid: tuple(ts) for qid, ts in analyzed.items() if ts}
         if mode == "phrase" else {}
     )
-
-    spark = batch_df.sparkSession
-    empty = spark.createDataFrame([], schema="qid string, url string, score double")
-    if not union_terms:
-        return empty
-
-    df = _dedupe_batch(_shape_batch_text(batch_df))
     toks = df.mapInPandas(
         _tok_query_tfs(an, set(union_terms), phrase_seqs),
         schema="url string, dl long, term string, tf long",
@@ -458,32 +352,72 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
             ).collect()
         }
-        n_docs, sum_dl = per_term.pop(None, (0, 0))
-        if n_docs == 0:
-            return empty
-        avgdl = sum_dl / n_docs
-        dfs = {t: n for t, (n, _s) in per_term.items()}
-
-        plans = _build_plans(analyzed, dfs, n_docs, mode)
-        if not plans:
-            return empty
-        # candidate volume == the stats aggregate's per-term row counts;
-        # under the gate, score driver-side from one bounded collect of
-        # the persisted rows (no exchange, no python workers, no window)
-        vol_mem = sum(n for n, _s in per_term.values())
-        if 0 < vol_mem <= gate.local_max_postings():
-            rows = _score_mem_topk_local(
-                toks.filter(F.col("term").isNotNull()).collect(),
-                plans, avgdl, k)
-        else:
-            # collect while toks is persisted and hand back a local frame
-            # — one action instead of localCheckpoint + caller's collect
-            rows = _score_mem_topk(toks, plans, avgdl, k,
-                                   materialize=False).collect()
-        return spark.createDataFrame(
-            rows, schema="qid string, url string, score double")
+        n_mem, sum_dl_mem = per_term.pop(None, (0, 0))
+        n_idx, sum_dl_idx, dfs_idx = base
+        n_docs = n_idx + n_mem
+        avgdl = (sum_dl_idx + sum_dl_mem) / max(n_docs, 1)
+        dfs = {t: dfs_idx.get(t, 0) + per_term.get(t, (0, 0))[0]
+               for t in union_terms}
+        live = {t: n for t, n in dfs.items() if n > 0}
+        plans = {qid: sc.build_plan(mode, ts, live, n_docs)
+                 for qid, ts in analyzed.items()}
+        plans = {qid: p for qid, p in plans.items() if p is not None}
+        # candidate volume == the stats aggregate's per-term row counts
+        vol = sum(n for n, _s in per_term.values())
+        hits = (_arrival_hits(toks, plans, avgdl, k, vol <= max_local)
+                if plans and vol else [])
     finally:
         toks.unpersist()
+    return plans, n_docs, avgdl, dfs, hits
+
+
+def score_arriving_batch(batch_df, queries: dict, k: int = 10,
+                         analyzer: str = "en", mode: str = "any"):
+    """Scored in-memory arrival index — reference use case 2
+    (/root/reference/GOPHERCON.md:56: "Check for terms in a PDF as it
+    arrives. (Short-lived in-memory index.)", served there by the in-memory
+    bleve index, bleve_glue.go:35-38): run a full BM25 ranked search over
+    JUST the arriving micro-batch, no persistent index.
+
+    ``queries``: qid -> query string.  Returns a DataFrame
+    (qid, url, score) with each query's top-k over the batch, RANK-IDENTICAL
+    to building a real index over the same batch and searching it (same
+    analyzer, same P1/P3/P4 dedupe rules, the engine's own plans and top-k
+    funnel, ties by url ascending == the engine's doc_id ascending since
+    doc_ids are url ranks) — pinned by test.
+
+    The batch is treated as ONE corpus (batch-local N/avgdl/df, the
+    reference's short-lived-index semantics).  Scale shape: one tokenize
+    pass emitting only query-term tfs plus one stats row per doc, one tiny
+    aggregate, then one scoring pass — a bounded driver-side read of the
+    candidate rows under the ``PYSEARCH_LOCAL_MAX_POSTINGS`` gate, a
+    per-url-partition top-k above it; nothing corpus-sized ever reaches
+    the driver.
+
+    ``mode="all"`` requires every analyzed query term to occur in the doc
+    (conjunctive), matching ``Searcher.search_ids(mode="all")``.
+
+    ``mode="phrase"`` additionally requires the analyzed query terms at
+    CONSECUTIVE positions, matching ``Searcher.search_ids(mode="phrase")``:
+    positions are ungapped indices into the analyzed token stream
+    (analyze.py), so adjacency == contiguous-sublist containment of the
+    analyzed query in the analyzed doc — checked inside the same tokenize
+    pass that counts tfs (the token stream is already in hand; no extra
+    scan, no positions shuffle).  Phrase hits score bit-identically to
+    their mode="all" scores, as in the engine."""
+    from pysearch.analyze import get_analyzer
+
+    if mode not in ("any", "all", "phrase"):
+        raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
+    an, _, _ = get_analyzer(analyzer)
+    analyzed = {qid: an(q) for qid, q in queries.items()}
+    spark = batch_df.sparkSession
+    hits = []
+    if any(analyzed.values()):
+        *_, hits = _score_arrivals(
+            _dedupe_batch(_shape_batch_text(batch_df)), an, analyzed, mode,
+            k, gate.local_max_postings())
+    return spark.createDataFrame(hits, schema=_HITS_SCHEMA)
 
 
 def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
@@ -509,8 +443,9 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     - combined stats: n = n_idx + n_mem, avgdl = (sum_dl_idx + sum_dl_mem)
       / n as one float64 division of exact longs (identical to the
       finalize arithmetic), df(t) = df_idx(t) + df_mem(t); both sides
-      score with these, so a mem doc and an index doc with the same tf/dl
-      get the same score.
+      build their plans with ``score.build_plan`` over these and score
+      through the engine's top-k funnel, so a mem doc and an index doc
+      with the same tf/dl get the same score.
     - tie order: post-append doc_ids put every arrival AFTER every index
       doc (next segment boundary), arrivals ordered by url — the merge
       reproduces that exactly (index hits by doc_id, then arrivals by
@@ -523,8 +458,11 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     prune on top (θ_q from index candidates — a lower bound of the
     index-side kth score, so pruning stays lossless under the merge),
     ``prune=False`` keeps the exhaustive one-pass scan.  The mem side is
-    one tokenize pass + two tiny aggregates over the batch either way."""
+    the arrival scorer's one tokenize pass + one tiny aggregate over the
+    batch, driver-local under the Searcher's ``local_max_postings``."""
     from pyspark.sql import functions as F
+
+    from pysearch import score as sc
 
     if mode not in ("any", "all", "phrase"):
         raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
@@ -539,10 +477,6 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     empty = pd.DataFrame(columns=["qid", "url", "score"])
     if not union_terms:
         return empty
-    phrase_seqs = (
-        {qid: tuple(ts) for qid, ts in analyzed.items() if ts}
-        if mode == "phrase" else {}
-    )
 
     # ---- arrival side: shape -> append anti-joins -> dedupe -> tokenize
     src = batch_df
@@ -572,56 +506,15 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
         df = df.join(existing.select("url"), "url", "left_anti")
         df = df.join(existing.select("content_hash"), "content_hash",
                      "left_anti")
-    df = _dedupe_batch(df)
-    toks = df.mapInPandas(
-        _tok_query_tfs(an, set(union_terms), phrase_seqs),
-        schema="url string, dl long, term string, tf long",
-    ).persist()
-    try:
-        per_term = {
-            r["term"]: (int(r["n"]), int(r["s"]))
-            for r in toks.groupBy("term").agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-            ).collect()
-        }
-        n_mem, sum_dl_mem = per_term.pop(None, (0, 0))
-        dfs_mem = {t: n for t, (n, _s) in per_term.items()}
 
-        # ---- combined corpus stats (exact long arithmetic, one division)
-        n_idx, _avgdl_idx, sum_dl_idx = searcher._corpus.get(
-            case_id, (0, 0.0, 0))
-        dfs_idx = searcher._term_dfs(case_id, union_terms) if n_idx else {}
-        n_docs = n_idx + n_mem
-        if n_docs == 0:
-            return empty
-        avgdl = (sum_dl_idx + sum_dl_mem) / n_docs
-        dfs = {t: dfs_idx.get(t, 0) + dfs_mem.get(t, 0)
-               for t in union_terms}
-        plans = _build_plans(analyzed, dfs, n_docs, mode)
-        if not plans:
-            return empty
-
-        # ---- mem side: all plans in one pass, per-query top-k (collected
-        # while toks is still persisted — no checkpoint action needed);
-        # under the local gate the pass is one bounded collect + driver
-        # scoring (bit-identical — see _score_mem_topk_local)
-        mem_hits: dict = {}
-        if n_mem:
-            vol_mem = sum(n for n, _s in per_term.values())
-            if 0 < vol_mem <= gate.local_max_postings():
-                recs = _score_mem_topk_local(
-                    toks.filter(F.col("term").isNotNull()).collect(),
-                    plans, avgdl, k)
-            else:
-                recs = [(r["qid"], r["url"], r["score"])
-                        for r in _score_mem_topk(
-                            toks, plans, avgdl, k,
-                            materialize=False).collect()]
-            for qid, url, s in recs:
-                mem_hits.setdefault(qid, []).append((url, float(s)))
-    finally:
-        toks.unpersist()
+    # ---- combined corpus stats: the index side's, plus the batch's
+    n_idx, _avgdl_idx, sum_dl_idx = searcher._corpus.get(case_id, (0, 0.0, 0))
+    dfs_idx = searcher._term_dfs(case_id, union_terms) if n_idx else {}
+    plans, n_docs, avgdl, dfs, mem = _score_arrivals(
+        _dedupe_batch(df), an, analyzed, mode, k,
+        searcher.local_max_postings, base=(n_idx, sum_dl_idx, dfs_idx))
+    if not plans:
+        return empty
 
     # ---- index side, with the UNION stats injected (idfs/avgdl/require).
     # BOTH routes score the whole query log's index side in ONE postings
@@ -635,12 +528,10 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     # only — a lower bound of the index-side kth score, so pruning the
     # index list stays lossless regardless of the mem-side merge.
     idx_dfs = {t: dfs[t] for t in union_terms if dfs_idx.get(t, 0) > 0}
-    idx_plans: dict = {}
-    for qid in plans:
-        # no index doc can contain a term the index lacks
-        plan = searcher._plan(mode, analyzed[qid], idx_dfs, n_docs)
-        if plan is not None:
-            idx_plans[qid] = plan
+    # no index doc can contain a term the index lacks
+    idx_plans = {qid: sc.build_plan(mode, analyzed[qid], idx_dfs, n_docs)
+                 for qid in plans}
+    idx_plans = {qid: p for qid, p in idx_plans.items() if p is not None}
     idx_hits: dict = {}
     if idx_plans:
         vol_idx = sum(dfs_idx.get(t, 0) for t in union_terms)
@@ -668,6 +559,9 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
 
     # ---- merge: equal scores order index-before-mem (post-append ids put
     # arrivals last), index by doc_id asc, arrivals by url asc
+    mem_hits: dict = {}
+    for qid, url, s in mem:
+        mem_hits.setdefault(qid, []).append((url, float(s)))
     rows = []
     for qid in sorted(plans):
         cand = [(s, 0, i, url_of[i]) for i, s in idx_hits.get(qid, [])]
@@ -732,20 +626,27 @@ def foreach_batch_indexer(index_dir: str, compact_every: int = 16,
     maintenance windows.  ``compact_every=0`` disables the policy."""
 
     def handle(batch_df, epoch_id: int) -> None:
-        from pysearch.build import build_index
-        from pysearch.compact import compact_index
-        from pysearch.lineage import IndexLayout
-
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        build_index(spark, batch_df, index_dir, append=True, **build_kwargs)
-        if compact_every:
-            layout = IndexLayout(index_dir)
-            if len(layout.list_commits(layout.postings)) > compact_every:
-                compact_index(spark, index_dir)
+        if not batch_df.isEmpty():
+            _flush(batch_df, index_dir, compact_every, build_kwargs)
 
     return handle
+
+
+def _flush(batch_df, index_dir: str, compact_every: int,
+           build_kwargs: dict) -> None:
+    """Both indexing sinks' flush policy: append the micro-batch, then
+    compact once the postings table holds more than ``compact_every``
+    commit batches (0 disables compaction)."""
+    from pysearch.build import build_index
+    from pysearch.compact import compact_index
+    from pysearch.lineage import IndexLayout
+
+    spark = batch_df.sparkSession
+    build_index(spark, batch_df, index_dir, append=True, **build_kwargs)
+    if compact_every:
+        layout = IndexLayout(index_dir)
+        if len(layout.list_commits(layout.postings)) > compact_every:
+            compact_index(spark, index_dir)
 
 
 def foreach_batch_nrt(index_dir: str, queries: dict, out_dir: str,
@@ -770,22 +671,18 @@ def foreach_batch_nrt(index_dir: str, queries: dict, out_dir: str,
     def handle(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        from pysearch.build import build_index
-        from pysearch.compact import compact_index
         from pysearch.lineage import IndexLayout
         from pysearch.query import Searcher
 
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        layout = IndexLayout(index_dir)
-        if layout.stage_done("finalize"):
+        if IndexLayout(index_dir).stage_done("finalize"):
             s = Searcher(spark, index_dir)
             res = spark.createDataFrame(
                 search_with_arrivals(s, batch_df, queries, k=k,
                                      case_id=case_id, mode=mode),
-                schema="qid string, url string, score double",
-            )
+                schema=_HITS_SCHEMA)
         else:
             serve_df = batch_df
             if "case_id" in serve_df.columns:
@@ -800,9 +697,6 @@ def foreach_batch_nrt(index_dir: str, queries: dict, out_dir: str,
             .write.mode("overwrite")
             .parquet(f"{out_dir}/epoch={epoch_id}")
         )
-        build_index(spark, batch_df, index_dir, append=True, **build_kwargs)
-        if compact_every:
-            if len(layout.list_commits(layout.postings)) > compact_every:
-                compact_index(spark, index_dir)
+        _flush(batch_df, index_dir, compact_every, build_kwargs)
 
     return handle

@@ -3,7 +3,8 @@ alone: no other module reads a PYSEARCH_LOCAL_* variable or assigns a gate
 constant, and PYSEARCH_LOCAL_MAX_POSTINGS=0 turns every driver-local path
 of a Searcher off.  Also pins the one catalog cache (Searcher._catalog)
 that the NRT anti-joins and the engine-backed ops share, on both sides of
-its gate and across an index refresh."""
+its gate and across an index refresh, and scans for hand copies of the BM25
+arithmetic outside the scoring modules."""
 
 import ast
 import os
@@ -49,6 +50,19 @@ def test_no_module_assigns_a_gate_constant():
                   else [node.target])
         if isinstance(t, ast.Name) and t.id in consts)
     assert assigned == []
+
+
+def test_no_hand_copied_bm25():
+    """BM25 arithmetic lives in score.py (the kernel), oracle.py (the
+    reference oracle) and query.py (the block-max bound) alone: no other
+    module refers to K1, so every other scorer goes through score.py."""
+    users = sorted(
+        {name for name, tree in _modules() for node in ast.walk(tree)
+         if (isinstance(node, ast.Name) and node.id == "K1"
+             and not isinstance(node.ctx, ast.Store))
+         or (isinstance(node, ast.alias) and node.name == "K1")
+         or (isinstance(node, ast.Attribute) and node.attr == "K1")})
+    assert set(users) <= {"score.py", "oracle.py", "query.py"}, users
 
 
 @pytest.fixture(scope="module")
