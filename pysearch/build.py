@@ -50,12 +50,6 @@ DEFAULT_SEGMENT_SIZE = 4096
 DEFAULT_N_BUCKETS = 64
 SALT_N = 16
 
-
-def _dbg(msg: str, t0: float) -> None:
-    """Phase timing breadcrumbs, enabled with PYSEARCH_BUILD_DEBUG=1."""
-    if os.environ.get("PYSEARCH_BUILD_DEBUG") == "1":
-        print(f"[build +{time.time() - t0:7.2f}s] {msg}", flush=True)
-
 from pysearch.schema import POSTING_BLOCKS as _POSTING_BLOCKS_SCHEMA  # noqa: E402
 
 _BLOCK_FIELDS = _POSTING_BLOCKS_SCHEMA.fields
@@ -305,7 +299,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         .agg(F.min("url").alias("url"))
         .select("case_id", "url", "content_hash")
     ).persist()
-    _dbg("docs: plan built, assigning ids", t0)
 
     # exact-duplicate input rows (same url AND content) would multiply
     # through the id join.  Detect them on the projection (text-free) and
@@ -339,7 +332,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
             winners.unpersist()
             proj.unpersist()
             raise
-    _dbg("docs: ids assigned (offsets collected)", t0)
     n_input = int(stat["n_input"] or 0)
     if int(stat["mx"] or 0) > 1:
         dup_keys = key_counts.filter(F.col("count") > 1).select(
@@ -372,7 +364,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
     for r in counts:
         key = str(r["case_id"])
         case_counts[key] = case_counts.get(key, 0) + int(r["count"])
-    _dbg("docs: dup check + input count done", t0)
 
     def finish():
         # The docs write materializes the docs cache as it streams (persist
@@ -385,7 +376,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         # an unpinned recompute.
         staging = layout.staging_dir("docs")
         docs.write.mode("overwrite").partitionBy("case_id").parquet(staging)
-        _dbg("docs: docs table written (cache materialized)", t0)
         pinned.unpersist()
         winners.unpersist()
         proj.unpersist()
@@ -395,7 +385,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         docs.select("case_id", "doc_id", "url", "content_hash").write.mode(
             "overwrite"
         ).partitionBy("case_id").parquet(dm_staging)
-        _dbg("docs: doc_map written", t0)
         layout.commit_batch(staging, layout.docs, batch, replace=(batch == 0))
         layout.commit_batch(dm_staging, layout.doc_map, batch,
                             replace=(batch == 0))
@@ -423,7 +412,6 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
             merged[k] = merged.get(k, 0) + v
         layout.mark_stage("docs", n_docs=prev + n,
                           segment_size=segment_size, case_counts=merged)
-        _dbg("docs: committed + marked", t0)
 
     if defer_commit:
         return docs, finish, n
@@ -673,7 +661,6 @@ def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
         .partitionBy("term_bucket")
         .parquet(staging)
     )
-    _dbg("postings: blocks staged", t0)
 
     def finish():
         layout.commit_batch(staging, layout.postings, batch)
@@ -729,7 +716,6 @@ def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
         layout.append_lineage(spark, rows)
         if complete_after_batch:
             layout.mark_stage("postings", n_buckets=n_buckets)
-        _dbg("postings: committed + lineage + marked", t0)
 
     if defer_commit:
         return finish

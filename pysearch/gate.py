@@ -29,13 +29,13 @@ LOCAL_MAX_POSTINGS = 500_000  # below this candidate volume, the packed
 # score_arriving_batch reads this knob, the NRT mem side follows its
 # Searcher's local_max_postings like every other Searcher path.
 
-LOCAL_BATCH_FACTOR = 4  # the batched paths (search_ids_many, boolean
-# batch, the NRT hybrid's index side) may score a whole query log
-# driver-side when every plan's own candidate volume clears the
-# single-query gate AND the summed volume stays under
-# LOCAL_BATCH_FACTOR * the postings gate — the measured crossover where
-# single-threaded driver scoring overtakes the distributed batch scan's
-# fixed cost (see Searcher._use_local_batch).
+LOCAL_BATCH_FACTOR = 4  # a batch of plans (search_ids_many, the NRT
+# hybrid's index side; a single query is a batch of one) may score a whole
+# query log driver-side when every plan's own candidate volume clears the
+# postings gate AND the summed volume stays under LOCAL_BATCH_FACTOR * the
+# postings gate — the measured crossover where single-threaded driver
+# scoring overtakes the distributed batch scan's fixed cost (see
+# Searcher._use_local, the one scoring gate).
 
 LOCAL_MAX_VOCAB = 200_000  # term_stats rows under which the per-case
 # vocabulary (term -> df) is fetched ONCE per Searcher load (a bounded

@@ -214,7 +214,7 @@ SELECT doc_id, round(s, 4) AS score_r FROM sc ORDER BY s DESC, doc_id LIMIT 10
 """
 
 
-# (applicationId, sf_dir) -> source content fingerprint; see _engine_search
+# (applicationId, sf_dir) -> source content fingerprint; see _source_fp
 _ENGINE_FP_CACHE: dict = {}
 
 # (applicationId, index_dir, at_version) -> Searcher.  The Lucene
@@ -228,10 +228,20 @@ _ENGINE_FP_CACHE: dict = {}
 _SEARCHER_CACHE: dict = {}
 
 
+def _live_cache(cache: dict, spark) -> str:
+    """Drop ``cache``'s entries of other Spark applications (key[0] is the
+    applicationId), so a stopped session's Searchers — and the catalog
+    arrays they hold — are released; returns the live applicationId."""
+    app = spark.sparkContext.applicationId
+    for key in [key for key in cache if key[0] != app]:
+        del cache[key]
+    return app
+
+
 def _get_searcher(spark, index_dir: str, at_version=None):
     from pysearch.query import Searcher
 
-    key = (spark.sparkContext.applicationId, index_dir, at_version)
+    key = (_live_cache(_SEARCHER_CACHE, spark), index_dir, at_version)
     s = _SEARCHER_CACHE.get(key)
     if s is None:
         s = Searcher(spark, index_dir, at_version=at_version)
@@ -253,6 +263,17 @@ def _source_fingerprint(docs) -> str:
         ).alias("h"),
     ).collect()[0]
     return f"{fp_row['n']}:{fp_row['h']}"
+
+
+def _source_fp(spark, sf_dir, docs) -> str:
+    """``_source_fingerprint(docs)`` cached per (application, sf_dir): the
+    fingerprint scan is a full source read, so the engine-backed ops do not
+    re-scan the source table once per invocation, while a new SparkSession
+    (new app id) re-fingerprints and still detects regenerated data."""
+    key = (_live_cache(_ENGINE_FP_CACHE, spark), sf_dir)
+    if key not in _ENGINE_FP_CACHE:
+        _ENGINE_FP_CACHE[key] = _source_fingerprint(docs)
+    return _ENGINE_FP_CACHE[key]
 
 
 def _ensure_engine_index(spark, sf_dir):
@@ -286,16 +307,7 @@ def _ensure_engine_index(spark, sf_dir):
     # silently reused a stale index)
     from pysearch.lineage import IndexLayout
 
-    # the fingerprint scan is itself a full source read — cache it per
-    # (spark application, sf_dir) so the engine-backed ops queries don't
-    # re-scan the source table once per invocation (three redundant scans
-    # per bench/correctness run before r4).  A new SparkSession (new app id)
-    # re-fingerprints, so regenerated test data is still detected.
-    fp_key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _ENGINE_FP_CACHE.get(fp_key)
-    if fp is None:
-        fp = _source_fingerprint(docs)
-        _ENGINE_FP_CACHE[fp_key] = fp
+    fp = _source_fp(spark, sf_dir, docs)
     from pysearch.version import INDEX_FORMAT_VERSION
 
     layout = IndexLayout(index_dir)
@@ -349,6 +361,8 @@ def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from pysearch.query import catalog_take
+
     s = _get_searcher(spark, index_dir, at_version=at_version)
     s._check_fresh()  # the catalog below must match the searched load
     cat = s._catalog("0")
@@ -387,13 +401,9 @@ def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
                         offset=offset)
     if cat is not None:
         # engine ids -> source ids driver-side (O(hits) searchsorted over
-        # the cached map; catalog doc_ids are the per-case url rank, so
-        # sorting by doc_id is free of ties)
-        order = np.argsort(cat["doc_id"], kind="stable")
-        eng_sorted, src_sorted = cat["doc_id"][order], cat["src_id"][order]
-        pos = np.searchsorted(eng_sorted, hits["doc_id"].to_numpy(np.int64))
+        # the cached map)
         out = hits.assign(
-            doc_id=src_sorted[pos],
+            doc_id=catalog_take(cat, "src_id", hits["doc_id"]),
             score_r=hits["score"].round(4))[["doc_id", "score_r"]]
         return spark.createDataFrame(out,
                                      schema="doc_id long, score_r double")
@@ -1141,12 +1151,7 @@ def _ensure_nrt_base_index(spark, sf_dir):
     base, _arrivals = _nrt_split(docs)
     label = os.path.basename(sf_dir.rstrip("/"))
     index_dir = f"/tmp/pysearch_ops_index_{label}_nrtbase"
-    fp_key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _ENGINE_FP_CACHE.get(fp_key)
-    if fp is None:
-        fp = _source_fingerprint(docs)
-        _ENGINE_FP_CACHE[fp_key] = fp
-    want = f"{fp}|nrtbase%{_NRT_MOD}"
+    want = f"{_source_fp(spark, sf_dir, docs)}|nrtbase%{_NRT_MOD}"
     layout = IndexLayout(index_dir)
     m = layout.read_manifest()
     if (m.get("format_version") == INDEX_FORMAT_VERSION
@@ -1236,12 +1241,7 @@ def _ensure_tt_index(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     label = os.path.basename(sf_dir.rstrip("/"))
     index_dir = f"/tmp/pysearch_ops_index_{label}_tt"
-    fp_key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _ENGINE_FP_CACHE.get(fp_key)
-    if fp is None:
-        fp = _source_fingerprint(docs)
-        _ENGINE_FP_CACHE[fp_key] = fp
-    want = f"{fp}|tt-len%{_NRT_MOD}"
+    want = f"{_source_fp(spark, sf_dir, docs)}|tt-len%{_NRT_MOD}"
     layout = IndexLayout(index_dir)
     m = layout.read_manifest()
     if (m.get("format_version") == INDEX_FORMAT_VERSION

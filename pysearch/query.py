@@ -4,11 +4,13 @@ Query lifecycle (Spark-first redesign of the reference's
 /root/reference/internal/doclib/search_pdfs.go:114-277 path, SURVEY.md §3.2):
 
   query string -> analyze() (same chain as indexing) -> score.QueryPlan
+    -> Searcher._search, the one search path (a single query is a batch of
+       one): the prune rule and the local gate (_use_local)
     -> Searcher._execute, the one executor for every mode:
        read postings with (case_id, term_bucket, term) filters
        [parquet partition pruning on term_bucket + row-group pruning on term]
-    -> under the volume gates: one driver-local fetch, scored in-process
-       by the same kernel; else
+    -> under the local gate: one driver-local fetch, scored in-process by
+       the same kernel; else
     -> optional lossless block-max pruning (WAND-style), bounds computed
        on the driver from block metadata: phase 1 scores the
        highest-upper-bound segments to establish the running kth score θ;
@@ -84,6 +86,19 @@ MAX_PENDING_TOMBSTONES = 10_000_000  # pending (uncompacted) deletes a
 
 
 _HITS_SCHEMA = "qid string, doc_id long, score double"
+
+
+def catalog_take(cat: dict, col: str, doc_ids) -> np.ndarray:
+    """``cat[col]`` at each of ``doc_ids`` (ids present in the catalog) for
+    a Searcher._catalog entry: a searchsorted over the catalog's doc_id
+    order, which is sorted once and memoized in the same entry (catalog
+    doc_ids are unique per case, so the order has no ties)."""
+    if "doc_order" not in cat:
+        order = np.argsort(cat["doc_id"], kind="stable")
+        cat["doc_order"] = (order, cat["doc_id"][order])
+    order, ids_sorted = cat["doc_order"]
+    return cat[col][order[np.searchsorted(
+        ids_sorted, np.asarray(doc_ids, dtype=np.int64))]]
 
 
 def _empty_hits() -> pd.DataFrame:
@@ -292,8 +307,16 @@ class Searcher:
                 f"on_stale must be refresh|raise|ignore, got {on_stale!r}"
             )
         self.on_stale = "ignore" if at_version is not None else on_stale
-        if max_pending_tombstones is not None:
-            self.max_pending_tombstones = int(max_pending_tombstones)
+        self.max_pending_tombstones = (
+            MAX_PENDING_TOMBSTONES if max_pending_tombstones is None
+            else int(max_pending_tombstones))
+        self.prune_min_postings = PRUNE_MIN_POSTINGS  # 0 forces pruning
+        # 0 turns every driver-local path off (see pysearch.gate)
+        self.local_max_postings = local_max_postings()
+        # diagnostics: when True, _prune_blocks records candidate-vs-scored
+        # block counts (extra metadata jobs; test-only)
+        self.count_scored_blocks = False
+        self.last_block_counts: Optional[dict] = None
         self._load()
 
     def _index_sig(self):
@@ -338,16 +361,6 @@ class Searcher:
         # per-case catalog columns under the LOCAL_MAX_CATALOG gate (None
         # above it); dropped on every (re)load like the vocab cache
         self._catalog_cache: Dict[str, Optional[dict]] = {}
-        if not hasattr(self, "prune_min_postings"):
-            self.prune_min_postings = PRUNE_MIN_POSTINGS  # tests: 0 forces
-            # 0 turns every driver-local path off (see pysearch.gate)
-            self.local_max_postings = local_max_postings()
-            # diagnostics: when True, _prune_blocks records candidate-vs-
-            # scored block counts (extra metadata jobs; test-only)
-            self.count_scored_blocks = False
-            self.last_block_counts: Optional[dict] = None
-            self.max_pending_tombstones = getattr(
-                self, "max_pending_tombstones", MAX_PENDING_TOMBSTONES)
         from pyspark.sql import functions as F
 
         def _norm(df):
@@ -579,12 +592,14 @@ class Searcher:
         )
 
     # ------------------------------------------------------------------
-    # query plans and the one executor.
+    # query plans, the one search path and the one executor.
     #
-    # Every query mode builds score.QueryPlan(s) and runs them through
-    # _execute, which feeds ONE per-segment kernel
-    # (score.score_segment_blocks) from one of two fetchers:
-    # - driver-local (_collect_blocks): below the local gates the packed
+    # Every query entry builds score.QueryPlan(s) — a single query is the
+    # batch {"q": plan} — and runs them through _search (the one prune rule
+    # and the one local gate, _use_local) into _execute, which feeds ONE
+    # per-segment kernel (score.score_segment_blocks) from one of two
+    # fetchers:
+    # - driver-local (_collect_blocks): below the local gate the packed
     #   blocks are fetched with one driver-direct arrow read (no Spark
     #   job) and scored in-process — a distributed scoring job's fixed
     #   latency (scan task scheduling, a segment_id exchange,
@@ -614,82 +629,57 @@ class Searcher:
         if mode == "near" and (window is None or window < 0):
             raise ValueError("mode='near' needs window >= 0")
 
-    def _plan(self, mode: str, terms: List[str], dfs: Dict[str, int],
-              n_docs: int, window: Optional[int] = None,
-              raw_boosts: Optional[Dict[str, float]] = None,
-              boosts: Optional[Dict[str, float]] = None
-              ) -> Optional[sc.QueryPlan]:
-        """``score.build_plan`` with this Searcher's resolved boosts."""
-        return sc.build_plan(mode, terms, dfs, n_docs, window,
-                             self._boost_mult(raw_boosts, boosts))
-
-    def _use_local(self, vol: int, prune: bool = False,
-                   allowed_df=None) -> bool:
-        """True when the driver-local scoring path applies: candidate
-        volume under the gate, no distributed filter context, and the
-        block-max prune not in play (tests force pruning with
-        prune_min_postings=0; the prune gate wins so pruning paths stay
-        exercised)."""
-        return (allowed_df is None
-                and 0 < self.local_max_postings
-                and vol <= self.local_max_postings
-                and not (prune and vol > self.prune_min_postings))
-
-    def _use_local_batch(self, vols) -> bool:
-        """Batch variant of _use_local (``vols``: each plan's own
-        candidate-postings volume).  The shared decode amortizes the scan
-        across plans, so the batch may run driver-side when (a) EVERY
-        plan clears the single-query gate — the per-query loop the caller
+    def _use_local(self, vols, allowed=None) -> bool:
+        """The one driver-local gate (``vols``: each plan's own
+        candidate-postings volume).  The batch runs driver-side when EVERY
+        plan clears the postings gate — the per-query loop the caller
         could have written would already run each of them driver-side,
-        and the batch does strictly less decode work than that loop —
-        and (b) the total driver work (Σ per-plan volumes, an upper bound
-        of shared decode + per-plan scoring) stays under
-        LOCAL_BATCH_FACTOR × the gate, the measured crossover where
-        single-threaded driver scoring overtakes the distributed batch
-        scan's fixed cost (0.81 s local vs 1.19 s distributed at
-        Σ=1.68M postings / 20 plans on the bench query log, results
-        asserted identical).  Above either bound the distributed
-        shared-decode scan runs — the scale shape for big logs."""
-        if not vols or self.local_max_postings <= 0:
-            return False
-        return (max(vols) <= self.local_max_postings
+        and the shared decode does strictly less work than that loop — and
+        the total driver work (Σ per-plan volumes, an upper bound of shared
+        decode + per-plan scoring) stays under LOCAL_BATCH_FACTOR × the
+        gate, the measured crossover where single-threaded driver scoring
+        overtakes the distributed batch scan's fixed cost (0.81 s local vs
+        1.19 s distributed at Σ=1.68M postings / 20 plans on the bench
+        query log, results asserted identical).  A distributed filter
+        context (``allowed``) never runs driver-side.  For one plan the
+        factor bound is implied: the plain single-query gate."""
+        return (allowed is None and 0 < self.local_max_postings
+                and max(vols) <= self.local_max_postings
                 and sum(vols) <= LOCAL_BATCH_FACTOR * self.local_max_postings)
 
-    def _search_one(self, case_id: str, plan: sc.QueryPlan,
-                    dfs: Dict[str, int], avgdl: float, k: int,
-                    offset: int = 0, prune: bool = False,
-                    filter: Optional[str] = None,
-                    filter_docs=None) -> pd.DataFrame:
-        """One plan through the single-query gates and the executor ->
-        (doc_id, score) ranks [offset, offset + k).  Only any/all plans
-        prune: phrase/near and must/must_not candidates are already the
-        (small) conjunctive intersection, and a lossless θ under
-        not-term gating would need not-aware block metadata.  Pruning
-        pays for itself only when there is real volume to skip, so it is
-        gated on total candidate postings (df is already known)."""
-        allowed, allow = self._filter_context(case_id, filter, filter_docs)
-        vol = sum(dfs[t] for t in plan.scan_terms)
-        prune = prune and plan.plain
-        local = self._use_local(vol, prune=prune, allowed_df=allowed)
-        hits = self._execute(
-            case_id, {"q": plan}, avgdl, k + offset, local,
-            prune=prune and not local and vol > self.prune_min_postings,
-            allowed=allowed, allow=allow)
-        return (hits.drop(columns="qid").iloc[offset:offset + k]
-                .reset_index(drop=True))
+    def _search(self, case_id: str, plans: Dict[str, sc.QueryPlan],
+                dfs: Dict[str, int], avgdl: float, k: Optional[int],
+                prune: bool, offset: int = 0, filter: Optional[str] = None,
+                filter_docs=None):
+        """Every query entry's plans (a single query is the batch
+        ``{"q": plan}``) through the prune rule, the local gate and the
+        executor -> (qid, doc_id, score), each plan's ranks [offset,
+        offset + k); ``k=None`` returns the one plan's total-hits count.
 
-    def _search_many(self, case_id: str, plans: Dict[str, sc.QueryPlan],
-                     dfs: Dict[str, int], avgdl: float, k: int,
-                     prune: bool) -> pd.DataFrame:
-        """A query log's plans through the batched local gate
-        (_use_local_batch) and the executor -> (qid, doc_id, score); the
-        engine of ``search_ids_many`` and the NRT hybrid's index side
-        (streaming.search_with_arrivals, which injects union-corpus
-        weights/avgdl).  ``prune``: the caller's volume-gated decision."""
-        vols = [sum(dfs[t] for t in p.scan_terms) for p in plans.values()]
-        return self._execute(
-            case_id, plans, avgdl, k,
-            local=not prune and self._use_local_batch(vols), prune=prune)
+        The prune rule: pruning was asked for, every plan is any/all
+        (phrase/near and boolean candidates are already the small
+        conjunctive intersection, and a lossless θ under not-term gating
+        would need not-aware block metadata), and the candidate volume —
+        summed df over the plans' distinct scan terms — exceeds
+        ``prune_min_postings`` per plan: pruning pays for itself only when
+        there is real volume to skip.  A pruned batch never runs
+        driver-side (tests force pruning with prune_min_postings=0, so the
+        pruning paths stay exercised under the local gate)."""
+        allowed, allow = self._filter_context(case_id, filter, filter_docs)
+        scan = {t for p in plans.values() for t in p.scan_terms}
+        prune = (prune and all(p.plain for p in plans.values())
+                 and sum(dfs[t] for t in scan)
+                 > self.prune_min_postings * len(plans))
+        local = not prune and self._use_local(
+            [sum(dfs[t] for t in p.scan_terms) for p in plans.values()],
+            allowed)
+        hits = self._execute(case_id, plans, avgdl,
+                             None if k is None else k + offset, local,
+                             prune=prune, allowed=allowed, allow=allow)
+        if k is None or not offset:
+            return hits
+        rank = hits.groupby("qid", sort=False).cumcount()
+        return hits[rank >= offset].reset_index(drop=True)
 
     def _execute(self, case_id: str, plans: Dict[str, sc.QueryPlan],
                  avgdl: float, k: Optional[int], local: bool,
@@ -989,19 +979,15 @@ class Searcher:
                                         "boolean", "fuzzy"))
         if k is None or k < 0:
             k = DEFAULT_MAX_RESULTS
-        query, raw_boosts = parse_boosts(query)
-        terms = self._analyze(query)
         if case_id not in self._corpus:
             return pd.DataFrame(columns=["doc_id", "score"])
-        n_docs, avgdl, _sum_dl = self._corpus[case_id]
-        dfs = self._term_dfs(case_id, terms)
-        plan = self._plan(mode, terms, dfs, n_docs, window=window,
-                          raw_boosts=raw_boosts, boosts=boosts)
-        if plan is None:
+        plans, dfs = self._text_plans({"q": query}, case_id, mode, window,
+                                      boosts)
+        if not plans:
             return pd.DataFrame(columns=["doc_id", "score"])
-        return self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
-                                prune=prune, filter=filter,
-                                filter_docs=filter_docs)
+        return self._search(case_id, plans, dfs, self._corpus[case_id][1],
+                            k, prune, offset=offset, filter=filter,
+                            filter_docs=filter_docs).drop(columns="qid")
 
     def count(self, query: str, case_id: str = "0", mode: str = "any",
               window: Optional[int] = None,
@@ -1023,25 +1009,19 @@ class Searcher:
         # syntax must still PARSE so 'relam^2 fast' counts the same match
         # set search_ids ranks (an unstripped boost would tokenize into a
         # bogus extra term)
-        query, _raw_boosts = parse_boosts(query)
-        terms = self._analyze(query)
-        if not terms or case_id not in self._corpus:
+        if case_id not in self._corpus:
             return 0
-        n_docs, avgdl, _sum_dl = self._corpus[case_id]
-        dfs = self._term_dfs(case_id, terms)
-        plan = self._plan(mode, terms, dfs, n_docs, window=window)
-        if plan is None:
+        plans, dfs = self._text_plans({"q": query}, case_id, mode, window)
+        if not plans:
             return 0
-        excl = self._tombstones.get(case_id)
-        allowed, allow = self._filter_context(case_id, filter, filter_docs)
-        if (len(plan.weights) == 1 and plan.plain and excl is None
-                and allowed is None and allow is None):
+        plan = plans["q"]
+        if (len(plan.weights) == 1 and plan.plain and filter is None
+                and filter_docs is None and case_id not in self._tombstones):
             (term,) = plan.weights
             return int(dfs[term])  # metadata-only: count == df
-        vol = sum(dfs[t] for t in plan.scan_terms)
-        return self._execute(case_id, {"q": plan}, avgdl, None,
-                             local=self._use_local(vol, allowed_df=allowed),
-                             allowed=allowed, allow=allow)
+        return self._search(case_id, plans, dfs, self._corpus[case_id][1],
+                            None, False, filter=filter,
+                            filter_docs=filter_docs)
 
     def search_ids_boolean(self, must: str = "", should: str = "",
                            must_not: str = "",
@@ -1088,48 +1068,77 @@ class Searcher:
             raise ValueError(
                 "boost on a MUST_NOT clause is meaningless "
                 "(prohibited terms gate, they never score)")
-        must_terms, should_terms, not_terms, raw_boosts = \
-            self._boolean_clauses(must, should, must_not)
-        empty = pd.DataFrame(columns=["doc_id", "score"])
-        if case_id not in self._corpus or not (must_terms or should_terms):
-            return empty
-        n_docs, avgdl, _sum_dl = self._corpus[case_id]
-        dfs = self._term_dfs(case_id, must_terms + should_terms + not_terms)
-        plan = self._boolean_plan(must_terms, should_terms, not_terms,
-                                  raw_boosts, dfs, n_docs, boosts)
-        if plan is None:
-            return empty
-        return self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
-                                filter=filter, filter_docs=filter_docs)
+        if case_id not in self._corpus:
+            return pd.DataFrame(columns=["doc_id", "score"])
+        plans, dfs = self._boolean_plans({"q": (must, should, must_not)},
+                                         case_id, boosts)
+        if not plans:
+            return pd.DataFrame(columns=["doc_id", "score"])
+        return self._search(case_id, plans, dfs, self._corpus[case_id][1],
+                            k, False, offset=offset, filter=filter,
+                            filter_docs=filter_docs).drop(columns="qid")
 
-    def _boolean_clauses(self, must: str, should: str, must_not: str):
-        """Analyze boolean clause strings -> (must_terms, should_terms,
-        sorted distinct not_terms, raw_boosts); must/should ``^`` boosts
-        compose multiplicatively."""
-        must_q, raw_boosts = parse_boosts(must)
-        should_q, should_boosts = parse_boosts(should)
-        for t, b in should_boosts.items():
-            raw_boosts[t] = raw_boosts.get(t, 1.0) * b
-        return (self._analyze(must_q), self._analyze(should_q),
-                sorted(set(self._analyze(must_not))), raw_boosts)
+    def _text_plans(self, queries: Dict[str, str], case_id: str, mode: str,
+                    window: Optional[int] = None,
+                    boosts: Optional[Dict[str, float]] = None):
+        """any/all/phrase/near plans from qid -> query string (``^`` boosts
+        parsed per query, ``boosts`` applied to all) with ONE batched df
+        probe over the union of the analyzed terms; a query whose plan is
+        None yields no rows.  Returns (plans, dfs)."""
+        analyzed = {}
+        for qid, q in queries.items():
+            q, raw_boosts = parse_boosts(q)
+            analyzed[qid] = (self._analyze(q), raw_boosts)
+        dfs = self._term_dfs(case_id, sorted(
+            {t for terms, _rb in analyzed.values() for t in terms}))
+        n_docs = self._corpus[case_id][0]
+        plans = {}
+        for qid, (terms, raw_boosts) in analyzed.items():
+            plan = sc.build_plan(mode, terms, dfs, n_docs, window,
+                                 self._boost_mult(raw_boosts, boosts))
+            if plan is not None:
+                plans[qid] = plan
+        return plans, dfs
 
-    def _boolean_plan(self, must_terms, should_terms, not_terms, raw_boosts,
-                      dfs: Dict[str, int], n_docs: int,
-                      boosts: Optional[Dict[str, float]] = None
-                      ) -> Optional[sc.QueryPlan]:
-        """Boolean QueryPlan, or None when nothing can match: a must term
-        absent from the corpus, or no live positive (must/should) clause.
-        Absent should terms drop; absent must_not terms are no-ops."""
-        pos = must_terms + should_terms
-        must_live = sorted({t for t in must_terms if t in dfs})
-        live = sorted({t for t in pos if t in dfs})
-        if not live or len(must_live) < len(set(must_terms)):
-            return None
-        mult = self._boost_mult(raw_boosts, boosts)
-        weights = {t: sc.idf(n_docs, dfs[t]) * mult.get(t, 1.0) for t in live}
-        return sc.QueryPlan(weights=weights, qtf=dict(Counter(pos)),
-                            must=tuple(must_live),
-                            must_not=tuple(t for t in not_terms if t in dfs))
+    def _boolean_plans(self, clauses: Dict[str, Tuple[str, str, str]],
+                       case_id: str,
+                       boosts: Optional[Dict[str, float]] = None):
+        """Boolean plans from qid -> (must, should, must_not) clause
+        strings (must/should ``^`` boosts compose multiplicatively) with
+        ONE batched df probe over the union of every clause's terms.  A
+        query matches nothing — no plan, no rows — when a must term is
+        absent from the corpus or no positive (must/should) clause is
+        live; absent should terms drop, absent must_not terms are no-ops.
+        Returns (plans, dfs)."""
+        analyzed = {}
+        for qid, (must, should, must_not) in clauses.items():
+            must_q, raw_boosts = parse_boosts(must)
+            should_q, should_boosts = parse_boosts(should)
+            for t, b in should_boosts.items():
+                raw_boosts[t] = raw_boosts.get(t, 1.0) * b
+            must_t, should_t = self._analyze(must_q), self._analyze(should_q)
+            if must_t or should_t:  # a pure negation probes nothing
+                analyzed[qid] = (must_t, should_t,
+                                 sorted(set(self._analyze(must_not))),
+                                 raw_boosts)
+        dfs = self._term_dfs(case_id, sorted(
+            {t for must_t, should_t, not_t, _rb in analyzed.values()
+             for t in must_t + should_t + not_t}))
+        n_docs = self._corpus[case_id][0]
+        plans = {}
+        for qid, (must_t, should_t, not_t, raw_boosts) in analyzed.items():
+            pos = must_t + should_t
+            must_live = sorted({t for t in must_t if t in dfs})
+            live = sorted({t for t in pos if t in dfs})
+            if not live or len(must_live) < len(set(must_t)):
+                continue
+            mult = self._boost_mult(raw_boosts, boosts)
+            plans[qid] = sc.QueryPlan(
+                weights={t: sc.idf(n_docs, dfs[t]) * mult.get(t, 1.0)
+                         for t in live},
+                qtf=dict(Counter(pos)), must=tuple(must_live),
+                must_not=tuple(t for t in not_t if t in dfs))
+        return plans, dfs
 
     def expand_fuzzy(self, case_id: str,
                      fuzzy: "Dict[str, Tuple[int, float]]",
@@ -1379,9 +1388,9 @@ class Searcher:
         idfs = {e: sc.idf(n_docs, df) * w for e, (w, df) in expanded.items()}
         plan = sc.QueryPlan(weights=idfs, qtf={e: 1 for e in expanded})
         dfs = {e: df for e, (_w, df) in expanded.items()}
-        pdf = self._search_one(case_id, plan, dfs, avgdl, k, offset=offset,
-                               prune=prune, filter=filter,
-                               filter_docs=filter_docs)
+        pdf = self._search(case_id, {"q": plan}, dfs, avgdl, k, prune,
+                           offset=offset, filter=filter,
+                           filter_docs=filter_docs).drop(columns="qid")
         return (pdf, expanded) if return_expansion else pdf
 
     def suggest(self, terms, case_id: str = "0", max_edits: int = 2,
@@ -1519,7 +1528,8 @@ class Searcher:
         plan = sc.QueryPlan(weights={t: sc.idf(n_docs, dfs_all[t])
                                      for t in sel},
                             qtf={t: 1 for t in sel})
-        pdf = self._search_one(case_id, plan, dfs_all, avgdl, k, prune=prune)
+        pdf = self._search(case_id, {"q": plan}, dfs_all, avgdl, k,
+                           prune).drop(columns="qid")
         return (pdf, sel) if return_terms else pdf
 
     def search_ids_many(self, queries: Dict[str, str],
@@ -1572,57 +1582,16 @@ class Searcher:
         empty = pd.DataFrame(columns=["qid", "doc_id", "score"])
         if case_id not in self._corpus or not queries:
             return empty
-        n_docs, avgdl, _sum_dl = self._corpus[case_id]
-
         if mode == "boolean":
-            plans, dfs = self._boolean_plans(queries, case_id, n_docs)
-            do_prune = False
+            plans, dfs = self._boolean_plans(
+                {qid: tuple(" ".join(c) for c in parse_boolean(q))
+                 for qid, q in queries.items()}, case_id)
         else:
-            analyzed = {}
-            for qid, q in queries.items():
-                q, raw_boosts = parse_boosts(q)
-                analyzed[qid] = (self._analyze(q), raw_boosts)
-            union_terms = sorted({t for terms, _rb in analyzed.values()
-                                  for t in terms})
-            dfs = self._term_dfs(case_id, union_terms)  # one stats probe
-            plans = {}
-            for qid, (terms, raw_boosts) in analyzed.items():
-                plan = self._plan(mode, terms, dfs, n_docs, window=window,
-                                  raw_boosts=raw_boosts)
-                if plan is not None:
-                    plans[qid] = plan
-            # volume is summed over the SURVIVING plans' terms — a dropped
-            # query's terms are never scanned, so they must not tip the gate
-            vol = sum(dfs[t] for t in {t for p in plans.values()
-                                       for t in p.weights})
-            do_prune = (prune and mode in ("any", "all")
-                        and vol > self.prune_min_postings * len(plans))
+            plans, dfs = self._text_plans(queries, case_id, mode, window)
         if not plans:
             return empty
-        return self._search_many(case_id, plans, dfs, avgdl, k, do_prune)
-
-    def _boolean_plans(self, queries: Dict[str, str], case_id: str,
-                       n_docs: int):
-        """Batched boolean plans from Lucene ``+must -must_not should``
-        query strings — ONE batched df probe over the union of every
-        clause's terms; clause semantics are search_ids_boolean's (a query
-        whose plan is None yields no rows).  Returns (plans, dfs)."""
-        clauses = {}
-        for qid, q in queries.items():
-            # (parse_boolean already rejected any '-term^boost' token)
-            must_raw, should_raw, not_raw = parse_boolean(q)
-            clauses[qid] = self._boolean_clauses(
-                " ".join(must_raw), " ".join(should_raw), " ".join(not_raw))
-        union = {t for must_t, should_t, not_t, _rb in clauses.values()
-                 for t in must_t + should_t + not_t}
-        dfs = self._term_dfs(case_id, sorted(union))
-        plans = {}
-        for qid, (must_t, should_t, not_t, rb) in clauses.items():
-            plan = self._boolean_plan(must_t, should_t, not_t, rb, dfs,
-                                      n_docs)
-            if plan is not None:
-                plans[qid] = plan
-        return plans, dfs
+        return self._search(case_id, plans, dfs, self._corpus[case_id][1],
+                            k, prune)
 
     def _score_blocks(self, blocks_df, plans: Dict[str, sc.QueryPlan],
                       avgdl: float, k: Optional[int],
@@ -1635,18 +1604,10 @@ class Searcher:
         batch of one, a per-qid window for a larger batch, so only
         O(|plans| * k) rows reach the driver.  Returns pandas (qid, doc_id,
         score) sorted like _execute; ``k=None`` sums per-segment match
-        counts (doc-range partitioning makes them disjoint) into an int.
-
-        One-term any/all plans with no filter take a shuffle-free path
-        (_score_blocks_single_term)."""
+        counts (doc-range partitioning makes them disjoint) into an int."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        if k is not None and allowed_df is None and len(plans) == 1:
-            (qid, plan), = plans.items()
-            if plan.plain and len(plan.weights) == 1:
-                return self._score_blocks_single_term(blocks_df, qid, plan,
-                                                      avgdl, k, exclude)
         positions = any(p.terms for p in plans.values())
 
         def score_one(key, pdf: pd.DataFrame,
@@ -1682,51 +1643,6 @@ class Searcher:
             sdf = (sdf.withColumn("_rn", F.row_number().over(w))
                    .filter(F.col("_rn") <= k).drop("_rn"))
         return _sort_hits(sdf.toPandas())
-
-    def _score_blocks_single_term(self, blocks_df, qid: str,
-                                  plan: sc.QueryPlan, avgdl: float, k: int,
-                                  exclude: Optional[np.ndarray] = None
-                                  ) -> pd.DataFrame:
-        """Shuffle-free one-term scoring: with no cross-term sum, every
-        posting's score is block-local, so blocks are scored in place with
-        mapInPandas and only per-batch top-ks leave the scan."""
-        from pyspark.sql import functions as F
-
-        (term, idf_val), = plan.weights.items()
-        w = plan.qtf.get(term, 1)
-
-        def score_batches(batches):
-            from pysearch import codec
-            from pysearch import score as ssc
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                _verify_blocks(pdf, False)
-                # one vectorized decode for the whole Arrow batch of blocks
-                ids, tfs, dls = codec.unpack_blocks_batch(
-                    pdf["n"].to_numpy(), list(pdf["doc_ids_bin"]),
-                    list(pdf["tfs_bin"]), list(pdf["dls_bin"]),
-                )
-                if exclude is not None and exclude.size:
-                    keep = np.isin(ids, exclude, invert=True)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if ids.size == 0:
-                    continue
-                scores = ssc.bm25(tfs, dls, idf_val, avgdl) * w
-                o = np.lexsort((ids, -scores))[:k]
-                yield pd.DataFrame({"doc_id": ids[o], "score": scores[o]})
-
-        pdf = (
-            blocks_df.select("n", "doc_ids_bin", "tfs_bin", "dls_bin",
-                             "crc32")
-            .mapInPandas(score_batches, schema="doc_id long, score double")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .toPandas()
-        )
-        pdf.insert(0, "qid", qid)
-        return pdf
 
     def _bound_table(self, case_id: str, blocks_df, terms: List[str]
                      ) -> pd.DataFrame:
@@ -1930,7 +1846,7 @@ class Searcher:
 
         cols = ["term", "n", "doc_ids_bin", "tfs_bin", "dls_bin", "crc32",
                 "pos_bin", "pos_crc32"]
-        if self._use_local(sum(self._term_dfs(case_id, terms).values())):
+        if self._use_local([sum(self._term_dfs(case_id, terms).values())]):
             pdf = self._read_blocks_arrow(
                 case_id, terms, cols + ["segment_id", "min_doc_id",
                                         "max_doc_id"])

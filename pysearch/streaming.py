@@ -420,6 +420,27 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
     return spark.createDataFrame(hits, schema=_HITS_SCHEMA)
 
 
+def _index_urls(searcher, case_id: str, doc_ids: list) -> dict:
+    """doc_id -> url for index hits: one lookup in the Searcher's cached
+    catalog under its LOCAL_MAX_CATALOG gate (no Spark job), else one
+    docs-table collect for every hit across the whole query log."""
+    from pyspark.sql import functions as F
+
+    from pysearch.query import catalog_take
+
+    if not doc_ids:
+        return {}
+    cat = searcher._catalog(case_id)
+    if cat is not None:
+        return dict(zip(doc_ids, catalog_take(cat, "url", doc_ids)))
+    return {
+        int(r["doc_id"]): r["url"]
+        for r in searcher.docs.filter(
+            (F.col("case_id") == case_id) & F.col("doc_id").isin(doc_ids)
+        ).select("doc_id", "url").collect()
+    }
+
+
 def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
                          case_id: str = "0", mode: str = "any",
                          prune: bool = True) -> pd.DataFrame:
@@ -518,15 +539,16 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
 
     # ---- index side, with the UNION stats injected (idfs/avgdl/require).
     # BOTH routes score the whole query log's index side in ONE postings
-    # scan via the batched engine (the search_ids_many amortization —
-    # shared decode, O(k·|queries|) rows to the driver).  prune=True
-    # additionally runs the lossless block-max prune (Searcher._prune_blocks)
-    # when candidate volume clears the gate;
-    # prune=False keeps the exhaustive one-pass scan.  Either way results
-    # are identical to per-query scoring (pruning is lossless; pinned by
-    # the NRT bit-identity tests).  θ_q comes from index-side candidates
-    # only — a lower bound of the index-side kth score, so pruning the
-    # index list stays lossless regardless of the mem-side merge.
+    # scan via the batched engine (Searcher._search, the search_ids_many
+    # amortization — shared decode, O(k·|queries|) rows to the driver),
+    # under the engine's one prune rule and local gate, computed from the
+    # index-side dfs.  prune=True may add the lossless block-max prune
+    # (Searcher._prune_blocks); prune=False keeps the exhaustive one-pass
+    # scan.  Either way results are identical to per-query scoring
+    # (pruning is lossless; pinned by the NRT bit-identity tests).  θ_q
+    # comes from index-side candidates only — a lower bound of the
+    # index-side kth score, so pruning the index list stays lossless
+    # regardless of the mem-side merge.
     idx_dfs = {t: dfs[t] for t in union_terms if dfs_idx.get(t, 0) > 0}
     # no index doc can contain a term the index lacks
     idx_plans = {qid: sc.build_plan(mode, analyzed[qid], idx_dfs, n_docs)
@@ -534,28 +556,12 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     idx_plans = {qid: p for qid, p in idx_plans.items() if p is not None}
     idx_hits: dict = {}
     if idx_plans:
-        vol_idx = sum(dfs_idx.get(t, 0) for t in union_terms)
-        do_prune = (
-            prune and mode in ("any", "all")
-            and vol_idx > searcher.prune_min_postings * len(idx_plans)
-        )
-        many = searcher._search_many(case_id, idx_plans, dfs_idx, avgdl, k,
-                                     do_prune)
+        many = searcher._search(case_id, idx_plans, dfs_idx, avgdl, k, prune)
         for r in many.itertuples(index=False):
             idx_hits.setdefault(r.qid, []).append(
                 (int(r.doc_id), float(r.score)))
-
-    # one catalog lookup for every index hit across the whole query log
-    url_of = {}
-    all_ids = sorted({i for hits in idx_hits.values() for i, _ in hits})
-    if all_ids:
-        url_of = {
-            int(r["doc_id"]): r["url"]
-            for r in searcher.docs.filter(
-                (F.col("case_id") == case_id)
-                & F.col("doc_id").isin(all_ids)
-            ).select("doc_id", "url").collect()
-        }
+    url_of = _index_urls(searcher, case_id, sorted(
+        {i for hits in idx_hits.values() for i, _ in hits}))
 
     # ---- merge: equal scores order index-before-mem (post-append ids put
     # arrivals last), index by doc_id asc, arrivals by url asc

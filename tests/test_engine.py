@@ -1048,6 +1048,38 @@ def test_pruned_query_runs_four_jobs(spark, skew_ix):
         "prune-off")
     assert pruned.equals(unpruned)
     assert (n_on, n_off) == (4, 2)
+    # a one-term plan takes the same grouped scorer: the same job counts
+    one_on = _jobs(spark, lambda: s.search_ids("hotword", k=10,
+                                                case_id="0"), "one-on")[1]
+    one_off = _jobs(spark, lambda: s.search_ids("hotword", k=10, case_id="0",
+                                                 prune=False), "one-off")[1]
+    assert (one_on, one_off) == (4, 2)
+
+
+@pytest.mark.parametrize("mode", ["any", "all"])
+def test_one_term_query_on_the_common_path(spark, skew_ix, mode):
+    """A one-term any/all plan has no path of its own: forced distributed
+    and forced pruned it equals the driver-local answer and the batch of
+    one through search_ids_many, on page 1 and page 2."""
+    import pandas as pd
+
+    local = Searcher(spark, skew_ix)
+    dist = Searcher(spark, skew_ix)
+    dist.local_max_postings = 0
+    pruned = Searcher(spark, skew_ix)
+    pruned.prune_min_postings = 0
+    for offset in (0, 5):
+        want = local.search_ids("hotword", k=10, case_id="0", mode=mode,
+                                offset=offset)
+        assert len(want) == 10
+        for s in (local, dist, pruned):
+            pd.testing.assert_frame_equal(
+                s.search_ids("hotword", k=10, case_id="0", mode=mode,
+                             offset=offset), want)
+            if offset == 0:
+                many = s.search_ids_many({"q": "hotword"}, k=10,
+                                         case_id="0", mode=mode)
+                pd.testing.assert_frame_equal(many.drop(columns="qid"), want)
 
 
 def test_prune_bound_read_gate_both_sides(spark, skew_ix, monkeypatch):

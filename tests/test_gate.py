@@ -37,6 +37,17 @@ def test_only_gate_module_reads_local_env_knobs():
     assert readers == []
 
 
+def test_only_gate_and_session_read_pysearch_env():
+    """gate.py (the size policy) and session.py (deployment settings) are
+    the only modules that read a PYSEARCH_* environment variable."""
+    env_name = re.compile(r"^PYSEARCH_\w+$")
+    readers = sorted(
+        {name for name, tree in _modules() for node in ast.walk(tree)
+         if isinstance(node, ast.Constant) and isinstance(node.value, str)
+         and env_name.match(node.value)} - {"session.py"})
+    assert readers == []
+
+
 def test_no_module_assigns_a_gate_constant():
     from pysearch import gate
 
@@ -86,13 +97,31 @@ def test_zero_knob_turns_every_local_path_off(spark, small_index,
     assert s.local_max_postings == 0
     assert s._local_vocab("7") is None
     assert s._catalog("7") is None
-    assert s._use_local(1) is False
-    assert s._use_local_batch([1, 1]) is False
+    assert s._use_local([1]) is False
+    assert s._use_local([1, 1]) is False
     monkeypatch.delenv("PYSEARCH_LOCAL_MAX_POSTINGS")
     on = Searcher(spark, small_index)
     assert on._local_vocab("7") is not None
     assert on._catalog("7") is not None
-    assert on._use_local(1) and on._use_local_batch([1, 1])
+    assert on._use_local([1]) and on._use_local([1, 1])
+
+
+def test_ops_caches_drop_stopped_sessions(spark, monkeypatch):
+    """The ops' Searcher and source-fingerprint caches keep only the live
+    Spark application's entries, so a stopped session's Searchers and
+    their catalog arrays are released."""
+    from pysearch import ops
+
+    live = spark.sparkContext.applicationId
+    cached = object()
+    monkeypatch.setattr(ops, "_SEARCHER_CACHE", {
+        ("stale-app", "/ix", None): object(), (live, "/ix", None): cached})
+    assert ops._get_searcher(spark, "/ix") is cached
+    assert list(ops._SEARCHER_CACHE) == [(live, "/ix", None)]
+    monkeypatch.setattr(ops, "_ENGINE_FP_CACHE", {
+        ("stale-app", "/sf"): "1:2", (live, "/sf"): "3:4"})
+    assert ops._source_fp(spark, "/sf", None) == "3:4"
+    assert list(ops._ENGINE_FP_CACHE) == [(live, "/sf")]
 
 
 @pytest.mark.parametrize("root", ["s3a://bucket/ix", "hdfs://nn:8020/ix",

@@ -186,7 +186,7 @@ def test_driver_side_filter_matches_dataframe_filter(two_paths):
 
 
 def test_batched_local_gate_both_sides(spark, pos_index):
-    """The batched local gate (_use_local_batch: every plan under the
+    """The batched local gate (_use_local: every plan under the
     single-query gate AND Σ volumes under factor × gate) must be
     bit-identical to the distributed shared-decode scan on both sides,
     including boolean batches; factor=0 disables the batched local path."""
@@ -208,9 +208,9 @@ def test_batched_local_gate_both_sides(spark, pos_index):
     s_tiny = Searcher(spark, pos_index)
     s_tiny.local_max_postings = 1
     vols = [10, 1]
-    assert not s_tiny._use_local_batch(vols)
-    assert s_on._use_local_batch([100, 100])
-    assert not s_off._use_local_batch([100, 100])
+    assert not s_tiny._use_local(vols)
+    assert s_on._use_local([100, 100])
+    assert not s_off._use_local([100, 100])
 
 
 def test_driver_side_filter_under_forced_pruning(spark, pos_index):

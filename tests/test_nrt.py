@@ -160,6 +160,93 @@ def test_nrt_pruning_is_lossless(spark, tmp_path):
     assert len(pruned)
 
 
+def _jobs(spark, fn, group):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_nrt_index_urls_from_catalog(spark, tmp_path):
+    """Under the catalog gate the index hits' urls come from the
+    Searcher's cached catalog: the same frame as the docs-table lookup
+    above the gate, and one Spark job fewer than the docs-table lookup."""
+    import pandas as pd
+
+    from pysearch.build import build_index
+    from pysearch.query import Searcher
+    from pysearch.streaming import search_with_arrivals
+
+    _full, base, arrivals = _split_corpus(spark)
+    ix = str(tmp_path / "nrt_url_ix")
+    build_index(spark, base, ix, segment_size=16)
+    queries = {"q0": "in the realm of", "q1": "realm"}
+    on = Searcher(spark, ix)
+    off = Searcher(spark, ix)
+    off.local_max_postings = 0
+
+    def run(s):
+        return search_with_arrivals(s, arrivals, queries, k=10, case_id="6")
+
+    want = run(on)
+    assert len(want)
+    pd.testing.assert_frame_equal(run(off), want)
+    got, n_catalog = _jobs(spark, lambda: run(on), "nrt-catalog")
+    pd.testing.assert_frame_equal(got, want)
+    # the same call with the catalog hidden from the url lookup only (the
+    # append anti-joins read it first)
+    real, seen = on._catalog, []
+
+    def catalog_for_anti_joins_only(case_id):
+        seen.append(case_id)
+        return real(case_id) if len(seen) == 1 else None
+
+    on._catalog = catalog_for_anti_joins_only
+    got, n_docs_table = _jobs(spark, lambda: run(on), "nrt-docs-table")
+    assert len(seen) == 2
+    pd.testing.assert_frame_equal(got, want)
+    assert n_docs_table == n_catalog + 1
+
+
+def test_nrt_and_batch_share_the_prune_rule(spark, tmp_path, monkeypatch):
+    """The NRT index side and search_ids_many make the same prune decision
+    for a log where one mode="all" plan is dropped (a term absent from the
+    index): the volume counts the surviving plans' terms only."""
+    from pysearch.build import build_index
+    from pysearch.query import Searcher
+    from pysearch.streaming import search_with_arrivals
+
+    _full, base, arrivals = _split_corpus(spark)
+    ix = str(tmp_path / "nrt_prune_ix")
+    build_index(spark, base, ix, segment_size=16)
+    s = Searcher(spark, ix)
+    (realm,) = s._analyze("realm")
+    dfs = s._term_dfs("6", s._analyze("realm software"))
+    assert len(dfs) == 2
+    queries = {"q1": "realm", "q2": "software zzzabsentzzz"}
+    calls = []
+    real = Searcher._prune_blocks
+
+    def spy(self, *a, **kw):
+        calls.append(tag)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(Searcher, "_prune_blocks", spy)
+    for prune_min, pruned in ((dfs[realm], False), (dfs[realm] - 1, True)):
+        s.prune_min_postings = prune_min
+        calls.clear()
+        tag = "nrt"
+        search_with_arrivals(s, arrivals, queries, k=10, case_id="6",
+                             mode="all")
+        tag = "many"
+        s.search_ids_many(queries, k=10, case_id="6", mode="all")
+        assert calls == (["nrt", "many"] if pruned else []), prune_min
+
+
 def test_foreach_batch_nrt_serve_then_flush(spark, tmp_path):
     """The serve-then-flush sink: each epoch's parquet holds the query's
     top-k over everything ingested UP TO AND INCLUDING that micro-batch
