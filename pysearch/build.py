@@ -36,7 +36,6 @@ from __future__ import annotations
 import hashlib
 import os
 import time
-import zlib
 from typing import Iterator, List
 
 import numpy as np
@@ -167,22 +166,13 @@ def _with_token_offsets(df, analyzer: str):
             for text in pdf["text"]:
                 toks = offsets_fn(text)
                 k = len(toks)
-                if k:
-                    starts = np.fromiter((t[1] for t in toks),
-                                         dtype=np.int64, count=k)
-                    ends = np.fromiter((t[2] for t in toks),
-                                       dtype=np.int64, count=k)
-                    gaps = np.empty_like(starts)
-                    gaps[0] = starts[0]
-                    np.subtract(starts[1:], starts[:-1], out=gaps[1:])
-                    s_bin = codec.varint_encode(gaps.astype(np.uint64))
-                    l_bin = codec.varint_encode((ends - starts).astype(np.uint64))
-                else:
-                    s_bin, l_bin = b"", b""
+                s_bin, l_bin, crc = codec.pack_offsets(
+                    np.fromiter((t[1] for t in toks), dtype=np.int64, count=k),
+                    np.fromiter((t[2] for t in toks), dtype=np.int64, count=k))
                 nt.append(k)
                 sb.append(s_bin)
                 lb.append(l_bin)
-                cc.append(zlib.crc32(s_bin) ^ zlib.crc32(l_bin))
+                cc.append(crc)
             out = pdf.copy()
             out["n_tokens"] = np.asarray(nt, dtype=np.int32)
             out["tok_starts_bin"] = sb
@@ -191,6 +181,55 @@ def _with_token_offsets(df, analyzer: str):
             yield out
 
     return df.mapInPandas(add, schema=DOCS)
+
+
+def content_hash_column(df):
+    """The P4 content-hash column of a webtext frame: sha256 of a row's raw
+    html where it has one, else of its utf-8 text."""
+    from pyspark.sql import functions as F
+
+    text_hash = F.sha2(F.encode(F.col("text"), "utf-8"), 256)
+    if "html" not in df.columns:
+        return text_hash
+    return F.when(F.col("html").isNotNull(),
+                  F.sha2(F.col("html"), 256)).otherwise(text_hash)
+
+
+def shape_webtext(df):
+    """Document shaping, shared by the build and both arrival scorers
+    (streaming.py) so an arrival is the document the build would index:
+    S4 text extraction for rows with html but no text, the content hash,
+    then the P1 empty filter.  Returns ([case_id,] url, content_hash,
+    text), case_id when the input has it.
+
+    The extraction UDF runs only on the rows that need it (a blanket
+    when/otherwise would push every row through the Python worker); its
+    output is byte-identical to provided text (validated in tests on the
+    fixture corpus).  The empty filter is trimmed: whitespace-only docs
+    carry no tokens and would skew N vs token-deriving oracles."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from pysearch.corpus import extract_text_series
+
+    if "html" in df.columns:
+        @F.pandas_udf(T.StringType())
+        def extract_udf(htmls: pd.Series) -> pd.Series:
+            return extract_text_series(htmls)
+
+        if "text" not in df.columns:
+            df = df.withColumn("text", extract_udf("html"))
+        else:
+            need = df.filter(F.col("text").isNull() & F.col("html").isNotNull())
+            df = df.filter(F.col("text").isNotNull()).unionByName(
+                need.withColumn("text", extract_udf("html")))
+    df = df.filter(F.col("text").isNotNull())
+    cols = ["case_id"] if "case_id" in df.columns else []
+    return (
+        df.withColumn("content_hash", content_hash_column(df))
+        .filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(*cols, "url", "content_hash", "text")
+    )
 
 
 def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
@@ -221,46 +260,7 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
     df = webtext_df
     if "case_id" not in df.columns:
         df = df.withColumn("case_id", F.lit("0"))
-    # S4 text extraction: derive text from html when the text column is
-    # missing/null (per-row invariant: byte-identical to provided text —
-    # validated in tests on the fixture corpus)
-    if "text" not in df.columns:
-        from pyspark.sql import types as T
-
-        from pysearch.corpus import extract_text_series
-
-        @F.pandas_udf(T.StringType())
-        def extract_udf(htmls: pd.Series) -> pd.Series:
-            return extract_text_series(htmls)
-
-        df = df.withColumn("text", extract_udf("html"))
-    elif "html" in df.columns:
-        from pyspark.sql import types as T
-
-        from pysearch.corpus import extract_text_series
-
-        @F.pandas_udf(T.StringType())
-        def extract_udf(htmls: pd.Series) -> pd.Series:
-            return extract_text_series(htmls)
-
-        # run the extraction UDF only on the rows that need it (a blanket
-        # when/otherwise would push every row through the Python worker)
-        with_text = df.filter(F.col("text").isNotNull())
-        need = df.filter(F.col("text").isNull() & F.col("html").isNotNull())
-        df = with_text.unionByName(need.withColumn("text", extract_udf("html")))
-    df = df.filter(F.col("text").isNotNull())
-    text_hash = F.sha2(F.encode(F.col("text"), "utf-8"), 256)
-    if "html" in df.columns:
-        content_hash = F.when(
-            F.col("html").isNotNull(), F.sha2(F.col("html"), 256)
-        ).otherwise(text_hash)
-    else:
-        content_hash = text_hash
-    # P1 empty filter (trimmed: whitespace-only docs carry no tokens and
-    # would skew N vs token-deriving oracles)
-    df = df.withColumn("content_hash", content_hash).filter(
-        F.length(F.trim(F.col("text"))) > 0
-    ).select("case_id", "url", "content_hash", "text")
+    df = shape_webtext(df)
 
     base = None
     if existing is not None:
@@ -429,7 +429,7 @@ def _make_block_builder(n_buckets: int, analyzer: str = "en",
 
     _, _, batch_fn = get_analyzer(analyzer)
 
-    def build_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_blocks(key, pdf):
         case_id = str(key[0])
         segment_id = int(key[1])
         doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
@@ -470,10 +470,7 @@ def _make_block_builder(n_buckets: int, analyzer: str = "en",
             group_starts, run_lens
         )
         is_block_start = (pos_in_run % codec.BLOCK_SIZE) == 0
-        gaps = np.empty_like(ids_all)
-        gaps[0] = ids_all[0]
-        np.subtract(ids_all[1:], ids_all[:-1], out=gaps[1:])
-        gaps[is_block_start] = ids_all[is_block_start]  # block-local abs base
+        gaps = codec.delta_encode(ids_all, is_block_start)
 
         id_buf, id_off = codec.varint_encode_with_offsets(gaps.astype(np.uint64))
         tf_buf, tf_off = codec.varint_encode_with_offsets(tfs_arr.astype(np.uint64))
@@ -494,10 +491,7 @@ def _make_block_builder(n_buckets: int, analyzer: str = "en",
             pos_sorted = pos_in_doc[order_pos]
             tok_off = np.zeros(uniq_keys.size + 1, dtype=np.int64)
             np.cumsum(tfs_all, out=tok_off[1:])
-            pos_gaps = np.empty_like(pos_sorted)
-            pos_gaps[0] = pos_sorted[0]
-            np.subtract(pos_sorted[1:], pos_sorted[:-1], out=pos_gaps[1:])
-            pos_gaps[tok_off[:-1]] = pos_sorted[tok_off[:-1]]
+            pos_gaps = codec.delta_encode(pos_sorted, tok_off[:-1])
             pos_buf, pos_off = codec.varint_encode_with_offsets(
                 pos_gaps.astype(np.uint64)
             )
@@ -524,12 +518,11 @@ def _make_block_builder(n_buckets: int, analyzer: str = "en",
             ib = id_buf[id_off[s]:id_off[e]]
             tfb = tf_buf[tf_off[s]:tf_off[e]]
             dlb = dl_buf[dl_off[s]:dl_off[e]]
-            crc = zlib.crc32(ib) ^ zlib.crc32(tfb) ^ zlib.crc32(dlb)
+            crc = codec.block_crc(ib, tfb, dlb)
+            pb, pcrc = None, None
             if store_positions:
                 pb = pos_buf[pos_off[tok_off[s]]:pos_off[tok_off[e]]]
-                pcrc = zlib.crc32(pb)
-            else:
-                pb, pcrc = None, None
+                pcrc = codec.positions_crc(pb)
             rows.append((
                 case_id, term_of_code[tc], bucket_of_code[tc], segment_id,
                 int(blk_num[b]), e - s, ib, tfb, dlb,

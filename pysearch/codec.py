@@ -9,12 +9,20 @@ codec.  Blocks hold three parallel integer arrays per run of postings:
 
     doc_ids (sorted, delta-gapped), tfs, doc_lens
 
+plus, in a positions index, each posting's token positions (delta-gapped
+per posting) and each document's token-offset sidecar (char starts
+delta-gapped, token lengths).  This module is the only one that knows
+these formats and their CRC32s: the build, the purge, the query fetchers
+and ``verify_index`` all encode, decode and check through it.
+
 Encoding/decoding is fully vectorized (no per-element Python loops: the
 LEB128 byte expansion loops over the ≤10 *byte positions*, not over values),
 so it runs at memory bandwidth inside Arrow UDFs.
 """
 
 from __future__ import annotations
+
+import zlib
 
 import numpy as np
 
@@ -79,13 +87,18 @@ def varint_decode(buf: bytes, count: int) -> np.ndarray:
     return out
 
 
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    """Sorted int64 ids -> gaps (first value kept absolute)."""
-    a = np.asarray(sorted_ids, dtype=np.int64)
+def delta_encode(values: np.ndarray, bases=None) -> np.ndarray:
+    """int64 values -> gaps, with the value kept absolute at index 0 and at
+    every index in ``bases`` (an index array or mask: the first doc id of
+    each block, the first position of each posting), so each run between
+    bases decodes on its own."""
+    a = np.asarray(values, dtype=np.int64)
     out = np.empty_like(a)
     if a.size:
         out[0] = a[0]
         np.subtract(a[1:], a[:-1], out=out[1:])
+        if bases is not None:
+            out[bases] = a[bases]
     return out
 
 
@@ -108,8 +121,7 @@ def pack_run(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray):
     decodable.
     """
     n = doc_ids.size
-    gaps = delta_encode(doc_ids)
-    gaps[::BLOCK_SIZE] = doc_ids[::BLOCK_SIZE]  # block-local absolute base
+    gaps = delta_encode(doc_ids, np.arange(0, n, BLOCK_SIZE))
     id_buf, id_off = varint_encode_with_offsets(gaps.astype(np.uint64))
     tf_buf, tf_off = varint_encode_with_offsets(np.asarray(tfs, dtype=np.uint64))
     dl_buf, dl_off = varint_encode_with_offsets(np.asarray(dls, dtype=np.uint64))
@@ -128,6 +140,90 @@ def pack_run(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray):
             int(t.max()),
             int(d.min()),
         )
+
+
+def block_crc(ib: bytes, tb: bytes, db: bytes) -> int:
+    """A block's stored ``crc32``: the xor of its three payloads' CRC32s."""
+    return zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
+
+
+def positions_crc(pb: bytes) -> int:
+    """A block's stored ``pos_crc32``: the CRC32 of its positions payload."""
+    return zlib.crc32(pb)
+
+
+def pack_block(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+               positions: np.ndarray | None = None) -> dict:
+    """The payload and metadata columns of one block of sorted postings —
+    what the purge re-packs a block to after dropping deleted ids.
+    ``positions``: every posting's token positions, concatenated (tf
+    each); without them ``pos_bin``/``pos_crc32`` are None."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    ib = varint_encode(delta_encode(ids).astype(np.uint64))
+    tb = varint_encode(tfs.astype(np.uint64))
+    db = varint_encode(dls.astype(np.uint64))
+    pb = pcrc = None
+    if positions is not None:
+        first = np.zeros(tfs.size, dtype=np.int64)  # each posting's base
+        np.cumsum(tfs[:-1], out=first[1:])
+        pb = varint_encode(delta_encode(positions, first).astype(np.uint64))
+        pcrc = positions_crc(pb)
+    return {
+        "n": int(tfs.size),
+        "doc_ids_bin": ib, "tfs_bin": tb, "dls_bin": db,
+        "min_doc_id": int(ids[0]), "max_doc_id": int(ids[-1]),
+        "max_tf": int(tfs.max()), "min_dl": int(dls.min()),
+        "sum_tf": int(tfs.sum()),
+        "n_bytes": len(ib) + len(tb) + len(db) + (len(pb) if pb else 0),
+        "crc32": block_crc(ib, tb, db),
+        "pos_bin": pb, "pos_crc32": pcrc,
+    }
+
+
+def _offsets_crc(s_bin: bytes, l_bin: bytes) -> int:
+    return zlib.crc32(s_bin) ^ zlib.crc32(l_bin)
+
+
+def pack_offsets(starts: np.ndarray, ends: np.ndarray):
+    """One doc's token-offset sidecar: (tok_starts_bin, tok_lens_bin,
+    offs_crc32) — the char start of every token delta-gapped, its length,
+    and the xor of the two payloads' CRC32s."""
+    starts = np.asarray(starts, dtype=np.int64)
+    s_bin = varint_encode(delta_encode(starts).astype(np.uint64))
+    l_bin = varint_encode((np.asarray(ends, dtype=np.int64) - starts)
+                          .astype(np.uint64))
+    return s_bin, l_bin, _offsets_crc(s_bin, l_bin)
+
+
+def unpack_offsets(n: int, s_bin: bytes, l_bin: bytes, crc: int):
+    """Inverse of pack_offsets for a doc of ``n`` tokens -> (starts, ends)
+    int64 char offsets; raises IOError when the stored CRC does not match."""
+    if _offsets_crc(s_bin, l_bin) != crc:
+        raise IOError("token-offset sidecar CRC mismatch")
+    starts = np.cumsum(varint_decode(s_bin, n).astype(np.int64))
+    return starts, starts + varint_decode(l_bin, n).astype(np.int64)
+
+
+def crc_mismatches(pdf) -> int:
+    """How many stored payloads of a fetched frame fail their CRC: each
+    posting block (``crc32``), each block's positions where the frame
+    carries ``pos_crc32`` (a block stored without positions is skipped),
+    and each doc's token-offset sidecar where it carries ``offs_crc32`` (a
+    missing sidecar counts as a failure)."""
+    bad = 0
+    if "crc32" in pdf.columns:
+        bad += sum(block_crc(ib, tb, db) != crc for ib, tb, db, crc in zip(
+            pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["dls_bin"], pdf["crc32"]))
+    if "pos_crc32" in pdf.columns:
+        bad += sum(pb is not None and positions_crc(pb) != crc
+                   for pb, crc in zip(pdf["pos_bin"], pdf["pos_crc32"]))
+    if "offs_crc32" in pdf.columns:
+        bad += sum(sb is None or _offsets_crc(sb, lb) != crc
+                   for sb, lb, crc in zip(pdf["tok_starts_bin"],
+                                          pdf["tok_lens_bin"],
+                                          pdf["offs_crc32"]))
+    return int(bad)
 
 
 def unpack_block(n: int, doc_ids_bin: bytes, tfs_bin: bytes, dls_bin: bytes):

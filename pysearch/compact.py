@@ -181,8 +181,6 @@ def _purge_blocks_transform(tomb_by_case: dict):
     CRC loop); the delete set ships once per task and the membership test
     is a vectorized np.isin.  Blocks wholly untouched by the delete set
     pass through byte-identical (range fast-path, no decode)."""
-    import zlib
-
     import numpy as np
     import pandas as pd
 
@@ -207,50 +205,21 @@ def _purge_blocks_transform(tomb_by_case: dict):
                         or row["min_doc_id"] > excl[-1]):
                     emit(row)
                     continue
-                n = int(row["n"])
                 ids, tfs, dls = codec.unpack_block(
-                    n, row["doc_ids_bin"], row["tfs_bin"], row["dls_bin"])
+                    int(row["n"]), row["doc_ids_bin"], row["tfs_bin"],
+                    row["dls_bin"])
                 keep = np.isin(ids, excl, assume_unique=True, invert=True)
                 if keep.all():
                     emit(row)
                     continue
                 if not keep.any():
                     continue  # every posting deleted -> drop the block row
-                ids2, tfs2, dls2 = ids[keep], tfs[keep], dls[keep]
-                gaps = np.empty_like(ids2)
-                gaps[0] = ids2[0]  # absolute base, block-local decode
-                np.subtract(ids2[1:], ids2[:-1], out=gaps[1:])
-                ib = codec.varint_encode(gaps.astype(np.uint64))
-                tb = codec.varint_encode(tfs2.astype(np.uint64))
-                db = codec.varint_encode(dls2.astype(np.uint64))
-                pb, pcrc = row["pos_bin"], row["pos_crc32"]
-                if pb is not None:
-                    flat = codec.unpack_positions_batch(tfs, [pb])
-                    ends = np.cumsum(tfs)
-                    starts = ends - tfs
-                    kept = [flat[s:e] for s, e, k in
-                            zip(starts, ends, keep) if k]
-                    pk = np.concatenate(kept)
-                    t_off = np.zeros(tfs2.size, dtype=np.int64)
-                    np.cumsum(tfs2[:-1], out=t_off[1:])
-                    pg = np.empty_like(pk)
-                    pg[0] = pk[0]
-                    np.subtract(pk[1:], pk[:-1], out=pg[1:])
-                    pg[t_off] = pk[t_off]  # absolute base per posting
-                    pb = codec.varint_encode(pg.astype(np.uint64))
-                    pcrc = zlib.crc32(pb)
-                emit({
-                    **row,
-                    "n": int(ids2.size),
-                    "doc_ids_bin": ib, "tfs_bin": tb, "dls_bin": db,
-                    "min_doc_id": int(ids2[0]), "max_doc_id": int(ids2[-1]),
-                    "max_tf": int(tfs2.max()), "min_dl": int(dls2.min()),
-                    "sum_tf": int(tfs2.sum()),
-                    "n_bytes": len(ib) + len(tb) + len(db)
-                    + (len(pb) if pb is not None else 0),
-                    "crc32": zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db),
-                    "pos_bin": pb, "pos_crc32": pcrc,
-                })
+                pos = None
+                if row["pos_bin"] is not None:
+                    pos = codec.unpack_positions_batch(
+                        tfs, [row["pos_bin"]])[np.repeat(keep, tfs)]
+                emit({**row, **codec.pack_block(ids[keep], tfs[keep],
+                                                dls[keep], pos)})
             yield pd.DataFrame(out, columns=cols)
 
     return run

@@ -2599,9 +2599,15 @@ def tx_fingerprints(spark, sf_dir):
     window (winnowing-style, tumbling windows) — robust-to-local-edit doc
     signatures for near-dup detection, vs f8's whole-doc hash.  One
     explode + one groupBy; the gram hash is the portable md5 family."""
+    return _winnow(_t(spark, sf_dir, "documents")).orderBy("doc_id", "win")
+
+
+def _winnow(docs):
+    """(doc_id, text) rows -> (doc_id, win, fp): the whitespace k-gram
+    hashes of each doc, min-sampled per tumbling window of _FP_W grams."""
     from pyspark.sql import functions as F
 
-    toks = _t(spark, sf_dir, "documents").select(
+    toks = docs.select(
         "doc_id", F.expr("filter(split(text, ' '), x -> x != '')").alias("l")
     ).filter(F.size("l") >= _FP_K)
     grams = toks.select(
@@ -2617,10 +2623,7 @@ def tx_fingerprints(spark, sf_dir):
         F.floor(F.col("pos") / _FP_W).alias("win"),
         F.expr(_HEX_SPARK.format(x="g")).alias("hv"),
     )
-    return (
-        grams.groupBy("doc_id", "win").agg(F.min("hv").alias("fp"))
-        .orderBy("doc_id", "win")
-    )
+    return grams.groupBy("doc_id", "win").agg(F.min("hv").alias("fp"))
 
 
 @op("tx_decontaminate_top50", f"""
@@ -2663,27 +2666,8 @@ def tx_decontaminate_top50(spark, sf_dir):
     from pyspark.sql import functions as F
 
     def fps_of(pred):
-        toks = _t(spark, sf_dir, "documents").filter(pred).select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("l")
-        ).filter(F.size("l") >= _FP_K)
-        grams = toks.select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(l) - {_FP_K} + 1),"
-                    f" i -> concat_ws(' ', slice(l, i, {_FP_K})))"
-                )
-            ).alias("pos", "g"),
-        ).select(
-            "doc_id",
-            F.floor(F.col("pos") / _FP_W).alias("win"),
-            F.expr(_HEX_SPARK.format(x="g")).alias("hv"),
-        )
-        return (
-            grams.groupBy("doc_id", "win").agg(F.min("hv").alias("fp"))
-            .select("doc_id", "fp").distinct()
-        )
+        return (_winnow(_t(spark, sf_dir, "documents").filter(pred))
+                .select("doc_id", "fp").distinct())
 
     evalf = fps_of(F.col("doc_id") % 97 == 0).select("fp").distinct()
     return (

@@ -38,7 +38,7 @@ from typing import Dict, List, Optional, Tuple
 import numpy as np
 import pandas as pd
 
-from pysearch import gate
+from pysearch import codec, gate
 from pysearch import score as sc
 from pysearch.build import term_bucket
 from pysearch.gate import (LOCAL_BATCH_FACTOR, LOCAL_MAX_CATALOG,
@@ -129,22 +129,13 @@ def _merge_topk(per_q: Dict[str, tuple], k: int) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def _verify_blocks(pdf: pd.DataFrame, positions: bool) -> None:
+def _verify_blocks(pdf: pd.DataFrame) -> None:
     """Verify-before-decode for fetched posting blocks (reference parity:
     per-blob CRC32 verification at doc_positions.go:222-226): every
-    block's 3-buffer xor CRC, and its positions CRC when positions are
-    read."""
-    import zlib
-
-    for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                               pdf["dls_bin"], pdf["crc32"]):
-        got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-        if got != crc:
-            raise IOError(f"posting block CRC mismatch: {got} != {crc}")
-    if positions:
-        for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
-            if zlib.crc32(pb) != pcrc:
-                raise IOError("position payload CRC mismatch")
+    block's payload CRC, and its positions CRC when positions are read."""
+    bad = codec.crc_mismatches(pdf)
+    if bad:
+        raise IOError(f"posting block CRC mismatch in {bad} payload(s)")
 
 
 def _block_rows(pdf: pd.DataFrame, positions: bool) -> List[tuple]:
@@ -782,7 +773,7 @@ class Searcher:
         pdf = self._read_blocks_arrow(
             case_id, terms, self._LOCAL_COLS_POS if positions
             else self._LOCAL_COLS)
-        _verify_blocks(pdf, positions)
+        _verify_blocks(pdf)
         return pdf
 
     # ------------------------------------------------------------------
@@ -1169,12 +1160,11 @@ class Searcher:
         Spark (row_number over (weight desc, df desc, term asc) —
         deterministic) so at most |clauses| * max_expansions rows reach
         the driver no matter how loose the clause or how large the
-        vocabulary."""
+        vocabulary (:meth:`_expand_spark`).  A vocabulary under the
+        LOCAL_MAX_VOCAB gate expands driver-side instead, with the same
+        values (:meth:`_expand_local`)."""
         import re as _re
-        from functools import reduce
-        from operator import or_
 
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         qrows = [(q, int(d), float(b), "f") for q, (d, b) in fuzzy.items()]
@@ -1186,20 +1176,36 @@ class Searcher:
             except _re.error as e:
                 raise ValueError(f"bad regexp clause /{r}/: {e}") from None
             qrows.append((anchored, 0, float(b), "r"))
-        # vocabulary-local rewrite (see LOCAL_MAX_VOCAB): fuzzy/prefix
-        # clauses expand driver-side over the cached {term: df} map with
-        # the same arithmetic and ranking; regexp clauses are evaluated
-        # against the same vocabulary by the SAME JVM java.util.regex
-        # engine rlike runs (one py4j stream-filter call, no Spark job,
-        # no Python-re dialect risk — see _regexp_vocab_jvm)
         vocab = self._local_vocab(case_id)
         if vocab is not None:
-            rx_matches = {
-                q: self._regexp_vocab_jvm(list(vocab), q)
-                for q, _d, _b, kind in qrows if kind == "r"
-            }
-            return self._expand_fuzzy_local(vocab, qrows, max_expansions,
-                                            rx_matches)
+            out: Dict[str, Tuple[float, int]] = {}
+            for _q, t, _dist, w, df in self._expand_local(vocab, qrows,
+                                                          max_expansions):
+                prev = out.get(t)
+                if prev is None or w > prev[0]:
+                    out[t] = (w, df)
+            return out
+        rows = (
+            self._expand_spark(case_id, qrows, max_expansions)
+            .groupBy("term").agg(F.max("w").alias("w"),
+                                 F.any_value("df").alias("df"))
+            .collect()
+        )
+        return {r["term"]: (float(r["w"]), int(r["df"])) for r in rows}
+
+    def _expand_spark(self, case_id: str, qrows, cap: int,
+                      min_dist: int = 0):
+        """The per-clause MultiTermQuery rewrite as ONE distributed job over
+        term_stats: every (q, d, b, kind) clause's expansions with
+        ``min_dist <= dist <= d`` (fuzzy), as (q, kind, term, df, w, dist)
+        rows, at most ``cap`` per clause by (w desc, df desc, term asc)
+        (row_number — deterministic)."""
+        from functools import reduce
+        from operator import or_
+
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
         conds = [
             (F.length("term") >= len(q) - d) & (F.length("term") <= len(q) + d)
             & (F.levenshtein(F.col("term"), F.lit(q)) <= d)
@@ -1216,17 +1222,19 @@ class Searcher:
         )
         q_df = self.spark.createDataFrame(
             qrows, "q string, d int, b double, kind string")
-        match = (
-            (F.col("kind") == "f")
-            & (F.levenshtein(F.col("term"), F.col("q")) <= F.col("d"))
-        ) | ((F.col("kind") == "p")
-             & F.col("term").startswith(F.col("q"))) | (
-            (F.col("kind") == "r")
-            & F.regexp_like(F.col("term"), F.col("q")))
+        lev = F.levenshtein(F.col("term"), F.col("q"))
+        fuzzy_ok = lev <= F.col("d")
+        if min_dist:
+            fuzzy_ok = fuzzy_ok & (lev >= min_dist)
+        match = ((F.col("kind") == "f") & fuzzy_ok) | (
+            (F.col("kind") == "p") & F.col("term").startswith(F.col("q"))
+        ) | ((F.col("kind") == "r")
+             & F.regexp_like(F.col("term"), F.col("q")))
         sim = (F.lit(1.0)
-               - F.levenshtein(F.col("term"), F.col("q"))
-               / F.least(F.length("term"), F.length("q")))
-        j = (
+               - lev / F.least(F.length("term"), F.length("q")))
+        win = Window.partitionBy("q", "kind").orderBy(
+            F.desc("w"), F.desc("df"), F.asc("term"))
+        return (
             cand.join(F.broadcast(q_df), match)
             .withColumn(
                 "w",
@@ -1234,17 +1242,11 @@ class Searcher:
                              .otherwise(F.lit(1.0)),
             )
             .filter(F.col("w") > 0)  # dist == min length conveys nothing
+            .withColumn("rn", F.row_number().over(win))
+            .filter(F.col("rn") <= cap)
+            .withColumn("dist", F.when(F.col("kind") == "f", lev)
+                        .otherwise(0))
         )
-        win = Window.partitionBy("q", "kind").orderBy(
-            F.desc("w"), F.desc("df"), F.asc("term"))
-        rows = (
-            j.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= max_expansions)
-            .groupBy("term").agg(F.max("w").alias("w"),
-                                 F.any_value("df").alias("df"))
-            .collect()
-        )
-        return {r["term"]: (float(r["w"]), int(r["df"])) for r in rows}
 
     def _regexp_vocab_jvm(self, terms: List[str], anchored: str) -> List[str]:
         """Evaluate one regexp clause against the vocabulary with the SAME
@@ -1267,49 +1269,38 @@ class Searcher:
         )
         return [t for t in matched.split("\n") if t] if matched else []
 
-    @staticmethod
-    def _expand_fuzzy_local(vocab: dict, qrows,
-                            max_expansions: int,
-                            rx_matches: Optional[dict] = None
-                            ) -> "Dict[str, Tuple[float, int]]":
-        """Driver-side MultiTermQuery rewrite over a cached vocabulary —
-        value-identical to the Spark job in :meth:`expand_fuzzy`: classic
-        Levenshtein (``_lev_batch``), weight b * (1 - dist/min(len)) in
-        the same float64 op order, per-clause (w desc, df desc, term asc)
-        cap, cross-clause max-weight dedup.  ``rx_matches`` maps a regexp
-        clause's anchored pattern to its JVM-evaluated vocabulary matches
-        (_regexp_vocab_jvm)."""
+    def _expand_local(self, vocab: dict, qrows, cap: int,
+                      min_dist: int = 0) -> list:
+        """The vocabulary-local twin of :meth:`_expand_spark` (see
+        LOCAL_MAX_VOCAB), value-identical to it over the cached {term: df}
+        map: classic Levenshtein (``_lev_batch``), weight b * (1 -
+        dist/min(len)) in the same float64 op order, the same per-clause
+        cap.  Regexp clauses are evaluated against the vocabulary by the
+        SAME JVM java.util.regex engine rlike runs (one py4j stream-filter
+        call, no Spark job, no Python-re dialect risk — see
+        _regexp_vocab_jvm).  Returns (q, term, dist, w, df) rows."""
         terms = list(vocab)
-        out: Dict[str, Tuple[float, int]] = {}
+        rows = []
         for q, d, b, kind in qrows:
-            if kind == "r":
-                if b <= 0:
-                    continue
-                sel = [(b * 1.0, vocab[t], t)
-                       for t in (rx_matches or {}).get(q, ())]
-            elif kind == "f":
+            if kind == "f":
                 cand = [t for t in terms if abs(len(t) - len(q)) <= d]
-                dists = _lev_batch(q, cand)
                 sel = []
-                for t, dist in zip(cand, dists):
+                for t, dist in zip(cand, _lev_batch(q, cand)):
                     dist = int(dist)
-                    if dist > d:
+                    if not min_dist <= dist <= d:
                         continue
-                    minlen = min(len(t), len(q))
-                    w = b * (1.0 - dist / minlen)
+                    w = b * (1.0 - dist / min(len(t), len(q)))
                     if w > 0:  # dist == min length conveys nothing
-                        sel.append((w, vocab[t], t))
-            else:  # kind == "p"
-                if b <= 0:
-                    continue
-                sel = [(b * 1.0, vocab[t], t)
-                       for t in terms if t.startswith(q)]
+                        sel.append((w, vocab[t], t, dist))
+            elif b <= 0:
+                continue
+            else:
+                matched = (self._regexp_vocab_jvm(terms, q) if kind == "r"
+                           else [t for t in terms if t.startswith(q)])
+                sel = [(b * 1.0, vocab[t], t, 0) for t in matched]
             sel.sort(key=lambda r: (-r[0], -r[1], r[2]))
-            for w, df, t in sel[:max_expansions]:
-                prev = out.get(t)
-                if prev is None or w > prev[0]:
-                    out[t] = (w, df)
-        return out
+            rows += [(q, t, dist, w, df) for w, df, t, dist in sel[:cap]]
+        return rows
 
     def search_ids_fuzzy(self, query: str, k: int = DEFAULT_MAX_RESULTS,
                          case_id: str = "0", prune: bool = True,
@@ -1406,15 +1397,10 @@ class Searcher:
         (query_term, suggestion, dist, df) — at most |terms| * ``top``
         rows.
 
-        Scale shape: ONE distributed job over term_stats (the
-        vocabulary-sized metadata table, never the postings) with the
-        length-band prefilter pushed to the scan and the per-term cap
-        applied IN Spark — the same bounded-driver-volume contract as
-        expand_fuzzy."""
-        from functools import reduce
-        from operator import or_
-
-        from pyspark.sql import Window
+        Each input term is a fuzzy clause of boost 1 run through
+        expand_fuzzy's per-clause rewrite (driver-local under
+        LOCAL_MAX_VOCAB, else one distributed job over term_stats with
+        the per-term cap applied IN Spark), before its cross-clause max."""
         from pyspark.sql import functions as F
 
         if max_edits < 1 or max_edits > MAX_FUZZY_DISTANCE:
@@ -1425,58 +1411,16 @@ class Searcher:
                   "df bigint")
         if not qs:
             return self.spark.createDataFrame([], schema=schema)
-        d = int(max_edits)
-        # vocabulary-local path (see LOCAL_MAX_VOCAB): same candidates,
-        # weights, and (sim desc, df desc, term asc) per-term cap as the
-        # Spark job below, computed driver-side over the cached vocabulary
+        # the fuzzy rewrite's own clauses (boost 1), dist 0 excluded
+        qrows = [(q, int(max_edits), 1.0, "f") for q in qs]
         vocab = self._local_vocab(case_id)
         if vocab is not None:
-            terms_all = list(vocab)
-            rows = []
-            for q in qs:
-                cand = [t for t in terms_all if abs(len(t) - len(q)) <= d]
-                dists = _lev_batch(q, cand)
-                sel = []
-                for t, dist in zip(cand, dists):
-                    dist = int(dist)
-                    if not (1 <= dist <= d):
-                        continue
-                    minlen = min(len(t), len(q))
-                    w = 1.0 - dist / minlen
-                    if w > 0:  # dist == min length conveys nothing
-                        sel.append((w, vocab[t], t, dist))
-                sel.sort(key=lambda r: (-r[0], -r[1], r[2]))
-                rows += [(q, t, dist, df)
-                         for _w, df, t, dist in sel[:int(top)]]
+            rows = [(q, t, dist, df) for q, t, dist, _w, df in
+                    self._expand_local(vocab, qrows, int(top), min_dist=1)]
             return self.spark.createDataFrame(rows, schema=schema)
-        conds = [
-            (F.length("term") >= len(q) - d) & (F.length("term") <= len(q) + d)
-            & (F.levenshtein(F.col("term"), F.lit(q)) <= d)
-            for q in qs
-        ]
-        cand = (
-            self._term_stats.filter(F.col("case_id") == case_id)
-            .filter(reduce(or_, conds))
-            # df is additive across append-batch stats commits
-            .groupBy("term").agg(F.sum("df").alias("df"))
-        )
-        q_df = self.spark.createDataFrame([(q,) for q in qs], "q string")
-        lev = F.levenshtein(F.col("term"), F.col("q"))
-        sim = (F.lit(1.0) - lev / F.least(F.length("term"), F.length("q")))
-        win = Window.partitionBy("q").orderBy(
-            F.desc("w"), F.desc("df"), F.asc("term"))
-        return (
-            cand.join(F.broadcast(q_df), (lev <= d) & (lev >= 1))
-            .withColumn("w", sim)
-            .filter(F.col("w") > 0)  # dist == min length conveys nothing
-            .withColumn("dist", lev)
-            .withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= int(top))
-            .select(F.col("q").alias("query_term"),
-                    F.col("term").alias("suggestion"),
-                    F.col("dist").cast("int"),
-                    F.col("df").cast("bigint"))
-        )
+        return self._expand_spark(case_id, qrows, int(top), min_dist=1).select(
+            F.col("q").alias("query_term"), F.col("term").alias("suggestion"),
+            F.col("dist").cast("int"), F.col("df").cast("bigint"))
 
     def more_like_this(self, text: str, k: int = DEFAULT_MAX_RESULTS,
                        case_id: str = "0", max_query_terms: int = 5,
@@ -1612,7 +1556,7 @@ class Searcher:
 
         def score_one(key, pdf: pd.DataFrame,
                       allow: Optional[np.ndarray]) -> pd.DataFrame:
-            _verify_blocks(pdf, positions)
+            _verify_blocks(pdf)
             qids, ids_l, scores_l = sc.score_segment_blocks(
                 _block_rows(pdf, positions), plans, avgdl, k,
                 exclude=exclude, allow=allow)
@@ -1654,8 +1598,6 @@ class Searcher:
         Spark job), aggregated here; above it, or with the driver-local
         paths off, one Spark aggregate collect over ``blocks_df``."""
         from pyspark.sql import functions as F
-
-        from pysearch import codec
 
         n_segs = -(-self._corpus[case_id][0] // self.segment_size)
         est = (sum(self._term_dfs(case_id, terms).values())
@@ -1823,10 +1765,8 @@ class Searcher:
         hit_set = set(int(i) for i in hit_ids)
 
         def extract(batches):
-            from pysearch import codec
-
             for pdf in batches:
-                _verify_blocks(pdf, True)
+                _verify_blocks(pdf)
                 rows = []
                 for r in pdf.itertuples(index=False):
                     ids, tfs, _dls = codec.unpack_block(
@@ -1970,27 +1910,16 @@ class Searcher:
             return sc.align_phrase(doc_terms, offsets, qterms)
 
         def _spans_from_index(r):
-            import zlib
-
-            from pysearch import codec
-
             tok_spans = sc.align_phrase_positions(
                 qterms, pos_by_doc.get(int(r.doc_id), {})
             )
             if not tok_spans:
                 return []
-            if zlib.crc32(r.tok_starts_bin) ^ zlib.crc32(r.tok_lens_bin) \
-                    != r.offs_crc32:
-                raise IOError("token-offset sidecar CRC mismatch")
-            n = int(r.n_tokens)
-            starts = np.cumsum(
-                codec.varint_decode(r.tok_starts_bin, n).astype(np.int64)
-            )
-            lens = codec.varint_decode(r.tok_lens_bin, n).astype(np.int64)
-            return [
-                (int(starts[f]), int(starts[last] + lens[last]), score)
-                for f, last, score in tok_spans
-            ]
+            starts, ends = codec.unpack_offsets(
+                int(r.n_tokens), r.tok_starts_bin, r.tok_lens_bin,
+                r.offs_crc32)
+            return [(int(starts[f]), int(ends[last]), score)
+                    for f, last, score in tok_spans]
 
         span_fn = _spans_from_index if use_index_pos else _spans_reanalyze
 

@@ -92,14 +92,12 @@ def streaming_dedup(stream_df, watermark: str = "1 hour"):
     hash wins; later duplicates are dropped across micro-batches (state
     bounded by the event-time watermark).  The streaming face of the P4
     dedup family — Spark's dropDuplicatesWithinWatermark keeps the hash
-    state store, giving exactly-once duplicate suppression."""
-    from pyspark.sql import functions as F
+    state store, giving exactly-once duplicate suppression.  The hash is
+    the build's (``build.content_hash_column``)."""
+    from pysearch.build import content_hash_column
 
     hashed = stream_df.withColumn(
-        "content_hash",
-        F.sha2(
-            F.coalesce(F.col("html"), F.encode(F.col("text"), "utf-8")), 256
-        ),
+        "content_hash", content_hash_column(stream_df)
     ).withWatermark("warc_ts", watermark)
     return hashed.dropDuplicatesWithinWatermark(["content_hash"])
 
@@ -124,54 +122,10 @@ def foreach_batch_matcher(watch_terms: List[str], out_dir: str):
     return handle
 
 
-def _shape_batch_text(batch_df):
-    """Engine-parity corpus shaping, stage 1 (build_docs_stage semantics,
-    build.py): S4 text extraction for html-only rows FIRST (r3 ADVICE:
-    dropping text-null rows silently diverged from the persistent-index
-    path), then the content hash and the P1 empty filter.  Returns
-    (url, content_hash, text)."""
-    from pyspark.sql import functions as F
-
-    df = batch_df
-    if "text" not in df.columns or "html" in df.columns:
-        from pyspark.sql import types as T
-
-        from pysearch.corpus import extract_text_series
-
-        @F.pandas_udf(T.StringType())
-        def extract_udf(htmls: pd.Series) -> pd.Series:
-            return extract_text_series(htmls)
-
-        if "text" not in df.columns:
-            df = df.withColumn("text", extract_udf("html"))
-        else:
-            # extraction UDF only on the rows that need it (same split as
-            # build_docs_stage — a blanket when/otherwise would push every
-            # row through the Python worker)
-            with_text = df.filter(F.col("text").isNotNull())
-            need = df.filter(
-                F.col("text").isNull() & F.col("html").isNotNull()
-            )
-            df = with_text.unionByName(
-                need.withColumn("text", extract_udf("html"))
-            )
-    df = df.filter(F.col("text").isNotNull())
-    text_hash = F.sha2(F.encode(F.col("text"), "utf-8"), 256)
-    if "html" in df.columns:
-        content_hash = F.when(
-            F.col("html").isNotNull(), F.sha2(F.col("html"), 256)
-        ).otherwise(text_hash)
-    else:
-        content_hash = text_hash
-    return (
-        df.withColumn("content_hash", content_hash)
-        .filter(F.length(F.trim(F.col("text"))) > 0)
-        .select("url", "content_hash", "text")
-    )
-
-
 def _dedupe_batch(df):
-    """Engine-parity corpus shaping, stage 2: content-dedupe keeping the
+    """Engine-parity dedupe of a batch shaped by ``build.shape_webtext``
+    (the build's own extraction, content hash and empty filter, so an
+    html-only row is kept as the build keeps it): content-dedupe keeping the
     min url per hash (P4), then url-dedupe keeping the min content hash
     (P3) — the same winners build_docs_stage picks.  The dedupe windows run
     on a TEXT-FREE projection (docs-stage rule: no shuffle carries document
@@ -382,7 +336,8 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
     ``queries``: qid -> query string.  Returns a DataFrame
     (qid, url, score) with each query's top-k over the batch, RANK-IDENTICAL
     to building a real index over the same batch and searching it (same
-    analyzer, same P1/P3/P4 dedupe rules, the engine's own plans and top-k
+    analyzer, the build's own shaping ``build.shape_webtext``, same P3/P4
+    dedupe rules, the engine's own plans and top-k
     funnel, ties by url ascending == the engine's doc_id ascending since
     doc_ids are url ranks) — pinned by test.
 
@@ -409,13 +364,15 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
 
     if mode not in ("any", "all", "phrase"):
         raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
+    from pysearch.build import shape_webtext
+
     an, _, _ = get_analyzer(analyzer)
     analyzed = {qid: an(q) for qid, q in queries.items()}
     spark = batch_df.sparkSession
     hits = []
     if any(analyzed.values()):
         *_, hits = _score_arrivals(
-            _dedupe_batch(_shape_batch_text(batch_df)), an, analyzed, mode,
+            _dedupe_batch(shape_webtext(batch_df)), an, analyzed, mode,
             k, gate.local_max_postings())
     return spark.createDataFrame(hits, schema=_HITS_SCHEMA)
 
@@ -456,8 +413,9 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     searching (pinned by test), for mode any|all|phrase.  Semantics mirror
     the append exactly:
 
-    - batch shaping = build_docs_stage: S4 html→text extraction, P1 empty
-      filter, THEN the append anti-joins (a batch row whose url or content
+    - batch shaping = build_docs_stage's ``build.shape_webtext`` (S4
+      html→text extraction, content hash, P1 empty filter), THEN the
+      append anti-joins (a batch row whose url or content
       hash already exists in the index is the index doc — append never
       updates), THEN within-batch P4/P3 dedup — the same order as
       build.py, because winner selection is order-sensitive.
@@ -484,6 +442,7 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
     from pyspark.sql import functions as F
 
     from pysearch import score as sc
+    from pysearch.build import shape_webtext
 
     if mode not in ("any", "all", "phrase"):
         raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
@@ -505,7 +464,7 @@ def search_with_arrivals(searcher, batch_df, queries: dict, k: int = 10,
         # a hybrid search serves ONE case; rows bound for other cases
         # cannot affect it (they would append elsewhere)
         src = src.filter(F.col("case_id").cast("string") == case_id)
-    df = _shape_batch_text(src)
+    df = shape_webtext(src)
     cat = searcher._catalog(case_id)
     if cat is not None:
         # catalog under the LOCAL_MAX_CATALOG gate: the "already indexed"

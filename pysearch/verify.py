@@ -21,10 +21,10 @@ which reads the packed payloads (skippable via ``check_crcs=False``).
 from __future__ import annotations
 
 import os
-import zlib
 
 import pandas as pd
 
+from pysearch import codec
 from pysearch.lineage import IndexLayout
 from pysearch.version import INDEX_FORMAT_VERSION
 
@@ -177,54 +177,27 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
         )
 
     if check_crcs:
-        has_pos = "pos_bin" in blocks.columns
-
         def check(batches):
             for pdf in batches:
-                bad = 0
-                for ib, tb, db, crc in zip(pdf["doc_ids_bin"], pdf["tfs_bin"],
-                                           pdf["dls_bin"], pdf["crc32"]):
-                    got = zlib.crc32(ib) ^ zlib.crc32(tb) ^ zlib.crc32(db)
-                    if got != crc:
-                        bad += 1
-                if "pos_bin" in pdf.columns:
-                    for pb, pcrc in zip(pdf["pos_bin"], pdf["pos_crc32"]):
-                        if pb is not None and zlib.crc32(pb) != pcrc:
-                            bad += 1
-                yield pd.DataFrame({"bad": [bad]})
+                yield pd.DataFrame({"bad": [codec.crc_mismatches(pdf)]})
 
-        cols = ["doc_ids_bin", "tfs_bin", "dls_bin", "crc32"]
-        if has_pos:
-            cols += ["pos_bin", "pos_crc32"]
-        bad = (
-            blocks.select(*cols)
-            .mapInPandas(check, schema="bad long")
-            .agg(F.coalesce(F.sum("bad"), F.lit(0)).alias("bad"))
-            .collect()[0]["bad"]
-        )
-        if bad:
-            problems.append(f"{bad} posting blocks failed CRC32 verification")
-
-        # token-offset sidecar CRCs (store_positions builds only)
-        if "offs_crc32" in docs.columns and m.get("positions"):
-            def check_offs(batches):
-                for pdf in batches:
-                    bad = 0
-                    for sb, lb, crc in zip(pdf["tok_starts_bin"],
-                                           pdf["tok_lens_bin"],
-                                           pdf["offs_crc32"]):
-                        if sb is None:
-                            bad += 1  # positions index must carry offsets
-                        elif zlib.crc32(sb) ^ zlib.crc32(lb) != crc:
-                            bad += 1
-                    yield pd.DataFrame({"bad": [bad]})
-
-            bad_o = (
-                docs.select("tok_starts_bin", "tok_lens_bin", "offs_crc32")
-                .mapInPandas(check_offs, schema="bad long")
+        def n_bad(df, *cols) -> int:
+            return (
+                df.select(*cols).mapInPandas(check, schema="bad long")
                 .agg(F.coalesce(F.sum("bad"), F.lit(0)).alias("bad"))
                 .collect()[0]["bad"]
             )
+
+        bad = n_bad(blocks, "doc_ids_bin", "tfs_bin", "dls_bin", "crc32",
+                    "pos_bin", "pos_crc32")
+        if bad:
+            problems.append(f"{bad} posting blocks failed CRC32 verification")
+
+        # token-offset sidecar CRCs (store_positions builds only; a
+        # positions index must carry the sidecar on every doc)
+        if m.get("positions"):
+            bad_o = n_bad(docs, "tok_starts_bin", "tok_lens_bin",
+                          "offs_crc32")
             if bad_o:
                 problems.append(
                     f"{bad_o} docs failed token-offset sidecar verification"

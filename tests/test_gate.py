@@ -4,7 +4,8 @@ constant, and PYSEARCH_LOCAL_MAX_POSTINGS=0 turns every driver-local path
 of a Searcher off.  Also pins the one catalog cache (Searcher._catalog)
 that the NRT anti-joins and the engine-backed ops share, on both sides of
 its gate and across an index refresh, and scans for hand copies of the BM25
-arithmetic outside the scoring modules."""
+arithmetic outside the scoring modules and of the stored formats and
+document shaping outside codec.py and build.py."""
 
 import ast
 import os
@@ -74,6 +75,32 @@ def test_no_hand_copied_bm25():
          or (isinstance(node, ast.alias) and node.name == "K1")
          or (isinstance(node, ast.Attribute) and node.attr == "K1")})
     assert set(users) <= {"score.py", "oracle.py", "query.py"}, users
+
+
+def test_one_home_per_stored_format():
+    """codec.py alone imports zlib, so every stored payload and its CRC is
+    encoded and checked there; build.py alone shapes documents, so no other
+    module refers to extract_text_series (corpus.py defines it) or builds
+    the content hash with sha2."""
+    zlib_users, shapers = set(), set()
+    for name in sorted(os.listdir(PKG)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(PKG, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if ((isinstance(node, ast.Import)
+                 and any(a.name == "zlib" for a in node.names))
+                    or (isinstance(node, ast.ImportFrom)
+                        and node.module == "zlib")):
+                zlib_users.add(name)
+            ref = (node.id if isinstance(node, ast.Name)
+                   else node.attr if isinstance(node, ast.Attribute)
+                   else node.name if isinstance(node, ast.alias) else None)
+            if ref in ("extract_text_series", "sha2"):
+                shapers.add(name)
+    assert zlib_users == {"codec.py"}, zlib_users
+    assert shapers == {"build.py"}, shapers
 
 
 @pytest.fixture(scope="module")

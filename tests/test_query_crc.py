@@ -1,9 +1,10 @@
 """Query-time verify-before-decode: a posting block whose stored CRC no
 longer matches its payload must fail the query, never score silently —
 for every query entry point, on the driver-local fetch and on the
-distributed one.  Tampering reuses the steps of
+distributed one; and ``verify_index`` must flag the same tampering.
+Tampering reuses the steps of
 test_engine.test_verify_index_flags_tampering: flip a stored CRC in a
-postings part file and drop the stale Hadoop checksum sidecar."""
+postings (or docs) part file and drop the stale Hadoop checksum sidecar."""
 
 import glob
 import os
@@ -32,18 +33,20 @@ def clean_index(spark, tmp_path_factory):
 
 
 def _tampered_copy(src: str, dst: str, column: str) -> str:
-    """Copy ``src`` to ``dst`` and flip ``column`` (crc32 or pos_crc32)
-    on every block of TERM in the postings part files."""
+    """Copy ``src`` to ``dst`` and flip ``column``: crc32 or pos_crc32 on
+    every block of TERM in the postings part files, offs_crc32 on every
+    doc in the docs part files."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     shutil.copytree(src, dst)
+    table = "docs" if column == "offs_crc32" else "postings"
     flipped = 0
-    for part in sorted(glob.glob(f"{dst}/postings/commit-*/**/*.parquet",
+    for part in sorted(glob.glob(f"{dst}/{table}/commit-*/**/*.parquet",
                                  recursive=True)):
         t = pq.read_table(part)
         pdf = t.to_pandas()
-        rows = pdf["term"] == TERM
+        rows = (pdf["doc_id"] > 0) if table == "docs" else pdf["term"] == TERM
         if not rows.any():
             continue
         pdf.loc[rows, column] = pdf.loc[rows, column].astype("int64") ^ 1
@@ -54,7 +57,7 @@ def _tampered_copy(src: str, dst: str, column: str) -> str:
         if os.path.exists(side):
             os.remove(side)
         flipped += int(rows.sum())
-    assert flipped, f"no {TERM} blocks found to tamper"
+    assert flipped, f"no {table} rows found to tamper"
     return dst
 
 
@@ -67,10 +70,12 @@ def _pruned(s):
         s.prune_min_postings = old
 
 
-def _calls(positional: bool, distributed: bool):
-    """Calls that must read TERM's blocks.  A positions CRC is checked
-    only by the calls that decode positions: the positional modes and
-    search()'s spans."""
+def _calls(column: str, distributed: bool):
+    """Calls that must read the tampered payload.  A positions CRC is
+    checked only by the calls that decode positions: the positional modes
+    and search()'s spans; a token-offset CRC only by search()'s spans."""
+    if column == "offs_crc32":
+        return [lambda s: s.search(QUERY, case_id="7").collect()]
     two = {"a": QUERY, "b": PHRASE}
     phrase = [
         lambda s: s.search_ids(PHRASE, case_id="7", mode="phrase"),
@@ -78,7 +83,7 @@ def _calls(positional: bool, distributed: bool):
         lambda s: s.search_ids_many(two, case_id="7", mode="phrase"),
         lambda s: s.search(QUERY, case_id="7").collect(),
     ]
-    if positional:
+    if column == "pos_crc32":
         return phrase
     return phrase + [
         lambda s: s.search_ids(QUERY, case_id="7"),
@@ -90,7 +95,7 @@ def _calls(positional: bool, distributed: bool):
     ] + ([_pruned] if distributed else [])
 
 
-@pytest.mark.parametrize("column", ["crc32", "pos_crc32"])
+@pytest.mark.parametrize("column", ["crc32", "pos_crc32", "offs_crc32"])
 @pytest.mark.parametrize("path", ["local", "distributed"])
 def test_query_refuses_tampered_blocks(spark, clean_index, tmp_path, column,
                                        path):
@@ -100,12 +105,29 @@ def test_query_refuses_tampered_blocks(spark, clean_index, tmp_path, column,
     clean = Searcher(spark, clean_index)
     s = Searcher(spark, _tampered_copy(clean_index, str(tmp_path / "ix"),
                                        column))
-    raises = IOError
+    # search()'s spans decode the token-offset sidecar in an executor on
+    # both paths
+    raises = IOError if column != "offs_crc32" else Exception
     if path == "distributed":
         clean.local_max_postings = s.local_max_postings = 0
         raises = Exception
-    for call in _calls(positional=column == "pos_crc32",
-                       distributed=path == "distributed"):
+    for call in _calls(column, distributed=path == "distributed"):
         call(clean)  # the untampered index answers
         with pytest.raises(raises, match="CRC mismatch"):
             call(s)
+
+
+@pytest.mark.parametrize("column", ["pos_crc32", "offs_crc32"])
+def test_verify_index_flags_payload_tampering(spark, clean_index, tmp_path,
+                                              column):
+    """verify_index checks every stored CRC through the codec: a flipped
+    positions CRC and a flipped token-offset sidecar CRC are both flagged
+    (test_engine's tampering test flips the block crc32)."""
+    from pysearch.verify import verify_index
+
+    assert verify_index(spark, clean_index) == []
+    problems = verify_index(spark, _tampered_copy(
+        clean_index, str(tmp_path / "ix"), column))
+    want = ("posting blocks failed CRC32" if column == "pos_crc32"
+            else "docs failed token-offset sidecar")
+    assert any(want in p for p in problems), problems
