@@ -361,11 +361,10 @@ def score_arriving_batch(batch_df, queries: dict, k: int = 10,
     scan, no positions shuffle).  Phrase hits score bit-identically to
     their mode="all" scores, as in the engine."""
     from pysearch.analyze import get_analyzer
+    from pysearch.build import shape_webtext
 
     if mode not in ("any", "all", "phrase"):
         raise ValueError(f"mode must be 'any', 'all' or 'phrase', got {mode!r}")
-    from pysearch.build import shape_webtext
-
     an, _, _ = get_analyzer(analyzer)
     analyzed = {qid: an(q) for qid, q in queries.items()}
     spark = batch_df.sparkSession
