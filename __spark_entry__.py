@@ -35,9 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     from pysearch.build import build_index
     from pysearch.query import Searcher
-    from pysearch.session import _ensure_pythonpath
 
-    _ensure_pythonpath()
     _ship_package(spark)
     sf_dir = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

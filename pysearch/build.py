@@ -763,6 +763,16 @@ def _n_per_case_df(spark, layout: IndexLayout):
     )
 
 
+def _block_frame(blocks):
+    """A posting-block frame with the stats tables' key types: case_id a
+    string, term_bucket an int."""
+    from pyspark.sql import functions as F
+
+    return blocks.withColumn(
+        "case_id", F.col("case_id").cast("string")
+    ).withColumn("term_bucket", F.col("term_bucket").cast("int"))
+
+
 def _term_stats_of(blocks):
     """Per-term (df, cf) aggregate over a posting-block frame."""
     from pyspark.sql import functions as F
@@ -777,6 +787,36 @@ def _term_stats_of(blocks):
              F.col("df").cast("long"), F.col("cf").cast("long"))
 
 
+def _write_term_stats(term_stats, path: str) -> None:
+    """Write a term_stats frame under ``path``, partitioned by term_bucket
+    with each bucket's rows sorted by (case_id, term) — a sort within the
+    write's partitions, which adds no Spark job."""
+    (
+        term_stats.repartition("term_bucket")
+        .sortWithinPartitions("term_bucket", "case_id", "term")
+        .write.mode("overwrite")
+        .partitionBy("term_bucket")
+        .parquet(path)
+    )
+
+
+def _corpus_stats_of(n_per_case, frame, tf_col: str):
+    """corpus_stats rows (case_id, n_docs, sum_dl, avgdl): the per-case doc
+    counts left-joined with the per-case sum of ``tf_col`` over ``frame``.
+    ``sum_tf`` over posting blocks and ``cf`` over term_stats both sum to
+    the case's analyzed token count, i.e. its sum of doc lengths (exact
+    integers), so avgdl needs no docs or text re-scan."""
+    from pyspark.sql import functions as F
+
+    dl_per_case = frame.groupBy("case_id").agg(
+        F.sum(tf_col).cast("long").alias("sum_dl"))
+    return (
+        n_per_case.join(dl_per_case, "case_id", "left")
+        .fillna({"sum_dl": 0})
+        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
+    )
+
+
 def _write_corpus_stats_from_term_stats(spark, layout: IndexLayout) -> None:
     """Rewrite corpus_stats from manifest doc counts + the term_stats table.
 
@@ -784,29 +824,13 @@ def _write_corpus_stats_from_term_stats(spark, layout: IndexLayout) -> None:
     lengths (exact integer identity), so avgdl never needs a postings or
     docs re-scan — an O(vocabulary) narrow column scan at most.  Fully
     deterministic from committed state, hence idempotent across crashes."""
-    from pyspark.sql import functions as F
-
     from pysearch.schema import TERM_STATS
 
-    n_per_case = _n_per_case_df(spark, layout)
     ts = layout.read_commits(spark, layout.term_stats, schema=TERM_STATS)
-    dl_per_case = ts.groupBy("case_id").agg(
-        F.sum("cf").cast("long").alias("sum_dl")
-    )
-    corpus_stats = (
-        n_per_case.join(dl_per_case, "case_id", "left")
-        .fillna({"sum_dl": 0})
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-    )
     staging = layout.staging_dir("corpus_stats")
-    corpus_stats.coalesce(1).write.mode("overwrite").parquet(staging)
-    _commit_stats_rotating(layout, "corpus_stats", staging)
-
-
-def _commit_stats_rotating(layout: IndexLayout, name: str, staging: str,
-                           clear_current: bool = False) -> None:
-    """Single-table convenience wrapper over ``_commit_stats_tables``."""
-    _commit_stats_tables(layout, [(name, staging, clear_current)])
+    _corpus_stats_of(_n_per_case_df(spark, layout), ts, "cf").coalesce(
+        1).write.mode("overwrite").parquet(staging)
+    _commit_stats_tables(layout, [("corpus_stats", staging, False)])
 
 
 def _commit_stats_tables(layout: IndexLayout, staged: list) -> None:
@@ -850,54 +874,36 @@ def build_finalize_stage(spark, layout: IndexLayout) -> None:
     """Full-index stats recompute (fresh builds).  Appends and streaming
     micro-batches use ``build_finalize_delta`` instead, which touches only
     the new postings batches — O(delta), not O(index)."""
-    from pyspark.sql import functions as F
-
     from pysearch.schema import POSTING_BLOCKS
 
     t0 = time.time()
-    blocks = layout.read_commits(
-        spark, layout.postings, schema=POSTING_BLOCKS
-    ).withColumn(
-        "case_id", F.col("case_id").cast("string")
-    ).withColumn("term_bucket", F.col("term_bucket").cast("int"))
-
+    blocks = _block_frame(layout.read_commits(
+        spark, layout.postings, schema=POSTING_BLOCKS))
     term_stats = _term_stats_of(blocks)
-
-    # avgdl from block metadata: sum(tf) over a doc's postings == its
-    # analyzed token count, so sum(sum_tf) over blocks == sum(doc_len),
-    # exactly (integer arithmetic) — saves a second analyzer pass over text.
-    n_per_case = _n_per_case_df(spark, layout)
-    dl_per_case = blocks.groupBy("case_id").agg(
-        F.sum("sum_tf").cast("long").alias("sum_dl")
-    )
-    corpus_stats = (
-        n_per_case.join(dl_per_case, "case_id", "left")
-        .fillna({"sum_dl": 0})
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-    )
+    # avgdl from block metadata — saves a second analyzer pass over text
+    corpus_stats = _corpus_stats_of(_n_per_case_df(spark, layout), blocks,
+                                    "sum_tf")
 
     # the two table writes are independent — submit them as concurrent
     # Spark jobs (thread-safe by design) so their stage latencies overlap
     # (doc_map is written by the docs stage, from cached partitions)
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write_term_stats():
+    def stage_term_stats():
         staging = layout.staging_dir("term_stats")
-        term_stats.repartition("term_bucket").write.mode("overwrite").partitionBy(
-            "term_bucket"
-        ).parquet(staging)
+        _write_term_stats(term_stats, staging)
         # a full recompute covers everything: clear any delta commits a
         # previous append left when installing in place
         return ("term_stats", staging, True)
 
-    def _write_corpus_stats():
+    def stage_corpus_stats():
         staging = layout.staging_dir("corpus_stats")
         corpus_stats.coalesce(1).write.mode("overwrite").parquet(staging)
         return ("corpus_stats", staging, False)
 
     with ThreadPoolExecutor(max_workers=2) as ex:
         futures = [ex.submit(f) for f in
-                   (_write_term_stats, _write_corpus_stats)]
+                   (stage_term_stats, stage_corpus_stats)]
         staged = [fut.result() for fut in futures]
     # both stats trees flip visible in ONE manifest write: a reader must
     # never freeze new term_stats against stale corpus_stats (df > n_docs)
@@ -932,8 +938,6 @@ def build_finalize_delta(spark, layout: IndexLayout) -> None:
     rewrites the same content in place (``replace=True``) — double-folding
     is impossible, whatever step a previous attempt died at.  Falls back to
     the full recompute for legacy indexes with no fold bookkeeping."""
-    from pyspark.sql import functions as F
-
     fin = layout.read_manifest().get("stages", {}).get("finalize", {})
     folded = fin.get("folded")
     if folded is None:
@@ -949,13 +953,10 @@ def build_finalize_delta(spark, layout: IndexLayout) -> None:
         commit_dir = os.path.join(layout.postings, f"commit-{b:05d}")
         if not _has_parquet(commit_dir):
             continue  # zero-block batch (all tokens stopped out)
-        blocks = spark.read.parquet(commit_dir).withColumn(
-            "case_id", F.col("case_id").cast("string")
-        ).withColumn("term_bucket", F.col("term_bucket").cast("int"))
         staging = layout.staging_dir("term_stats")
-        _term_stats_of(blocks).repartition("term_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("term_bucket").parquet(staging)
+        _write_term_stats(
+            _term_stats_of(_block_frame(spark.read.parquet(commit_dir))),
+            staging)
         layout.commit_batch(staging, layout.term_stats, b, replace=True)
     _write_corpus_stats_from_term_stats(spark, layout)
     layout.append_lineage(spark, [{

@@ -253,6 +253,8 @@ def compact_index(spark, index_dir: str,
     carried by the same single manifest commit."""
     from pyspark.sql import functions as F
 
+    from pysearch.build import (_block_frame, _corpus_stats_of,
+                                _term_stats_of, _write_term_stats)
     from pysearch.schema import DOCS, POSTING_BLOCKS, TERM_STATS
 
     layout = IndexLayout(index_dir)
@@ -322,25 +324,12 @@ def compact_index(spark, index_dir: str,
         )
     counts = None
     if purge:
-        # exact stats recompute from the PURGED blocks — identical
-        # arithmetic to build_finalize_stage (df=sum n, cf=sum sum_tf;
-        # sum_dl = sum sum_tf per case; avgdl = sum_dl / n_docs as one
-        # integer division), so a fresh build of the surviving corpus
-        # produces bit-identical scores
-        from pysearch.build import _term_stats_of
-
-        staged = spark.read.parquet(
-            _stage_root("postings")
-        ).withColumn("case_id", F.col("case_id").cast("string")).withColumn(
-            "term_bucket", F.col("term_bucket").cast("int"))
-        (
-            _term_stats_of(staged)
-            .repartition("term_bucket")
-            .sortWithinPartitions("term_bucket", "case_id", "term")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(_stage_root("term_stats"))
-        )
+        # exact stats recompute from the PURGED blocks through the fresh
+        # build's own stats helpers (df=sum n, cf=sum sum_tf; sum_dl = sum
+        # sum_tf per case; avgdl = sum_dl / n_docs), so a fresh build of
+        # the surviving corpus produces bit-identical scores
+        staged = _block_frame(spark.read.parquet(_stage_root("postings")))
+        _write_term_stats(_term_stats_of(staged), _stage_root("term_stats"))
         staged_docs = spark.read.parquet(
             _stage_root("docs")
         ).withColumn("case_id", F.col("case_id").cast("string"))
@@ -352,16 +341,8 @@ def compact_index(spark, index_dir: str,
         n_per_case = spark.createDataFrame(
             [(k, v) for k, v in counts.items()],
             schema="case_id string, n_docs long")
-        dl_per_case = staged.groupBy("case_id").agg(
-            F.sum("sum_tf").cast("long").alias("sum_dl"))
-        (
-            n_per_case.join(dl_per_case, "case_id", "left")
-            .fillna({"sum_dl": 0})
-            .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-            .filter(F.col("n_docs") > 0)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(_stage_root("corpus_stats"))
-        )
+        _corpus_stats_of(n_per_case, staged, "sum_tf").coalesce(
+            1).write.mode("overwrite").parquet(_stage_root("corpus_stats"))
         # empty next-generation tombstones tree: the flip installs a
         # commit-less table, i.e. "no pending deletes"
         os.makedirs(layout.table_path(
@@ -370,17 +351,12 @@ def compact_index(spark, index_dir: str,
         # delta finalize appends one stats commit per postings batch; the
         # consolidated table SUMS them (df/cf are additive per term)
         ts = layout.read_commits(spark, layout.term_stats, schema=TERM_STATS)
-        (
+        _write_term_stats(
             ts.groupBy("case_id", "term", "term_bucket")
             .agg(F.sum("df").cast("long").alias("df"),
                  F.sum("cf").cast("long").alias("cf"))
-            .select("case_id", "term", "term_bucket", "df", "cf")
-            .repartition("term_bucket")
-            .sortWithinPartitions("term_bucket", "case_id", "term")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(_stage_root("term_stats"))
-        )
+            .select("case_id", "term", "term_bucket", "df", "cf"),
+            _stage_root("term_stats"))
 
     # 2. consolidated lineage: same history, but done docs/postings rows
     #    renumbered to the consolidated batch 0 so commit<->lineage coverage

@@ -276,156 +276,162 @@ def _source_fp(spark, sf_dir, docs) -> str:
     return _ENGINE_FP_CACHE[key]
 
 
-def _ensure_engine_index(spark, sf_dir):
-    """Build-or-reuse the on-disk engine index over `documents` (simple
-    analyzer, positions stored, content-fingerprint staleness guard);
-    returns (index_dir, fingerprint)."""
-    import os
+# the engine fixtures' catalog urls carry the source doc_id: _webtext writes
+# the prefix plus the id zero-padded to 9 digits, _source_id reads it back
+_URL_PREFIX = "doc://docs/"
 
+
+def _webtext(docs, *cols):
+    """``docs`` (the source table) as engine input: the source doc_id
+    encoded as the url, plus ``cols``."""
     from pyspark.sql import functions as F
 
-    from pysearch.build import build_index
-    from pysearch.session import _ensure_pythonpath, ship_package
+    return docs.select(
+        F.format_string(_URL_PREFIX + "%09d", F.col("doc_id")).alias("url"),
+        *cols)
+
+
+def _source_id(url):
+    """The source doc_id a ``_webtext`` url column encodes, as a long."""
+    from pyspark.sql import functions as F
+
+    return F.substring(url, len(_URL_PREFIX) + 1, 9).cast("long")
+
+
+def _ensure_index(spark, sf_dir, tag: str, make):
+    """The one build-or-reuse rule of the ops' fixture indexes under /tmp.
+
+    The variant ``tag`` ("" for the shared index) names the directory.  A
+    fixture is reused iff its manifest carries the stamp
+    ``source fingerprint|INDEX_FORMAT_VERSION|tag``, which is written as
+    the LAST step — so a regenerated source, a format bump, another
+    variant and a build that died half way all fail the check.  Otherwise
+    the directory is removed and ``make(index_dir, docs)`` builds it from
+    scratch over the source ``docs``, returning any extra manifest fields.
+    Returns (index_dir, manifest)."""
+    import os
+    import shutil
+
+    from pysearch.lineage import IndexLayout
+    from pysearch.session import ship_package
+    from pysearch.version import INDEX_FORMAT_VERSION
 
     # the driver may own this session: the build's pandas UDFs need the
     # package on the executors
-    _ensure_pythonpath()
     ship_package(spark)
-
     docs = _t(spark, sf_dir, "documents")
-    webtext = docs.select(
-        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
-        "text",
-        "lang",
-    )
     label = os.path.basename(sf_dir.rstrip("/"))
-    index_dir = f"/tmp/pysearch_ops_index_{label}"
-    # staleness guard: resume=True would happily reuse an index built from
-    # different data or a different analyzer — key the cache on a content
-    # fingerprint of the source (count + order-insensitive row hash), not
-    # just the doc count (ADVICE r1: a regenerated source with >= docs
-    # silently reused a stale index)
-    from pysearch.lineage import IndexLayout
-
-    fp = _source_fp(spark, sf_dir, docs)
-    from pysearch.version import INDEX_FORMAT_VERSION
-
+    index_dir = f"/tmp/pysearch_ops_index_{label}" + (f"_{tag}" if tag else "")
+    stamp = f"{_source_fp(spark, sf_dir, docs)}|{INDEX_FORMAT_VERSION}|{tag}"
     layout = IndexLayout(index_dir)
     m = layout.read_manifest()
-    if (m.get("format_version") == INDEX_FORMAT_VERSION
-            and m.get("analyzer") == "simple" and m.get("positions")
-            and m.get("source_fp") == fp
-            and m.get("stages", {}).get("finalize", {}).get("done")):
-        # complete index over exactly this source: nothing for
-        # build_index(resume=True) to do — returning here skips its
-        # recovery sweep (staging GC + a lineage-table Spark job per
-        # invocation, measured ~0.3s of pure overhead per engine op)
-        return index_dir, fp
-    if m and (m.get("format_version") != INDEX_FORMAT_VERSION
-              or m.get("analyzer") != "simple" or m.get("source_fp") != fp
-              or not m.get("positions")):
-        import shutil
-
+    if m.get("source_fp") != stamp:
         shutil.rmtree(index_dir, ignore_errors=True)
-    build_index(spark, webtext, index_dir, segment_size=128,
-                analyzer="simple", resume=True, store_positions=True)
-    m2 = layout.read_manifest()
-    if m2.get("source_fp") != fp:
-        layout.write_manifest({**m2, "source_fp": fp})
-    return index_dir, fp
+        extra = make(index_dir, docs) or {}
+        m = {**layout.read_manifest(), **extra, "source_fp": stamp}
+        layout.write_manifest(m)
+    return index_dir, m
 
 
-def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
-                          at_version=None, window=None, filter_source=None,
-                          offset: int = 0, filter_source_ids=None,
-                          exclude_source_ids=None):
-    """Run the query through the engine at ``index_dir`` and map engine
-    doc_ids back to the source table's doc_id via the catalog url (robust
-    even when content dedupe dropped duplicate texts).  ``at_version``
-    pins the search to an archived snapshot (time-travel read);
-    ``window`` is the mode="near" proximity window; ``filter_source`` is a
-    DataFrame of SOURCE doc_ids to admit (filter context) — mapped to
-    engine doc_ids via the catalog url (a distributed semi-join; the set
-    never reaches the driver).
+def _engine_index(spark, sf_dir) -> str:
+    """The shared engine index over `documents` (simple analyzer,
+    positions stored)."""
+    from pysearch.build import build_index
 
-    ``filter_source_ids`` / ``exclude_source_ids`` are the driver-RESIDENT
-    filter forms (numpy arrays of SOURCE ids to admit / to drop): under
-    the LOCAL_MAX_CATALOG gate they map to engine ids through the
-    Searcher's cached catalog and feed the engine's driver-side filter
-    path (no distributed job for the whole filtered query); above the gate
-    they convert to the same distributed semi-join as ``filter_source``.
-    Both id<->url mapping directions use the cached catalog when
-    available, replacing a broadcast-join job per op invocation with an
-    O(hits) array lookup."""
+    def make(index_dir, docs):
+        build_index(spark, _webtext(docs, "text", "lang"), index_dir,
+                    segment_size=128, analyzer="simple",
+                    store_positions=True)
+
+    return _ensure_index(spark, sf_dir, "", make)[0]
+
+
+def _source_catalog(s):
+    """The Searcher's cached case-0 catalog with the source ids of its urls
+    memoized as ``src_id``, or None above the catalog gate."""
     import numpy as np
     import pandas as pd
+
+    cat = s._catalog("0")
+    if cat is not None and "src_id" not in cat:
+        cat["src_id"] = pd.Series(cat["url"]).str.slice(
+            len(_URL_PREFIX)).astype(np.int64).to_numpy()
+    return cat
+
+
+def _hits_to_source_ids(spark, s, hits):
+    """Engine hits ``(doc_id, score)`` of Searcher ``s`` as source
+    ``(doc_id, score_r)`` rows: an O(hits) searchsorted over the cached
+    catalog map, or a broadcast join with the docs table above the catalog
+    gate."""
     from pyspark.sql import functions as F
 
     from pysearch.query import catalog_take
 
+    schema = "doc_id long, score_r double"
+    out = hits.assign(score_r=hits["score"].round(4))
+    cat = _source_catalog(s)
+    if cat is not None:
+        out = out.assign(doc_id=catalog_take(cat, "src_id", hits["doc_id"]))
+        return spark.createDataFrame(out[["doc_id", "score_r"]], schema)
+    return (
+        spark.createDataFrame(out[["doc_id", "score_r"]], schema)
+        .join(F.broadcast(s.docs.select("doc_id", "url")), "doc_id")
+        .select(_source_id("url").alias("doc_id"), "score_r")
+    )
+
+
+def _search_to_source_ids(spark, index_dir, mode: str, terms=None,
+                          at_version=None, window=None, filter_source=None,
+                          offset: int = 0, exclude_source_ids=None):
+    """Run the query through the engine at ``index_dir`` and map engine
+    doc_ids back to the source table's doc_id via the catalog url (robust
+    even when content dedupe dropped duplicate texts).  ``at_version``
+    pins the search to an archived snapshot (time-travel read);
+    ``window`` is the mode="near" proximity window.
+
+    ``filter_source`` is a DataFrame of SOURCE doc_ids to admit (filter
+    context), ``exclude_source_ids`` a numpy array of SOURCE ids to drop.
+    When the Searcher's catalog is cached (its LOCAL_MAX_CATALOG gate),
+    both map to engine ids through it — the filter set is collected in
+    one column-pruned scan — and feed the engine's driver-side filter path
+    (no distributed job for the whole filtered query); otherwise they
+    become a distributed semi-/anti-join of the docs table on url."""
+    import numpy as np
+    import pandas as pd
+
     s = _get_searcher(spark, index_dir, at_version=at_version)
     s._check_fresh()  # the catalog below must match the searched load
-    cat = s._catalog("0")
-    if cat is not None and "src_id" not in cat:
-        # the ops build their engine corpora with doc://docs/%09d urls
-        cat["src_id"] = pd.Series(cat["url"]).str.slice(
-            len("doc://docs/")).astype(np.int64).to_numpy()
+    cat = _source_catalog(s)
     fd = None
     if exclude_source_ids is not None:
         # allowed = every indexed doc NOT in the (bounded) drop set —
         # exact complement of filter_source over the engine catalog
+        drop = np.unique(exclude_source_ids)
         if cat is not None:
-            fd = cat["doc_id"][~np.isin(cat["src_id"],
-                                        np.unique(exclude_source_ids))]
+            fd = cat["doc_id"][~np.isin(cat["src_id"], drop)]
         else:
-            drop = spark.createDataFrame(
-                pd.DataFrame({"doc_id": np.unique(exclude_source_ids)}),
-                schema="doc_id long")
-            urls = drop.select(F.format_string(
-                "doc://docs/%09d", F.col("doc_id")).alias("url"))
+            urls = _webtext(spark.createDataFrame(
+                pd.DataFrame({"doc_id": drop}), schema="doc_id long"))
             fd = s.docs.join(urls, "url", "left_anti").select("doc_id")
-    elif filter_source_ids is not None:
+    elif filter_source is not None:
         if cat is not None:
-            fd = cat["doc_id"][np.isin(cat["src_id"],
-                                       np.unique(filter_source_ids))]
+            ids = filter_source.toPandas()["doc_id"].to_numpy(np.int64)
+            fd = cat["doc_id"][np.isin(cat["src_id"], np.unique(ids))]
         else:
-            filter_source = spark.createDataFrame(
-                pd.DataFrame({"doc_id": np.unique(filter_source_ids)}),
-                schema="doc_id long")
-    if filter_source is not None:
-        urls = filter_source.select(
-            F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"))
-        fd = s.docs.join(urls, "url", "left_semi").select("doc_id")
+            fd = s.docs.join(_webtext(filter_source), "url",
+                             "left_semi").select("doc_id")
     hits = s.search_ids(" ".join(terms or _BM25_TERMS), k=10, case_id="0",
                         mode=mode, window=window, filter_docs=fd,
                         offset=offset)
-    if cat is not None:
-        # engine ids -> source ids driver-side (O(hits) searchsorted over
-        # the cached map)
-        out = hits.assign(
-            doc_id=catalog_take(cat, "src_id", hits["doc_id"]),
-            score_r=hits["score"].round(4))[["doc_id", "score_r"]]
-        return spark.createDataFrame(out,
-                                     schema="doc_id long, score_r double")
-    hits_df = spark.createDataFrame(
-        hits.assign(score_r=hits["score"].round(4))[["doc_id", "score_r"]],
-        schema="doc_id long, score_r double",
-    )
-    return (
-        hits_df.join(F.broadcast(s.docs.select("doc_id", "url")), "doc_id")
-        .select(
-            F.substring("url", len("doc://docs/") + 1, 9).cast("long").alias("doc_id"),
-            "score_r",
-        )
-    )
+    return _hits_to_source_ids(spark, s, hits)
 
 
 def _engine_search(spark, sf_dir, mode: str, terms=None, window=None):
     """The REAL engine end-to-end over `documents`: ensure the shared index,
     search, map back to source doc_ids."""
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
-    return _search_to_source_ids(spark, index_dir, mode, terms,
-                                 window=window)
+    return _search_to_source_ids(spark, _engine_index(spark, sf_dir), mode,
+                                 terms, window=window)
 
 
 @op("t1_engine_bm25_top10", _BM25_SQL)
@@ -692,8 +698,8 @@ def t1_engine_page2_top10(spark, sf_dir):
     tradeoff) and pruning θ is the (offset+k)th score, keeping block-max
     pruning lossless for any page.  Value-checked against the DuckDB BM25
     with LIMIT 10 OFFSET 10."""
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
-    return _search_to_source_ids(spark, index_dir, mode="any", offset=10)
+    return _search_to_source_ids(spark, _engine_index(spark, sf_dir),
+                                 mode="any", offset=10)
 
 
 # total-hits oracle: match count under mode="any" over the content-deduped
@@ -720,8 +726,7 @@ def t1_engine_count(spark, sf_dir):
     reach the driver (and a single-term unfiltered count short-circuits
     to term_stats df metadata with no decode at all).  Value-checked
     against a DuckDB COUNT(DISTINCT) over the same deduped corpus."""
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
-    s = _get_searcher(spark, index_dir)
+    s = _get_searcher(spark, _engine_index(spark, sf_dir))
     n = s.count(" ".join(_BM25_TERMS), case_id="0", mode="any")
     return spark.createDataFrame([(n,)], "n_hits long")
 
@@ -742,32 +747,22 @@ _BM25_FILTER_LANG_SQL = _BM25_SQL.replace(
 def t1_engine_filter_lang_top10(spark, sf_dir):
     """FILTERED search through the real engine (the Lucene filter-context
     model): BM25 top-10 restricted to lang='en' source docs, passed as a
-    ``filter_docs`` DataFrame (any distributed doc set gates the search —
-    no driver collect, no broadcast: the allowed set shuffles once on
-    segment_id and cogroups with the posting blocks, and WAND/block-max
-    pruning stays lossless because phase-1 θ is established from FILTERED
-    scores).  idf/avgdl stay corpus-wide per Lucene filter semantics, so
-    filtered scores are bit-identical to unfiltered ones — value-checked
-    against a DuckDB BM25 with the same corpus-wide stats and a lang gate
-    on the final candidates."""
-    import numpy as np
+    DataFrame of source ids.  Under the Searcher's catalog gate the ids are
+    collected in one column-pruned scan and the whole filtered query runs
+    on the engine's driver-side filter path; above it the set gates the
+    search distributively — no driver collect, no broadcast: it shuffles
+    once on segment_id and cogroups with the posting blocks, and
+    WAND/block-max pruning stays lossless because phase-1 θ is
+    established from FILTERED scores.  idf/avgdl stay corpus-wide per
+    Lucene filter semantics, so filtered scores are bit-identical to
+    unfiltered ones — value-checked against a DuckDB BM25 with the same
+    corpus-wide stats and a lang gate on the final candidates."""
     from pyspark.sql import functions as F
 
-    index_dir, fp = _ensure_engine_index(spark, sf_dir)
     en = _t(spark, sf_dir, "documents").filter(
         F.col("lang") == "en").select("doc_id")
-    # the source row count rides in the fingerprint: when the corpus is
-    # small enough for the driver-cached catalog map, collect the allowed
-    # ids in ONE column-pruned scan and run the whole filtered query on
-    # the engine's driver-side filter path; above the gate the r5
-    # distributed semi-join + cogroup runs unchanged
-    n_src = int(fp.split(":", 1)[0])
-    if 0 < n_src <= gate.LOCAL_MAX_CATALOG:
-        ids = en.toPandas()["doc_id"].to_numpy(np.int64)
-        return _search_to_source_ids(spark, index_dir, mode="any",
-                                     filter_source_ids=ids)
-    return _search_to_source_ids(spark, index_dir, mode="any",
-                                 filter_source=en)
+    return _search_to_source_ids(spark, _engine_index(spark, sf_dir),
+                                 mode="any", filter_source=en)
 
 
 # fuzzy oracle (Lucene FuzzyQuery: 'sparh~1 fast~1'): each query term
@@ -945,8 +940,7 @@ def t1_engine_suggest_top3(spark, sf_dir):
     the length-band prefilter pushed to the scan and the per-term cap
     applied IN Spark.  Value-checked against a DuckDB levenshtein sweep
     of the same deduped corpus's vocabulary."""
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
-    s = _get_searcher(spark, index_dir)
+    s = _get_searcher(spark, _engine_index(spark, sf_dir))
     return s.suggest(list(_SUGGEST_TERMS), case_id="0")
 
 
@@ -1003,25 +997,13 @@ def t1_engine_mlt_top10(spark, sf_dir):
     same deduped corpus."""
     from pyspark.sql import functions as F
 
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
+    s = _get_searcher(spark, _engine_index(spark, sf_dir))
     text = (_t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") == _MLT_DOC_ID)
             .select("text").collect()[0]["text"])
-    s = _get_searcher(spark, index_dir)
     hits = s.more_like_this(text, k=10, case_id="0",
                             max_query_terms=_MLT_TERMS_N)
-    hits_df = spark.createDataFrame(
-        hits.assign(score_r=hits["score"].round(4))[["doc_id", "score_r"]],
-        schema="doc_id long, score_r double",
-    )
-    return (
-        hits_df.join(F.broadcast(s.docs.select("doc_id", "url")), "doc_id")
-        .select(
-            F.substring("url", len("doc://docs/") + 1, 9).cast("long")
-            .alias("doc_id"),
-            "score_r",
-        )
-    )
+    return _hits_to_source_ids(spark, s, hits)
 
 
 # delete oracle: identical BM25 chain, but docs with doc_id % 7 == 0 are
@@ -1038,37 +1020,28 @@ _BM25_DELETED_SQL = _BM25_SQL.replace(
 ).replace("AS term FROM dedup),", "AS term FROM del),")
 
 
-def _ensure_deleted_index(spark, sf_dir):
+def _deleted_index(spark, sf_dir) -> str:
     """A copy of the shared engine index with source doc_id % _DEL_MOD == 0
     docs tombstoned (delete.delete_docs by url predicate) AND physically
     purged (compact.compact_index) — the whole delete pipeline runs inside
-    the oracle gate.  Cached per source fingerprint like the base index."""
+    the oracle gate."""
     import shutil
 
     from pysearch.compact import compact_index
     from pysearch.delete import delete_docs
-    from pysearch.lineage import IndexLayout
 
-    base_dir, fp = _ensure_engine_index(spark, sf_dir)
-    del_dir = base_dir + "_del"
-    want = f"{fp}|del%{_DEL_MOD}"
-    layout = IndexLayout(del_dir)
-    if layout.read_manifest().get("source_fp") != want:
-        shutil.rmtree(del_dir, ignore_errors=True)
-        shutil.copytree(base_dir, del_dir)
-        # source doc_id rides in the catalog url (doc://docs/%09d)
-        n = delete_docs(
-            spark, del_dir,
-            predicate=("CAST(substring(url, 12, 9) AS LONG) "
-                       f"% {_DEL_MOD} = 0"),
-        )
-        res = compact_index(spark, del_dir)
+    def make(index_dir, docs):
+        shutil.copytree(_engine_index(spark, sf_dir), index_dir)
+        # the SQL form of _source_id
+        n = delete_docs(spark, index_dir, predicate=(
+            f"CAST(substring(url, {len(_URL_PREFIX) + 1}, 9) AS LONG)"
+            f" % {_DEL_MOD} = 0"))
+        res = compact_index(spark, index_dir)
         if n == 0 or res.get("purged_docs") != n:
             raise RuntimeError(f"delete oracle setup: deleted {n}, "
                                f"purged {res.get('purged_docs')}")
-        m = layout.read_manifest()
-        layout.write_manifest({**m, "source_fp": want})
-    return del_dir
+
+    return _ensure_index(spark, sf_dir, "del", make)[0]
 
 
 @op("t1_engine_deleted_top10", _BM25_DELETED_SQL)
@@ -1080,8 +1053,8 @@ def t1_engine_deleted_top10(spark, sf_dir):
     surviving docs only — value-checks the purge's exact stats recompute,
     not just doc suppression.  (No reference analog: doclib has no delete
     API; this is the Lucene deleted-docs model, SURVEY.md §11.)"""
-    del_dir = _ensure_deleted_index(spark, sf_dir)
-    return _search_to_source_ids(spark, del_dir, mode="any")
+    return _search_to_source_ids(spark, _deleted_index(spark, sf_dir),
+                                 mode="any")
 
 
 @op("st_arrival_bm25_top10", _BM25_SQL)
@@ -1091,84 +1064,59 @@ def st_arrival_bm25_top10(spark, sf_dir):
     top-10 over the documents table with NO persistent index — same dedupe,
     idf, and summation semantics as the engine, value-checked against the
     same independent DuckDB BM25 oracle as t1_engine_bm25_top10."""
+    return _arrival_search(spark, sf_dir, _BM25_TERMS, "any")
+
+
+def _arrival_search(spark, sf_dir, terms, mode: str):
+    """Top-10 of ``terms`` through the arrival scorer over all of
+    `documents`, as source (doc_id, score_r) rows."""
     from pyspark.sql import functions as F
 
-    from pysearch.session import _ensure_pythonpath, ship_package
+    from pysearch.session import ship_package
     from pysearch.streaming import score_arriving_batch
 
-    _ensure_pythonpath()
     ship_package(spark)
-    docs = _t(spark, sf_dir, "documents")
-    webtext = docs.select(
-        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
-        "text",
-    )
     res = score_arriving_batch(
-        webtext, {"q": " ".join(_BM25_TERMS)}, k=10, analyzer="simple"
-    )
-    return res.select(
-        F.substring("url", len("doc://docs/") + 1, 9).cast("long").alias("doc_id"),
-        F.round("score", 4).alias("score_r"),
-    )
+        _webtext(_t(spark, sf_dir, "documents"), "text"),
+        {"q": " ".join(terms)}, k=10, analyzer="simple", mode=mode)
+    return res.select(_source_id("url").alias("doc_id"),
+                      F.round("score", 4).alias("score_r"))
 
 
 _NRT_MOD = 5
 
 
-def _nrt_split(docs):
-    """Split `documents` for the NRT oracle: ~4/5 base (pre-built index) vs
-    ~1/5 arrivals (the unflushed batch), keyed on the CONTENT (crc32 of
-    text) rather than doc_id so exact-duplicate pairs never straddle the
-    split — append's "existing doc wins" dedup then picks the same winners
-    as a full-corpus build, which is what the full-table oracle scores."""
+# the NRT and time-travel split keys (Spark SQL over the text): both are
+# content properties, so exact-duplicate texts never straddle a split and
+# append's "existing doc wins" dedup picks the same winners as one build.
+# The NRT key is a hash (its oracle covers the whole table); the
+# time-travel oracle must filter the same subset in DuckDB, so its key is
+# length(text), which both engines compute identically.
+_NRT_KEY = f"crc32(encode(text, 'utf-8')) % {_NRT_MOD}"
+_TT_KEY = f"length(text) % {_NRT_MOD}"
+
+
+def _split(docs, key: str):
+    """``documents`` as engine webtext, split into (base, arrivals): the
+    rows whose ``key`` is 0 (~1/_NRT_MOD) arrive later."""
     from pyspark.sql import functions as F
 
-    key = F.crc32(F.encode(F.col("text"), "utf-8")) % _NRT_MOD
     present = F.col("text").isNotNull()
-    webtext = docs.select(
-        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
-        "text",
-    )
-    return (webtext.filter(present & (key != 0)),
-            webtext.filter(present & (key == 0)))
+    webtext = _webtext(docs, "text")
+    return (webtext.filter(present & (F.expr(key) != 0)),
+            webtext.filter(present & (F.expr(key) == 0)))
 
 
-def _ensure_nrt_base_index(spark, sf_dir):
-    """Build-or-reuse the engine index over the base side of the NRT split
-    (same build params as the shared engine index; cached per source
-    fingerprint like it)."""
-    import os
-    import shutil
-
+def _nrt_base_index(spark, sf_dir) -> str:
+    """The engine index over the base side of the NRT split (same build
+    params as the shared engine index, no positions)."""
     from pysearch.build import build_index
-    from pysearch.lineage import IndexLayout
-    from pysearch.session import _ensure_pythonpath, ship_package
-    from pysearch.version import INDEX_FORMAT_VERSION
 
-    _ensure_pythonpath()
-    ship_package(spark)
-    docs = _t(spark, sf_dir, "documents")
-    base, _arrivals = _nrt_split(docs)
-    label = os.path.basename(sf_dir.rstrip("/"))
-    index_dir = f"/tmp/pysearch_ops_index_{label}_nrtbase"
-    want = f"{_source_fp(spark, sf_dir, docs)}|nrtbase%{_NRT_MOD}"
-    layout = IndexLayout(index_dir)
-    m = layout.read_manifest()
-    if (m.get("format_version") == INDEX_FORMAT_VERSION
-            and m.get("analyzer") == "simple"
-            and m.get("source_fp") == want
-            and m.get("stages", {}).get("finalize", {}).get("done")):
-        return index_dir  # complete over this split — skip the resume sweep
-    if m and (m.get("format_version") != INDEX_FORMAT_VERSION
-              or m.get("analyzer") != "simple"
-              or m.get("source_fp") != want):
-        shutil.rmtree(index_dir, ignore_errors=True)
-    build_index(spark, base, index_dir, segment_size=128,
-                analyzer="simple", resume=True)
-    m2 = layout.read_manifest()
-    if m2.get("source_fp") != want:
-        layout.write_manifest({**m2, "source_fp": want})
-    return index_dir
+    def make(index_dir, docs):
+        build_index(spark, _split(docs, _NRT_KEY)[0], index_dir,
+                    segment_size=128, analyzer="simple")
+
+    return _ensure_index(spark, sf_dir, "nrtbase", make)[0]
 
 
 @op("st_nrt_bm25_top10", _BM25_SQL)
@@ -1184,79 +1132,38 @@ def st_nrt_bm25_top10(spark, sf_dir):
 
     from pysearch.streaming import search_with_arrivals
 
-    index_dir = _ensure_nrt_base_index(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents")
-    _base, arrivals = _nrt_split(docs)
-    s = _get_searcher(spark, index_dir)
+    s = _get_searcher(spark, _nrt_base_index(spark, sf_dir))
+    arrivals = _split(_t(spark, sf_dir, "documents"), _NRT_KEY)[1]
     res = search_with_arrivals(s, arrivals, {"q": " ".join(_BM25_TERMS)},
                                k=10, case_id="0")
     sdf = spark.createDataFrame(
         res[["url", "score"]], schema="url string, score double")
-    return sdf.select(
-        F.substring("url", len("doc://docs/") + 1, 9).cast("long").alias("doc_id"),
-        F.round("score", 4).alias("score_r"),
-    )
+    return sdf.select(_source_id("url").alias("doc_id"),
+                      F.round("score", 4).alias("score_r"))
 
 
 _BM25_TT_SQL = _BM25_SQL.replace(
     "FROM documents)",
-    "FROM documents WHERE text IS NOT NULL"
-    f" AND length(text) % {_NRT_MOD} <> 0)")
+    f"FROM documents WHERE text IS NOT NULL AND {_TT_KEY} <> 0)")
 
 
-def _tt_split(docs):
-    """Split `documents` for the time-travel oracle: ~4/5 base vs ~1/5
-    later-appended, keyed on length(text) — a content property BOTH Spark
-    and DuckDB compute identically (the oracle must filter the same subset
-    in SQL, unlike the NRT split whose oracle covers the whole table), and
-    exact-duplicate texts share a length so dup pairs never straddle the
-    split (append dedup picks the same winners as a subset-only build)."""
-    from pyspark.sql import functions as F
-
-    present = F.col("text").isNotNull()
-    key = F.length("text") % _NRT_MOD
-    webtext = docs.select(
-        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
-        "text",
-    )
-    return (webtext.filter(present & (key != 0)),
-            webtext.filter(present & (key == 0)))
-
-
-def _ensure_tt_index(spark, sf_dir):
-    """Build-or-reuse the time-travel demo index: fresh build over the
-    base split (archiving snapshot v_base), then the arrivals APPENDED on
-    top — so ``at_version=v_base`` must reproduce the pre-append state.
-    Cached per source fingerprint; returns (index_dir, v_base)."""
-    import os
-    import shutil
-
+def _tt_index(spark, sf_dir):
+    """The time-travel demo index: fresh build over the base split
+    (archiving snapshot v_base), then the arrivals APPENDED on top — so
+    ``at_version=v_base`` must reproduce the pre-append state.  Returns
+    (index_dir, v_base)."""
     from pysearch.build import build_index
-    from pysearch.lineage import IndexLayout
-    from pysearch.session import _ensure_pythonpath, ship_package
-    from pysearch.version import INDEX_FORMAT_VERSION
 
-    _ensure_pythonpath()
-    ship_package(spark)
-    docs = _t(spark, sf_dir, "documents")
-    label = os.path.basename(sf_dir.rstrip("/"))
-    index_dir = f"/tmp/pysearch_ops_index_{label}_tt"
-    want = f"{_source_fp(spark, sf_dir, docs)}|tt-len%{_NRT_MOD}"
-    layout = IndexLayout(index_dir)
-    m = layout.read_manifest()
-    if (m.get("format_version") == INDEX_FORMAT_VERSION
-            and m.get("analyzer") == "simple"
-            and m.get("source_fp") == want):
-        return index_dir, int(m["tt_base_version"])
-    shutil.rmtree(index_dir, ignore_errors=True)
-    base, arrivals = _tt_split(docs)
-    build_index(spark, base, index_dir, segment_size=128, analyzer="simple")
-    v_base = layout.snapshots()[-1]
-    build_index(spark, arrivals, index_dir, append=True)
-    m2 = layout.read_manifest()
-    layout.write_manifest({**m2, "source_fp": want,
-                           "tt_base_version": int(v_base)})
-    return index_dir, v_base
+    def make(index_dir, docs):
+        base, arrivals = _split(docs, _TT_KEY)
+        layout = build_index(spark, base, index_dir, segment_size=128,
+                             analyzer="simple")
+        v_base = layout.snapshots()[-1]
+        build_index(spark, arrivals, index_dir, append=True)
+        return {"tt_base_version": int(v_base)}
+
+    index_dir, m = _ensure_index(spark, sf_dir, "tt", make)
+    return index_dir, int(m["tt_base_version"])
 
 
 @op("tt_snapshot_bm25_top10", _BM25_TT_SQL)
@@ -1269,7 +1176,7 @@ def tt_snapshot_bm25_top10(spark, sf_dir):
     value-checked against a DuckDB BM25 oracle computed over the subset
     ALONE.  A stale read of the post-append state fails the hash check
     both ways (extra candidate docs, shifted idf/avgdl)."""
-    index_dir, v_base = _ensure_tt_index(spark, sf_dir)
+    index_dir, v_base = _tt_index(spark, sf_dir)
     return _search_to_source_ids(spark, index_dir, mode="any",
                                  at_version=v_base)
 
@@ -1281,26 +1188,7 @@ def st_arrival_phrase_top10(spark, sf_dir):
     single tokenize pass, value-checked against the same independent DuckDB
     phrase-restricted BM25 oracle as t1_engine_phrase_top10 — and therefore
     transitively score-identical to the engine's pos_bin phrase path."""
-    from pyspark.sql import functions as F
-
-    from pysearch.session import _ensure_pythonpath, ship_package
-    from pysearch.streaming import score_arriving_batch
-
-    _ensure_pythonpath()
-    ship_package(spark)
-    docs = _t(spark, sf_dir, "documents")
-    webtext = docs.select(
-        F.format_string("doc://docs/%09d", F.col("doc_id")).alias("url"),
-        "text",
-    )
-    res = score_arriving_batch(
-        webtext, {"q": " ".join(_PHRASE_TERMS)}, k=10, analyzer="simple",
-        mode="phrase",
-    )
-    return res.select(
-        F.substring("url", len("doc://docs/") + 1, 9).cast("long").alias("doc_id"),
-        F.round("score", 4).alias("score_r"),
-    )
+    return _arrival_search(spark, sf_dir, _PHRASE_TERMS, "phrase")
 
 
 @op("j1_term_doc_join", f"""
@@ -1664,10 +1552,10 @@ def dup_clusters(edges, max_iters: int = 32,
 
         lpdf = pd.DataFrame({"doc_id": nodes, "cluster_id": labels})
         out = spark.createDataFrame(lpdf, "doc_id long, cluster_id long")
-        # the labels are already driver-resident: expose them so composed
-        # consumers (t1_engine_filter_survivors_top10) can skip re-deriving
-        # the set distributively — an annotation, not a result cache (each
-        # invocation recomputes from the edges)
+        # the labels are already driver-resident: expose them so _dup_drop
+        # can hand its consumers the drop set as an array — an
+        # annotation, not a result cache (each invocation recomputes from
+        # the edges)
         out._pysearch_local = lpdf
         return out
 
@@ -1753,6 +1641,27 @@ def dd_dup_clusters(spark, sf_dir):
         "doc_id", F.col("cluster_id").cast("long").alias("cluster_id"))
 
 
+def _dup_drop(spark, sf_dir):
+    """The keep-one-per-cluster DROP set of the near-dup pipeline (minhash
+    pairs → dup_clusters): every cluster member but its canonical min
+    doc_id.  Returns (ids, drop): ``ids`` is a numpy array of the drop
+    doc_ids when union-find solved the clusters on the driver, else None;
+    ``drop`` is the same set as a (doc_id) DataFrame."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    clusters = dup_clusters(dd_minhash_pairs(spark, sf_dir).select("a", "b"))
+    local = getattr(clusters, "_pysearch_local", None)
+    if local is None:
+        return None, clusters.filter(
+            F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+    ids = local["doc_id"][local["doc_id"] != local["cluster_id"]] \
+        .to_numpy(np.int64)
+    return ids, spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
+                                      schema="doc_id long")
+
+
 @op("dd_dedup_survivors", f"""
 {_CLOSURE_CTES}
 SELECT d.doc_id, count(*) OVER () AS n_survivors
@@ -1773,28 +1682,19 @@ def dd_dedup_survivors(spark, sf_dir):
     small and a shuffled anti-join on doc_id otherwise, which scales."""
     from pyspark.sql import functions as F
 
-    docs = _t(spark, sf_dir, "documents")
-    clusters = dup_clusters(dd_minhash_pairs(spark, sf_dir).select("a", "b"))
-    local = getattr(clusters, "_pysearch_local", None)
-    if local is not None:
-        # the union-find gate solved the labels driver-side: the survivor
-        # count is |documents| − |drop| exactly (drop ids are distinct
-        # documents doc_ids, which are unique), with |documents| from the
-        # parquet footers — the anti-join executes once for the result
-        # rows instead of twice (count job + collect)
+    ids, drop = _dup_drop(spark, sf_dir)
+    kept = _t(spark, sf_dir, "documents").select("doc_id").join(
+        drop, "doc_id", "left_anti")
+    if ids is not None:
+        # the drop set is driver-resident: the survivor count is
+        # |documents| − |drop| exactly (drop ids are distinct documents
+        # doc_ids, which are unique), with |documents| from the parquet
+        # footers — the anti-join executes once for the result rows
+        # instead of twice (count job + collect)
         import pyarrow.dataset as pads
 
-        drop_pdf = local[local["doc_id"] != local["cluster_id"]]
-        n = (pads.dataset(f"{sf_dir}/documents.parquet").count_rows()
-             - len(drop_pdf))
-        drop = spark.createDataFrame(drop_pdf[["doc_id"]],
-                                     schema="doc_id long")
+        n = pads.dataset(f"{sf_dir}/documents.parquet").count_rows() - len(ids)
     else:
-        drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")) \
-            .select("doc_id")
-        n = None
-    kept = docs.select("doc_id").join(drop, "doc_id", "left_anti")
-    if n is None:
         n = kept.count()
     return kept.select("doc_id", F.lit(n).cast("long")
                        .alias("n_survivors")).orderBy("doc_id")
@@ -1851,26 +1751,15 @@ def t1_engine_filter_survivors_top10(spark, sf_dir):
     The set is built directly (pairs → components → anti-join) instead of
     via dd_dedup_survivors, whose n_survivors column costs an extra full
     count() materialization this query would immediately discard."""
-    from pyspark.sql import functions as F
-
-    index_dir, _fp = _ensure_engine_index(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents")
-    clusters = dup_clusters(dd_minhash_pairs(spark, sf_dir).select("a", "b"))
-    local = getattr(clusters, "_pysearch_local", None)
-    if local is not None:
-        # the union-find gate solved the components driver-side, so the
-        # non-canonical member set is already a bounded array — admit
-        # "everything but the drop set" through the engine's driver-side
-        # filter path (survivors = all docs minus non-canonical members,
-        # exactly the anti-join's complement); the distributed shape below
-        # runs unchanged when the edge list exceeded the gate
-        drop_ids = local["doc_id"][local["doc_id"] != local["cluster_id"]]
-        return _search_to_source_ids(
-            spark, index_dir, mode="any",
-            exclude_source_ids=drop_ids.to_numpy())
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")) \
-        .select("doc_id")
-    surv = docs.select("doc_id").join(drop, "doc_id", "left_anti")
+    index_dir = _engine_index(spark, sf_dir)
+    ids, drop = _dup_drop(spark, sf_dir)
+    if ids is not None:
+        # the drop set is a bounded driver array: admit "everything but
+        # the drop set" (exactly the anti-join's complement)
+        return _search_to_source_ids(spark, index_dir, mode="any",
+                                     exclude_source_ids=ids)
+    surv = _t(spark, sf_dir, "documents").select("doc_id").join(
+        drop, "doc_id", "left_anti")
     return _search_to_source_ids(spark, index_dir, mode="any",
                                  filter_source=surv)
 
@@ -2877,9 +2766,7 @@ def pipeline_pretrain_filter(spark, sf_dir):
             .cast("long").alias("n_stop"),
         )
     )
-    clusters = dup_clusters(dd_minhash_pairs(spark, sf_dir).select("a", "b"))
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")) \
-        .select("doc_id")
+    _ids, drop = _dup_drop(spark, sf_dir)
     uniq = F.col("n_uniq") / F.col("n_tok").cast("double")
     en = F.col("n_stop") / F.col("n_tok").cast("double")
     return (

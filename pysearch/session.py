@@ -36,12 +36,14 @@ _SHIPPED_APPS: set = set()
 def ship_package(spark) -> None:
     """Make pysearch importable in an already-running session's python
     workers via addPyFile (what spark-submit --py-files does).  Needed when
-    the SparkSession was created by someone else before PYTHONPATH was set.
+    the SparkSession was created by someone else before PYTHONPATH was set;
+    also sets PYTHONPATH (``_ensure_pythonpath``) for workers forked later.
     Idempotent per (process, Spark application): repeat calls are free."""
     import tempfile
 
     from pysearch.cli import make_pyfiles_zip
 
+    _ensure_pythonpath()
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return

@@ -103,6 +103,129 @@ def test_one_home_per_stored_format():
     assert shapers == {"build.py"}, shapers
 
 
+def _docstring_nodes(tree):
+    return {id(node.body[0].value) for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.FunctionDef, ast.ClassDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)}
+
+
+def test_one_fixture_rule_and_one_source_id_codec():
+    """ops.py writes the engine fixtures' url prefix once (``_webtext``
+    and ``_source_id`` derive every other form from it), and only
+    ``_ensure_index`` reads, writes or removes a fixture index."""
+    with open(os.path.join(PKG, "ops.py")) as f:
+        tree = ast.parse(f.read())
+    docstrings = _docstring_nodes(tree)
+    prefixes = [node.lineno for node in ast.walk(tree)
+                if isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "doc://docs/" in node.value
+                and id(node) not in docstrings]
+    assert len(prefixes) == 1, prefixes
+    touchers = {fn.name for fn in tree.body
+                if isinstance(fn, ast.FunctionDef)
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Attribute) and node.attr in (
+                    "read_manifest", "write_manifest", "rmtree")}
+    assert touchers == {"_ensure_index"}, touchers
+
+
+@pytest.fixture
+def tiny_sf(tmp_path):
+    """A few dozen rows of the sf0.001 documents table as its own source
+    dir; the ops fixture indexes built over it are removed afterwards."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from pysearch import ops
+
+    label = f"sf_fixture_life_{os.getpid()}"
+    sf = tmp_path / label
+    sf.mkdir()
+    rows = pq.read_table(f"{SF_DIR}/documents.parquet").slice(0, 40)
+    pq.write_table(rows, str(sf / "documents.parquet"))
+    yield str(sf)
+    for d in glob.glob(f"/tmp/pysearch_ops_index_{label}*"):
+        shutil.rmtree(d, ignore_errors=True)
+    for key in [k for k in ops._ENGINE_FP_CACHE if k[1] == str(sf)]:
+        del ops._ENGINE_FP_CACHE[key]
+
+
+def test_fixture_index_build_or_reuse(spark, tiny_sf, monkeypatch):
+    """One stamp decides reuse of every ops fixture: a second call builds
+    nothing; the delete fixture still checks that the purge removed what
+    the delete marked, and its failed build leaves no stamp; a changed
+    source or a format bump rebuilds the shared index AND its deleted
+    copy.  Past the first real builds, ``make`` is stubbed: what is
+    checked is which fixtures ``_ensure_index`` decides to rebuild."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pysearch import build, compact, delete, ops, version
+
+    built, real, stub = [], ops._ensure_index, []
+
+    def spy(spark_, sf_dir, tag, make):
+        def counted(index_dir, docs):
+            built.append(tag)
+            return {} if stub else make(index_dir, docs)
+        return real(spark_, sf_dir, tag, counted)
+
+    monkeypatch.setattr(ops, "_ensure_index", spy)
+
+    def both():
+        built.clear()
+        return ops._engine_index(spark, tiny_sf), \
+            ops._deleted_index(spark, tiny_sf)
+
+    base_dir, del_dir = both()
+    assert built == ["", "del"]
+
+    def refuse(*a, **kw):
+        raise AssertionError("fixture rebuilt")
+
+    with monkeypatch.context() as m:
+        for owner, name in ((build, "build_index"), (delete, "delete_docs"),
+                            (compact, "compact_index")):
+            m.setattr(owner, name, refuse)
+        assert both() == (base_dir, del_dir)
+    assert built == []
+
+    shutil.rmtree(del_dir)
+    with monkeypatch.context() as m:
+        m.setattr(delete, "delete_docs", lambda spark_, d, predicate: 3)
+        m.setattr(compact, "compact_index",
+                  lambda spark_, d: {"purged_docs": 2})
+        with pytest.raises(RuntimeError, match="deleted 3, purged 2"):
+            ops._deleted_index(spark, tiny_sf)
+    stub.append(True)
+    ops._deleted_index(spark, tiny_sf)  # the failed build left no stamp
+    assert built == ["del", "del"]
+
+    path = os.path.join(tiny_sf, "documents.parquet")
+    table = pq.read_table(path)
+    texts = table.column("text").to_pylist()
+    texts[0] = "spark join fast rewritten"
+    pq.write_table(table.set_column(
+        table.schema.get_field_index("text"), "text",
+        pa.array(texts, table.schema.field("text").type)), path)
+    ops._ENGINE_FP_CACHE.clear()
+    both()
+    assert built == ["", "del"]
+
+    monkeypatch.setattr(version, "INDEX_FORMAT_VERSION",
+                        version.INDEX_FORMAT_VERSION + 1)
+    both()
+    assert built == ["", "del"]
+    both()
+    assert built == []
+
+
 @pytest.fixture(scope="module")
 def small_index(spark, tmp_path_factory):
     from pysearch import corpus
@@ -202,6 +325,8 @@ def _rows(df):
 
 def test_search_to_source_ids_catalog_both_sides_and_refresh(spark,
                                                              tmp_path):
+    import pandas as pd
+
     from pysearch import gate
     from pysearch.ops import _get_searcher, _search_to_source_ids
 
@@ -209,12 +334,14 @@ def test_search_to_source_ids_catalog_both_sides_and_refresh(spark,
     n_src = _source_index(spark, ix)
     new_ids = 1_000_000 + 2 * np.arange(6)
     keep = np.concatenate([np.arange(0, n_src, 2), new_ids])
+    keep_df = spark.createDataFrame(pd.DataFrame({"doc_id": keep}),
+                                    schema="doc_id long")
     drop = np.arange(0, n_src, 3)
     s = _get_searcher(spark, ix)
 
     def run():
         return (_rows(_search_to_source_ids(spark, ix, "any",
-                                            filter_source_ids=keep)),
+                                            filter_source=keep_df)),
                 _rows(_search_to_source_ids(spark, ix, "any",
                                             exclude_source_ids=drop)))
 
