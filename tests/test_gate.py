@@ -5,7 +5,9 @@ of a Searcher off.  Also pins the one catalog cache (Searcher._catalog)
 that the NRT anti-joins and the engine-backed ops share, on both sides of
 its gate and across an index refresh, and scans for hand copies of the BM25
 arithmetic outside the scoring modules and of the stored formats and
-document shaping outside codec.py and build.py."""
+document shaping outside codec.py and build.py.  The ops' fixture indexes
+have one build-or-reuse rule (ops._ensure_index) and one source-id codec,
+pinned by a scan and by a lifecycle test over a tiny source table."""
 
 import ast
 import os
@@ -159,7 +161,9 @@ def test_fixture_index_build_or_reuse(spark, tiny_sf, monkeypatch):
     nothing; the delete fixture still checks that the purge removed what
     the delete marked, and its failed build leaves no stamp; a changed
     source or a format bump rebuilds the shared index AND its deleted
-    copy.  Past the first real builds, ``make`` is stubbed: what is
+    copy.  Only the shared index is built for real: the delete pipeline
+    is oracle-checked by t1_engine_deleted_top10 and here only reports
+    counts, and past the first builds ``make`` is stubbed — what is
     checked is which fixtures ``_ensure_index`` decides to rebuild."""
     import shutil
 
@@ -177,6 +181,10 @@ def test_fixture_index_build_or_reuse(spark, tiny_sf, monkeypatch):
         return real(spark_, sf_dir, tag, counted)
 
     monkeypatch.setattr(ops, "_ensure_index", spy)
+    purged = {"purged_docs": 3}
+    monkeypatch.setattr(delete, "delete_docs",
+                        lambda spark_, d, predicate: 3)
+    monkeypatch.setattr(compact, "compact_index", lambda spark_, d: purged)
 
     def both():
         built.clear()
@@ -197,12 +205,9 @@ def test_fixture_index_build_or_reuse(spark, tiny_sf, monkeypatch):
     assert built == []
 
     shutil.rmtree(del_dir)
-    with monkeypatch.context() as m:
-        m.setattr(delete, "delete_docs", lambda spark_, d, predicate: 3)
-        m.setattr(compact, "compact_index",
-                  lambda spark_, d: {"purged_docs": 2})
-        with pytest.raises(RuntimeError, match="deleted 3, purged 2"):
-            ops._deleted_index(spark, tiny_sf)
+    purged["purged_docs"] = 2
+    with pytest.raises(RuntimeError, match="deleted 3, purged 2"):
+        ops._deleted_index(spark, tiny_sf)
     stub.append(True)
     ops._deleted_index(spark, tiny_sf)  # the failed build left no stamp
     assert built == ["del", "del"]
