@@ -281,58 +281,35 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
     # bodies.  The resulting id map (winners only) joins back to the full
     # rows below — dedupe and id assignment in one inner join, which AQE
     # executes as a broadcast join when the map is small.
-    # the projection is read twice (winners window + dup-key check) and
-    # feeds the range sampler — cache it so the full input scan + hashing
-    # runs exactly once
-    proj = df.select("case_id", "url", "content_hash").persist()
-    # content dedupe: one min-AGGREGATE shuffle of the projection (same
-    # winners as a rank window — "the row whose url is the min of its hash
-    # group" == one (hash -> min url) row per group — but a groupBy
-    # partially aggregates map-side and needs no per-partition sort); url
-    # dedupe costs nothing extra — it happens inside the assignment pass
-    # where duplicate urls land adjacent (see _assign_doc_ids)
-    # persisted: the range partitioner's SAMPLE job and the offsets job in
-    # _assign_doc_ids both consume winners — uncached, the dedupe
-    # aggregate ran twice (once under the sampler, once for real)
-    winners = (
-        proj.groupBy("case_id", "content_hash")
-        .agg(F.min("url").alias("url"))
-        .select("case_id", "url", "content_hash")
-    ).persist()
-
-    # exact-duplicate input rows (same url AND content) would multiply
-    # through the id join.  Detect them on the projection (text-free) and
-    # only if any exist, dedupe just those keys — the common no-dup path
-    # never shuffles document bodies for this.  Rows equal on
-    # (case,url,hash) are identical by the content-hash contract, so the
-    # dropDuplicates is value-deterministic.  ONE aggregate job yields both
-    # the duplicate-key existence check and the quarantine-accounting input
-    # count (previously two separate actions over the cached projection) —
-    # submitted CONCURRENTLY with the id-assignment jobs (guide §2.6: both
-    # depend only on the cached projection; first-computation of shared
-    # cache partitions is serialized safely by BlockManager block locks).
-    from concurrent.futures import ThreadPoolExecutor
-
-    key_counts = proj.groupBy("case_id", "url", "content_hash").count()
-    with ThreadPoolExecutor(max_workers=1) as _ex:
-        f_stat = _ex.submit(
-            lambda: key_counts.agg(F.sum("count").alias("n_input"),
-                                   F.max("count").alias("mx")).collect()[0])
-        try:
-            id_map, pinned, counts = _assign_doc_ids(spark, winners,
-                                                     n_partitions, base=base)
-            stat = f_stat.result()
-        except BaseException as err:
-            # wait for the dup check, keep its error on the raised one,
-            # and release the frames this stage cached
-            dup_err = f_stat.exception()
-            if dup_err is not None and dup_err is not err:
-                err.add_note(f"concurrent duplicate-key check also failed: "
-                             f"{dup_err!r}")
-            winners.unpersist()
-            proj.unpersist()
-            raise
+    # ONE persisted aggregate of the projection, the count per (case, url,
+    # hash) key, feeds every consumer of the input's keys — so the full
+    # input scan + hashing runs exactly once:
+    # - one collect yields the quarantine-accounting input count and the
+    #   exact-duplicate check;
+    # - content dedupe is a min-AGGREGATE over it (the row whose url is the
+    #   min of its hash group == one (hash -> min url) row per group); url
+    #   dedupe costs nothing extra — it happens inside the assignment pass
+    #   where duplicate urls land adjacent (see _assign_doc_ids).
+    key_counts = df.groupBy("case_id", "url", "content_hash").count().persist()
+    try:
+        stat = key_counts.agg(F.sum("count").alias("n_input"),
+                              F.max("count").alias("mx")).collect()[0]
+        winners = (
+            key_counts.groupBy("case_id", "content_hash")
+            .agg(F.min("url").alias("url"))
+            .select("case_id", "url", "content_hash")
+        )
+        id_map, pinned, counts = _assign_doc_ids(spark, winners,
+                                                 n_partitions, base=base)
+    except BaseException:
+        key_counts.unpersist()
+        raise
     n_input = int(stat["n_input"] or 0)
+    # exact-duplicate input rows (same url AND content) would multiply
+    # through the id join: only if any exist, dedupe just those keys — the
+    # common no-dup path never shuffles document bodies for this.  Rows
+    # equal on (case,url,hash) are identical by the content-hash contract,
+    # so the dropDuplicates is value-deterministic.
     if int(stat["mx"] or 0) > 1:
         dup_keys = key_counts.filter(F.col("count") > 1).select(
             "case_id", "url", "content_hash")
@@ -377,8 +354,7 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         staging = layout.staging_dir("docs")
         docs.write.mode("overwrite").partitionBy("case_id").parquet(staging)
         pinned.unpersist()
-        winners.unpersist()
-        proj.unpersist()
+        key_counts.unpersist()
         # doc_map catalog (reference file_list.json analog) from the same
         # cached partitions — text column dropped, so the write is tiny
         dm_staging = layout.staging_dir("doc_map")
@@ -587,19 +563,15 @@ def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
     from pysearch.schema import POSTING_BLOCKS
 
     t0 = time.time()
-    from pysearch.schema import DOCS
-
     if docs_df is not None:
         # fresh build / append: the docs stage hands over its cached
         # DataFrame, already hash-partitioned by (case_id, segment_id) —
         # the groupBy below runs with no exchange and no disk re-read
         docs = docs_df
     else:
-        docs = layout.read_commits(spark, layout.docs, schema=DOCS).withColumn(
-            "case_id", F.col("case_id").cast("string")
-        )
+        docs = layout.read_commits(spark, layout.docs)
 
-    done: set = layout.done_partitions(spark, "postings") if resume else set()
+    done: set = layout.done_partitions("postings") if resume else set()
     if done:
         done_df = spark.createDataFrame(
             [(k.split("|", 1)[0], int(k.split("|", 1)[1])) for k in done],
@@ -671,7 +643,8 @@ def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
             # Spark job; above the gate the distributed aggregate runs.
             seg_metrics = _segment_metrics_local(commit_dir)
             if seg_metrics is None:
-                written = spark.read.parquet(commit_dir)
+                written = layout.read_commits(spark, layout.postings,
+                                              batches=[batch])
                 seg_metrics = (
                     written.groupBy("case_id", "segment_id")
                     .agg(
@@ -744,10 +717,8 @@ def _postings_disk_batches(layout: IndexLayout) -> list[int]:
 def _n_per_case_df(spark, layout: IndexLayout):
     """Per-case doc counts from the manifest (recorded by the docs stage) so
     finalize never re-scans the docs table; legacy indexes without
-    case_counts fall back to the scan."""
+    case_counts fall back to a count over the typed docs read."""
     from pyspark.sql import functions as F
-
-    from pysearch.schema import DOCS
 
     cc = layout.read_manifest().get("stages", {}).get("docs", {}).get("case_counts")
     if cc:
@@ -755,22 +726,9 @@ def _n_per_case_df(spark, layout: IndexLayout):
             [(str(k), int(v)) for k, v in cc.items()],
             schema="case_id string, n_docs long",
         )
-    docs = layout.read_commits(spark, layout.docs, schema=DOCS).withColumn(
-        "case_id", F.col("case_id").cast("string")
-    )
-    return docs.groupBy("case_id").agg(
+    return layout.read_commits(spark, layout.docs).groupBy("case_id").agg(
         F.count("*").cast("long").alias("n_docs")
     )
-
-
-def _block_frame(blocks):
-    """A posting-block frame with the stats tables' key types: case_id a
-    string, term_bucket an int."""
-    from pyspark.sql import functions as F
-
-    return blocks.withColumn(
-        "case_id", F.col("case_id").cast("string")
-    ).withColumn("term_bucket", F.col("term_bucket").cast("int"))
 
 
 def _term_stats_of(blocks):
@@ -824,9 +782,7 @@ def _write_corpus_stats_from_term_stats(spark, layout: IndexLayout) -> None:
     lengths (exact integer identity), so avgdl never needs a postings or
     docs re-scan — an O(vocabulary) narrow column scan at most.  Fully
     deterministic from committed state, hence idempotent across crashes."""
-    from pysearch.schema import TERM_STATS
-
-    ts = layout.read_commits(spark, layout.term_stats, schema=TERM_STATS)
+    ts = layout.read_commits(spark, layout.term_stats)
     staging = layout.staging_dir("corpus_stats")
     _corpus_stats_of(_n_per_case_df(spark, layout), ts, "cf").coalesce(
         1).write.mode("overwrite").parquet(staging)
@@ -874,11 +830,8 @@ def build_finalize_stage(spark, layout: IndexLayout) -> None:
     """Full-index stats recompute (fresh builds).  Appends and streaming
     micro-batches use ``build_finalize_delta`` instead, which touches only
     the new postings batches — O(delta), not O(index)."""
-    from pysearch.schema import POSTING_BLOCKS
-
     t0 = time.time()
-    blocks = _block_frame(layout.read_commits(
-        spark, layout.postings, schema=POSTING_BLOCKS))
+    blocks = layout.read_commits(spark, layout.postings)
     term_stats = _term_stats_of(blocks)
     # avgdl from block metadata — saves a second analyzer pass over text
     corpus_stats = _corpus_stats_of(_n_per_case_df(spark, layout), blocks,
@@ -955,7 +908,8 @@ def build_finalize_delta(spark, layout: IndexLayout) -> None:
             continue  # zero-block batch (all tokens stopped out)
         staging = layout.staging_dir("term_stats")
         _write_term_stats(
-            _term_stats_of(_block_frame(spark.read.parquet(commit_dir))),
+            _term_stats_of(layout.read_commits(spark, layout.postings,
+                                               batches=[b])),
             staging)
         layout.commit_batch(staging, layout.term_stats, b, replace=True)
     _write_corpus_stats_from_term_stats(spark, layout)
@@ -1020,9 +974,9 @@ def build_index(spark, webtext_df, index_dir: str, *,
         from pysearch.compact import recover_compaction
 
         recover_compaction(layout)
-        orphans = layout.gc_orphan_postings_commits(spark)
+        orphans = layout.gc_orphan_commits()
         if orphans:
-            print(f"pysearch: removed {len(orphans)} orphan postings commit(s) "
+            print(f"pysearch: removed {len(orphans)} orphan commit(s) "
                   "left by a crash before their lineage write")
 
     analyzer_m = layout.read_manifest().get("analyzer", "en")
@@ -1083,10 +1037,6 @@ def _append_index(spark, webtext_df, layout: IndexLayout,
       resume path rebuilds exactly the missing segments from the committed
       docs table.
     """
-    from pyspark.sql import functions as F
-
-    from pysearch.schema import DOCS
-
     m = layout.read_manifest()
     if not layout.stage_done("docs"):
         raise RuntimeError("append requires an index with a completed docs stage")
@@ -1102,10 +1052,9 @@ def _append_index(spark, webtext_df, layout: IndexLayout,
     from pysearch.compact import check_consistent, recover_compaction
 
     recover_compaction(layout)
-    check_consistent(spark, layout)
+    check_consistent(layout)
     layout.gc_staging()
-    layout.gc_orphan_docs_commits(spark)
-    layout.gc_orphan_postings_commits(spark)
+    layout.gc_orphan_commits()
 
     if not layout.stage_done("postings"):
         # a previous append crashed mid-postings: its docs are committed
@@ -1117,10 +1066,8 @@ def _append_index(spark, webtext_df, layout: IndexLayout,
                              analyzer=analyzer,
                              store_positions=store_positions)
 
-    existing = layout.read_commits(spark, layout.docs, schema=DOCS).select(
-        F.col("case_id").cast("string").alias("case_id"),
-        "doc_id", "url", "content_hash",
-    )
+    existing = layout.read_commits(spark, layout.docs).select(
+        "case_id", "doc_id", "url", "content_hash")
     batch = layout.next_batch(layout.docs)
     # invalidate downstream stages before new docs become visible
     layout.clear_stage("postings")

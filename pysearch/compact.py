@@ -2,19 +2,20 @@
 
 Incremental appends (``build_index(append=True)``, streaming
 ``foreach_batch_indexer``) each add a ``commit-NNNNN`` batch per table, and
-``IndexLayout.read_commits`` unions one parquet read per commit — O(commits)
-scans per query after many appends (the scale risk called out in the r1
-review of ``lineage.read_commits``).  ``compact_index`` rewrites every
-multi-commit table into a single consolidated ``commit-00000`` with the same
-partition layout the build writes (docs/doc_map by ``case_id``, postings by
-``term_bucket`` — query partition pruning survives), consolidates the
-term_stats delta commits by SUMMING per-term df/cf (delta finalize appends
-one stats commit per postings batch, see build.finalize_delta), renumbers
-lineage bookkeeping to the consolidated batch, and records the compaction as
-a lineage event.  Query results are unchanged (same rows, same layout); the
-reference has no analog because its index is a single serial file — this is
-the maintenance operation its model never needs but a distributed
-commit-log layout does.
+``IndexLayout.read_commits`` unions one typed parquet read per commit —
+O(commits) scans per query after many appends.  ``compact_index`` rewrites
+every multi-commit table into a single consolidated ``commit-00000`` with
+the same partition layout the build writes (docs/doc_map by ``case_id``,
+postings by ``term_bucket`` — query partition pruning survives),
+consolidates the term_stats delta commits by SUMMING per-term df/cf (delta
+finalize appends one stats commit per postings batch, see
+build.finalize_delta), and rewrites the lineage table on the driver — the
+same history with done docs/postings rows renumbered to the consolidated
+batch, plus the compaction event — through the one lineage writer
+(``IndexLayout.write_lineage``).  Query results are unchanged (same rows,
+same layout); the reference has no analog because its index is a single
+serial file — this is the maintenance operation its model never needs but
+a distributed commit-log layout does.
 
 Crash safety AND snapshot isolation via generation directories (r4: the
 previous protocol renamed the live table trees into place, which was
@@ -43,8 +44,9 @@ Recovery (``recover_compaction``) discards staged generations NEWER than
 the manifest's committed pointer — leftovers of an uncommitted run.
 ``build_index(append=True)`` runs this sweep before touching the index, so
 a crashed compaction can never alias batch numbers against stale lineage
-(staged trees are invisible to ``next_batch``/``read_commits``, which
-resolve through the committed pointer).
+(staged trees are invisible to ``next_batch`` and to every table path
+resolved through the committed pointer; compaction reads its own staged
+trees by their generation path).
 """
 
 from __future__ import annotations
@@ -150,7 +152,7 @@ def prune_dangling_snapshots(layout: IndexLayout) -> list[int]:
     return pruned
 
 
-def check_consistent(spark, layout: IndexLayout) -> None:
+def check_consistent(layout: IndexLayout) -> None:
     """Fail fast when lineage references postings batches absent on disk
     (r2 ADVICE: a half-recovered state silently mis-drives orphan GC and
     resume).  Run AFTER recover_compaction; raises with a repair hint."""
@@ -158,13 +160,7 @@ def check_consistent(spark, layout: IndexLayout) -> None:
         int(os.path.basename(d).split("-", 1)[1])
         for d in layout.list_commits(layout.postings)
     }
-    lin = layout.read_lineage(spark)
-    covered = {
-        int(r["batch"])
-        for r in lin.filter(lin.stage == "postings")
-        .select("batch").distinct().collect()
-    }
-    missing = covered - commits
+    missing = layout.covered_batches("postings") - commits
     if missing:
         raise RuntimeError(
             f"lineage references postings batches {sorted(missing)} absent "
@@ -253,68 +249,62 @@ def compact_index(spark, index_dir: str,
     carried by the same single manifest commit."""
     from pyspark.sql import functions as F
 
-    from pysearch.build import (_block_frame, _corpus_stats_of,
-                                _term_stats_of, _write_term_stats)
-    from pysearch.schema import DOCS, POSTING_BLOCKS, TERM_STATS
+    from pysearch.build import (_corpus_stats_of, _term_stats_of,
+                                _write_term_stats)
+    from pysearch.schema import POSTING_BLOCKS, TOMBSTONES
 
     layout = IndexLayout(index_dir)
     recover_compaction(layout)
     if not layout.stage_done("finalize"):
         raise RuntimeError(f"index at {index_dir} is not complete")
 
-    tomb = layout.read_tombstones(spark) if layout.list_commits(
-        layout.tombstones) else None
-    tomb_pdf = tomb.toPandas() if tomb is not None else None
-    purge = tomb_pdf is not None and len(tomb_pdf) > 0
+    n_purged, tomb_by_case = layout.pending_deletes()
+    purge = n_purged > 0
 
     gens = dict(layout._generations())
 
+    def _staged(name: str) -> str:
+        """``name``'s NEXT generation tree."""
+        return layout.table_path(name, int(gens.get(name, 0)) + 1)
+
     def _stage_root(name: str) -> str:
         """Commit-00000 target inside ``name``'s NEXT generation tree."""
-        return os.path.join(
-            layout.table_path(name, int(gens.get(name, 0)) + 1),
-            "commit-00000")
+        return os.path.join(_staged(name), "commit-00000")
 
-    # per table: schema, partition columns, within-partition sort (mirrors
-    # the build's write layout so parquet row-group pruning keeps working)
+    # per table: partition columns, within-partition sort (mirrors the
+    # build's write layout so parquet row-group pruning keeps working)
     plan = {}
-    for name, schema, parts, sort in (
-        ("docs", DOCS, ["case_id"], ["doc_id"]),
-        ("doc_map", None, ["case_id"], ["doc_id"]),
-        ("postings", POSTING_BLOCKS, ["term_bucket"],
+    for name, parts, sort in (
+        ("docs", ["case_id"], ["doc_id"]),
+        ("doc_map", ["case_id"], ["doc_id"]),
+        ("postings", ["term_bucket"],
          ["case_id", "term", "segment_id", "block_id"]),
     ):
         n = len(layout.list_commits(layout.table_path(name)))
         if n > 1 or purge:
-            plan[name] = (schema, parts, sort, n)
+            plan[name] = (parts, sort, n)
     n_tstats = len(layout.list_commits(layout.term_stats))
     n_lineage = len(layout.list_commits(layout.lineage))
     if not plan and n_tstats <= 1 and n_lineage <= 1:
         return {}
 
     t0 = time.time()
-    import numpy as np
-
-    tomb_by_case = {}
     if purge:
-        for cid, grp in tomb_pdf.groupby("case_id"):
-            tomb_by_case[str(cid)] = np.unique(
-                grp["doc_id"].to_numpy(np.int64))
+        anti = spark.createDataFrame(
+            [(cid, int(i)) for cid, ids in tomb_by_case.items() for i in ids],
+            schema=TOMBSTONES)
 
     # 1. stage consolidated trees as next-generation dirs (heavy,
     #    restartable, live index untouched and still fully readable)
-    for name, (schema, parts, sort, _n) in plan.items():
-        df = layout.read_commits(spark, layout.table_path(name),
-                                 schema=schema)
+    for name, (parts, sort, _n) in plan.items():
+        df = layout.read_commits(spark, layout.table_path(name))
         if purge:
             if name == "postings":
                 df = df.mapInPandas(_purge_blocks_transform(tomb_by_case),
                                     schema=POSTING_BLOCKS)
             else:
-                anti = spark.createDataFrame(tomb_pdf)
-                df = df.withColumn(
-                    "case_id", F.col("case_id").cast("string")
-                ).join(F.broadcast(anti), ["case_id", "doc_id"], "left_anti")
+                df = df.join(F.broadcast(anti), ["case_id", "doc_id"],
+                             "left_anti")
         (
             df.repartition(*parts)
             .sortWithinPartitions(*parts, *sort)
@@ -328,11 +318,9 @@ def compact_index(spark, index_dir: str,
         # build's own stats helpers (df=sum n, cf=sum sum_tf; sum_dl = sum
         # sum_tf per case; avgdl = sum_dl / n_docs), so a fresh build of
         # the surviving corpus produces bit-identical scores
-        staged = _block_frame(spark.read.parquet(_stage_root("postings")))
+        staged = layout.read_commits(spark, _staged("postings"))
         _write_term_stats(_term_stats_of(staged), _stage_root("term_stats"))
-        staged_docs = spark.read.parquet(
-            _stage_root("docs")
-        ).withColumn("case_id", F.col("case_id").cast("string"))
+        staged_docs = layout.read_commits(spark, _staged("docs"))
         counts = {
             str(r["case_id"]): int(r["n"]) for r in
             staged_docs.groupBy("case_id").agg(
@@ -345,12 +333,11 @@ def compact_index(spark, index_dir: str,
             1).write.mode("overwrite").parquet(_stage_root("corpus_stats"))
         # empty next-generation tombstones tree: the flip installs a
         # commit-less table, i.e. "no pending deletes"
-        os.makedirs(layout.table_path(
-            "tombstones", int(gens.get("tombstones", 0)) + 1), exist_ok=True)
+        os.makedirs(_staged("tombstones"), exist_ok=True)
     elif n_tstats > 1:
         # delta finalize appends one stats commit per postings batch; the
         # consolidated table SUMS them (df/cf are additive per term)
-        ts = layout.read_commits(spark, layout.term_stats, schema=TERM_STATS)
+        ts = layout.read_commits(spark, layout.term_stats)
         _write_term_stats(
             ts.groupBy("case_id", "term", "term_bucket")
             .agg(F.sum("df").cast("long").alias("df"),
@@ -363,24 +350,19 @@ def compact_index(spark, index_dir: str,
     #    (verify_index, orphan GC, resume) stays exact.  The compaction
     #    event rides in the same single commit, so a compacted index has
     #    exactly one lineage commit and re-running is a clean no-op.
-    from pysearch.schema import LINEAGE
+    import pandas as pd
 
-    lin = layout.read_lineage(spark)
-    remapped = lin.withColumn(
-        "batch",
-        F.when(
-            lin.stage.isin("docs", "postings") & (lin.status == "done"),
-            F.lit(0),
-        ).otherwise(lin.batch).cast("int"),
-    )
-    event = spark.createDataFrame([(
-        "compact", "all", 0, "done",
-        sum(n for _, _, _, n in plan.values()), None, None,
-        time.time() - t0, _dt.datetime.now(_dt.timezone.utc),
-    )], schema=LINEAGE)
-    remapped.unionByName(event).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(_stage_root("lineage"))
-    )
+    lin = layout.read_lineage()
+    lin.loc[lin.stage.isin(["docs", "postings"]) & (lin.status == "done"),
+            "batch"] = 0
+    event = pd.DataFrame([{
+        "stage": "compact", "partition_key": "all", "batch": 0,
+        "status": "done", "n_rows": sum(n for _, _, n in plan.values()),
+        "wall_sec": time.time() - t0,
+        "ts": _dt.datetime.now(_dt.timezone.utc),
+    }])
+    lin = pd.concat([lin, event], ignore_index=True)
+    layout.write_lineage(lin, _stage_root("lineage"))
 
     # 3. commit point: ONE atomic manifest write flips every rewritten
     #    table's generation pointer and applies all dependent bookkeeping.
@@ -437,11 +419,11 @@ def compact_index(spark, index_dir: str,
         for v in vs[:-keep_snapshots]:
             os.remove(f"{layout.manifest_path}.v{v}")
 
-    out = {name: n for name, (_s, _p, _sort, n) in plan.items()}
+    out = {name: n for name, (_p, _sort, n) in plan.items()}
     if n_tstats > 1:
         out["term_stats"] = n_tstats
     if purge:
-        out["purged_docs"] = int(len(tomb_pdf))
+        out["purged_docs"] = n_purged
     if not out and n_lineage > 1:
         # lineage-only consolidation still rewrote a table — report it
         # (r2 ADVICE: '{}' here read as "nothing to compact" in the CLI)

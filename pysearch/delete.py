@@ -42,7 +42,7 @@ from __future__ import annotations
 import datetime as _dt
 import time
 
-from pysearch.lineage import IndexLayout
+from pysearch.lineage import IndexLayout, footer_rows
 
 
 def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
@@ -60,14 +60,7 @@ def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
     bump."""
     from pyspark.sql import functions as F
 
-    from pyspark.sql import types as T
-
     from pysearch.compact import recover_compaction
-    from pysearch.schema import DOCS
-
-    doc_map_schema = T.StructType([f for f in DOCS.fields
-                                   if f.name in ("case_id", "doc_id", "url",
-                                                 "content_hash")])
 
     if (urls is None) == (predicate is None):
         raise ValueError("pass exactly one of urls= or predicate=")
@@ -80,16 +73,12 @@ def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
     if urls is not None:
         # catalog-only scan: doc_map carries (case_id, doc_id, url) without
         # document bodies
-        base = layout.read_commits(spark, layout.doc_map,
-                                   schema=doc_map_schema).select(
-            F.col("case_id").cast("string").alias("case_id"), "doc_id", "url"
-        )
+        base = layout.read_commits(spark, layout.doc_map).select(
+            "case_id", "doc_id", "url")
         targets = base.filter(F.col("url").isin(list(urls)))
     else:
-        base = layout.read_commits(spark, layout.docs, schema=DOCS).select(
-            F.col("case_id").cast("string").alias("case_id"), "doc_id",
-            "url", "content_hash", "text"
-        )
+        base = layout.read_commits(spark, layout.docs).select(
+            "case_id", "doc_id", "url", "content_hash", "text")
         targets = base.filter(F.expr(predicate))
     if case_id is not None:
         targets = targets.filter(F.col("case_id") == str(case_id))
@@ -102,7 +91,7 @@ def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
 
     staging = layout.staging_dir("tombstones")
     fresh.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = int(spark.read.parquet(staging).count())
+    n = footer_rows(staging)
     if n == 0:
         import shutil
 

@@ -33,6 +33,35 @@ def _has_parquet(commit_dir: str) -> bool:
     return False
 
 
+def footer_rows(path: str) -> int:
+    """Row count of the parquet files under ``path``, from their footers
+    (no row is read)."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").count_rows()
+
+
+def _table_name(table_dir: str) -> str:
+    """Logical table name of a table dir (its basename without ``.gN``)."""
+    name = os.path.basename(table_dir)
+    return name.rsplit(".g", 1)[0] if ".g" in name else name
+
+
+def _batch_of(commit_dir: str) -> int:
+    return int(os.path.basename(commit_dir).split("-", 1)[1])
+
+
+def _arrow_schema(schema):
+    """The arrow form of a Spark schema, every field nullable (parquet
+    written by Spark marks its non-null fields required; pyarrow's are
+    optional)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema([f.with_nullable(True)
+                      for f in to_arrow_schema(schema)])
+
+
 #: logical table names of an index, in no particular order
 TABLES = ("docs", "doc_map", "postings", "term_stats", "corpus_stats",
           "lineage", "tombstones")
@@ -218,14 +247,34 @@ class IndexLayout:
     def tombstones(self) -> str:
         return self.table_path("tombstones")
 
+    def pending_deletes(self, table_dir: str | None = None,
+                        limit: int | None = None):
+        """``(n, {case_id: sorted unique doc_id array})`` of the pending
+        (case_id, doc_id) deletes under ``table_dir`` (default: the current
+        tombstones table).  ``n`` is counted from the parquet footers
+        before any row is read; above ``limit`` the ids are not read and
+        the map is None."""
+        import numpy as np
+
+        table_dir = table_dir or self.tombstones
+        n = sum(footer_rows(d) for d in self.list_commits(table_dir)
+                if _has_parquet(d))
+        if limit is not None and n > limit:
+            return n, None
+        pdf = self.read_local(table_dir, ["case_id", "doc_id"])
+        return n, {str(cid): np.unique(grp["doc_id"].to_numpy(np.int64))
+                   for cid, grp in pdf.groupby("case_id")}
+
     def read_tombstones(self, spark):
-        """The pending (case_id, doc_id) delete set — empty DataFrame when
-        no deletes are outstanding (table absent or emptied by compaction)."""
+        """The pending (case_id, doc_id) delete set as a DataFrame — empty
+        when no deletes are outstanding (table absent or emptied by
+        compaction)."""
         from pysearch.schema import TOMBSTONES
 
-        if not self.list_commits(self.tombstones):
-            return spark.createDataFrame([], schema=TOMBSTONES)
-        return self.read_commits(spark, self.tombstones, schema=TOMBSTONES)
+        _n, by_case = self.pending_deletes()
+        return spark.createDataFrame(
+            [(cid, int(i)) for cid, ids in by_case.items() for i in ids],
+            schema=TOMBSTONES)
 
     # -- manifest ---------------------------------------------------------
     def read_manifest(self) -> dict:
@@ -284,54 +333,29 @@ class IndexLayout:
         os.rename(staging, final)
         return final
 
-    def gc_orphan_postings_commits(self, spark) -> list[str]:
-        """Remove postings commit dirs not covered by lineage.
+    def gc_orphan_commits(self) -> list[str]:
+        """Remove docs and postings commit dirs not covered by lineage.
 
-        The lineage append is the postings commit point: a crash between the
-        directory rename and the lineage write leaves an orphan batch whose
-        segments would otherwise be rebuilt on resume and double-counted.
-        """
-        commits = self.list_commits(self.postings)
-        if not commits:
-            return []
-        lin = self.read_lineage(spark)
-        covered = {
-            int(r["batch"])
-            for r in lin.filter(lin.stage == "postings")
-            .select("batch").distinct().collect()
-        }
+        The lineage append is the commit point of a docs batch and of a
+        postings batch: a crash between a commit dir's rename and its
+        lineage write leaves an orphan batch, whose docs a resumed build
+        or append would index and whose segments it would rebuild and
+        double-count.  Docs batch 0 is a fresh build's, which its resume
+        rewrites in place.  An orphan docs batch takes its doc_map batch
+        with it (doc_map commits between the docs commit and the lineage
+        append, so it can never be covered when the docs batch isn't)."""
         removed = []
-        for d in commits:
-            batch = int(os.path.basename(d).split("-", 1)[1])
-            if batch not in covered:
+        for stage, table_dir, first in (("docs", self.docs, 1),
+                                        ("postings", self.postings, 0)):
+            covered = self.covered_batches(stage)
+            for d in self.list_commits(table_dir):
+                batch = _batch_of(d)
+                if batch < first or batch in covered:
+                    continue
                 shutil.rmtree(d, ignore_errors=True)
                 removed.append(d)
-        return removed
-
-    def gc_orphan_docs_commits(self, spark) -> list[str]:
-        """Remove appended docs commit dirs (batch > 0) not covered by a
-        docs lineage row — the append analog of the postings orphan GC
-        (the lineage append is the commit point for a docs batch).  The
-        paired doc_map batch is removed with it (it commits between the
-        docs commit and the lineage append, so it can never be covered
-        when the docs batch isn't)."""
-        commits = self.list_commits(self.docs)
-        if len(commits) <= 1:
-            return []
-        lin = self.read_lineage(spark)
-        covered = {
-            int(r["batch"])
-            for r in lin.filter(lin.stage == "docs")
-            .select("batch").distinct().collect()
-        }
-        removed = []
-        for d in commits:
-            batch = int(os.path.basename(d).split("-", 1)[1])
-            if batch > 0 and batch not in covered:
-                shutil.rmtree(d, ignore_errors=True)
-                removed.append(d)
-                dm = os.path.join(self.doc_map, f"commit-{batch:05d}")
-                if os.path.isdir(dm):
+                dm = os.path.join(self.doc_map, os.path.basename(d))
+                if stage == "docs" and os.path.isdir(dm):
                     shutil.rmtree(dm, ignore_errors=True)
                     removed.append(dm)
         return removed
@@ -358,39 +382,60 @@ class IndexLayout:
             # time-travel: only the commit batches recorded at snapshot
             # time exist in this view (commits appended SINCE are invisible
             # — they live in the same generation dir)
-            name = os.path.basename(table_dir)
-            if ".g" in name:
-                name = name.rsplit(".g", 1)[0]
-            allowed = set(
-                self._pinned.get("snapshot_commits", {}).get(name, []))
-            out = [
-                d for d in out
-                if int(os.path.basename(d).split("-", 1)[1]) in allowed
-            ]
+            allowed = set(self._pinned.get("snapshot_commits", {}).get(
+                _table_name(table_dir), []))
+            out = [d for d in out if _batch_of(d) in allowed]
         return out
 
-    def read_commits(self, spark, table_dir: str, schema=None):
-        """Read a table as the union of its committed batches.
+    # -- the two table readers -------------------------------------------
+    def read_commits(self, spark, table_dir: str,
+                     batches: list[int] | None = None):
+        """The Spark reader of the large tables (docs, doc_map, postings,
+        term_stats): the union of the committed batches under
+        ``table_dir`` (only ``batches`` when given), each read with the
+        table's declared schema (``pysearch.schema.table_schema``), so no
+        read runs a schema-inference job and case_id is a string and
+        term_bucket an int on every path.
 
         Each commit dir is read as its own single-root parquet tree (so
         partition discovery inside a commit — e.g. term_bucket=K — stays
         consistent), then unioned by name; Spark cannot partition-discover
-        across multiple commit roots in one read.
+        across multiple commit roots in one read.  Commit dirs with no part
+        files (an empty partitioned write leaves only _SUCCESS) are
+        skipped; a table with none reads as an empty DataFrame."""
+        from pysearch.schema import table_schema
 
-        Commit dirs with no part files (an empty partitioned write leaves
-        only _SUCCESS) are skipped — with ``schema`` given, a table whose
-        commits are all empty reads as an empty DataFrame instead of a
-        schema-inference error (empty-corpus builds)."""
-        dirs = [d for d in self.list_commits(table_dir) if _has_parquet(d)]
+        schema = table_schema(_table_name(table_dir),
+                              bool(self.read_manifest().get("positions")))
+        dirs = [d for d in self.list_commits(table_dir)
+                if (batches is None or _batch_of(d) in batches)
+                and _has_parquet(d)]
         if not dirs:
-            if schema is not None:
-                return spark.createDataFrame([], schema=schema)
-            raise FileNotFoundError(f"no readable commits under {table_dir}")
-        out = None
-        for d in dirs:
-            part = spark.read.parquet(d)
-            out = part if out is None else out.unionByName(part)
+            return spark.createDataFrame([], schema=schema)
+        reader = spark.read.schema(schema)
+        out = reader.parquet(dirs[0])
+        for d in dirs[1:]:
+            out = out.unionByName(reader.parquet(d))
         return out
+
+    def read_local(self, table_dir: str, columns: list[str]):
+        """The driver-side reader of the bookkeeping tables (lineage,
+        tombstones, corpus_stats — O(segments), O(pending deletes) and one
+        row per case): ``columns`` of the committed batches under
+        ``table_dir``, read with pyarrow into one pandas frame.  No Spark
+        job runs.  Each commit is cast to the table's declared types, so
+        commits written by Spark and by pyarrow read alike."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pysearch.schema import table_schema
+
+        schema = _arrow_schema(table_schema(_table_name(table_dir)))
+        schema = pa.schema([schema.field(c) for c in columns])
+        parts = [pq.read_table(d, columns=columns).cast(schema)
+                 for d in self.list_commits(table_dir) if _has_parquet(d)]
+        return (pa.concat_tables(parts) if parts
+                else schema.empty_table()).to_pandas()
 
     def gc_staging(self) -> None:
         if not os.path.isdir(self.root):
@@ -400,31 +445,30 @@ class IndexLayout:
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
     # -- lineage ----------------------------------------------------------
-    def append_lineage(self, spark, rows: list[dict]) -> None:
-        """Append lineage rows as an atomic batch.
-
-        Written driver-side with pyarrow (the rows are a small driver-side
-        list — a Spark job per lineage append was pure fixed overhead, and
-        builds do several of them).  The arrow schema mirrors
-        pysearch.schema.LINEAGE so Spark reads all commits uniformly."""
+    def write_lineage(self, cols: dict, path: str) -> None:
+        """The one lineage writer: ``cols`` (pysearch.schema.LINEAGE column
+        name -> values, a dict or a pandas frame) as one parquet file under
+        ``path``, written driver-side with pyarrow (lineage rows are a
+        small driver-side set — a Spark job per lineage write was pure
+        fixed overhead)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from pysearch.schema import LINEAGE
+
+        schema = _arrow_schema(LINEAGE)
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(
+            pa.Table.from_arrays(
+                [pa.array(cols[f.name], type=f.type, from_pandas=True)
+                 for f in schema], schema=schema),
+            os.path.join(path, "part-00000.parquet"))
+
+    def append_lineage(self, spark, rows: list[dict]) -> None:
+        """Append lineage rows as an atomic batch."""
         self._assert_mutable()
         if not rows:
             return
-        now = _utcnow()
-        schema = pa.schema([
-            ("stage", pa.string()),
-            ("partition_key", pa.string()),
-            ("batch", pa.int32()),
-            ("status", pa.string()),
-            ("n_rows", pa.int64()),
-            ("n_postings", pa.int64()),
-            ("bytes", pa.int64()),
-            ("wall_sec", pa.float64()),
-            ("ts", pa.timestamp("us", tz="UTC")),
-        ])
         cols = {
             "stage": [r["stage"] for r in rows],
             "partition_key": [r["partition_key"] for r in rows],
@@ -434,25 +478,24 @@ class IndexLayout:
             "n_postings": [r.get("n_postings") for r in rows],
             "bytes": [r.get("bytes") for r in rows],
             "wall_sec": [r.get("wall_sec") for r in rows],
-            "ts": [now] * len(rows),
+            "ts": [_utcnow()] * len(rows),
         }
         staging = self.staging_dir("lineage")
-        os.makedirs(staging, exist_ok=True)
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema),
-                       os.path.join(staging, "part-00000.parquet"))
+        self.write_lineage(cols, staging)
         self.commit_batch(staging, self.lineage, self.next_batch(self.lineage))
 
-    def read_lineage(self, spark):
+    def read_lineage(self, columns: list[str] | None = None):
+        """The lineage rows (``columns``, default all) as a pandas frame."""
         from pysearch.schema import LINEAGE
 
-        return self.read_commits(spark, self.lineage, schema=LINEAGE)
+        return self.read_local(self.lineage, columns or LINEAGE.names)
 
-    def done_partitions(self, spark, stage: str) -> set:
-        df = self.read_lineage(spark)
-        rows = (
-            df.filter((df.stage == stage) & (df.status == "done"))
-            .select("partition_key")
-            .distinct()
-            .collect()
-        )
-        return {r.partition_key for r in rows}
+    def covered_batches(self, stage: str) -> set[int]:
+        """Batches of ``stage`` (docs or postings) that lineage covers."""
+        lin = self.read_lineage(["stage", "batch"])
+        return set(lin.loc[lin.stage == stage, "batch"].astype(int))
+
+    def done_partitions(self, stage: str) -> set:
+        lin = self.read_lineage(["stage", "partition_key", "status"])
+        return set(lin.loc[(lin.stage == stage) & (lin.status == "done"),
+                           "partition_key"])

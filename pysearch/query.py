@@ -352,76 +352,44 @@ class Searcher:
         # per-case catalog columns under the LOCAL_MAX_CATALOG gate (None
         # above it); dropped on every (re)load like the vocab cache
         self._catalog_cache: Dict[str, Optional[dict]] = {}
-        from pyspark.sql import functions as F
-
-        def _norm(df):
-            # case_id may come back typed by directory-name inference; pin
-            # it to string (a string->string cast is elided by Catalyst, so
-            # partition pruning on case_id survives).  term_bucket is left
-            # at its discovered type — casting a partition column defeats
-            # partition pruning; filters adapt via _bucket_lit instead.
-            out = df
-            if "case_id" in df.columns:
-                out = out.withColumn("case_id", F.col("case_id").cast("string"))
-            return out
-
-        # explicit schemas: a table whose commits are all empty (empty or
-        # fully-stopworded corpus) reads as an empty DataFrame
-        from pysearch.schema import (CORPUS_STATS, DOCS, POSTING_BLOCKS,
-                                     TERM_STATS)
-
-        self.postings = _norm(
-            self.layout.read_commits(spark, path["postings"],
-                                     schema=POSTING_BLOCKS)
-        )
-        self.docs = _norm(
-            self.layout.read_commits(spark, path["docs"], schema=DOCS)
-        )
+        # the large tables as typed Spark frames (a table whose commits
+        # are all empty — empty or fully-stopworded corpus — reads as an
+        # empty DataFrame); corpus_stats and tombstones are read on the
+        # driver (IndexLayout.read_local)
+        self.postings = self.layout.read_commits(spark, path["postings"])
+        self.docs = self.layout.read_commits(spark, path["docs"])
+        self._term_stats = self.layout.read_commits(spark,
+                                                    path["term_stats"])
         # (n_docs, avgdl, sum_dl) — sum_dl is the exact long the finalize
         # divided to get avgdl; NRT hybrid search (streaming.
         # search_with_arrivals) re-derives the post-append avgdl from it
         self._corpus: Dict[str, tuple] = {
-            str(r["case_id"]): (int(r["n_docs"]), float(r["avgdl"]),
-                                int(r["sum_dl"]))
-            for r in self.layout.read_commits(
-                self.spark, path["corpus_stats"], schema=CORPUS_STATS
-            ).collect()
+            str(r.case_id): (int(r.n_docs), float(r.avgdl), int(r.sum_dl))
+            for r in self.layout.read_local(
+                path["corpus_stats"],
+                ["case_id", "n_docs", "avgdl", "sum_dl"]).itertuples()
         }
-        self._term_stats = _norm(
-            self.layout.read_commits(spark, path["term_stats"],
-                                     schema=TERM_STATS)
-        )
         # pending tombstoned deletes (delete.delete_docs): per-case sorted
         # doc_id arrays, shipped to executors with the scoring closures and
         # applied as a vectorized np.isin drop after block decode.  Size is
         # O(deletes since last compaction) — compaction purges them
-        # physically and empties the table (delete.py docstring).
-        self._tombstones: Dict[str, np.ndarray] = {}
-        if self.layout.list_commits(path["tombstones"]):
-            from pysearch.schema import TOMBSTONES
-
-            tdf = self.layout.read_commits(
-                spark, path["tombstones"], schema=TOMBSTONES)
-            # count BEFORE collecting: a parquet count() is metadata-cheap,
-            # and failing here (instead of OOMing in toPandas or shipping an
-            # oversized closure to every task) turns the documented
-            # "compact before tombstones grow" rule into an enforced bound
-            n_pending = tdf.count()
-            if n_pending > self.max_pending_tombstones:
-                raise RuntimeError(
-                    f"index at {index_dir} has {n_pending} pending "
-                    f"tombstoned deletes (> max_pending_tombstones="
-                    f"{self.max_pending_tombstones}); run "
-                    "pysearch.compact.compact_index (CLI: compact-index) "
-                    "to purge deletes physically before searching, or "
-                    "construct with Searcher(..., max_pending_tombstones=N)"
-                )
-            tpdf = tdf.toPandas()
-            for cid, grp in tpdf.groupby("case_id"):
-                self._tombstones[str(cid)] = np.unique(
-                    grp["doc_id"].to_numpy(np.int64))
-        # partition-column literal type for bucket pruning filters
-        self._bucket_is_str = dict(self.postings.dtypes).get("term_bucket") == "string"
+        # physically and empties the table (delete.py docstring).  The
+        # count comes from the parquet footers BEFORE any id is read:
+        # failing here (instead of OOMing on the read or shipping an
+        # oversized closure to every task) turns the documented "compact
+        # before tombstones grow" rule into an enforced bound
+        n_pending, tombstones = self.layout.pending_deletes(
+            path["tombstones"], limit=self.max_pending_tombstones)
+        if tombstones is None:
+            raise RuntimeError(
+                f"index at {index_dir} has {n_pending} pending "
+                f"tombstoned deletes (> max_pending_tombstones="
+                f"{self.max_pending_tombstones}); run "
+                "pysearch.compact.compact_index (CLI: compact-index) "
+                "to purge deletes physically before searching, or "
+                "construct with Searcher(..., max_pending_tombstones=N)"
+            )
+        self._tombstones: Dict[str, np.ndarray] = tombstones
         # postings commit dirs frozen against the SAME generation map as
         # the Spark frames above: the driver-direct arrow fetch
         # (_read_blocks_arrow) reads exactly the files this load reads,
@@ -456,9 +424,6 @@ class Searcher:
                 "call refresh() or construct with on_stale='refresh'"
             )
         self.refresh()
-
-    def _bucket_lit(self, buckets):
-        return [str(b) for b in buckets] if self._bucket_is_str else list(buckets)
 
     def _allowed_df(self, case_id: str, filter: Optional[str],
                     filter_docs):
@@ -715,7 +680,7 @@ class Searcher:
         buckets = sorted({term_bucket(t, self.n_buckets) for t in scan})
         blocks = self.postings.filter(
             (F.col("case_id") == case_id)
-            & F.col("term_bucket").isin(self._bucket_lit(buckets))
+            & F.col("term_bucket").isin(buckets)
             & F.col("term").isin(scan)
         )
         if allow is not None:
@@ -844,7 +809,7 @@ class Searcher:
                 rows = (
                     self._term_stats.filter(
                         (F.col("case_id") == case_id)
-                        & F.col("term_bucket").isin(self._bucket_lit(buckets))
+                        & F.col("term_bucket").isin(buckets)
                         & F.col("term").isin(missing)
                     )
                     # delta finalize appends one stats commit per append
@@ -1801,7 +1766,7 @@ class Searcher:
             buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
             found = self.postings.filter(
                 (F.col("case_id") == case_id)
-                & F.col("term_bucket").isin(self._bucket_lit(buckets))
+                & F.col("term_bucket").isin(buckets)
                 & F.col("term").isin(list(terms))
                 & F.col("segment_id").isin(segs)
                 & (F.col("min_doc_id") <= hi) & (F.col("max_doc_id") >= lo)

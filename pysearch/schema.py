@@ -44,6 +44,13 @@ DOCS = T.StructType([
     T.StructField("offs_crc32", T.LongType(), True),
 ])
 
+#: the token-offset sidecar columns of docs (store_positions=True builds)
+TOKEN_OFFSETS = ("n_tokens", "tok_starts_bin", "tok_lens_bin", "offs_crc32")
+
+# the catalog columns of docs, written alongside it by the docs stage
+DOC_MAP = T.StructType([DOCS[c] for c in ("case_id", "doc_id", "url",
+                                          "content_hash")])
+
 POSTING_BLOCKS = T.StructType([
     T.StructField("case_id", T.StringType(), False),
     T.StructField("term", T.StringType(), False),
@@ -130,3 +137,14 @@ MATCHES = T.StructType([
     T.StructField("lines", T.ArrayType(T.StringType()), False),
     T.StructField("fragment", T.StringType(), False),
 ])
+
+
+def table_schema(name: str, positions: bool = False) -> T.StructType:
+    """The declared schema of index table ``name``; docs carries the
+    token-offset sidecar columns only when the index stores positions."""
+    if name == "docs" and not positions:
+        return T.StructType([f for f in DOCS.fields
+                             if f.name not in TOKEN_OFFSETS])
+    return {"docs": DOCS, "doc_map": DOC_MAP, "postings": POSTING_BLOCKS,
+            "term_stats": TERM_STATS, "corpus_stats": CORPUS_STATS,
+            "tombstones": TOMBSTONES, "lineage": LINEAGE}[name]

@@ -32,8 +32,6 @@ from pysearch.version import INDEX_FORMAT_VERSION
 def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
     from pyspark.sql import functions as F
 
-    from pysearch.schema import CORPUS_STATS, DOCS, POSTING_BLOCKS, TERM_STATS
-
     problems: list[str] = []
     layout = IndexLayout(index_dir)
     m = layout.read_manifest()
@@ -97,17 +95,10 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
     if problems:
         return problems  # table checks assume a complete build
 
-    docs = layout.read_commits(spark, layout.docs, schema=DOCS).withColumn(
-        "case_id", F.col("case_id").cast("string")
-    )
-    doc_map = layout.read_commits(spark, layout.doc_map, schema=DOCS).withColumn(
-        "case_id", F.col("case_id").cast("string")
-    )
-    blocks = layout.read_commits(
-        spark, layout.postings, schema=POSTING_BLOCKS
-    ).withColumn("case_id", F.col("case_id").cast("string"))
-    stats = layout.read_commits(spark, layout.corpus_stats, schema=CORPUS_STATS)
-    tstats = layout.read_commits(spark, layout.term_stats, schema=TERM_STATS)
+    docs = layout.read_commits(spark, layout.docs)
+    doc_map = layout.read_commits(spark, layout.doc_map)
+    blocks = layout.read_commits(spark, layout.postings)
+    tstats = layout.read_commits(spark, layout.term_stats)
 
     # docs count vs manifest
     n_docs = docs.count()
@@ -138,11 +129,12 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
         str(r["case_id"]): int(r["n"])
         for r in docs.groupBy("case_id").agg(F.count("*").alias("n")).collect()
     }
-    for r in stats.collect():
-        want = per_case.get(str(r["case_id"]))
-        if want != int(r["n_docs"]):
+    for r in layout.read_local(layout.corpus_stats,
+                               ["case_id", "n_docs"]).itertuples():
+        want = per_case.get(r.case_id)
+        if want != int(r.n_docs):
             problems.append(
-                f"corpus_stats case {r['case_id']}: n_docs {r['n_docs']} != docs {want}"
+                f"corpus_stats case {r.case_id}: n_docs {r.n_docs} != docs {want}"
             )
 
     # postings commits <-> lineage coverage (both directions)
@@ -150,12 +142,7 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
         int(os.path.basename(d).split("-", 1)[1])
         for d in layout.list_commits(layout.postings)
     }
-    lin = layout.read_lineage(spark)
-    covered = {
-        int(r["batch"])
-        for r in lin.filter(lin.stage == "postings")
-        .select("batch").distinct().collect()
-    }
+    covered = layout.covered_batches("postings")
     if commits - covered:
         problems.append(f"postings commits without lineage: {sorted(commits - covered)}")
     if covered - commits:

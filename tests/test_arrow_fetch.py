@@ -48,7 +48,7 @@ def test_arrow_fetch_bytes_match_spark(spark, searcher):
     for cols in (Searcher._LOCAL_COLS, Searcher._LOCAL_COLS_POS):
         blocks = s.postings.filter(
             (F.col("case_id") == "7")
-            & F.col("term_bucket").isin(s._bucket_lit(buckets))
+            & F.col("term_bucket").isin(buckets)
             & F.col("term").isin(terms))
         a = blocks.select(*cols).toPandas()
         b = s._read_blocks_arrow("7", terms, cols)

@@ -686,7 +686,7 @@ def test_compact_index(spark, tmp_path):
         }
 
     before = snap(Searcher(spark, d))
-    segs_before = lay.done_partitions(spark, "postings")
+    segs_before = lay.done_partitions("postings")
 
     res = compact_index(spark, d)
     assert res.get("docs") == 3 and res.get("postings") >= 3
@@ -695,7 +695,7 @@ def test_compact_index(spark, tmp_path):
 
     assert verify_index(spark, d) == []
     assert snap(Searcher(spark, d)) == before  # bit-identical results
-    assert lay.done_partitions(spark, "postings") == segs_before
+    assert lay.done_partitions("postings") == segs_before
 
     assert compact_index(spark, d) == {}  # idempotent no-op
 
@@ -899,13 +899,13 @@ def test_resume_equals_fresh_build(spark, index):
     # simulate crash: only 3 segments built, stage not marked complete
     build_postings_stage(spark, layout, n_buckets=64, max_segments=3)
     assert not layout.stage_done("postings")
-    done_before = layout.done_partitions(spark, "postings")
+    done_before = layout.done_partitions("postings")
     assert len(done_before) == 3
 
     # resume to completion
     build_index(spark, df, resume_dir, resume=True)
     assert layout.stage_done("finalize")
-    done_after = layout.done_partitions(spark, "postings")
+    done_after = layout.done_partitions("postings")
     assert done_before <= done_after and len(done_after) == 8
 
     # rank identity vs the session index (built fresh in one shot)

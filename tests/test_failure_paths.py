@@ -1,7 +1,8 @@
 """Odd inputs and failures get the right answer or a clean error: the lang
-facet keeps a NULL-lang group like its DuckDB oracle, and a docs stage
-whose id assignment fails re-raises that error with no frame left
-persisted."""
+facet keeps a NULL-lang group like its DuckDB oracle, a docs stage whose
+id assignment fails re-raises that error with no frame left persisted, and
+an append that crashed before its docs lineage row recovers under
+``build_index(resume=True)`` to the base index."""
 
 import os
 import sys
@@ -58,3 +59,23 @@ def test_docs_stage_failure_unpersists_and_reraises(spark, tmp_path,
     with pytest.raises(Boom, match="id assignment failed"):
         build.build_index(spark, df, str(tmp_path / "ix"))
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_resume_drops_append_docs_orphaned_before_lineage(spark,
+                                                         recovered_ix):
+    """An append that crashes between its docs commit and its docs lineage
+    row leaves an orphan docs batch (and its doc_map batch).  A resumed
+    build removes it, like an append does, so the recovered index passes
+    verify_index and answers exactly as the base index did."""
+    from pysearch.lineage import IndexLayout
+    from pysearch.query import Searcher
+    from pysearch.verify import verify_index
+
+    d, want = recovered_ix
+    lay = IndexLayout(d)
+    assert len(lay.list_commits(lay.docs)) == 1
+    assert len(lay.list_commits(lay.doc_map)) == 1
+    assert verify_index(spark, d) == []
+    s = Searcher(spark, d)
+    for q, hits in want.items():
+        assert s.search_ids(q, k=10, case_id="6").equals(hits), q

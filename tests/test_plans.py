@@ -28,7 +28,7 @@ def test_term_bucket_partition_pruning(searcher):
 
     blocks = searcher.postings.filter(
         (F.col("case_id") == "7")
-        & F.col("term_bucket").isin(searcher._bucket_lit([55]))
+        & F.col("term_bucket").isin([55])
         & F.col("term").isin(["cornucopia"])
     )
     plan = _plan(blocks)
@@ -121,7 +121,7 @@ def test_hit_positions_scan_prunes_partitions(pos_plan_searcher):
     buckets = sorted({term_bucket(t, s.n_buckets) for t in terms})
     blocks = s.postings.filter(
         (F.col("case_id") == "4")
-        & F.col("term_bucket").isin(s._bucket_lit(buckets))
+        & F.col("term_bucket").isin(buckets)
         & F.col("term").isin(terms)
         & F.col("segment_id").isin([0, 1])
         & (F.col("min_doc_id") <= 40) & (F.col("max_doc_id") >= 1)
