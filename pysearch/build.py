@@ -25,7 +25,9 @@ stage exists):
 
   stage "finalize":
     term_stats (df/cf) via explicit two-phase salted aggregation over block
-    metadata; corpus_stats (N, avgdl); manifest marked complete.
+    metadata, one stats commit per postings batch; each case's summed doc
+    length joins its doc count in the manifest, whose one write marks the
+    index complete.
 
 Every stage commits atomically and records per-partition lineage + metrics;
 a resumed build skips completed segments (north_rule).
@@ -322,8 +324,8 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
     assigned = df.join(id_map, ["case_id", "url", "content_hash"], "inner")
 
     # doc_len is NOT computed here: the postings stage tokenizes anyway and
-    # sum(tf) over a doc's terms == its analyzed length, so corpus_stats
-    # derives avgdl from block metadata (finalize) — one analyzer pass total.
+    # sum(tf) over a doc's terms == its analyzed length, so the finalize
+    # derives sum_dl from block metadata — one analyzer pass total.
     # Repartition by (case, segment) BEFORE caching: the postings stage
     # groups by exactly these keys, so it reads the cache with NO exchange
     # and never re-reads document bodies from disk.
@@ -707,30 +709,6 @@ def salted_sum(df, keys: List[str], sums: dict, salt_col, salt_n: int = SALT_N):
     )
 
 
-def _postings_disk_batches(layout: IndexLayout) -> list[int]:
-    return sorted(
-        int(os.path.basename(d).split("-", 1)[1])
-        for d in layout.list_commits(layout.postings)
-    )
-
-
-def _n_per_case_df(spark, layout: IndexLayout):
-    """Per-case doc counts from the manifest (recorded by the docs stage) so
-    finalize never re-scans the docs table; legacy indexes without
-    case_counts fall back to a count over the typed docs read."""
-    from pyspark.sql import functions as F
-
-    cc = layout.read_manifest().get("stages", {}).get("docs", {}).get("case_counts")
-    if cc:
-        return spark.createDataFrame(
-            [(str(k), int(v)) for k, v in cc.items()],
-            schema="case_id string, n_docs long",
-        )
-    return layout.read_commits(spark, layout.docs).groupBy("case_id").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
-
-
 def _term_stats_of(blocks):
     """Per-term (df, cf) aggregate over a posting-block frame."""
     from pyspark.sql import functions as F
@@ -758,167 +736,64 @@ def _write_term_stats(term_stats, path: str) -> None:
     )
 
 
-def _corpus_stats_of(n_per_case, frame, tf_col: str):
-    """corpus_stats rows (case_id, n_docs, sum_dl, avgdl): the per-case doc
-    counts left-joined with the per-case sum of ``tf_col`` over ``frame``.
-    ``sum_tf`` over posting blocks and ``cf`` over term_stats both sum to
-    the case's analyzed token count, i.e. its sum of doc lengths (exact
-    integers), so avgdl needs no docs or text re-scan."""
+def build_finalize_stage(spark, layout: IndexLayout) -> None:
+    """The one finalize of fresh builds, resumes and appends: fold every
+    postings batch that has blocks and is not yet in the manifest's fold
+    set (``stages.finalize.folded``; on a fresh build, every batch).
+
+    - Each such batch B gets term_stats commit B, the per-term (df, cf)
+      aggregate of postings commit B alone.  df/cf are additive, so readers
+      sum across stats commits and an append costs O(delta), not O(index).
+    - One small aggregate adds each case's sum of cf over the new commits
+      to the manifest's ``sum_dl`` (sum cf == the case's analyzed token
+      count == its summed doc length, an exact integer); a Searcher takes
+      avgdl = sum_dl / n_docs from it, with n_docs from the docs stage's
+      ``case_counts``.
+    - The fold set, ``sum_dl`` and the done flag land together in ONE
+      manifest write, the snapshot commit: the finalize's commit point.
+
+    Crash-safe: stats commit B is a pure function of postings batch B and
+    is rewritten in place (``replace=True``), and ``sum_dl`` grows only in
+    the write that adds B to the fold set, so a rerun after a crash at any
+    step folds nothing twice."""
     from pyspark.sql import functions as F
 
-    dl_per_case = frame.groupBy("case_id").agg(
-        F.sum(tf_col).cast("long").alias("sum_dl"))
-    return (
-        n_per_case.join(dl_per_case, "case_id", "left")
-        .fillna({"sum_dl": 0})
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-    )
+    from pysearch.lineage import _batch_of, _has_parquet, _utcnow
 
-
-def _write_corpus_stats_from_term_stats(spark, layout: IndexLayout) -> None:
-    """Rewrite corpus_stats from manifest doc counts + the term_stats table.
-
-    sum(cf) per case over term_stats == total analyzed tokens == sum of doc
-    lengths (exact integer identity), so avgdl never needs a postings or
-    docs re-scan — an O(vocabulary) narrow column scan at most.  Fully
-    deterministic from committed state, hence idempotent across crashes."""
-    ts = layout.read_commits(spark, layout.term_stats)
-    staging = layout.staging_dir("corpus_stats")
-    _corpus_stats_of(_n_per_case_df(spark, layout), ts, "cf").coalesce(
-        1).write.mode("overwrite").parquet(staging)
-    _commit_stats_tables(layout, [("corpus_stats", staging, False)])
-
-
-def _commit_stats_tables(layout: IndexLayout, staged: list) -> None:
-    """Install freshly-RECOMPUTED stats tables (term_stats/corpus_stats —
-    the two non-additive tables a finalize replaces wholesale), ALL made
-    visible by one atomic manifest write.
-
-    ``staged`` is a list of ``(name, staging_dir, clear_current)``.  On a
-    snapshot-bearing index each table's new tree is written as its NEXT
-    generation, then every generation pointer flips in a SINGLE manifest
-    write (``bump_generations``) — two sequential bumps would let a
-    Searcher refreshing between them freeze a generation map with NEW
-    term_stats but STALE corpus_stats (df > n_docs, distorted idf),
-    violating the one-atomic-manifest-write load-consistency invariant
-    that compact_index's step-3 commit honors.  On a fresh build (no
-    snapshots yet — unreachable by readers, finalize isn't marked done)
-    each table replaces batch 0 in place (``clear_current`` drops
-    accumulated delta commits first).  NOT thread-safe — callers commit
-    sequentially (parquet staging writes may still run concurrently)."""
-    import shutil
-
-    if layout.read_manifest().get("snapshot_version"):
-        flips = {}
-        for name, staging, _clear in staged:
-            new_gen = int(layout._generations().get(name, 0)) + 1
-            tdir = layout.table_path(name, new_gen)
-            shutil.rmtree(tdir, ignore_errors=True)
-            os.makedirs(tdir, exist_ok=True)
-            os.rename(staging, os.path.join(tdir, "commit-00000"))
-            flips[name] = new_gen
-        layout.bump_generations(flips)
-    else:
-        for name, staging, clear_current in staged:
-            if clear_current:
-                shutil.rmtree(layout.table_path(name), ignore_errors=True)
-            layout.commit_batch(staging, layout.table_path(name), 0,
-                                replace=True)
-
-
-def build_finalize_stage(spark, layout: IndexLayout) -> None:
-    """Full-index stats recompute (fresh builds).  Appends and streaming
-    micro-batches use ``build_finalize_delta`` instead, which touches only
-    the new postings batches — O(delta), not O(index)."""
     t0 = time.time()
-    blocks = layout.read_commits(spark, layout.postings)
-    term_stats = _term_stats_of(blocks)
-    # avgdl from block metadata — saves a second analyzer pass over text
-    corpus_stats = _corpus_stats_of(_n_per_case_df(spark, layout), blocks,
-                                    "sum_tf")
-
-    # the two table writes are independent — submit them as concurrent
-    # Spark jobs (thread-safe by design) so their stage latencies overlap
-    # (doc_map is written by the docs stage, from cached partitions)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def stage_term_stats():
-        staging = layout.staging_dir("term_stats")
-        _write_term_stats(term_stats, staging)
-        # a full recompute covers everything: clear any delta commits a
-        # previous append left when installing in place
-        return ("term_stats", staging, True)
-
-    def stage_corpus_stats():
-        staging = layout.staging_dir("corpus_stats")
-        corpus_stats.coalesce(1).write.mode("overwrite").parquet(staging)
-        return ("corpus_stats", staging, False)
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futures = [ex.submit(f) for f in
-                   (stage_term_stats, stage_corpus_stats)]
-        staged = [fut.result() for fut in futures]
-    # both stats trees flip visible in ONE manifest write: a reader must
-    # never freeze new term_stats against stale corpus_stats (df > n_docs)
-    _commit_stats_tables(layout, staged)
-
-    layout.append_lineage(spark, [{
-        "stage": "finalize", "partition_key": "all", "status": "done",
-        "wall_sec": time.time() - t0,
-    }])
-    layout.mark_stage("finalize", folded=_postings_disk_batches(layout))
-    layout.commit_snapshot()  # archive as a numbered time-travel snapshot
-
-
-def build_finalize_delta(spark, layout: IndexLayout) -> None:
-    """O(delta) stats maintenance for appends/streaming micro-batches.
-
-    The full recompute re-aggregated term_stats over ALL posting blocks per
-    append — an O(index) metadata scan per streaming micro-batch (the r2
-    scale flaw).  Delta finalize instead:
-
-    - reads ONLY the postings commit batches not yet folded into term_stats
-      (the fold set lives in the manifest's finalize entry);
-    - writes each new batch's per-term (df, cf) aggregate as term_stats
-      commit ``commit-<postings_batch>`` — df/cf are additive, so readers
-      SUM across stats commits (query-side: Searcher._term_dfs; offline:
-      compact_index consolidates);
-    - rewrites corpus_stats (one row per case) from manifest doc counts +
-      a sum over term_stats' cf column.
-
-    Crash-safe by construction: the stats commit for postings batch B is a
-    pure function of batch B's blocks and is named after it, so a rerun
-    rewrites the same content in place (``replace=True``) — double-folding
-    is impossible, whatever step a previous attempt died at.  Falls back to
-    the full recompute for legacy indexes with no fold bookkeeping."""
     fin = layout.read_manifest().get("stages", {}).get("finalize", {})
-    folded = fin.get("folded")
-    if folded is None:
-        build_finalize_stage(spark, layout)
-        return
-    t0 = time.time()
-    folded = set(int(b) for b in folded)
-    disk = _postings_disk_batches(layout)
-    new = [b for b in disk if b not in folded]
-    from pysearch.lineage import _has_parquet
-
+    folded = {int(b) for b in fin.get("folded", [])}
+    commits = {_batch_of(d): d for d in layout.list_commits(layout.postings)}
+    new = [b for b, d in commits.items()
+           if b not in folded and _has_parquet(d)]
     for b in new:
-        commit_dir = os.path.join(layout.postings, f"commit-{b:05d}")
-        if not _has_parquet(commit_dir):
-            continue  # zero-block batch (all tokens stopped out)
         staging = layout.staging_dir("term_stats")
         _write_term_stats(
             _term_stats_of(layout.read_commits(spark, layout.postings,
                                                batches=[b])),
             staging)
         layout.commit_batch(staging, layout.term_stats, b, replace=True)
-    _write_corpus_stats_from_term_stats(spark, layout)
+    sum_dl = {str(c): int(v) for c, v in fin.get("sum_dl", {}).items()}
+    if new:
+        for r in (layout.read_commits(spark, layout.term_stats, batches=new)
+                  .groupBy("case_id").agg(F.sum("cf").alias("cf"))
+                  .collect()):
+            sum_dl[r.case_id] = sum_dl.get(r.case_id, 0) + int(r.cf)
     layout.append_lineage(spark, [{
-        "stage": "finalize", "partition_key": f"delta:{new}",
+        "stage": "finalize", "partition_key": f"fold:{new}",
         "status": "done", "wall_sec": time.time() - t0,
     }])
-    layout.mark_stage("finalize", folded=sorted(folded | set(new)))
-    layout.commit_snapshot()  # archive as a numbered time-travel snapshot
+    m = layout.read_manifest()
+    m.setdefault("stages", {})["finalize"] = {
+        "done": True, "ts": _utcnow().isoformat(),
+        "folded": sorted(folded | set(commits)), "sum_dl": sum_dl,
+    }
+    layout.commit_snapshot(m)  # the commit point + time-travel archive
+
+
+# The benchmark's span tracer (perfbench/spans.py) patches this name too;
+# it is the same finalize.
+build_finalize_delta = build_finalize_stage
 
 
 # --------------------------------------------------------------------------
@@ -1026,10 +901,9 @@ def _append_index(spark, webtext_df, layout: IndexLayout,
       — the (case, segment) postings done-granularity stays valid at the
       cost of at most one segment's worth of id space per append per case.
     - Postings build only the new segments (incremental commit batch);
-      term_stats gains one delta commit aggregated from ONLY the new
-      batch's block metadata and corpus_stats is rewritten from manifest
-      counts + term_stats (``build_finalize_delta`` — O(delta) per append,
-      not O(index); readers sum df/cf across stats commits).
+      the finalize folds ONLY the new batch into term_stats and the
+      manifest's per-case ``sum_dl`` (``build_finalize_stage`` — O(delta)
+      per append, not O(index); readers sum df/cf across stats commits).
     - Crash-safe: the postings/finalize done-flags are cleared BEFORE the
       docs commit, and the docs lineage append is the docs commit point
       (orphan batches are GC'd), so an interrupted append is completed by
@@ -1083,5 +957,5 @@ def _append_index(spark, webtext_df, layout: IndexLayout,
                          nonempty_hint=n_new > 0,
                          store_positions=store_positions)
     docs_df.unpersist()
-    build_finalize_delta(spark, layout)
+    build_finalize_stage(spark, layout)
     return layout

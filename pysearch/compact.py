@@ -7,9 +7,9 @@ O(commits) scans per query after many appends.  ``compact_index`` rewrites
 every multi-commit table into a single consolidated ``commit-00000`` with
 the same partition layout the build writes (docs/doc_map by ``case_id``,
 postings by ``term_bucket`` — query partition pruning survives),
-consolidates the term_stats delta commits by SUMMING per-term df/cf (delta
-finalize appends one stats commit per postings batch, see
-build.finalize_delta), and rewrites the lineage table on the driver — the
+consolidates the term_stats commits by SUMMING per-term df/cf (the
+finalize writes one stats commit per postings batch, see
+build.build_finalize_stage), and rewrites the lineage table on the driver — the
 same history with done docs/postings rows renumbered to the consolidated
 batch, plus the compaction event — through the one lineage writer
 (``IndexLayout.write_lineage``).  Query results are unchanged (same rows,
@@ -27,8 +27,9 @@ serve-while-ingest FileNotFound window):
    (``<table>.gN`` — see ``IndexLayout.table_path``) with the live index
    untouched (heavy, restartable);
 2. ONE atomic manifest write flips the per-table ``generations`` pointers
-   and carries every dependent bookkeeping update (delta-finalize fold
-   re-pin, post-purge doc counts, tombstone clear) — this is the commit
+   and carries every dependent bookkeeping update (finalize fold-set
+   re-pin, post-purge doc counts and summed doc lengths, tombstone
+   clear) — this is the commit
    point, the local-parquet analog of an Iceberg snapshot commit.  There
    is no multi-step swap and therefore no swap marker: a crash before the
    write leaves the staged trees unreferenced (discarded by recovery); a
@@ -82,8 +83,9 @@ def expire_generations(layout: IndexLayout,
     expire_snapshots analog).  ``keep`` retains the single generation with
     that exact NUMBER per table when it is below current — one int across
     all tables, which only pins a coherent snapshot while every table sits
-    at the same generation number (independent stats rotations desync
-    them; after that, use the default bounded retention or a full sweep).
+    at the same generation number (a compaction bumps only the tables it
+    rewrites, which desyncs them; after that, use the default bounded
+    retention or a full sweep).
     compact_index does NOT call this — it applies its own inline
     2-generation retention at commit time; this is the standalone
     maintenance-window sweep.  Returns the removed paths.  Run without
@@ -241,16 +243,15 @@ def compact_index(spark, index_dir: str,
     run ``expire_generations`` later) to drop to one generation per table.
 
     The purge rewrites docs/doc_map without the deleted rows, re-encodes
-    posting blocks without the deleted ids, recomputes term_stats AND
-    corpus_stats exactly from the purged blocks (the same arithmetic as a
-    fresh build's finalize, so post-purge scores are bit-identical to a
-    fresh build of the surviving corpus — pinned by test), re-pins the
-    manifest's per-case doc counts, and empties the tombstones table — all
-    carried by the same single manifest commit."""
+    posting blocks without the deleted ids, recomputes term_stats exactly
+    from the purged blocks (the same arithmetic as a fresh build's
+    finalize, so post-purge scores are bit-identical to a fresh build of
+    the surviving corpus — pinned by test), re-pins the manifest's
+    per-case doc counts and summed doc lengths, and empties the tombstones
+    table — all carried by the same single manifest commit."""
     from pyspark.sql import functions as F
 
-    from pysearch.build import (_corpus_stats_of, _term_stats_of,
-                                _write_term_stats)
+    from pysearch.build import _term_stats_of, _write_term_stats
     from pysearch.schema import POSTING_BLOCKS, TOMBSTONES
 
     layout = IndexLayout(index_dir)
@@ -283,9 +284,16 @@ def compact_index(spark, index_dir: str,
         n = len(layout.list_commits(layout.table_path(name)))
         if n > 1 or purge:
             plan[name] = (parts, sort, n)
-    n_tstats = len(layout.list_commits(layout.term_stats))
+    ts_commits = [os.path.basename(d)
+                  for d in layout.list_commits(layout.term_stats)]
+    n_tstats = len(ts_commits)
+    # postings are renumbered to batch 0, so the stats commits must end as
+    # commit 0 too: a lone stats commit of a later batch (a first build
+    # whose tokens were all stopped out, then an append) is summed like
+    # several, or the next append's stats commit would replace it
+    restat = ts_commits not in ([], ["commit-00000"])
     n_lineage = len(layout.list_commits(layout.lineage))
-    if not plan and n_tstats <= 1 and n_lineage <= 1:
+    if not plan and not restat and n_lineage <= 1:
         return {}
 
     t0 = time.time()
@@ -315,9 +323,9 @@ def compact_index(spark, index_dir: str,
     counts = None
     if purge:
         # exact stats recompute from the PURGED blocks through the fresh
-        # build's own stats helpers (df=sum n, cf=sum sum_tf; sum_dl = sum
-        # sum_tf per case; avgdl = sum_dl / n_docs), so a fresh build of
-        # the surviving corpus produces bit-identical scores
+        # build's own stats helper (df=sum n, cf=sum sum_tf) plus the
+        # per-case doc counts and sum_dl = sum sum_tf the manifest carries,
+        # so a fresh build of the surviving corpus scores bit-identically
         staged = layout.read_commits(spark, _staged("postings"))
         _write_term_stats(_term_stats_of(staged), _stage_root("term_stats"))
         staged_docs = layout.read_commits(spark, _staged("docs"))
@@ -326,16 +334,16 @@ def compact_index(spark, index_dir: str,
             staged_docs.groupBy("case_id").agg(
                 F.count("*").alias("n")).collect()
         }
-        n_per_case = spark.createDataFrame(
-            [(k, v) for k, v in counts.items()],
-            schema="case_id string, n_docs long")
-        _corpus_stats_of(n_per_case, staged, "sum_tf").coalesce(
-            1).write.mode("overwrite").parquet(_stage_root("corpus_stats"))
+        sum_dl = {
+            str(r["case_id"]): int(r["dl"]) for r in
+            staged.groupBy("case_id").agg(F.sum("sum_tf").alias("dl"))
+            .collect()
+        }
         # empty next-generation tombstones tree: the flip installs a
         # commit-less table, i.e. "no pending deletes"
         os.makedirs(_staged("tombstones"), exist_ok=True)
-    elif n_tstats > 1:
-        # delta finalize appends one stats commit per postings batch; the
+    elif restat:
+        # the finalize writes one stats commit per postings batch; the
         # consolidated table SUMS them (df/cf are additive per term)
         ts = layout.read_commits(spark, layout.term_stats)
         _write_term_stats(
@@ -371,8 +379,8 @@ def compact_index(spark, index_dir: str,
     #    state exists, so no write-ahead marker is needed.
     bumped = list(plan) + ["lineage"]
     if purge:
-        bumped += ["term_stats", "corpus_stats", "tombstones"]
-    elif n_tstats > 1:
+        bumped += ["term_stats", "tombstones"]
+    elif restat:
         bumped.append("term_stats")
     old_gen = {name: int(gens.get(name, 0)) for name in bumped}
     m = layout.read_manifest()
@@ -384,21 +392,19 @@ def compact_index(spark, index_dir: str,
         docs_stage["case_counts"] = counts
         docs_stage["n_docs"] = sum(counts.values())
         m.pop("tombstones", None)
-    fin = m.get("stages", {}).get("finalize")
-    if fin and fin.get("done"):
-        # postings were renumbered to the consolidated batch 0, so the
-        # delta-finalize fold set must reference only it (same write — a
-        # stale fold set could never pair with the new generation)
-        fin["folded"] = [0]
+    fin = m["stages"]["finalize"]
+    # postings were renumbered to the consolidated batch 0, so the fold set
+    # must reference only it (same write — a stale fold set could never
+    # pair with the new generation)
+    fin["folded"] = [0]
+    if purge:
+        fin["sum_dl"] = sum_dl
     layout.commit_snapshot(m)  # atomic flip + time-travel archive
 
     # 4. retention: keep each table's current generation plus the highest
     #    one below it (the snapshot in-flight readers may still be
-    #    scanning); drop anything older.  Swept over ALL tables, not just
-    #    the ones this compaction rewrote — appends rotate corpus_stats to
-    #    a new generation per finalize (time-travel correctness), so the
-    #    compaction is also where that accumulation gets bounded.  With
-    #    retain_previous=False exactly one generation per table survives.
+    #    scanning); drop anything older.  With retain_previous=False
+    #    exactly one generation per table survives.
     for name in TABLES:
         gens_on_disk = layout.generation_paths(name)
         cur = int(layout._generations().get(name, 0))
@@ -420,7 +426,7 @@ def compact_index(spark, index_dir: str,
             os.remove(f"{layout.manifest_path}.v{v}")
 
     out = {name: n for name, (_p, _sort, n) in plan.items()}
-    if n_tstats > 1:
+    if restat:
         out["term_stats"] = n_tstats
     if purge:
         out["purged_docs"] = n_purged

@@ -19,9 +19,9 @@ commit-batch tables:
    UNCHANGED by a pending delete (pinned by test).
 2. ``compact.compact_index`` physically purges: filters docs/doc_map,
    decodes + re-encodes posting blocks without the deleted ids, recomputes
-   term_stats/corpus_stats exactly, and empties the tombstones table — all
-   committed as one atomic snapshot generation flip (compact.py).  After
-   the purge,
+   term_stats and the manifest's per-case doc counts and summed doc
+   lengths exactly, and empties the tombstones table — all committed as
+   one atomic snapshot generation flip (compact.py).  After the purge,
    ranks AND scores are bit-identical to a fresh build of the surviving
    corpus (pinned by test).
 

@@ -63,8 +63,8 @@ def _arrow_schema(schema):
 
 
 #: logical table names of an index, in no particular order
-TABLES = ("docs", "doc_map", "postings", "term_stats", "corpus_stats",
-          "lineage", "tombstones")
+TABLES = ("docs", "doc_map", "postings", "term_stats", "lineage",
+          "tombstones")
 
 
 class IndexLayout:
@@ -163,27 +163,6 @@ class IndexLayout:
         _sh.copyfile(self.manifest_path, f"{self.manifest_path}.v{v}")
         return v
 
-    def bump_generation(self, name: str, gen: int) -> None:
-        """Point ``name`` at generation ``gen`` (atomic manifest write).
-        The caller must have fully written the new generation tree first —
-        before this write it is invisible (recovery discards trees newer
-        than the committed pointer)."""
-        self.bump_generations({name: gen})
-
-    def bump_generations(self, gens: dict) -> None:
-        """Flip SEVERAL tables' generation pointers in ONE atomic manifest
-        write.  Tables whose new trees must become visible together (e.g.
-        term_stats + corpus_stats after a stats recompute — df must never
-        exceed n_docs under any reader's frozen generation map) go through
-        here; two sequential ``bump_generation`` calls would expose the
-        mixed state to a reader loading between them."""
-        self._assert_mutable()
-        m = self.read_manifest()
-        g = m.setdefault("generations", {})
-        for name, gen in gens.items():
-            g[name] = int(gen)
-        self.write_manifest(m)
-
     def _generations(self) -> dict:
         """Current per-table generation map, cached on the manifest stat
         (every index mutation rewrites the manifest via atomic replace)."""
@@ -234,10 +213,6 @@ class IndexLayout:
     @property
     def term_stats(self) -> str:
         return self.table_path("term_stats")
-
-    @property
-    def corpus_stats(self) -> str:
-        return self.table_path("corpus_stats")
 
     @property
     def lineage(self) -> str:
@@ -419,9 +394,9 @@ class IndexLayout:
         return out
 
     def read_local(self, table_dir: str, columns: list[str]):
-        """The driver-side reader of the bookkeeping tables (lineage,
-        tombstones, corpus_stats — O(segments), O(pending deletes) and one
-        row per case): ``columns`` of the committed batches under
+        """The driver-side reader of the bookkeeping tables (lineage and
+        tombstones — O(segments) and O(pending deletes) rows): ``columns``
+        of the committed batches under
         ``table_dir``, read with pyarrow into one pandas frame.  No Spark
         job runs.  Each commit is cast to the table's declared types, so
         commits written by Spark and by pyarrow read alike."""

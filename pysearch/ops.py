@@ -222,7 +222,7 @@ _ENGINE_FP_CACHE: dict = {}
 # stats, term-df cache, table frames) — never query results — and its
 # default on_stale="refresh" re-loads whenever the on-disk index changes
 # (manifest stat check per search), so reuse is always consistent.
-# Re-constructing one per op invocation re-ran the corpus_stats collect and
+# Re-constructing one per op invocation re-ran the table reads and
 # manifest/commit walks every time — pure fixed overhead at bench/driver
 # time.  Keyed by applicationId so a new Spark session starts clean.
 _SEARCHER_CACHE: dict = {}

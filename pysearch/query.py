@@ -45,6 +45,7 @@ from pysearch.gate import (LOCAL_BATCH_FACTOR, LOCAL_MAX_CATALOG,
                            LOCAL_MAX_VOCAB, PRUNE_MIN_POSTINGS,
                            local_max_postings)
 from pysearch.lineage import IndexLayout
+from pysearch.version import INDEX_FORMAT_VERSION
 
 DEFAULT_MAX_RESULTS = 10  # reference: index_search.go:55-56
 PRUNE_FIRST_SEGMENTS = 8  # segments scored in phase 1 to establish θ
@@ -325,7 +326,13 @@ class Searcher:
         # masking a mid-load change behind a fresh-looking signature
         self._manifest_sig = self._index_sig()
         m = self.layout.read_manifest()
-        if not m.get("stages", {}).get("finalize", {}).get("done"):
+        if m.get("format_version") != INDEX_FORMAT_VERSION:
+            raise RuntimeError(
+                f"index at {index_dir} has format version "
+                f"{m.get('format_version')}, this engine reads "
+                f"{INDEX_FORMAT_VERSION}; rebuild required")
+        stages = m.get("stages", {})
+        if not stages.get("finalize", {}).get("done"):
             raise RuntimeError(f"index at {index_dir} is not complete")
         # freeze ONE generation map for every table path resolved below: a
         # compaction committing between two lazy property accesses must not
@@ -335,8 +342,7 @@ class Searcher:
         gens = {name: int(g) for name, g in
                 m.get("generations", {}).items()}
         path = {name: self.layout.table_path(name, gens.get(name, 0))
-                for name in ("docs", "postings", "term_stats",
-                             "corpus_stats", "tombstones")}
+                for name in ("docs", "postings", "term_stats", "tombstones")}
         self.n_buckets = int(m["n_buckets"])
         self.segment_size = int(m.get("segment_size", 4096))
         self.positions_stored = bool(m.get("positions", False))
@@ -354,20 +360,22 @@ class Searcher:
         self._catalog_cache: Dict[str, Optional[dict]] = {}
         # the large tables as typed Spark frames (a table whose commits
         # are all empty — empty or fully-stopworded corpus — reads as an
-        # empty DataFrame); corpus_stats and tombstones are read on the
-        # driver (IndexLayout.read_local)
+        # empty DataFrame); tombstones are read on the driver
+        # (IndexLayout.pending_deletes)
         self.postings = self.layout.read_commits(spark, path["postings"])
         self.docs = self.layout.read_commits(spark, path["docs"])
         self._term_stats = self.layout.read_commits(spark,
                                                     path["term_stats"])
-        # (n_docs, avgdl, sum_dl) — sum_dl is the exact long the finalize
-        # divided to get avgdl; NRT hybrid search (streaming.
-        # search_with_arrivals) re-derives the post-append avgdl from it
+        # (n_docs, avgdl, sum_dl) per case from the manifest: the docs
+        # stage's doc counts and the finalize's summed doc lengths (exact
+        # ints; the division rounds once, like Spark's long/long divide).
+        # NRT hybrid search (streaming.search_with_arrivals) re-derives the
+        # post-append avgdl from sum_dl
+        sum_dl = stages["finalize"].get("sum_dl", {})
         self._corpus: Dict[str, tuple] = {
-            str(r.case_id): (int(r.n_docs), float(r.avgdl), int(r.sum_dl))
-            for r in self.layout.read_local(
-                path["corpus_stats"],
-                ["case_id", "n_docs", "avgdl", "sum_dl"]).itertuples()
+            str(c): (int(n), int(sum_dl.get(c, 0)) / int(n),
+                     int(sum_dl.get(c, 0)))
+            for c, n in stages["docs"].get("case_counts", {}).items()
         }
         # pending tombstoned deletes (delete.delete_docs): per-case sorted
         # doc_id arrays, shipped to executors with the scoring closures and

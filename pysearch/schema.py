@@ -11,8 +11,12 @@ below becomes an Iceberg snapshot commit; see build.py):
 - ``postings``    — packed posting blocks (reference: bleve scorch segments,
   /root/reference/go.mod:4,10)
 - ``term_stats``  — per-term df/cf
-- ``corpus_stats``— per-case N, avgdl
 - ``lineage``     — per-partition build lineage + metrics (north_rule)
+- ``tombstones``  — pending deletes (delete.py)
+
+Each case's doc count N and summed doc length (avgdl = sum_dl / N) are not
+a table: they live in the manifest (``stages.docs.case_counts`` and
+``stages.finalize.sum_dl``), which every snapshot archives.
 """
 
 from pyspark.sql import types as T
@@ -88,13 +92,6 @@ TERM_STATS = T.StructType([
     T.StructField("cf", T.LongType(), False),
 ])
 
-CORPUS_STATS = T.StructType([
-    T.StructField("case_id", T.StringType(), False),
-    T.StructField("n_docs", T.LongType(), False),
-    T.StructField("sum_dl", T.LongType(), False),
-    T.StructField("avgdl", T.DoubleType(), False),
-])
-
 # tombstoned deletes (delete.delete_docs): docs suppressed at query time,
 # physically purged (and this table emptied) by compact.compact_index —
 # Lucene's deleted-docs model re-expressed over commit-batch tables
@@ -146,5 +143,5 @@ def table_schema(name: str, positions: bool = False) -> T.StructType:
         return T.StructType([f for f in DOCS.fields
                              if f.name not in TOKEN_OFFSETS])
     return {"docs": DOCS, "doc_map": DOC_MAP, "postings": POSTING_BLOCKS,
-            "term_stats": TERM_STATS, "corpus_stats": CORPUS_STATS,
-            "tombstones": TOMBSTONES, "lineage": LINEAGE}[name]
+            "term_stats": TERM_STATS, "tombstones": TOMBSTONES,
+            "lineage": LINEAGE}[name]

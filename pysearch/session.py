@@ -88,6 +88,11 @@ def build_spark(master: str | None = None, app_name: str = "pysearch",
         .config("spark.sql.parquet.compression.codec", "zstd")
         # partition dirs like case_id=6 must read back as strings, not ints
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+        # index roots are local paths, so list a commit's term_bucket=K
+        # dirs (64 by default) on the driver: above this many paths Spark
+        # runs a listing job per read (the default threshold is 32)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "65536")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -5,12 +5,13 @@ which validates catalog<->index agreement).
 ``verify_index`` cross-checks every table of a built index:
 
 - manifest: present, format version, all stages marked done;
-- docs: row count == manifest n_docs, doc_ids unique per case;
+- docs: per-case row counts == manifest case_counts (and their total ==
+  n_docs), doc_ids unique per case;
 - doc_map: same (case, doc_id) set as docs;
-- corpus_stats: per-case n_docs equals the docs table;
 - postings: every commit dir covered by lineage and vice versa;
-- term_stats: total df == total block posting count, total cf == total tf
-  (the finalize aggregation invariants);
+- term_stats: every commit names a postings commit; total df == total
+  block posting count, total cf == total tf (the finalize aggregation
+  invariants); per-case sum of cf == manifest sum_dl;
 - block payloads: per-block CRC32 verification, distributed.
 
 Returns a list of human-readable problems (empty == consistent).  All
@@ -100,11 +101,23 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
     blocks = layout.read_commits(spark, layout.postings)
     tstats = layout.read_commits(spark, layout.term_stats)
 
-    # docs count vs manifest
-    n_docs = docs.count()
-    n_manifest = m.get("stages", {}).get("docs", {}).get("n_docs")
+    # docs counts vs manifest: one per-case aggregate
+    per_case = {
+        str(r["case_id"]): int(r["n"])
+        for r in docs.groupBy("case_id").agg(F.count("*").alias("n")).collect()
+    }
+    n_docs = sum(per_case.values())
+    docs_stage = m["stages"]["docs"]
+    n_manifest = docs_stage.get("n_docs")
     if n_manifest is not None and n_docs != int(n_manifest):
         problems.append(f"docs rows {n_docs} != manifest n_docs {n_manifest}")
+    counts = {str(c): int(n)
+              for c, n in docs_stage.get("case_counts", {}).items()}
+    for c in sorted(set(per_case) | set(counts)):
+        if per_case.get(c, 0) != counts.get(c, 0):
+            problems.append(
+                f"case {c}: docs rows {per_case.get(c, 0)} != manifest "
+                f"case_counts {counts.get(c, 0)}")
 
     # doc_id uniqueness per case
     dup = (
@@ -124,19 +137,6 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
             f"doc_map out of sync with docs: {missing} missing, {extra} extra"
         )
 
-    # corpus_stats per-case n_docs
-    per_case = {
-        str(r["case_id"]): int(r["n"])
-        for r in docs.groupBy("case_id").agg(F.count("*").alias("n")).collect()
-    }
-    for r in layout.read_local(layout.corpus_stats,
-                               ["case_id", "n_docs"]).itertuples():
-        want = per_case.get(r.case_id)
-        if want != int(r.n_docs):
-            problems.append(
-                f"corpus_stats case {r.case_id}: n_docs {r.n_docs} != docs {want}"
-            )
-
     # postings commits <-> lineage coverage (both directions)
     commits = {
         int(os.path.basename(d).split("-", 1)[1])
@@ -147,21 +147,39 @@ def verify_index(spark, index_dir: str, check_crcs: bool = True) -> list[str]:
         problems.append(f"postings commits without lineage: {sorted(commits - covered)}")
     if covered - commits:
         problems.append(f"lineage references missing postings commits: {sorted(covered - commits)}")
+    stats_commits = {
+        int(os.path.basename(d).split("-", 1)[1])
+        for d in layout.list_commits(layout.term_stats)
+    }
+    if stats_commits - commits:
+        problems.append(
+            "term_stats commits without a postings commit: "
+            f"{sorted(stats_commits - commits)}")
 
     # term_stats aggregation invariants (finalize correctness)
     b = blocks.agg(
         F.coalesce(F.sum("n"), F.lit(0)).alias("df"),
         F.coalesce(F.sum("sum_tf"), F.lit(0)).alias("cf"),
     ).collect()[0]
-    t = tstats.agg(
-        F.coalesce(F.sum("df"), F.lit(0)).alias("df"),
-        F.coalesce(F.sum("cf"), F.lit(0)).alias("cf"),
-    ).collect()[0]
-    if int(b["df"]) != int(t["df"]) or int(b["cf"]) != int(t["cf"]):
+    t = {str(r["case_id"]): (int(r["df"]), int(r["cf"])) for r in
+         tstats.groupBy("case_id").agg(F.sum("df").alias("df"),
+                                       F.sum("cf").alias("cf")).collect()}
+    t_df = sum(df for df, _cf in t.values())
+    t_cf = sum(cf for _df, cf in t.values())
+    if int(b["df"]) != t_df or int(b["cf"]) != t_cf:
         problems.append(
-            f"term_stats totals (df={t['df']}, cf={t['cf']}) != "
+            f"term_stats totals (df={t_df}, cf={t_cf}) != "
             f"block totals (df={b['df']}, cf={b['cf']})"
         )
+    # the manifest's summed doc lengths (BM25's avgdl numerators)
+    sum_dl = {str(c): int(v) for c, v in
+              m["stages"]["finalize"].get("sum_dl", {}).items()}
+    for c in sorted(set(sum_dl) | set(t)):
+        cf = t.get(c, (0, 0))[1]
+        if sum_dl.get(c, 0) != cf:
+            problems.append(
+                f"case {c}: manifest sum_dl {sum_dl.get(c, 0)} != "
+                f"term_stats cf total {cf}")
 
     if check_crcs:
         def check(batches):

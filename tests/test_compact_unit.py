@@ -11,7 +11,8 @@ than the pointer are retained snapshots (readers in flight during a
 compaction keep their resolved file paths) removed by
 ``expire_generations``.  These tests drive the layout resolution, the
 recovery sweep, and the retention/expiry semantics on synthetic trees
-without a SparkSession.
+without a SparkSession; one test runs a real append to pin the finalize's
+single manifest write.
 """
 
 import os
@@ -105,36 +106,55 @@ def test_commit_is_the_manifest_write(tmp_path):
     assert _has(os.path.join(lay.root, "postings"), "old")
 
 
-def test_stats_rotation_flips_both_pointers_in_one_write(tmp_path, monkeypatch):
-    """A finalize stats recompute must never expose NEW term_stats with
-    STALE corpus_stats (df > n_docs under a reader's frozen generation
-    map): both trees flip in a SINGLE manifest write."""
-    from pysearch.build import _commit_stats_tables
+def test_append_finalize_is_one_manifest_write(spark, recovered_ix,
+                                               tmp_path, monkeypatch):
+    """An append's finalize commits with ONE manifest write (the snapshot
+    commit), and that write carries the new fold set together with the new
+    per-case summed doc lengths: no reader can load a fold set whose
+    sum_dl lags it, and a crash before the write leaves both unchanged."""
+    import copy
+    import shutil
 
-    lay = _layout(tmp_path, generations={})
-    m = lay.read_manifest()
-    m["snapshot_version"] = 1  # snapshot-bearing: the rotating branch
-    lay.write_manifest(m)
-    st_ts = str(tmp_path / "stage_ts")
-    st_cs = str(tmp_path / "stage_cs")
-    _mk(st_ts, "ts-new")
-    _mk(st_cs, "cs-new")
+    from pyspark.sql import functions as F
 
-    writes = []
-    orig = IndexLayout.write_manifest
+    from pysearch import build, corpus
+
+    ix = str(tmp_path / "ix")
+    shutil.copytree(recovered_ix[0], ix)
+    lay = IndexLayout(ix)
+    before = lay.read_manifest()["stages"]["finalize"]
+
+    writes, in_finalize = [], []
+    orig_write = IndexLayout.write_manifest
+    orig_finalize = build.build_finalize_stage
 
     def counting(self, manifest):
-        writes.append(dict(manifest.get("generations", {})))
-        orig(self, manifest)
+        if in_finalize:
+            writes.append(copy.deepcopy(manifest["stages"]["finalize"]))
+        orig_write(self, manifest)
+
+    def finalize(spark_, layout):
+        in_finalize.append(True)
+        try:
+            orig_finalize(spark_, layout)
+        finally:
+            in_finalize.clear()
 
     monkeypatch.setattr(IndexLayout, "write_manifest", counting)
-    _commit_stats_tables(lay, [("term_stats", st_ts, True),
-                               ("corpus_stats", st_cs, False)])
+    monkeypatch.setattr(build, "build_finalize_stage", finalize)
+    build.build_index(spark, corpus.webtext_df(
+        spark, cases=[(4, "heavenly intentions", 20, 60)]), ix, append=True)
+
     assert len(writes) == 1, writes
-    assert writes[0] == {"term_stats": 1, "corpus_stats": 1}
-    assert _has(os.path.join(lay.term_stats), "ts-new") is False  # moved
-    assert _has(os.path.join(lay.term_stats, "commit-00000"), "ts-new")
-    assert _has(os.path.join(lay.corpus_stats, "commit-00000"), "cs-new")
+    (w,) = writes
+    assert w["done"]
+    new = sorted(set(w["folded"]) - set(before["folded"]))
+    assert new == [int(os.path.basename(lay.list_commits(lay.postings)[-1])
+                       .split("-", 1)[1])]
+    cf = lay.read_commits(spark, lay.term_stats, batches=new).agg(
+        F.sum("cf")).collect()[0][0]
+    assert w["sum_dl"] == {**before["sum_dl"], "4": cf} and cf > 0
+    assert lay.read_manifest()["stages"]["finalize"] == w
 
 
 def test_prune_snapshots_skips_transient_read_failures(tmp_path):

@@ -708,13 +708,18 @@ def test_compact_index(spark, tmp_path):
     assert len(h) == 10
 
 
-def test_delta_finalize_matches_full_recompute(spark, tmp_path):
-    """Appends maintain term_stats/corpus_stats via O(delta) stats commits
-    (build_finalize_delta).  The SUM over delta commits must equal a full
-    from-scratch recompute over the union corpus — same df/cf per term,
-    same corpus stats — and the fold bookkeeping must cover every postings
-    batch."""
+def test_delta_finalize_matches_full_recompute(spark, tmp_path,
+                                               monkeypatch):
+    """Appends fold only their own postings batch into term_stats (one
+    stats commit per batch) and into the manifest's per-case sum_dl.  The
+    SUM over the stats commits must equal a from-scratch build of the
+    union corpus — same df/cf per term, same corpus stats — and the fold
+    set must cover every postings batch.  The append's finalize crashes
+    once at its commit point (the manifest write), after its stats commit
+    landed: re-running the append folds that batch exactly once."""
     from pyspark.sql import functions as F
+
+    from pysearch.verify import verify_index
 
     d = str(tmp_path / "delta_ix")
     # same-case append: shared terms land in MULTIPLE stats commits, so the
@@ -724,9 +729,31 @@ def test_delta_finalize_matches_full_recompute(spark, tmp_path):
     first = full.filter("url <= 'doc://6/0040'")
     second = full.filter("url > 'doc://6/0040'")
     build_index(spark, first, d, segment_size=16)
-    build_index(spark, second, d, append=True)
 
     lay = IndexLayout(d)
+
+    class Crash(RuntimeError):
+        pass
+
+    real_commit = IndexLayout.commit_snapshot
+    crashed = []
+
+    def crash_once(self, manifest=None):
+        if not crashed:
+            crashed.append(sorted(
+                int(os.path.basename(c).split("-", 1)[1])
+                for c in lay.list_commits(lay.term_stats)))
+            raise Crash("killed at the finalize commit point")
+        return real_commit(self, manifest)
+
+    monkeypatch.setattr(IndexLayout, "commit_snapshot", crash_once)
+    with pytest.raises(Crash):
+        build_index(spark, second, d, append=True)
+    assert crashed == [[0, 1]]  # the append's stats commit had landed
+    assert not lay.stage_done("finalize")
+    build_index(spark, second, d, append=True)  # the rerun completes it
+    monkeypatch.setattr(IndexLayout, "commit_snapshot", real_commit)
+
     # delta behavior really happened: one stats commit per postings batch
     post_batches = sorted(
         int(os.path.basename(c).split("-", 1)[1])
@@ -750,13 +777,12 @@ def test_delta_finalize_matches_full_recompute(spark, tmp_path):
         )
         rows = {r["term"]: (int(r["df"]), int(r["cf"]))
                 for r in ts.collect()}
-        cs = la.read_commits(spark, la.corpus_stats).collect()
-        return rows, {str(r["case_id"]): (int(r["n_docs"]), int(r["sum_dl"]),
-                                          float(r["avgdl"])) for r in cs}
+        return rows, Searcher(spark, ix)._corpus
 
     d2 = str(tmp_path / "full_ix")
     build_index(spark, full, d2, segment_size=16)
     assert stats_of(d) == stats_of(d2)
+    assert verify_index(spark, d) == []
 
 
 def test_append_fails_fast_on_missing_postings_batch(spark, tmp_path):
@@ -826,7 +852,8 @@ def test_empty_corpus_build(spark, tmp_path):
 
 def test_verify_index_flags_tampering(spark, tmp_path):
     """verify_index (reference CheckConsistency analog) passes a clean index
-    and flags manifest drift, orphan commits, and CRC corruption."""
+    and flags manifest drift (doc count, summed doc length), orphan
+    commits, and CRC corruption."""
     import glob
     import json as _json
 
@@ -848,7 +875,19 @@ def test_verify_index_flags_tampering(spark, tmp_path):
     m["stages"]["docs"]["n_docs"] -= 1
     lay.write_manifest(m)
 
-    # 2) flip a stored CRC in one postings part file
+    # 2) a case's summed doc length (the avgdl numerator) drifts
+    sum_dl = m["stages"]["finalize"]["sum_dl"]
+    case = next(iter(sum_dl))
+    sum_dl[case] += 1
+    lay.write_manifest(m)
+    assert [p for p in verify_index(spark, d, check_crcs=False)
+            if "sum_dl" in p] == [
+        f"case {case}: manifest sum_dl {sum_dl[case]} != term_stats cf "
+        f"total {sum_dl[case] - 1}"]
+    sum_dl[case] -= 1
+    lay.write_manifest(m)
+
+    # 3) flip a stored CRC in one postings part file
     part = sorted(glob.glob(f"{d}/postings/commit-*/**/*.parquet",
                             recursive=True))[0]
     t = pq.read_table(part)
@@ -880,6 +919,20 @@ def test_format_version_guard(spark, index, tmp_path):
     df = corpus.webtext_df(spark, cases=[(1, "be the person who", 5, 100)])
     with pytest.raises(RuntimeError, match="format version"):
         build_index(spark, df, d, resume=True)
+
+
+def test_searcher_refuses_older_format(spark, index, tmp_path):
+    """A Searcher refuses an index of another format version (a v3 index
+    has no per-case sum_dl in its manifest) with the same rebuild error a
+    build raises, instead of scoring with missing corpus stats."""
+    d = str(tmp_path / "v3")
+    shutil.copytree(index, d)
+    lay = IndexLayout(d)
+    m = lay.read_manifest()
+    m["format_version"] = 3
+    lay.write_manifest(m)
+    with pytest.raises(RuntimeError, match="format version 3.*rebuild"):
+        Searcher(spark, d)
 
 
 def test_resume_equals_fresh_build(spark, index):

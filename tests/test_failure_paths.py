@@ -79,3 +79,38 @@ def test_resume_drops_append_docs_orphaned_before_lineage(spark,
     s = Searcher(spark, d)
     for q, hits in want.items():
         assert s.search_ids(q, k=10, case_id="6").equals(hits), q
+
+
+def test_stopword_only_first_build_compacts_coherently(spark, tmp_path):
+    """A first build whose every token is a stopword writes no blocks and
+    no stats; an append then brings stats commit 1.  Compaction renumbers
+    postings to batch 0 and must take that lone stats commit with it, or
+    the next append's stats commit 1 would replace it: after the compaction
+    and a second append, verify_index stays green."""
+    from pysearch.build import build_index
+    from pysearch.compact import compact_index
+    from pysearch.lineage import IndexLayout
+    from pysearch.schema import WEBTEXT
+    from pysearch.verify import verify_index
+
+    def rows(lo, hi, text):
+        return spark.createDataFrame(
+            [(f"doc://9/{i:04d}", None, None, text, "en", "9")
+             for i in range(lo, hi)], schema=WEBTEXT)
+
+    stop = rows(0, 4, "the of and a")
+    words = [rows(4, 8, "realm of quiet intentions"),
+             rows(8, 12, "quiet rivers of the realm")]
+    d = str(tmp_path / "ix")
+    build_index(spark, stop, d, segment_size=4)
+    build_index(spark, words[0], d, append=True)
+    lay = IndexLayout(d)
+    assert [os.path.basename(c) for c in lay.list_commits(lay.term_stats)] \
+        == ["commit-00001"]
+    assert compact_index(spark, d).get("term_stats") == 1
+    assert [os.path.basename(c) for c in lay.list_commits(lay.term_stats)] \
+        == ["commit-00000"]
+    build_index(spark, words[1], d, append=True)
+    # the manifest's sum_dl and the block totals both count words[0]'s
+    # stats, so a replaced stats commit would fail both checks
+    assert verify_index(spark, d, check_crcs=False) == []

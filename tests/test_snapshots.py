@@ -120,14 +120,11 @@ def test_time_travel_reads(spark, tmp_path):
     assert q(Searcher(spark, d, at_version=3)) == v3_live
 
     # the compaction purge is itself a snapshot.  Its retention sweep
-    # keeps each table's top-2 generations: v2/v3 stay readable, while
-    # v1's corpus_stats generation (rotated twice since) is expired — its
-    # archived manifest is pruned so snapshots() never advertises an
-    # unreadable version.  The ALREADY-OPEN v1 reader keeps working (its
-    # stats were loaded; its table trees survive), like an Iceberg reader
-    # holding a snapshot across expire_snapshots.
+    # keeps each table's top-2 generations, and every earlier snapshot
+    # (its corpus stats live in its archived manifest) references only the
+    # retained generation 0, so v1-v3 all stay listed and readable
     compact_index(spark, d)
-    assert lay.snapshots() == [2, 3, 4]
+    assert lay.snapshots() == [1, 2, 3, 4]
     # v4 is the post-purge state: same surviving docs as v3 but stats
     # recomputed over the survivors (== fresh build; the delete tests pin
     # that), so compare against the live post-compaction answer
@@ -137,8 +134,7 @@ def test_time_travel_reads(spark, tmp_path):
     assert q(Searcher(spark, d, at_version=2)) == v2_live
     assert q(Searcher(spark, d, at_version=3)) == v3_live
     assert q(s1) == v1_live
-    with pytest.raises(FileNotFoundError, match="available"):
-        Searcher(spark, d, at_version=1)
+    assert q(Searcher(spark, d, at_version=1)) == v1_live
 
     # pinned layouts are read-only
     pinned = IndexLayout(d, at_version=2)

@@ -1,7 +1,7 @@
 """IndexLayout's two table readers.  The large tables are read by Spark
 with their declared schemas (no schema-inference job per commit); the
-bookkeeping tables (lineage, tombstones, corpus_stats) are read on the
-driver with pyarrow and run no Spark job.  Lineage commits written by
+bookkeeping tables (lineage, tombstones) are read on the driver with
+pyarrow and run no Spark job.  Lineage commits written by
 Spark — as compactions before the one lineage writer did — read the same
 as pyarrow-written ones.  Outside lineage.py the package calls
 ``spark.read.parquet`` only on source inputs."""
@@ -58,8 +58,6 @@ def test_bookkeeping_reads_run_no_job(spark, tombstoned_ix):
         "gc": lay.gc_orphan_commits,
         "consistent": lambda: check_consistent(lay),
         "tombstones": lay.pending_deletes,
-        "corpus_stats": lambda: lay.read_local(lay.corpus_stats,
-                                               ["case_id", "n_docs"]),
     }
     got = {name: _jobs(spark, fn, f"readers-{name}")
            for name, fn in reads.items()}
@@ -70,15 +68,13 @@ def test_bookkeeping_reads_run_no_job(spark, tombstoned_ix):
     assert got["gc"][0] == []
     n, by_case = got["tombstones"][0]
     assert n == 2 and list(by_case) == ["6"] and len(by_case["6"]) == 2
-    assert got["corpus_stats"][0].to_dict("records") == [
-        {"case_id": "6", "n_docs": 100}]
-    # a load reads three typed tables and nothing else through Spark: its
-    # two jobs list the 64 term_bucket dirs of postings and term_stats
-    # (Spark lists more than 32 dirs with a job).  Schema inference per
-    # commit and the Spark reads of corpus_stats and tombstones made it 11
+    # a load defines three typed table reads and runs no Spark job: the
+    # session lists the 64 term_bucket dirs of postings and term_stats on
+    # the driver, and the corpus stats come from the manifest
     s, n_load = _jobs(spark, lambda: Searcher(spark, tombstoned_ix),
                       "readers-load")
-    assert n_load == 2
+    assert n_load == 0
+    assert list(s._corpus) == ["6"] and s._corpus["6"][0] == 100
     assert dict(s.postings.dtypes)["term_bucket"] == "int"
     assert dict(s.docs.dtypes)["case_id"] == "string"
     assert "tok_starts_bin" not in s.docs.columns  # built without positions
