@@ -29,8 +29,12 @@ stage exists):
     length joins its doc count in the manifest, whose one write marks the
     index complete.
 
-Every stage commits atomically and records per-partition lineage + metrics;
-a resumed build skips completed segments (north_rule).
+Every stage commits atomically and records per-partition lineage + metrics.
+Fresh builds, resumes and appends run one sequence (``build_index``):
+manifest -> recovery -> catch-up of missing segments -> new rows (docs
+writes overlapping the postings compute) -> finalize; an append is new rows
+deduped against the committed docs, and a resumed build skips completed
+segments (north_rule).
 """
 
 from __future__ import annotations
@@ -235,25 +239,23 @@ def shape_webtext(df):
 
 
 def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
-                     n_partitions: int | None = None, existing=None,
-                     batch: int = 0, defer_commit: bool = False,
+                     n_partitions: int | None = None,
                      store_positions: bool = False, analyzer: str = "en"):
-    """Clean/dedupe/assign-id the input and commit it as docs batch ``batch``
-    (the doc_map catalog batch is written alongside, from the same cached
-    partitions, and per-case doc counts land in the manifest so finalize
-    never has to re-scan the docs table).
+    """Clean/dedupe/assign-id the input as the next docs batch; returns
+    ``(docs, finish, n)``: the cached docs DataFrame (what the postings
+    stage reads), the ``finish()`` closure that writes and commits the
+    docs and doc_map batches, their lineage and the manifest's per-case
+    doc counts (so finalize never re-scans the docs table), and the number
+    of new docs.  The caller overlaps ``finish()`` with the postings
+    compute and unpersists ``docs``.
 
-    ``existing`` (append mode): projection of the current docs table
-    (case_id, doc_id, url, content_hash).  New rows matching an existing
-    url OR content hash are skipped (append adds documents; it does not
-    update existing ones), and appended doc_ids start at the next segment
-    boundary above the per-case max so appended segments never mix with
-    already-built ones.
-
-    ``defer_commit=True`` returns ``(docs, finish)`` where ``finish()``
-    performs the staging writes + commits + lineage + stage mark — the
-    caller can overlap those disk writes with the postings compute, which
-    only needs the cached ``docs`` DataFrame."""
+    Once the index has a finished docs stage, the input is an append: new
+    rows matching an existing url OR content hash are skipped (append adds
+    documents; it does not update existing ones), and appended doc_ids
+    start at the next segment boundary above the per-case max, so appended
+    segments never mix with already-built ones — the (case, segment)
+    postings done-granularity stays valid at the cost of at most one
+    segment's worth of id space per append per case."""
     from pyspark.sql import functions as F
 
     t0 = time.time()
@@ -264,8 +266,11 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         df = df.withColumn("case_id", F.lit("0"))
     df = shape_webtext(df)
 
-    base = None
-    if existing is not None:
+    base, batch = None, 0
+    if layout.stage_done("docs"):
+        existing = layout.read_commits(spark, layout.docs).select(
+            "case_id", "doc_id", "url", "content_hash")
+        batch = layout.next_batch(layout.docs)
         df = df.join(existing.select("case_id", "url"),
                      ["case_id", "url"], "left_anti")
         df = df.join(existing.select("case_id", "content_hash"),
@@ -345,18 +350,23 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         case_counts[key] = case_counts.get(key, 0) + int(r["count"])
 
     def finish():
-        # The docs write materializes the docs cache as it streams (persist
-        # semantics: any job computing a partition stores it); a concurrent
-        # postings job computing the same partitions is safe — BlockManager
-        # block locks make first-computation exclusive.  The pinned range
-        # layout MUST stay persisted until this write completes: doc_ids
+        # The docs write and the concurrent postings job fill the docs
+        # cache as they stream (any job computing a partition stores it).
+        # A task that reaches a partition another task is storing waits on
+        # its BlockManager write lock and then reads the stored block, so
+        # each partition is computed once (the stages holding the cache
+        # read one shuffle record per doc, overlapped or not).  The pinned
+        # range layout MUST stay persisted until this write completes: doc_ids
         # are only valid against the _pid boundaries the offsets were
         # collected from, and repartitionByRange re-SAMPLES boundaries on
         # an unpinned recompute.
         staging = layout.staging_dir("docs")
-        docs.write.mode("overwrite").partitionBy("case_id").parquet(staging)
-        pinned.unpersist()
-        key_counts.unpersist()
+        try:
+            docs.write.mode("overwrite").partitionBy("case_id").parquet(
+                staging)
+        finally:
+            pinned.unpersist()
+            key_counts.unpersist()
         # doc_map catalog (reference file_list.json analog) from the same
         # cached partitions — text column dropped, so the write is tiny
         dm_staging = layout.staging_dir("doc_map")
@@ -391,10 +401,7 @@ def build_docs_stage(spark, webtext_df, layout: IndexLayout, segment_size: int,
         layout.mark_stage("docs", n_docs=prev + n,
                           segment_size=segment_size, case_counts=merged)
 
-    if defer_commit:
-        return docs, finish, n
-    finish()
-    return docs  # cached; caller passes it to the postings stage and unpersists
+    return docs, finish, n
 
 
 # --------------------------------------------------------------------------
@@ -544,150 +551,120 @@ def _segment_metrics_local(commit_dir: str):
 
 
 def build_postings_stage(spark, layout: IndexLayout, n_buckets: int,
-                         resume: bool = False,
                          max_segments: int | None = None,
                          docs_df=None, analyzer: str = "en",
-                         defer_commit: bool = False,
-                         nonempty_hint: bool = False,
                          store_positions: bool = False):
-    """Build posting blocks for all (or up to ``max_segments``) segments not
-    yet recorded as done in lineage.  ``max_segments`` bounds one batch —
-    the incremental/ops hook that also simulates a crash mid-stage for the
-    resume tests.  The stage is marked complete only when nothing remains.
+    """Build posting blocks into a staging dir and return the ``finish()``
+    closure that commits them (rename + metrics + lineage + mark) — the
+    caller runs it after the docs commit, so the commit ORDER stays
+    crash-consistent while the writes themselves overlap.
 
-    ``defer_commit=True`` runs the heavy compute + staging write and
-    returns a ``finish()`` closure holding the commit (rename + metrics +
-    lineage + mark) — the caller sequences it after the docs commit so the
-    commit ORDER stays crash-consistent while the writes themselves
-    overlap."""
+    ``docs_df`` is the docs stage's cached frame of new docs, whose
+    segments are new by construction.  Without it the stage reads the
+    committed docs table and builds only the (case, segment) partitions
+    lineage does not record as done, at most ``max_segments`` of them —
+    the catch-up of a build or append killed mid-postings (``max_segments``
+    also simulates that crash for the resume tests).  The stage is marked
+    complete only when nothing remains."""
     from pyspark.sql import functions as F
 
     from pysearch.schema import POSTING_BLOCKS
 
     t0 = time.time()
+    segs = None  # the (case, segment) keys built, when known up front
+    complete_after_batch = True
     if docs_df is not None:
-        # fresh build / append: the docs stage hands over its cached
-        # DataFrame, already hash-partitioned by (case_id, segment_id) —
-        # the groupBy below runs with no exchange and no disk re-read
+        # the docs stage's cached DataFrame, already hash-partitioned by
+        # (case_id, segment_id) — the groupBy below runs with no exchange
+        # and no disk re-read
         docs = docs_df
     else:
         docs = layout.read_commits(spark, layout.docs)
-
-    done: set = layout.done_partitions("postings") if resume else set()
-    if done:
-        done_df = spark.createDataFrame(
-            [(k.split("|", 1)[0], int(k.split("|", 1)[1])) for k in done],
-            schema="case_id string, segment_id long",
-        )
-        docs = docs.join(F.broadcast(done_df), ["case_id", "segment_id"], "left_anti")
-
-    complete_after_batch = True
-    if max_segments is not None:
-        remaining = [
-            (r["case_id"], r["segment_id"])
-            for r in docs.select("case_id", "segment_id").distinct().collect()
-        ]
-        if len(remaining) > max_segments:
-            chosen = sorted(remaining)[:max_segments]
-            chosen_df = spark.createDataFrame(
-                chosen, schema="case_id string, segment_id long"
-            )
-            docs = docs.join(F.broadcast(chosen_df), ["case_id", "segment_id"], "left_semi")
-            complete_after_batch = False
-    # the emptiness probe on a not-yet-cached frame computes the full map
-    # side of the docs join just to see one row — skip it when the docs
-    # stage already knows its row count (nonempty_hint)
-    if not nonempty_hint and docs.isEmpty():
-        def mark_only():
-            layout.mark_stage("postings", n_buckets=n_buckets)
-
-        if defer_commit:
-            return mark_only
-        mark_only()
-        return
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in POSTING_BLOCKS.fields
-    )
-
-    blocks = (
-        docs.select("case_id", "segment_id", "doc_id", "text")
-        .groupBy("case_id", "segment_id")
-        .applyInPandas(_make_block_builder(n_buckets, analyzer,
-                                           store_positions),
-                       schema=out_schema)
-    )
+        done = layout.done_partitions("postings")
+        present = [(r["case_id"], r["segment_id"]) for r in
+                   docs.select("case_id", "segment_id").distinct().collect()]
+        todo = sorted(k for k in present if f"{k[0]}|{k[1]}" not in done)
+        segs = todo[:max_segments] if max_segments is not None else todo
+        complete_after_batch = len(segs) == len(todo)
+        if segs and len(segs) < len(present):
+            # a non-empty pandas frame reaches Spark through Arrow as a
+            # local relation; a list of tuples would run a Python-worker job
+            keep = spark.createDataFrame(
+                pd.DataFrame(segs, columns=["case_id", "segment_id"]),
+                schema="case_id string, segment_id long")
+            docs = docs.join(F.broadcast(keep), ["case_id", "segment_id"],
+                             "left_semi")
 
     batch = layout.next_batch(layout.postings)
     staging = layout.staging_dir("postings")
-    (
-        blocks
-        .repartition("term_bucket")
-        .sortWithinPartitions("case_id", "term", "segment_id", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(staging)
-    )
+    if segs != []:
+        out_schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in POSTING_BLOCKS.fields)
+        (
+            docs.select("case_id", "segment_id", "doc_id", "text")
+            .groupBy("case_id", "segment_id")
+            .applyInPandas(_make_block_builder(n_buckets, analyzer,
+                                               store_positions),
+                           schema=out_schema)
+            .repartition("term_bucket")
+            .sortWithinPartitions("case_id", "term", "segment_id", "block_id")
+            .write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(staging)
+        )
 
     def finish():
-        layout.commit_batch(staging, layout.postings, batch)
-
-        # lineage + metrics per (case, segment) from the committed batch
-        from pysearch.lineage import _has_parquet
-
-        commit_dir = os.path.join(layout.postings, f"commit-{batch:05d}")
-        if _has_parquet(commit_dir):
-            # n_bytes is precomputed at pack time, so this verification
-            # scan is metadata-only — payload columns are never re-read.
-            # Under METRICS_LOCAL_MAX_BLOCKS rows (known from the parquet
-            # footers, no job) the four narrow columns are read driver-side
-            # with pyarrow and aggregated in pandas — identical sums, no
-            # Spark job; above the gate the distributed aggregate runs.
-            seg_metrics = _segment_metrics_local(commit_dir)
-            if seg_metrics is None:
-                written = layout.read_commits(spark, layout.postings,
-                                              batches=[batch])
-                seg_metrics = (
-                    written.groupBy("case_id", "segment_id")
-                    .agg(
-                        F.count("*").alias("n_blocks"),
-                        F.sum("n").alias("n_postings"),
-                        F.sum("n_bytes").alias("bytes"),
-                    )
-                    .collect()
-                )
-            rows = [
-                {
-                    "stage": "postings",
-                    "partition_key": f"{r.case_id}|{r.segment_id}",
-                    "batch": batch,
-                    "status": "done",
-                    "n_rows": r.n_blocks,
-                    "n_postings": r.n_postings,
-                    "bytes": r.bytes,
-                    "wall_sec": time.time() - t0,
-                }
-                for r in seg_metrics
-            ]
-        else:
-            # zero blocks (e.g. every token stopped out): the segments are
-            # still DONE — record them so resume doesn't redo them forever
-            rows = [
-                {
-                    "stage": "postings",
-                    "partition_key": f"{r['case_id']}|{r['segment_id']}",
-                    "batch": batch, "status": "done", "n_rows": 0,
-                    "n_postings": 0, "bytes": 0, "wall_sec": time.time() - t0,
-                }
-                for r in docs.select("case_id", "segment_id").distinct().collect()
-            ]
-        layout.append_lineage(spark, rows)
+        if segs != []:
+            layout.commit_batch(staging, layout.postings, batch)
+            layout.append_lineage(spark, _postings_lineage(
+                spark, layout, batch, segs, docs, t0))
         if complete_after_batch:
             layout.mark_stage("postings", n_buckets=n_buckets)
 
-    if defer_commit:
-        return finish
-    finish()
+    return finish
+
+
+def _postings_lineage(spark, layout: IndexLayout, batch: int, segs, docs,
+                      t0: float) -> list[dict]:
+    """One done lineage row per (case, segment) of committed postings
+    batch ``batch``, with its block metrics."""
+    from pyspark.sql import functions as F
+
+    from pysearch.lineage import _has_parquet
+
+    commit_dir = os.path.join(layout.postings, f"commit-{batch:05d}")
+    if not _has_parquet(commit_dir):
+        # zero blocks (e.g. every token stopped out): the segments are
+        # still DONE — record them so resume doesn't redo them forever
+        if segs is None:
+            segs = [(r["case_id"], r["segment_id"]) for r in
+                    docs.select("case_id", "segment_id").distinct().collect()]
+        return [{"stage": "postings", "partition_key": f"{c}|{g}",
+                 "batch": batch, "status": "done", "n_rows": 0,
+                 "n_postings": 0, "bytes": 0,
+                 "wall_sec": time.time() - t0} for c, g in segs]
+    # n_bytes is precomputed at pack time, so this verification scan is
+    # metadata-only — payload columns are never re-read.  Under
+    # METRICS_LOCAL_MAX_BLOCKS rows (known from the parquet footers, no
+    # job) the four narrow columns are read driver-side with pyarrow and
+    # aggregated in pandas — identical sums, no Spark job; above the gate
+    # the distributed aggregate runs.
+    seg_metrics = _segment_metrics_local(commit_dir)
+    if seg_metrics is None:
+        seg_metrics = (
+            layout.read_commits(spark, layout.postings, batches=[batch])
+            .groupBy("case_id", "segment_id")
+            .agg(F.count("*").alias("n_blocks"),
+                 F.sum("n").alias("n_postings"),
+                 F.sum("n_bytes").alias("bytes"))
+            .collect()
+        )
+    return [{"stage": "postings",
+             "partition_key": f"{r.case_id}|{r.segment_id}",
+             "batch": batch, "status": "done", "n_rows": r.n_blocks,
+             "n_postings": r.n_postings, "bytes": r.bytes,
+             "wall_sec": time.time() - t0} for r in seg_metrics]
 
 
 # --------------------------------------------------------------------------
@@ -808,24 +785,42 @@ def build_index(spark, webtext_df, index_dir: str, *,
                 n_partitions: int | None = None,
                 analyzer: str = "en",
                 store_positions: bool = False) -> IndexLayout:
-    """Build (or resume, or append to) the full index at ``index_dir``.
+    """Build (or resume, or append to) the index at ``index_dir``.
 
-    Resume semantics: stage-level markers in the manifest; the postings stage
-    additionally resumes at (case, segment) granularity from lineage rows, so
-    a build killed mid-postings redoes only missing segments.
+    Fresh builds, resumes and appends run one sequence:
 
-    ``append=True`` adds new documents to an EXISTING index (reference
-    open-vs-create parity: bleve_glue.go:20-30 open-existing, catalog reload
-    bleve_pdf.go:236-260, ReuseIndex index_search.go:86) — see
-    ``_append_index``.  Appending to a nonexistent index is a fresh build.
+    1. Manifest.  A fresh call (neither ``resume`` nor ``append``, or no
+       index yet) removes the directory and writes the manifest; on an
+       existing index segment size, buckets, analyzer and positions come
+       from the manifest.
+    2. Recovery: discard a crashed compaction's staged generations, fail
+       fast when lineage references postings batches absent on disk,
+       remove staging dirs and commit dirs lineage does not cover (a crash
+       between a commit's rename and its lineage row).
+    3. Catch-up: when docs are done but postings are not (a build or append
+       killed mid-postings), build the missing segments from the committed
+       docs table; the postings stage resumes at (case, segment)
+       granularity from lineage.
+    4. New rows — a fresh build, a resume whose docs stage never finished,
+       and every append (reference open-vs-create parity:
+       bleve_glue.go:20-30 open-existing, catalog reload
+       bleve_pdf.go:236-260, ReuseIndex index_search.go:86): the postings
+       and finalize flags are cleared before new docs become visible, the
+       docs stage dedupes against the committed docs, and its docs/doc_map
+       writes overlap the postings compute.
+    5. Finalize: fold the new postings batches into term_stats and the
+       manifest's corpus statistics (O(delta) per append).
+
+    An interrupted call is completed by rerunning it, or by
+    ``build_index(resume=True)``.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pysearch.compact import check_consistent, recover_compaction
+
     layout = IndexLayout(index_dir)
     m = layout.read_manifest()
-    if append and m:
-        if m.get("format_version") != INDEX_FORMAT_VERSION:
-            raise RuntimeError("index format version mismatch; rebuild required")
-        return _append_index(spark, webtext_df, layout, n_partitions)
-    if m and not resume:
+    if m and not (resume or append):
         import shutil
 
         shutil.rmtree(index_dir, ignore_errors=True)
@@ -841,121 +836,57 @@ def build_index(spark, webtext_df, index_dir: str, *,
     else:
         if m.get("format_version") != INDEX_FORMAT_VERSION:
             raise RuntimeError("index format version mismatch; rebuild required")
+        if append and not layout.stage_done("docs"):
+            raise RuntimeError(
+                "append requires an index with a completed docs stage")
         segment_size = m.get("segment_size", segment_size)
         n_buckets = m.get("n_buckets", n_buckets)
+        analyzer = m.get("analyzer", "en")
         store_positions = bool(m.get("positions", False))
-    layout.gc_staging()
-    if resume:
-        from pysearch.compact import recover_compaction
 
-        recover_compaction(layout)
-        orphans = layout.gc_orphan_commits()
-        if orphans:
-            print(f"pysearch: removed {len(orphans)} orphan commit(s) "
-                  "left by a crash before their lineage write")
-
-    analyzer_m = layout.read_manifest().get("analyzer", "en")
-    if not layout.stage_done("docs"):
-        docs_df, finish_docs, n_new = build_docs_stage(
-            spark, webtext_df, layout, segment_size, n_partitions,
-            defer_commit=True, store_positions=store_positions,
-            analyzer=analyzer_m,
-        )
-        # Overlap the docs/doc_map disk writes with the postings compute:
-        # both consume the same cached docs partitions (BlockManager block
-        # locks make concurrent first-computation safe), and on a
-        # shared-disk host the postings tokenization hides the docs write
-        # latency.  Commit ORDER stays crash-consistent: the postings
-        # commit closure runs only after the docs commit returned.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_post = ex.submit(
-                build_postings_stage, spark, layout, n_buckets,
-                resume=resume, docs_df=docs_df, analyzer=analyzer_m,
-                defer_commit=True, nonempty_hint=n_new > 0,
-                store_positions=store_positions,
-            )
-            f_docs = ex.submit(finish_docs)
-            finish_postings = f_post.result()
-            f_docs.result()
-        finish_postings()
-        docs_df.unpersist()
-    elif not layout.stage_done("postings"):
-        build_postings_stage(spark, layout, n_buckets, resume=resume,
-                             analyzer=analyzer_m,
-                             store_positions=store_positions)
-    if not layout.stage_done("finalize"):
-        build_finalize_stage(spark, layout)
-    return layout
-
-
-def _append_index(spark, webtext_df, layout: IndexLayout,
-                  n_partitions: int | None = None) -> IndexLayout:
-    """Incremental append of new documents to an existing complete index.
-
-    - New rows are deduped against the CURRENT docs table (url and content
-      hash): append adds documents, it never updates existing ones.
-    - Appended doc_ids start at the next segment boundary above the
-      per-case max, so appended segments never mix with already-built ones
-      — the (case, segment) postings done-granularity stays valid at the
-      cost of at most one segment's worth of id space per append per case.
-    - Postings build only the new segments (incremental commit batch);
-      the finalize folds ONLY the new batch into term_stats and the
-      manifest's per-case ``sum_dl`` (``build_finalize_stage`` — O(delta)
-      per append, not O(index); readers sum df/cf across stats commits).
-    - Crash-safe: the postings/finalize done-flags are cleared BEFORE the
-      docs commit, and the docs lineage append is the docs commit point
-      (orphan batches are GC'd), so an interrupted append is completed by
-      rerunning it — or by ``build_index(resume=True)``, whose postings
-      resume path rebuilds exactly the missing segments from the committed
-      docs table.
-    """
-    m = layout.read_manifest()
-    if not layout.stage_done("docs"):
-        raise RuntimeError("append requires an index with a completed docs stage")
-    segment_size = int(m["segment_size"])
-    n_buckets = int(m["n_buckets"])
-    analyzer = m.get("analyzer", "en")
-    store_positions = bool(m.get("positions", False))
-    # a crashed compaction's staged (uncommitted) generation trees must be
-    # discarded BEFORE any batch bookkeeping runs; after the sweep, fail
-    # fast if lineage still references postings batches absent on disk.
-    # (Committed compactions need no recovery: the snapshot flip is one
-    # atomic manifest write — see pysearch/compact.py.)
-    from pysearch.compact import check_consistent, recover_compaction
-
+    # a crashed compaction's staged generation trees go BEFORE any batch
+    # bookkeeping runs (committed compactions need no recovery: their
+    # snapshot flip is one atomic manifest write — see pysearch/compact.py)
     recover_compaction(layout)
     check_consistent(layout)
     layout.gc_staging()
-    layout.gc_orphan_commits()
+    orphans = layout.gc_orphan_commits()
+    if orphans:
+        print(f"pysearch: removed {len(orphans)} orphan commit(s) "
+              "left by a crash before their lineage write")
 
-    if not layout.stage_done("postings"):
-        # a previous append crashed mid-postings: its docs are committed
-        # but some of their segments were never built.  Catch up from the
-        # committed docs table (the done-filter keeps this to exactly the
-        # missing segments) BEFORE appending new rows, so the fast path
-        # below (postings from the cached new-docs frame only) stays valid.
-        build_postings_stage(spark, layout, n_buckets, resume=True,
-                             analyzer=analyzer,
-                             store_positions=store_positions)
+    if layout.stage_done("docs") and not layout.stage_done("postings"):
+        build_postings_stage(spark, layout, n_buckets, analyzer=analyzer,
+                             store_positions=store_positions)()
 
-    existing = layout.read_commits(spark, layout.docs).select(
-        "case_id", "doc_id", "url", "content_hash")
-    batch = layout.next_batch(layout.docs)
-    # invalidate downstream stages before new docs become visible
-    layout.clear_stage("postings")
-    layout.clear_stage("finalize")
-    docs_df, finish_docs, n_new = build_docs_stage(
-        spark, webtext_df, layout, segment_size, n_partitions,
-        existing=existing, batch=batch, defer_commit=True,
-        store_positions=store_positions, analyzer=analyzer,
-    )
-    finish_docs()
-    build_postings_stage(spark, layout, n_buckets, resume=True,
-                         docs_df=docs_df, analyzer=analyzer,
-                         nonempty_hint=n_new > 0,
-                         store_positions=store_positions)
-    docs_df.unpersist()
-    build_finalize_stage(spark, layout)
+    if append or not layout.stage_done("docs"):
+        layout.clear_stage("postings")
+        layout.clear_stage("finalize")
+        docs_df, finish_docs, n_new = build_docs_stage(
+            spark, webtext_df, layout, segment_size, n_partitions,
+            store_positions=store_positions, analyzer=analyzer)
+        try:
+            if n_new == 0:
+                finish_docs()
+                layout.mark_stage("postings", n_buckets=n_buckets)
+            else:
+                # the docs/doc_map writes and the postings compute read the
+                # same cached docs partitions (each computed once, see the
+                # docs stage's finish); on a shared-disk host the postings
+                # tokenization hides the docs write latency.  The postings
+                # commit runs only after the docs commit.
+                with ThreadPoolExecutor(max_workers=2) as ex:
+                    f_post = ex.submit(
+                        build_postings_stage, spark, layout, n_buckets,
+                        docs_df=docs_df, analyzer=analyzer,
+                        store_positions=store_positions)
+                    f_docs = ex.submit(finish_docs)
+                    finish_postings = f_post.result()
+                    f_docs.result()
+                finish_postings()
+        finally:
+            docs_df.unpersist()
+
+    if not layout.stage_done("finalize"):
+        build_finalize_stage(spark, layout)
     return layout

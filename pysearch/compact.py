@@ -43,8 +43,9 @@ serve-while-ingest FileNotFound window):
 
 Recovery (``recover_compaction``) discards staged generations NEWER than
 the manifest's committed pointer — leftovers of an uncommitted run.
-``build_index(append=True)`` runs this sweep before touching the index, so
-a crashed compaction can never alias batch numbers against stale lineage
+Every ``build_index`` call (fresh, resume or append) runs this sweep and
+then ``check_consistent`` before touching the index, so a crashed
+compaction can never alias batch numbers against stale lineage
 (staged trees are invisible to ``next_batch`` and to every table path
 resolved through the committed pointer; compaction reads its own staged
 trees by their generation path).
@@ -57,7 +58,7 @@ import os
 import shutil
 import time
 
-from pysearch.lineage import TABLES, IndexLayout
+from pysearch.lineage import TABLES, IndexLayout, tombstone_frame
 
 
 def recover_compaction(layout: IndexLayout) -> str | None:
@@ -168,7 +169,7 @@ def check_consistent(layout: IndexLayout) -> None:
             f"lineage references postings batches {sorted(missing)} absent "
             f"on disk at {layout.postings} — index is inconsistent; run "
             "compact_index (recovery sweep) or restore the missing commits "
-            "before appending"
+            "before appending to or resuming the build"
         )
 
 
@@ -252,7 +253,7 @@ def compact_index(spark, index_dir: str,
     from pyspark.sql import functions as F
 
     from pysearch.build import _term_stats_of, _write_term_stats
-    from pysearch.schema import POSTING_BLOCKS, TOMBSTONES
+    from pysearch.schema import POSTING_BLOCKS
 
     layout = IndexLayout(index_dir)
     recover_compaction(layout)
@@ -298,9 +299,7 @@ def compact_index(spark, index_dir: str,
 
     t0 = time.time()
     if purge:
-        anti = spark.createDataFrame(
-            [(cid, int(i)) for cid, ids in tomb_by_case.items() for i in ids],
-            schema=TOMBSTONES)
+        anti = tombstone_frame(spark, tomb_by_case)
 
     # 1. stage consolidated trees as next-generation dirs (heavy,
     #    restartable, live index untouched and still fully readable)

@@ -42,7 +42,7 @@ from __future__ import annotations
 import datetime as _dt
 import time
 
-from pysearch.lineage import IndexLayout, footer_rows
+from pysearch.lineage import IndexLayout, footer_rows, tombstone_frame
 
 
 def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
@@ -86,11 +86,13 @@ def delete_docs(spark, index_dir: str, *, urls: list[str] | None = None,
 
     # don't re-tombstone docs already marked (keeps the table minimal and
     # the returned count meaningful on repeated calls)
-    existing = layout.read_tombstones(spark)
-    fresh = targets.join(existing, ["case_id", "doc_id"], "left_anti")
+    n_pending, by_case = layout.pending_deletes()
+    if n_pending:
+        targets = targets.join(tombstone_frame(spark, by_case),
+                               ["case_id", "doc_id"], "left_anti")
 
     staging = layout.staging_dir("tombstones")
-    fresh.coalesce(1).write.mode("overwrite").parquet(staging)
+    targets.coalesce(1).write.mode("overwrite").parquet(staging)
     n = footer_rows(staging)
     if n == 0:
         import shutil

@@ -39,7 +39,9 @@ LOCAL_BATCH_FACTOR = 4  # a batch of plans (search_ids_many, the NRT
 
 LOCAL_MAX_VOCAB = 200_000  # term_stats rows under which the per-case
 # vocabulary (term -> df) is fetched ONCE per Searcher load (a bounded
-# metadata collect, ~tens of MB at the gate) and the MultiTermQuery
+# driver-side pyarrow read of the load's term_stats commits, ~tens of MB
+# at the gate; the row count comes from the parquet footers, so neither
+# runs a Spark job) and the MultiTermQuery
 # expansions (fuzzy/prefix), spell suggestions, and term-df lookups run
 # driver-side — otherwise each pays a full Spark job (scan + window +
 # collect) per query over a table that is vocabulary-sized METADATA, the
@@ -55,8 +57,9 @@ LOCAL_MAX_VOCAB = 200_000  # term_stats rows under which the per-case
 
 LOCAL_MAX_CATALOG = 1_000_000  # catalog rows (per case) under which the
 # case's (doc_id, url, content_hash) columns are fetched ONCE per Searcher
-# load — index METADATA in the same class as the term-df cache (~tens of
-# MB at the gate).  The NRT hybrid's already-indexed anti-joins build
+# load, read on the driver with pyarrow from the load's docs commits (no
+# Spark job) — index METADATA in the same class as the term-df cache
+# (~tens of MB at the gate).  The NRT hybrid's already-indexed anti-joins build
 # their broadcast sides from it (no docs-table scan per hybrid query), and
 # the engine-backed ops map engine <-> source ids through it.  Above the
 # gate the distributed joins run.

@@ -62,6 +62,26 @@ def _arrow_schema(schema):
                       for f in to_arrow_schema(schema)])
 
 
+def tombstone_frame(spark, by_case: dict):
+    """A ``pending_deletes`` map as a (case_id, doc_id) DataFrame.  A
+    non-empty pandas frame reaches Spark through Arrow as a local relation;
+    a list of tuples (or an empty pandas frame, which falls back to it)
+    runs as a Python-worker job — so callers skip the frame when no delete
+    is pending."""
+    import numpy as np
+    import pandas as pd
+
+    from pysearch.schema import TOMBSTONES
+
+    if not any(len(ids) for ids in by_case.values()):
+        return spark.createDataFrame([], schema=TOMBSTONES)
+    return spark.createDataFrame(pd.DataFrame({
+        "case_id": np.repeat(list(by_case),
+                             [len(ids) for ids in by_case.values()]),
+        "doc_id": np.concatenate(list(by_case.values())).astype(np.int64),
+    }), schema=TOMBSTONES)
+
+
 #: logical table names of an index, in no particular order
 TABLES = ("docs", "doc_map", "postings", "term_stats", "lineage",
           "tombstones")
@@ -244,12 +264,8 @@ class IndexLayout:
         """The pending (case_id, doc_id) delete set as a DataFrame — empty
         when no deletes are outstanding (table absent or emptied by
         compaction)."""
-        from pysearch.schema import TOMBSTONES
-
         _n, by_case = self.pending_deletes()
-        return spark.createDataFrame(
-            [(cid, int(i)) for cid, ids in by_case.items() for i in ids],
-            schema=TOMBSTONES)
+        return tombstone_frame(spark, by_case)
 
     # -- manifest ---------------------------------------------------------
     def read_manifest(self) -> dict:

@@ -44,7 +44,7 @@ from pysearch.build import term_bucket
 from pysearch.gate import (LOCAL_BATCH_FACTOR, LOCAL_MAX_CATALOG,
                            LOCAL_MAX_VOCAB, PRUNE_MIN_POSTINGS,
                            local_max_postings)
-from pysearch.lineage import IndexLayout
+from pysearch.lineage import IndexLayout, footer_rows
 from pysearch.version import INDEX_FORMAT_VERSION
 
 DEFAULT_MAX_RESULTS = 10  # reference: index_search.go:55-56
@@ -128,6 +128,27 @@ def _merge_topk(per_q: Dict[str, tuple], k: int) -> pd.DataFrame:
     if not frames:
         return _empty_hits()
     return pd.concat(frames, ignore_index=True)
+
+
+def _read_arrow(dirs, partition: tuple, columns, flt) -> pd.DataFrame:
+    """``columns`` of the rows matching the pyarrow filter ``flt`` in the
+    commit dirs ``dirs`` of a table hive-partitioned by ``partition`` (a
+    (name, arrow type) pair), read on the driver into one pandas frame —
+    no Spark job."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    part = ds.partitioning(pa.schema([partition]), flavor="hive")
+    frames = [
+        ds.dataset(d, format="parquet", partitioning=part)
+        .to_table(columns=list(columns), filter=flt).to_pandas()
+        for d in dirs
+    ]
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return pd.DataFrame(columns=list(columns))
+    return (frames[0] if len(frames) == 1
+            else pd.concat(frames, ignore_index=True))
 
 
 def _verify_blocks(pdf: pd.DataFrame) -> None:
@@ -398,16 +419,18 @@ class Searcher:
                 "construct with Searcher(..., max_pending_tombstones=N)"
             )
         self._tombstones: Dict[str, np.ndarray] = tombstones
-        # postings commit dirs frozen against the SAME generation map as
-        # the Spark frames above: the driver-direct arrow fetch
-        # (_read_blocks_arrow) reads exactly the files this load reads,
+        # commit dirs frozen against the SAME generation map as the Spark
+        # frames above: the driver-direct arrow reads (_read_blocks_arrow,
+        # _local_vocab, _catalog) read exactly the files this load reads,
         # including the time-travel pinned-commit view
         from pysearch.lineage import _has_parquet
 
-        self._postings_commit_dirs = [
-            d for d in self.layout.list_commits(path["postings"])
-            if _has_parquet(d)
-        ]
+        dirs = {name: [d for d in self.layout.list_commits(path[name])
+                       if _has_parquet(d)]
+                for name in ("docs", "postings", "term_stats")}
+        self._postings_commit_dirs = dirs["postings"]
+        self._term_stats_commit_dirs = dirs["term_stats"]
+        self._docs_commit_dirs = dirs["docs"]
 
     def stale(self) -> bool:
         """True when the on-disk index changed since this Searcher loaded
@@ -720,21 +743,11 @@ class Searcher:
         import pyarrow.dataset as ds
 
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        part = ds.partitioning(
-            pa.schema([("term_bucket", pa.int32())]), flavor="hive")
-        flt = ((ds.field("case_id") == case_id)
-               & ds.field("term_bucket").isin([int(b) for b in buckets])
-               & ds.field("term").isin(list(terms)))
-        frames = [
-            ds.dataset(d, format="parquet", partitioning=part)
-            .to_table(columns=list(cols), filter=flt).to_pandas()
-            for d in self._postings_commit_dirs
-        ]
-        frames = [f for f in frames if len(f)]
-        if not frames:
-            return pd.DataFrame(columns=list(cols))
-        return (frames[0] if len(frames) == 1
-                else pd.concat(frames, ignore_index=True))
+        return _read_arrow(
+            self._postings_commit_dirs, ("term_bucket", pa.int32()), cols,
+            (ds.field("case_id") == case_id)
+            & ds.field("term_bucket").isin([int(b) for b in buckets])
+            & ds.field("term").isin(list(terms)))
 
     def _collect_blocks(self, case_id: str, terms,
                         positions: bool) -> pd.DataFrame:
@@ -752,46 +765,51 @@ class Searcher:
     # ------------------------------------------------------------------
     def _local_vocab(self, case_id: str) -> Optional[dict]:
         """The case's whole {term: df} map when the vocabulary fits the
-        LOCAL_MAX_VOCAB gate, else None (decided once per load from a
-        metadata-cheap parquet row count; the map itself is one bounded
-        collect of the term_stats aggregate, cached per case)."""
+        LOCAL_MAX_VOCAB gate, else None (decided once per load from the
+        term_stats parquet footers; the map itself is one driver-side
+        arrow read of this load's stats commits, cached per case — no
+        Spark job)."""
         if case_id in self._vocab_cache:
             return self._vocab_cache[case_id]
         out = None
         if self.local_max_postings > 0:
             if self._term_stats_rows is None:
-                self._term_stats_rows = self._term_stats.count()
+                self._term_stats_rows = sum(
+                    footer_rows(d) for d in self._term_stats_commit_dirs)
             if self._term_stats_rows <= LOCAL_MAX_VOCAB:
-                from pyspark.sql import functions as F
+                import pyarrow as pa
+                import pyarrow.dataset as ds
 
-                rows = (
-                    self._term_stats.filter(F.col("case_id") == case_id)
-                    # df is additive across append-batch stats commits
-                    .groupBy("term").agg(F.sum("df").alias("df"))
-                    .collect()
-                )
-                out = {r["term"]: int(r["df"]) for r in rows}
+                pdf = _read_arrow(self._term_stats_commit_dirs,
+                                  ("term_bucket", pa.int32()),
+                                  ["term", "df"],
+                                  ds.field("case_id") == case_id)
+                # df is additive across append-batch stats commits
+                out = {t: int(v) for t, v in
+                       pdf.groupby("term", sort=False)["df"].sum().items()}
         self._vocab_cache[case_id] = out
         return out
 
     def _catalog(self, case_id: str) -> Optional[dict]:
         """The case's catalog as driver arrays ``{"doc_id", "url",
         "content_hash"}`` when it fits the LOCAL_MAX_CATALOG gate, else
-        None.  Gate decided from the already-loaded corpus stats (no job);
-        one bounded three-column collect per load, cached per case — index
-        metadata exactly like the term-df cache.  Consumers memoize what
-        they derive from it in the same entry, so it dies with the load:
-        the NRT hybrid's anti-join relations, the ops' source-id map."""
+        None.  Gate decided from the already-loaded corpus stats; one
+        driver-side arrow read of this load's docs commits per load, cached
+        per case — index metadata exactly like the term-df cache, and no
+        Spark job.  Consumers memoize what they derive from it in the same
+        entry, so it dies with the load: the NRT hybrid's anti-join
+        relations, the ops' source-id map."""
         if case_id not in self._catalog_cache:
             out = None
             n_docs = self._corpus.get(case_id, (0,))[0]
             if 0 < self.local_max_postings and n_docs <= LOCAL_MAX_CATALOG:
-                from pyspark.sql import functions as F
+                import pyarrow as pa
+                import pyarrow.dataset as ds
 
-                pdf = (
-                    self.docs.filter(F.col("case_id") == case_id)
-                    .select("doc_id", "url", "content_hash").toPandas()
-                )
+                pdf = _read_arrow(self._docs_commit_dirs,
+                                  ("case_id", pa.string()),
+                                  ["doc_id", "url", "content_hash"],
+                                  ds.field("case_id") == case_id)
                 out = {"doc_id": pdf["doc_id"].to_numpy(np.int64),
                        "url": pdf["url"].to_numpy(),
                        "content_hash": pdf["content_hash"].to_numpy()}

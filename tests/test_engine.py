@@ -785,10 +785,11 @@ def test_delta_finalize_matches_full_recompute(spark, tmp_path,
     assert verify_index(spark, d) == []
 
 
-def test_append_fails_fast_on_missing_postings_batch(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["append", "resume"])
+def test_append_fails_fast_on_missing_postings_batch(spark, tmp_path, mode):
     """Lineage referencing a postings batch absent on disk (the r2-ADVICE
-    aliasing hazard) must abort an append with a repair hint, not silently
-    mis-drive orphan GC."""
+    aliasing hazard) must abort an append — and a resume, which runs the
+    same recovery — with a repair hint, not silently mis-drive orphan GC."""
     d = str(tmp_path / "inconsistent_ix")
     build_index(spark, corpus.webtext_df(spark, cases=[corpus.CASES[0]]), d,
                 segment_size=64)
@@ -799,15 +800,13 @@ def test_append_fails_fast_on_missing_postings_batch(spark, tmp_path):
     shutil.rmtree(victim)
     with pytest.raises(RuntimeError, match="absent on disk"):
         build_index(spark, corpus.webtext_df(spark, cases=[corpus.CASES[2]]),
-                    d, append=True)
+                    d, **{mode: True})
 
 
 def test_append_crash_recovery(spark, tmp_path):
     """An append that crashed after its docs commit but before postings is
     completed by simply re-running append: the catch-up pass builds the
     missing segments from the committed docs table."""
-    from pyspark.sql import functions as F
-
     from pysearch.verify import verify_index
 
     d = str(tmp_path / "crash_ix")
@@ -818,14 +817,10 @@ def test_append_crash_recovery(spark, tmp_path):
 
     # simulate the crash: docs batch 1 committed + marked, postings never ran
     lay = IndexLayout(d)
-    existing = lay.read_commits(spark, lay.docs).select(
-        F.col("case_id").cast("string").alias("case_id"),
-        "doc_id", "url", "content_hash",
-    )
     lay.clear_stage("postings")
     lay.clear_stage("finalize")
-    docs_df = build_docs_stage(spark, second, lay, 16,
-                               existing=existing, batch=1)
+    docs_df, finish, _n = build_docs_stage(spark, second, lay, 16)
+    finish()
     docs_df.unpersist()
 
     build_index(spark, second, d, append=True)  # re-run = recovery
@@ -948,9 +943,11 @@ def test_resume_equals_fresh_build(spark, index):
 
     layout.write_manifest({"format_version": INDEX_FORMAT_VERSION,
                            "segment_size": 64, "n_buckets": 64})
-    build_docs_stage(spark, df, layout, segment_size=64)
+    docs_df, finish, _n = build_docs_stage(spark, df, layout, segment_size=64)
+    finish()
+    docs_df.unpersist()
     # simulate crash: only 3 segments built, stage not marked complete
-    build_postings_stage(spark, layout, n_buckets=64, max_segments=3)
+    build_postings_stage(spark, layout, n_buckets=64, max_segments=3)()
     assert not layout.stage_done("postings")
     done_before = layout.done_partitions("postings")
     assert len(done_before) == 3

@@ -7,7 +7,8 @@ its gate and across an index refresh, and scans for hand copies of the BM25
 arithmetic outside the scoring modules and of the stored formats and
 document shaping outside codec.py and build.py.  The ops' fixture indexes
 have one build-or-reuse rule (ops._ensure_index) and one source-id codec,
-pinned by a scan and by a lifecycle test over a tiny source table."""
+pinned by a scan and by a lifecycle test over a tiny source table; the
+index build has one ingest sequence (build.build_index), pinned by a scan."""
 
 import ast
 import os
@@ -131,6 +132,50 @@ def test_one_fixture_rule_and_one_source_id_codec():
                 if isinstance(node, ast.Attribute) and node.attr in (
                     "read_manifest", "write_manifest", "rmtree")}
     assert touchers == {"_ensure_index"}, touchers
+
+
+def test_one_ingest_sequence():
+    """Fresh builds, resumes and appends share one sequence: inside the
+    package ``ThreadPoolExecutor`` appears once, in ``build_index``, and
+    only ``build_index`` refers to the docs and postings stages."""
+    names = ("ThreadPoolExecutor", "build_docs_stage", "build_postings_stage")
+    found = []
+
+    class Refs(ast.NodeVisitor):
+        def __init__(self, fname):
+            self.fname, self.stack = fname, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Name(self, node):
+            self._ref(node.id)
+
+        def visit_Attribute(self, node):
+            self._ref(node.attr)
+            self.generic_visit(node)
+
+        def visit_alias(self, node):
+            self._ref(node.name)
+
+        def _ref(self, name):
+            if name in names:
+                found.append((name, self.fname, self.stack[-1]))
+
+    for fname in sorted(os.listdir(PKG)):
+        if fname.endswith(".py"):
+            with open(os.path.join(PKG, fname)) as f:
+                Refs(fname).visit(ast.parse(f.read()))
+    pools = [r for r in found if r[0] == "ThreadPoolExecutor"]
+    # the import and the one pool, both inside build_index
+    assert pools == [("ThreadPoolExecutor", "build.py", "build_index")] * 2, \
+        pools
+    assert {r for r in found if r[0] != "ThreadPoolExecutor"} == {
+        ("build_docs_stage", "build.py", "build_index"),
+        ("build_postings_stage", "build.py", "build_index"),
+    }, found
 
 
 @pytest.fixture

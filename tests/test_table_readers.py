@@ -75,6 +75,18 @@ def test_bookkeeping_reads_run_no_job(spark, tombstoned_ix):
                       "readers-load")
     assert n_load == 0
     assert list(s._corpus) == ["6"] and s._corpus["6"][0] == 100
+    # the first query's metadata caches (the case's vocabulary and
+    # catalog) are read on the driver from the load's commits: no job
+    vocab, n_vocab = _jobs(spark, lambda: s._local_vocab("6"),
+                           "readers-vocab")
+    cat, n_cat = _jobs(spark, lambda: s._catalog("6"), "readers-catalog")
+    assert (n_vocab, n_cat) == (0, 0)
+    assert vocab == {r["term"]: r["df"] for r in s._term_stats.groupBy(
+        "term").sum("df").withColumnRenamed("sum(df)", "df").collect()}
+    assert sorted(zip(cat["doc_id"].tolist(), cat["url"],
+                      cat["content_hash"])) == sorted(
+        tuple(r) for r in s.docs.select("doc_id", "url",
+                                        "content_hash").collect())
     assert dict(s.postings.dtypes)["term_bucket"] == "int"
     assert dict(s.docs.dtypes)["case_id"] == "string"
     assert "tok_starts_bin" not in s.docs.columns  # built without positions
